@@ -7,6 +7,7 @@ import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
 import java.util.concurrent.locks.ReentrantLock
 import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
+import scala.util.Try
 import scala.util.control.NonFatal
 
 /** A materialized view over the log: derived, disposable, rebuildable.
@@ -23,7 +24,13 @@ trait FlumeView {
 
   /** Absorb one ordered batch of log entries with seq in (since, upto].
     * The frame is already passed through the db's mapper. Implementations
-    * must update `since` to `upto` only after state is durable. */
+    * must update `since` to `upto` only after state is durable. The db
+    * calls `absorb` of different views at the same time, each on its own
+    * driver thread, all under the db lock: an absorb must not call back
+    * into the db. The frame is a shared materialized delta that the db
+    * releases once every view has absorbed it, so a view that keeps rows
+    * must materialize them (as [[graft.views.FrameView]] does) rather
+    * than hold the frame. */
   def absorb(entries: DataFrame, upto: Long): Unit
 
   /** Drop all derived state; view returns to since = -1
@@ -141,6 +148,12 @@ final class ClosedException(msg: String) extends IllegalStateException(msg)
 /** The engine core: one ordered log + a star of incrementally-maintained
   * views, with flume's consistency contract — async view maintenance,
   * read-your-writes gating, destroy-and-rebuild lifecycle.
+  *
+  * The pipeline from the log to the views is one read fanned out: each
+  * sync reads the new log range once, materializes it once, and every
+  * view behind the log absorbs it at the same time on its own driver
+  * thread (see `syncViews`). A view's failure stays that view's: it
+  * destroys and replays on its own while the others reach parity.
   *
   * Restates `/root/reference/index.js` + `wrap.js` on Spark: the data
   * plane (scans, folds, index builds) is distributed DataFrame work; only
@@ -286,7 +299,8 @@ final class FlumeDb(
     val before = log.since
     val s = log.append(payload)
     meta.getOrElseUpdate("append.records", new AtomicLong()).addAndGet(s - before)
-    syncViews()
+    lock.lock()
+    try syncViews() finally lock.unlock()
     s
   }
 
@@ -302,7 +316,7 @@ final class FlumeDb(
         throw new IllegalArgumentException(s"flumedb.use: view named '$name' already exists")
       val m = new Mounted(name, viewDef, viewDef.create(this, name))
       views.put(name, m)
-      sync(m)
+      syncViews(Seq(m))
       this
     } finally lock.unlock()
   }
@@ -316,37 +330,68 @@ final class FlumeDb(
     lock.lock(); try views.keySet().toArray(Array.empty[String]).toSeq finally lock.unlock()
   }
 
-  /** Bring one view up to log parity, in seq order, incrementally
-    * (`seq > view.since` only — the reference build loop's
-    * `gt: upto` stream at `/root/reference/index.js:36-39`). A view
-    * *ahead* of the log (e.g. log file truncated) is destroyed and rebuilt
-    * (`/root/reference/index.js:36-37`); a view error likewise triggers
-    * destroy + rebuild (`/root/reference/index.js:66-71`). */
-  private def sync(m: Mounted): Unit = {
+  /** The one sync loop: bring `ms` (default: every mounted view) up to log
+    * parity, in seq order, incrementally — the reference build loop's
+    * `gt: since` stream (reference `index.js:36-39`), shared. The
+    * log range `(min since, log.since]` of the lagging views is read ONCE
+    * in seq order and materialized by one eager job; every lagging
+    * view then absorbs it at the same time on its own driver thread,
+    * filtered to `seq > since` when its cursor is behind the others'.
+    * After every absorb has returned, each view in mount order is marked
+    * loaded, parity is signalled and its `since` is emitted; the shared
+    * delta is then released.
+    *
+    * A view *ahead* of the log (e.g. log file truncated) is destroyed and
+    * rebuilt (reference `index.js:36-37`). A failure — of the
+    * shared read or of the view's own absorb — is the view's alone: it
+    * records `lastError`, destroys and replays the whole log on its own
+    * (reference `index.js:66-71`) while its siblings reach parity.
+    * If the replay fails too, the view stays unloaded at its cursor and
+    * the first such failure, in mount order, is rethrown once the others
+    * are done. `use`, `append`, `rebuild`, `setReady` and the takedown
+    * fallbacks all sync through here. Caller holds the db lock. */
+  private def syncViews(ms: Seq[Mounted] = mountedViews): Unit = {
     val target = log.since
-    if (m.view.since > target) { m.view.destroy() } // ahead of log => rebuild from scratch
-    if (m.view.since < target) {
-      val batch = mappedStream(LogRange(gt = Some(m.view.since), lte = Some(target)))
-      try m.view.absorb(batch, target)
-      catch {
-        case NonFatal(e) =>
-          m.lastError = Some(e)
-          m.view.destroy()
-          val replay = mappedStream(LogRange(lte = Some(target)))
-          m.view.absorb(replay, target)
+    ms.foreach(m => if (m.view.since > target) m.view.destroy()) // ahead of log => rebuild
+    val lagging = ms.filter(_.view.since < target)
+    val failed: Map[Mounted, Throwable] =
+      if (lagging.isEmpty) Map.empty
+      else {
+        val from = lagging.map(_.view.since).min
+        val shared = Try(mappedStream(LogRange(gt = Some(from), lte = Some(target))).localCheckpoint(true))
+        try {
+          val outcomes = FlumeDb.fanOut(lagging.map(m =>
+            s"flumedb-absorb-${m.name}" -> (() => absorbOrReplay(m, shared, from, target))))
+          lagging.zip(outcomes).collect { case (m, Some(e)) => m -> e }.toMap
+        } finally shared.foreach(FlumeDb.releaseCheckpoint)
       }
+    val synced = ms.filterNot(failed.contains)
+    lock.lock(); try { synced.foreach(_.loaded = true); parity.signalAll() } finally lock.unlock()
+    synced.foreach(_.emitSince())
+    ms.flatMap(failed.get) match {
+      case first +: rest => rest.foreach(first.addSuppressed); throw first
+      case _ => ()
     }
-    lock.lock(); try { m.loaded = true; parity.signalAll() } finally lock.unlock()
-    m.emitSince()
   }
 
-  private def syncViews(): Unit = {
-    lock.lock()
+  /** One view's share of a sync: absorb the shared delta from its own
+    * cursor; on any failure, record it and destroy + replay the log. */
+  private def absorbOrReplay(m: Mounted, shared: Try[DataFrame], from: Long, target: Long): Unit =
     try {
-      val it = views.values().iterator()
-      while (it.hasNext) sync(it.next())
-    } finally lock.unlock()
-  }
+      val s = m.view.since
+      m.view.absorb(
+        if (s == from) shared.get
+        else shared.get.where(org.apache.spark.sql.functions.col(log.seqCol) > s),
+        target)
+    } catch {
+      case NonFatal(e) =>
+        m.lastError = Some(e)
+        m.view.destroy()
+        m.view.absorb(mappedStream(LogRange(lte = Some(target))), target)
+    }
+
+  private def mountedViews: Seq[Mounted] =
+    views.values().toArray(Array.empty[Mounted]).toSeq
 
   /** DB-LEVEL takedown: retract matching rows from the LOG and bring
     * EVERY mounted view to a state with no trace of them — the
@@ -511,17 +556,23 @@ final class FlumeDb(
     * correct fallback. */
   private def retractViews(removedSeqs: DataFrame, handled: Set[FlumeView]): Unit = {
     lazy val postLog = mapper.fold(log.read)(f => f(log.read))
-    val it = views.values().iterator()
-    while (it.hasNext) {
-      val m = it.next()
+    val fallback = Seq.newBuilder[Mounted]
+    mountedViews.foreach { m =>
       m.view match {
         case v if handled.contains(v) => ()
         case s: SeqRetractableView => s.retractLogSeqs(removedSeqs, log.seqCol)
         case k: KeyRetractableView =>
           k.retractLogSeqsRecompute(removedSeqs, log.seqCol, postLog)
-        case _ => m.view.destroy(); sync(m)
+        case _ => fallback += m
       }
     }
+    rebuildViews(fallback.result())
+  }
+
+  /** Destroy `ms` and replay the log into them through one sync. */
+  private def rebuildViews(ms: Seq[Mounted]): Unit = {
+    ms.foreach(_.view.destroy())
+    syncViews(ms)
   }
 
   // ---- durable (intent-logged) takedown -----------------------------------
@@ -962,9 +1013,8 @@ final class FlumeDb(
 
   private def expireViews(throughSeq: Long, handled: Set[FlumeView] = Set.empty,
       expireFeatures: Boolean = false): Unit = {
-    val it = views.values().iterator()
-    while (it.hasNext) {
-      val m = it.next()
+    val fallback = Seq.newBuilder[Mounted]
+    mountedViews.foreach { m =>
       m.view match {
         case v if handled.contains(v) => ()
         // feature tables first: KEEP by default (re-crawls of aged-out
@@ -974,9 +1024,10 @@ final class FlumeDb(
           if (expireFeatures) f.expireFeatureDeltas(throughSeq)
         case s: SeqRetractableView => s.expireLogSeqs(throughSeq)
         case k: KeyRetractableView => k.expireLogSeqs(throughSeq)
-        case _ => m.view.destroy(); sync(m)
+        case _ => fallback += m
       }
     }
+    rebuildViews(fallback.result())
   }
 
   /** The durable seq list, schema pinned: a zero-match takedown writes a
@@ -1083,12 +1134,8 @@ final class FlumeDb(
   def rebuild(): Unit = {
     throwIfClosed(); count("rebuild")
     lock.lock()
-    try {
-      val it = views.values().iterator()
-      while (it.hasNext) { val m = it.next(); m.view.destroy() }
-      val it2 = views.values().iterator()
-      while (it2.hasNext) sync(it2.next())
-    } finally lock.unlock()
+    try rebuildViews(mountedViews)
+    finally lock.unlock()
   }
 
   /** Idempotent shutdown (`/root/reference/index.js:251-266`); gated calls
@@ -1155,4 +1202,38 @@ object FlumeDb {
   }
 
   private def unregisterMeta(prefix: String): Unit = metaMaps.remove(prefix)
+
+  /** Run every named task at the same time, each on its own new driver
+    * thread, and return each task's failure (None on success) in task
+    * order. The threads are started by the caller, so they
+    * inherit its Spark local properties — job group, scheduler pool, job
+    * tags — and its active session: their jobs are the caller's jobs.
+    * Waits for every task even when the caller is interrupted (the
+    * interrupt is kept): the tasks run under the caller's db lock and
+    * must not outlive it. */
+  private[core] def fanOut(tasks: Seq[(String, () => Unit)]): Seq[Option[Throwable]] = {
+    val failures = Array.fill[Option[Throwable]](tasks.size)(None)
+    val threads = tasks.zipWithIndex.map { case ((name, task), i) =>
+      val t = new Thread(() =>
+        try task() catch { case e: Throwable => failures(i) = Some(e) }, name)
+      t.setDaemon(true)
+      t.start()
+      t
+    }
+    var interrupted = false
+    threads.foreach { t =>
+      while (t.isAlive)
+        try t.join() catch { case _: InterruptedException => interrupted = true }
+    }
+    if (interrupted) Thread.currentThread().interrupt()
+    failures.toSeq
+  }
+
+  /** Free the blocks of a `localCheckpoint`ed frame now, not at some
+    * later GC of its RDD. Frames derived from it stop working. */
+  private[core] def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 }

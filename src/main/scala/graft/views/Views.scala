@@ -241,9 +241,12 @@ object SegmentedFoldView {
 }
 
 /** Base for views whose state is itself a DataFrame, maintained by
-  * appending a per-batch delta frame. State lives as a persisted union of
-  * deltas; `compact()` collapses it (a real deployment would write the
-  * delta to a bucketed table — same plan shape). */
+  * appending a per-batch delta frame. Each delta is materialized when it
+  * is absorbed, so the state pins neither log rows nor log files: a log
+  * rewrite (takedown, retention) cannot pull files from under it, and
+  * reads never recompute the delta from the log. State lives as a union
+  * of those deltas; `compact()` collapses it (a real deployment would
+  * write the delta to a bucketed table — same plan shape). */
 abstract class FrameView extends FlumeView {
   @volatile protected var state: Option[DataFrame] = None
   @volatile private var sinceSeq: Long = -1L
@@ -256,7 +259,7 @@ abstract class FrameView extends FlumeView {
   override def frameOption: Option[DataFrame] = state
 
   def absorb(entries: DataFrame, upto: Long): Unit = {
-    val d = delta(entries)
+    val d = delta(entries).localCheckpoint(true)
     state = Some(state.fold(d)(s => s.union(d)))
     sinceSeq = upto
     appendsSinceCompact += 1
@@ -388,7 +391,8 @@ final class HashtableView(keyCol: String, seqCol: String) extends FlumeView {
   override def frameOption: Option[DataFrame] = state
 
   def absorb(entries: DataFrame, upto: Long): Unit = {
-    val d = latest(entries)
+    // materialized: the db releases the absorbed frame after the sync
+    val d = latest(entries).localCheckpoint(true)
     state = Some(state.fold(d)(s => latest(s.unionByName(d))))
     sinceSeq = upto
     absorbsSinceCompact += 1

@@ -1086,4 +1086,159 @@ class FlumeDbSpec extends SparkSpec {
     assert(v.destroys.get() === 0)
     assert(!Files.exists(Paths.get(intent)))
   }
+
+  test("one view's failing absorb does not stop its siblings; onSince fires in mount order") {
+    val (_, db) = mkDb()
+    val failNext = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failAlways = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val flaky = new CountingView {
+      override def absorb(entries: DataFrame, upto: Long): Unit = {
+        if (failAlways.get || failNext.getAndSet(false)) sys.error("absorb boom")
+        super.absorb(entries, upto)
+      }
+    }
+    val (a, c) = (new CountingView, new CountingView)
+    db.use("a", countingDef(a)).use("flaky", countingDef(flaky)).use("c", countingDef(c))
+    val fired = java.util.Collections.synchronizedList(new java.util.ArrayList[(String, Long)]())
+    def firedNow: Seq[(String, Long)] = fired.toArray(Array.empty[(String, Long)]).toSeq
+    Seq("a", "flaky", "c").foreach(n => db.view(n).onSince(s => fired.add(n -> s)))
+    fired.clear()
+
+    // the first absorb fails, its own destroy + replay recovers
+    failNext.set(true)
+    db.append(fooDf(1L, 2L))
+    assert(firedNow === Seq("a" -> 1L, "flaky" -> 1L, "c" -> 1L), "emitted once each, in mount order")
+    assert(db.view("flaky").lastError.exists(_.getMessage == "absorb boom"))
+    assert(flaky.destroys.get() === 1 && flaky.delivered.get() === 2)
+    assert(a.destroys.get() === 0 && c.destroys.get() === 0, "siblings are not rebuilt")
+
+    // the replay fails too: the append surfaces the error, siblings still reach parity
+    fired.clear(); failAlways.set(true)
+    val ex = intercept[RuntimeException](db.append(fooDf(3L)))
+    assert(ex.getMessage === "absorb boom")
+    assert(firedNow === Seq("a" -> 2L, "c" -> 2L))
+    assert(a.since === 2L && c.since === 2L && a.delivered.get() === 3)
+    db.awaitView("a", timeoutMs = 1000)
+    db.awaitView("c", timeoutMs = 1000)
+    intercept[java.util.concurrent.TimeoutException](db.awaitView("flaky", timeoutMs = 300))
+
+    // the next sync replays the whole log into the reset view only
+    fired.clear(); failAlways.set(false)
+    db.append(fooDf(4L))
+    assert(firedNow === Seq("a" -> 3L, "flaky" -> 3L, "c" -> 3L))
+    assert(flaky.since === 3L)
+    assert(a.delivered.get() === 4 && c.delivered.get() === 4, "siblings absorb only seq > their cursor")
+  }
+
+  test("db.retract on a bucketed ParquetLog with an in-memory search view drops the removed seqs") {
+    val schema2 = StructType(Seq(StructField("user_id", LongType), StructField("text", StringType)))
+    val dir = java.nio.file.Files.createTempDirectory("graft-inmem-retract").toString
+    val log = new ParquetLog(spark, dir, schema2, bucketSize = 64L, statsColumns = Seq("user_id"))
+    val db = new FlumeDb(log)
+    db.use("search", SearchView("text")).use("idx", IndexView(array(col("user_id").cast("string"))))
+    val rows = (0 until 300).map(i => Row((i % 17).toLong, s"w${i % 7} v${i % 11} common"))
+    db.append(spark.createDataFrame(spark.sparkContext.parallelize(rows), schema2))
+    db.append(spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(5L, "w3 late"))), schema2))
+    val removed = (rows.indices.filter(_ % 17 == 5) :+ 300).map(_.toLong).toSet
+    assert(db.retract(col("user_id") === 5L) === removed.size.toLong)
+    val sv = db.view("search").view.asInstanceOf[SearchView]
+    val want = rows.indices.filter(i => i % 7 == 3 && i % 17 != 5).map(_.toLong)
+    assert(sv.searchAll(Seq("common", "w3")).collect().map(_.getLong(0)).toSeq === want)
+    assert(sv.search("late").count() === 0L, "postings of the removed seqs must leave the index")
+    val idx = db.view("idx").view.asInstanceOf[IndexView]
+    assert(idx.get("5").count() === 0L)
+    // the view answers again after further log rewrites
+    db.append(spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(6L, "w3 common"))), schema2))
+    assert(db.retract(col("user_id") === 6L) > 0L)
+    assert(sv.searchAll(Seq("common", "w3")).collect().map(_.getLong(0)).toSeq ===
+      want.filterNot(i => i % 17 == 6))
+    db.close()
+  }
+
+  test("absorb threads carry the caller's local properties; cancelJobGroup cancels their jobs") {
+    val sc = spark.sparkContext
+    case class Started(id: Int, time: Long, group: String, pool: String, desc: String)
+    val started = new java.util.concurrent.ConcurrentLinkedQueue[Started]()
+    val failedJobs = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        def p(k: String) = Option(e.properties).flatMap(ps => Option(ps.getProperty(k))).orNull
+        started.add(Started(e.jobId, e.time, p("spark.jobGroup.id"), p("spark.scheduler.pool"),
+          p("spark.job.description")))
+      }
+      override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
+        if (e.jobResult != org.apache.spark.scheduler.JobSucceeded) failedJobs.add(e.jobId)
+    }
+    def jobs: Seq[Started] = started.toArray(Array.empty[Started]).toSeq
+    def waitFor(what: String)(cond: => Boolean): Unit = {
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!cond && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(cond, what)
+    }
+    /** A job on this thread, seen by the listener: every earlier job start has been delivered too. */
+    def drainListener(): Unit = {
+      sc.setJobDescription("listener-marker")
+      val before = jobs.size
+      sc.parallelize(Seq(1), 1).count()
+      sc.setJobDescription(null)
+      waitFor("listener marker")(jobs.drop(before).exists(_.desc == "listener-marker"))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (_, db) = mkDb()
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String, Boolean)]()
+      val block = new java.util.concurrent.atomic.AtomicBoolean(false)
+      val blocker = new CountingView {
+        override def absorb(entries: DataFrame, upto: Long): Unit = {
+          seen.add((sc.getLocalProperty("spark.jobGroup.id"), sc.getLocalProperty("spark.scheduler.pool"),
+            sc.getJobTags().contains("flume-tag")))
+          if (block.getAndSet(false)) {
+            sc.setJobDescription("blocker")
+            entries.rdd.foreach(_ => Thread.sleep(60000))
+          }
+          super.absorb(entries, upto)
+        }
+      }
+      db.use("stats", StatsReduceView("foo")).use("blocker", countingDef(blocker))
+        .use("idx", IndexView(array(col("foo").cast("string"))))
+      seen.clear()
+      @volatile var appendError: Option[Throwable] = None
+      def appendUnder(group: String): Thread = {
+        val t = new Thread(() => {
+          sc.setJobGroup(group, "append under a job group", interruptOnCancel = true)
+          sc.setLocalProperty("spark.scheduler.pool", "flume-pool")
+          sc.addJobTag("flume-tag")
+          try db.append(fooDf(1L, 2L, 3L)) catch { case e: Throwable => appendError = Some(e) }
+        })
+        t.start(); t
+      }
+
+      // every job an append starts, on any absorb thread, carries the caller's group and pool
+      val t0 = System.currentTimeMillis()
+      appendUnder("flume-append").join(60000)
+      val t1 = System.currentTimeMillis()
+      assert(appendError.isEmpty, s"append failed: $appendError")
+      drainListener()
+      val during = jobs.filter(j => j.time >= t0 && j.time <= t1)
+      assert(during.size >= 3, s"expected the shared read's and the absorbs' jobs, got $during")
+      assert(during.forall(j => j.group == "flume-append" && j.pool == "flume-pool"), during.mkString("\n"))
+      assert(seen.toArray.toSeq === Seq(("flume-append", "flume-pool", true)))
+
+      // cancelling the group cancels a running absorb job; that view replays on its own
+      block.set(true)
+      val t2 = System.currentTimeMillis()
+      val cancelled = appendUnder("flume-cancel")
+      def blockerJob = jobs.find(j => j.desc == "blocker" && j.time >= t2)
+      waitFor("the blocking absorb job starts")(blockerJob.nonEmpty)
+      assert(blockerJob.get.group === "flume-cancel")
+      sc.cancelJobGroup("flume-cancel")
+      cancelled.join(45000)
+      assert(!cancelled.isAlive, "the cancelled job must not run out its sleep")
+      assert(appendError.isEmpty, s"the replay must recover: $appendError")
+      waitFor("the blocking job ends failed")(failedJobs.contains(blockerJob.get.id))
+      assert(db.view("blocker").lastError.isDefined)
+      assert(blocker.since === 5L && db.view("stats").since === 5L && db.view("idx").since === 5L)
+      db.close()
+    } finally sc.removeSparkListener(listener)
+  }
 }
