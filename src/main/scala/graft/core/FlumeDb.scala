@@ -27,10 +27,10 @@ trait FlumeView {
     * must update `since` to `upto` only after state is durable. The db
     * calls `absorb` of different views at the same time, each on its own
     * driver thread, all under the db lock: an absorb must not call back
-    * into the db. The frame is a shared materialized delta that the db
-    * releases once every view has absorbed it, so a view that keeps rows
-    * must materialize them (as [[graft.views.FrameView]] does) rather
-    * than hold the frame. */
+    * into the db. The frame may be a shared materialized delta that the
+    * db releases once every view has absorbed it, so a view that keeps
+    * rows must materialize them (as [[graft.views.FrameView]] does)
+    * rather than hold the frame. */
   def absorb(entries: DataFrame, upto: Long): Unit
 
   /** Drop all derived state; view returns to since = -1
@@ -149,11 +149,13 @@ final class ClosedException(msg: String) extends IllegalStateException(msg)
   * views, with flume's consistency contract — async view maintenance,
   * read-your-writes gating, destroy-and-rebuild lifecycle.
   *
-  * The pipeline from the log to the views is one read fanned out: each
-  * sync reads the new log range once, materializes it once, and every
-  * view behind the log absorbs it at the same time on its own driver
-  * thread (see `syncViews`). A view's failure stays that view's: it
-  * destroys and replays on its own while the others reach parity.
+  * The pipeline from the log to the views is one read fanned out: on an
+  * append, each sync reads the new log range once, materializes it once,
+  * and every view absorbs it at the same time on its own driver thread
+  * (see `syncViews`); a view behind the others, or a replay of the whole
+  * log, streams its own range. A
+  * view's failure stays that view's: it destroys and replays on its own
+  * while the others reach parity.
   *
   * Restates `/root/reference/index.js` + `wrap.js` on Spark: the data
   * plane (scans, folds, index builds) is distributed DataFrame work; only
@@ -332,11 +334,15 @@ final class FlumeDb(
 
   /** The one sync loop: bring `ms` (default: every mounted view) up to log
     * parity, in seq order, incrementally — the reference build loop's
-    * `gt: since` stream (reference `index.js:36-39`), shared. The
-    * log range `(min since, log.since]` of the lagging views is read ONCE
-    * in seq order and materialized by one eager job; every lagging
-    * view then absorbs it at the same time on its own driver thread,
-    * filtered to `seq > since` when its cursor is behind the others'.
+    * `gt: since` stream (reference `index.js:36-39`), fanned out. The
+    * views at the most advanced lagging cursor — on an append, every
+    * view — share one read of `(cursor, log.since]` in seq order,
+    * materialized by one eager job when two or more of them read it and
+    * the cursor is past the start of the log. Any other view (just
+    * mounted, rebuilt or reset by a failed replay, or alone at its
+    * cursor) streams its own `(since, log.since]`, so it costs what it
+    * would cost synced on its own. Every lagging view absorbs at the
+    * same time on its own driver thread.
     * After every absorb has returned, each view in mount order is marked
     * loaded, parity is signalled and its `since` is emitted; the shared
     * delta is then released.
@@ -353,17 +359,26 @@ final class FlumeDb(
   private def syncViews(ms: Seq[Mounted] = mountedViews): Unit = {
     val target = log.since
     ms.foreach(m => if (m.view.since > target) m.view.destroy()) // ahead of log => rebuild
-    val lagging = ms.filter(_.view.since < target)
+    val lagging = ms.map(m => m -> m.view.since).filter(_._2 < target)
     val failed: Map[Mounted, Throwable] =
       if (lagging.isEmpty) Map.empty
       else {
-        val from = lagging.map(_.view.since).min
-        val shared = Try(mappedStream(LogRange(gt = Some(from), lte = Some(target))).localCheckpoint(true))
+        val head = lagging.map(_._2).max
+        // a copy is made only of a tail that two or more views read; a
+        // replay from the start of the log would copy the whole log
+        val shared =
+          if (head < 0 || lagging.count(_._2 == head) < 2) None
+          else Some(Try(mappedStream(LogRange(gt = Some(head), lte = Some(target))).localCheckpoint(true)))
         try {
-          val outcomes = FlumeDb.fanOut(lagging.map(m =>
-            s"flumedb-absorb-${m.name}" -> (() => absorbOrReplay(m, shared, from, target))))
-          lagging.zip(outcomes).collect { case (m, Some(e)) => m -> e }.toMap
-        } finally shared.foreach(FlumeDb.releaseCheckpoint)
+          val outcomes = FlumeDb.fanOut(lagging.map { case (m, since) =>
+            val batch: () => DataFrame = shared match {
+              case Some(delta) if since == head => () => delta.get
+              case _ => () => mappedStream(LogRange(gt = Some(since), lte = Some(target)))
+            }
+            s"flumedb-absorb-${m.name}" -> (() => absorbOrReplay(m, batch, target))
+          })
+          lagging.zip(outcomes).collect { case ((m, _), Some(e)) => m -> e }.toMap
+        } finally shared.foreach(_.foreach(FlumeDb.releaseCheckpoint))
       }
     val synced = ms.filterNot(failed.contains)
     lock.lock(); try { synced.foreach(_.loaded = true); parity.signalAll() } finally lock.unlock()
@@ -374,16 +389,11 @@ final class FlumeDb(
     }
   }
 
-  /** One view's share of a sync: absorb the shared delta from its own
-    * cursor; on any failure, record it and destroy + replay the log. */
-  private def absorbOrReplay(m: Mounted, shared: Try[DataFrame], from: Long, target: Long): Unit =
-    try {
-      val s = m.view.since
-      m.view.absorb(
-        if (s == from) shared.get
-        else shared.get.where(org.apache.spark.sql.functions.col(log.seqCol) > s),
-        target)
-    } catch {
+  /** One view's share of a sync: absorb `batch`; on any failure, of the
+    * read or of the absorb, record it and destroy + replay the log. */
+  private def absorbOrReplay(m: Mounted, batch: () => DataFrame, target: Long): Unit =
+    try m.view.absorb(batch(), target)
+    catch {
       case NonFatal(e) =>
         m.lastError = Some(e)
         m.view.destroy()

@@ -1220,7 +1220,7 @@ class FlumeDbSpec extends SparkSpec {
       assert(appendError.isEmpty, s"append failed: $appendError")
       drainListener()
       val during = jobs.filter(j => j.time >= t0 && j.time <= t1)
-      assert(during.size >= 3, s"expected the shared read's and the absorbs' jobs, got $during")
+      assert(during.size >= 3, s"expected the absorbs' jobs, got $during")
       assert(during.forall(j => j.group == "flume-append" && j.pool == "flume-pool"), during.mkString("\n"))
       assert(seen.toArray.toSeq === Seq(("flume-append", "flume-pool", true)))
 
@@ -1240,5 +1240,53 @@ class FlumeDbSpec extends SparkSpec {
       assert(blocker.since === 5L && db.view("stats").since === 5L && db.view("idx").since === 5L)
       db.close()
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("only views at a shared cursor share a materialized read, released after the sync") {
+    val sc = spark.sparkContext
+    def persisted: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    @volatile var base = persisted
+    /** Records, per absorb, the RDDs persisted since `base` was last set: the sync's shared delta. */
+    class Recording extends CountingView {
+      val newPersisted = new java.util.concurrent.ConcurrentLinkedQueue[Set[Int]]()
+      override def absorb(entries: DataFrame, upto: Long): Unit = {
+        newPersisted.add(persisted -- base); super.absorb(entries, upto)
+      }
+      def last: Set[Int] = newPersisted.toArray(Array.empty[Set[Int]]).last
+    }
+    def released(ids: Set[Int]): Boolean =
+      (persisted & ids).isEmpty && !sc.getRDDStorageInfo.exists(i => ids.contains(i.id))
+
+    val (_, db) = mkDb()
+    val (a, b, c) = (new Recording, new Recording, new Recording)
+    db.use("a", countingDef(a)).use("b", countingDef(b))
+
+    // the first append replays the log from its start: each view streams it, nothing is copied
+    base = persisted
+    db.append(fooDf(1L, 2L))
+    assert(a.last.isEmpty && b.last.isEmpty && a.delivered.get() === 2 && b.delivered.get() === 2)
+
+    // an append: both views share one materialized read, released once both have absorbed it
+    base = persisted
+    db.append(fooDf(3L))
+    assert(a.last.nonEmpty && a.last === b.last, "a and b absorb one shared, materialized read")
+    assert(released(a.last), "the shared delta's blocks are released after the sync")
+    assert(a.delivered.get() === 3 && b.delivered.get() === 3)
+
+    // a mount over a non-empty log: one reader, nothing materialized for it
+    base = persisted
+    db.use("c", countingDef(c))
+    assert(c.last.isEmpty && c.delivered.get() === 3)
+
+    // c falls behind: a and b share the new rows, c streams its own range
+    c.destroy()
+    base = persisted
+    db.append(fooDf(4L))
+    assert(a.last.nonEmpty && a.last === b.last)
+    assert(released(a.last))
+    assert(a.delivered.get() === 4 && b.delivered.get() === 4, "a and b read only the new row")
+    assert(c.delivered.get() === 3 + 4 && c.since === 3L, "c replays the whole log from its own cursor")
+    assert(db.view("c").lastError.isEmpty)
+    db.close()
   }
 }
