@@ -48,6 +48,11 @@ object Bench {
     // Spark shortcut scans to metadata / prune all columns).
     def exec(df: org.apache.spark.sql.DataFrame): Unit =
       df.write.format("noop").mode("overwrite").save()
+    // The two result lines also land in a plain file (see the end of
+    // main). Delete it first: a run that crashes must not leave the
+    // previous run's numbers behind to be parsed as its own.
+    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
+    java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(outFile))
     // JVM/JIT + codegen warm-up on the smallest scale factor.
     SparkEntry.queries.foreach { case (_, fn) =>
       try exec(fn(spark, "/root/testdata/sf0.001")) catch { case _: Throwable => () }
@@ -114,7 +119,6 @@ object Bench {
     // sbt's `[info] ` logger prefix on forked stdout. build.sbt now
     // forces StdoutOutput pass-through, and the same two lines land in
     // a plain file so the contract survives any launcher.
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     scala.util.Try(java.nio.file.Files.writeString(
       java.nio.file.Paths.get(outFile), perQueryLine + "\n" + totalLine + "\n"))
     spark.stop()

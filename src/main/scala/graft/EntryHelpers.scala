@@ -36,10 +36,9 @@ private[graft] object EntryHelpers {
   // three helpers; both physical forms denote the same UTC instants
   // (FIXTURES.md convention), and the TIMESTAMP_NTZ form re-interprets
   // as an instant under the UTC session timezone every main sets.
-  val tsLongCache = scala.collection.concurrent.TrieMap.empty[String, Boolean]
   def tsIsLong(s: SparkSession, dir: String): Boolean =
-    tsLongCache.getOrElseUpdate(dir,
-      t(s, dir, "events").schema("ts").dataType == org.apache.spark.sql.types.LongType)
+    Fixtures.shared("ts-is-long", dir)(
+      t(s, dir, "events").schema("ts").dataType == org.apache.spark.sql.types.LongType)(_ => ())
 
   /** events.ts as a microsecond-precision timestamp. On the nanos-long
     * form, integer `div` (not `/`, which is double division and loses
@@ -61,12 +60,10 @@ private[graft] object EntryHelpers {
 
   // Re-appending the events table through the ParquetLog write path is
   // part of q_append_scan; cache per scale factor so bench reuse is
-  // O(1). Entries remember the session that built them (same hazard as
-  // the IVF cache): a restarted session reusing the dir must rebuild,
+  // O(1), per session: a restarted session reusing the dir must rebuild,
   // not read through a log pinned to the stopped session.
-  val appendedLogs = scala.collection.concurrent.TrieMap.empty[String, (SparkSession, ParquetLog)]
-  def appendedEventsLog(s: SparkSession, dir: String): ParquetLog = {
-    def build(): (SparkSession, ParquetLog) = {
+  def appendedEventsLog(s: SparkSession, dir: String): ParquetLog =
+    Fixtures.perSession("graftlog", dir, s) {
       val ev = t(s, dir, "events").orderBy("event_id")
         .select("ts", "user_id", "event_type", "value", "props")
       val tmp = java.nio.file.Files.createTempDirectory("graftlog").toString
@@ -74,65 +71,33 @@ private[graft] object EntryHelpers {
       // seq_bucket directories instead of scanning the whole log
       val log = new ParquetLog(s, tmp, ev.schema, bucketSize = 25000L)
       log.append(ev)
-      (s, log)
+      log
+    } { log =>
+      scala.util.Try(log.close())
+      // the log's temp dir holds a full events copy — delete it, or a
+      // JVM cycling sessions accumulates one copy per restart
+      deleteTree(log.dir)
     }
-    val e = appendedLogs.getOrElseUpdate(dir, build())
-    if (e._1 eq s) e._2
-    else {
-      appendedLogs.remove(dir, e)
-      scala.util.Try(e._2.close())
-      // the evicted log's temp dir holds a full events copy — delete it,
-      // or a JVM cycling sessions accumulates one copy per restart
-      scala.util.Try(graft.views.FsLists.walkDeepestFirst(
-        java.nio.file.Paths.get(e._2.dir)).foreach(java.nio.file.Files.deleteIfExists))
-      appendedLogs.getOrElseUpdate(dir, build())._2
-    }
-  }
 
   // events re-laid-out as a range-bucketed directory table keyed on
-  // event_id (graft.sources.Layout); cached per dir with the same
-  // stale-session guard as the other derived structures. The layout
-  // query demonstrates plan-time partition pruning on the generic
-  // (non-log) path.
-  val rangeLayouts = scala.collection.concurrent.TrieMap.empty[String, (SparkSession, String)]
-  def eventsRangeLayout(s: SparkSession, dir: String): String = {
-    def build(): (SparkSession, String) = {
-      val tmp = java.nio.file.Files.createTempDirectory("graftlayout").toString
+  // event_id (graft.sources.Layout); cached per dir and session like
+  // the other derived structures. The layout query demonstrates
+  // plan-time partition pruning on the generic (non-log) path.
+  def eventsRangeLayout(s: SparkSession, dir: String): String =
+    Fixtures.tmpDir("graftlayout", dir, s) { tmp =>
       graft.sources.Layout.writeRangeBucketed(
         t(s, dir, "events").select("event_id", "user_id", "event_type", "value"),
         tmp, nBuckets = 32, key = "event_id")
-      (s, tmp)
     }
-    val e = rangeLayouts.getOrElseUpdate(dir, build())
-    if (e._1 eq s) e._2
-    else {
-      rangeLayouts.remove(dir, e)
-      scala.util.Try(graft.views.FsLists.walkDeepestFirst(
-        java.nio.file.Paths.get(e._2)).foreach(java.nio.file.Files.deleteIfExists))
-      rangeLayouts.getOrElseUpdate(dir, build())._2
-    }
-  }
 
   // events re-laid-out on the Z-order curve over (user_id, event_id) —
   // the 2-D data-skipping layout; cached per dir like eventsRangeLayout
-  val zLayouts = scala.collection.concurrent.TrieMap.empty[String, (SparkSession, String)]
-  def eventsZLayout(s: SparkSession, dir: String): String = {
-    def build(): (SparkSession, String) = {
-      val tmp = java.nio.file.Files.createTempDirectory("graftzlayout").toString
+  def eventsZLayout(s: SparkSession, dir: String): String =
+    Fixtures.tmpDir("graftzlayout", dir, s) { tmp =>
       graft.sources.Layout.writeZOrdered(
         t(s, dir, "events").select("event_id", "user_id", "event_type", "value"),
         tmp, keyX = "user_id", keyY = "event_id", bitsPerDim = 8, nBuckets = 64)
-      (s, tmp)
     }
-    val e = zLayouts.getOrElseUpdate(dir, build())
-    if (e._1 eq s) e._2
-    else {
-      zLayouts.remove(dir, e)
-      scala.util.Try(graft.views.FsLists.walkDeepestFirst(
-        java.nio.file.Paths.get(e._2)).foreach(java.nio.file.Files.deleteIfExists))
-      zLayouts.getOrElseUpdate(dir, build())._2
-    }
-  }
 
   // orders + lineitem re-laid-out as co-located hash-bucketed tables on
   // the order key (graft.sources.Bucketed): both sides bucketed+sorted
@@ -142,13 +107,11 @@ private[graft] object EntryHelpers {
   // once per data dir; bucket METADATA lives in the session catalog, so
   // a stale session rebuilds (a cluster metastore would persist it and
   // Bucketed.register would re-attach instead).
-  val bucketedJoinTables = scala.collection.concurrent.TrieMap.empty[String, (SparkSession, String)]
   def bucketedOrdersLineitem(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val suffix = java.security.MessageDigest.getInstance("MD5")
       .digest(dir.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(8)
     val (ordName, liName) = (s"graft_orders_$suffix", s"graft_lineitem_$suffix")
-    def build(): (SparkSession, String) = {
-      val tmp = java.nio.file.Files.createTempDirectory("graftbucketed").toString
+    Fixtures.tmpDir("graftbucketed", dir, s) { tmp =>
       // repartition by the bucket key first (same Murmur3 hash as the
       // bucket function), so each task owns exactly one bucket and the
       // writer emits ONE sorted file per bucket — the join then needs
@@ -161,65 +124,29 @@ private[graft] object EntryHelpers {
         t(s, dir, "lineitem").select("l_orderkey", "l_extendedprice", "l_discount")
           .repartition(8, col("l_orderkey")),
         s"$tmp/lineitem", liName, "l_orderkey", 8)
-      (s, tmp)
-    }
-    val e = bucketedJoinTables.getOrElseUpdate(dir, build())
-    if (e._1 ne s) {
-      bucketedJoinTables.remove(dir, e)
-      scala.util.Try(graft.views.FsLists.walkDeepestFirst(
-        java.nio.file.Paths.get(e._2)).foreach(java.nio.file.Files.deleteIfExists))
-      bucketedJoinTables.getOrElseUpdate(dir, build())
     }
     (s.table(ordName), s.table(liName))
   }
 
   // the documents corpus's minhash signature table, written once per
   // data dir and read back as a stored parquet table — the base side of
-  // q_dedup_incremental (same stale-session guard as the other caches)
-  val sigTables = scala.collection.concurrent.TrieMap.empty[String, (SparkSession, String)]
-  def baseSignatures(s: SparkSession, dir: String): DataFrame = {
-    def build(): (SparkSession, String) = {
-      val tmp = java.nio.file.Files.createTempDirectory("graftsigs").toString
+  // q_dedup_incremental
+  def baseSignatures(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Fixtures.tmpDir("graftsigs", dir, s) { tmp =>
       graft.ops.Dedup.signatureTable(t(s, dir, "documents").select("doc_id", "text"))
         .write.mode("overwrite").parquet(tmp)
-      (s, tmp)
-    }
-    val e = sigTables.getOrElseUpdate(dir, build())
-    val path =
-      if (e._1 eq s) e._2
-      else {
-        sigTables.remove(dir, e)
-        scala.util.Try(graft.views.FsLists.walkDeepestFirst(
-          java.nio.file.Paths.get(e._2)).foreach(java.nio.file.Files.deleteIfExists))
-        sigTables.getOrElseUpdate(dir, build())._2
-      }
-    s.read.parquet(path)
-  }
+    })
 
   // the embeddings corpus with its hyperplane LSH signature as a stored
   // parquet column, written once per data dir — q_ann_lsh serves from
   // this instead of recomputing nBits × dim multiply-adds per row per
-  // query (same stale-session guard as the other derived structures)
-  val annSigTables = scala.collection.concurrent.TrieMap.empty[String, (SparkSession, String)]
-  def storedAnnSignatures(s: SparkSession, dir: String): DataFrame = {
-    def build(): (SparkSession, String) = {
-      val tmp = java.nio.file.Files.createTempDirectory("graftannsigs").toString
+  // query
+  def storedAnnSignatures(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Fixtures.tmpDir("graftannsigs", dir, s) { tmp =>
       graft.ops.Similarity.withHyperplaneSignatures(
           t(s, dir, "embeddings").select("vec_id", "embedding"))
         .write.mode("overwrite").parquet(tmp)
-      (s, tmp)
-    }
-    val e = annSigTables.getOrElseUpdate(dir, build())
-    val path =
-      if (e._1 eq s) e._2
-      else {
-        annSigTables.remove(dir, e)
-        scala.util.Try(graft.views.FsLists.walkDeepestFirst(
-          java.nio.file.Paths.get(e._2)).foreach(java.nio.file.Files.deleteIfExists))
-        annSigTables.getOrElseUpdate(dir, build())._2
-      }
-    s.read.parquet(path)
-  }
+    })
 
   // the PQ model (m x k x dim/m driver doubles) and the encoded code
   // table, built/written once per data dir — q_ann_pq serves ADC off
@@ -228,52 +155,30 @@ private[graft] object EntryHelpers {
   // keep the whole encode -> ADC -> re-rank chain DuckDB-replayable,
   // converting both PQ queries from rows-only to hash-matched; the
   // k-means-trained path stays covered by EmbeddingOpsSpec recall tests
-  val pqModels = scala.collection.concurrent.TrieMap.empty[String, (SparkSession, graft.ops.Pq.Model, String)]
   def storedPqIndex(s: SparkSession, dir: String): (graft.ops.Pq.Model, DataFrame) = {
-    def build(): (SparkSession, graft.ops.Pq.Model, String) = {
+    val (model, path) = Fixtures.perSession("graftpqcodes", dir, s) {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
       val model = graft.ops.Pq.seedModel(emb, m = 8, k = 16)
       val tmp = java.nio.file.Files.createTempDirectory("graftpqcodes").toString
       graft.ops.Pq.encode(emb, model).write.mode("overwrite").parquet(tmp)
-      (s, model, tmp)
-    }
-    val e = pqModels.getOrElseUpdate(dir, build())
-    val (model, path) =
-      if (e._1 eq s) (e._2, e._3)
-      else {
-        pqModels.remove(dir, e)
-        scala.util.Try(graft.views.FsLists.walkDeepestFirst(
-          java.nio.file.Paths.get(e._3)).foreach(java.nio.file.Files.deleteIfExists))
-        val n = pqModels.getOrElseUpdate(dir, build())
-        (n._2, n._3)
-      }
+      (model, tmp)
+    }(e => deleteTree(e._2))
     (model, s.read.parquet(path))
   }
 
   // the composed IVF+PQ index: codes WITH the coarse cell id, written
   // once per data dir PARTITIONED BY cell — probing is plan-time
   // directory pruning over files already 32x smaller than the vectors
-  val ivfpqModels = scala.collection.concurrent.TrieMap.empty[String, (SparkSession, graft.ops.Pq.Model, Array[(Long, Seq[Float])], String)]
   def storedIvfPqIndex(s: SparkSession, dir: String): (graft.ops.Pq.Model, Array[(Long, Seq[Float])], DataFrame) = {
-    def build(): (SparkSession, graft.ops.Pq.Model, Array[(Long, Seq[Float])], String) = {
+    val (model, cents, path) = Fixtures.perSession("graftivfpq", dir, s) {
       val emb = t(s, dir, "embeddings").select("vec_id", "embedding")
       val model = graft.ops.Pq.seedModel(emb, m = 8, k = 16)
       val cents = graft.ops.Similarity.seedCentroids(emb, nCentroids = 16)
       val tmp = java.nio.file.Files.createTempDirectory("graftivfpq").toString
       graft.ops.Pq.encodeWithCells(emb, model, cents)
         .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-      (s, model, cents, tmp)
-    }
-    val e = ivfpqModels.getOrElseUpdate(dir, build())
-    val (model, cents, path) =
-      if (e._1 eq s) (e._2, e._3, e._4)
-      else {
-        ivfpqModels.remove(dir, e)
-        scala.util.Try(graft.views.FsLists.walkDeepestFirst(
-          java.nio.file.Paths.get(e._4)).foreach(java.nio.file.Files.deleteIfExists))
-        val n = ivfpqModels.getOrElseUpdate(dir, build())
-        (n._2, n._3, n._4)
-      }
+      (model, cents, tmp)
+    }(e => deleteTree(e._3))
     (model, cents, s.read.parquet(path))
   }
 
@@ -290,39 +195,20 @@ private[graft] object EntryHelpers {
   // the corpus BPE merge table, trained once per data dir (the model is
   // N small driver rows, like k-means centroids; training reads only the
   // distinct-word table) — q_bpe_train/q_bpe_encode share it
-  val bpeModels = scala.collection.concurrent.TrieMap.empty[String, (SparkSession, Seq[graft.ops.Bpe.Merge])]
-  def bpeMerges(s: SparkSession, dir: String): Seq[graft.ops.Bpe.Merge] = {
-    def build(): (SparkSession, Seq[graft.ops.Bpe.Merge]) =
-      (s, graft.ops.Bpe.train(t(s, dir, "documents"), nMerges = 30))
-    val e = bpeModels.getOrElseUpdate(dir, build())
-    if (e._1 eq s) e._2
-    else { bpeModels.remove(dir, e); bpeModels.getOrElseUpdate(dir, build())._2 }
-  }
+  def bpeMerges(s: SparkSession, dir: String): Seq[graft.ops.Bpe.Merge] =
+    Fixtures.perSession("graftbpe", dir, s)(
+      graft.ops.Bpe.train(t(s, dir, "documents"), nMerges = 30))(_ => ())
 
   // the chain fixture's cluster-assignment table, clustered once per
   // data dir and read back from parquet — the base side of
-  // q_cluster_survivors (same stale-session guard as the other caches)
-  val clusterTables = scala.collection.concurrent.TrieMap.empty[String, (SparkSession, String)]
-  def storedClusters(s: SparkSession, dir: String): DataFrame = {
-    def build(): (SparkSession, String) = {
-      val tmp = java.nio.file.Files.createTempDirectory("graftclusters").toString
+  // q_cluster_survivors
+  def storedClusters(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Fixtures.tmpDir("graftclusters", dir, s) { tmp =>
       val corpus = docsWithDupChain(s, dir)
       val pairs = graft.ops.Dedup.ngramJaccard(corpus, threshold = 0.5, maxDocFreq = 1000)
       graft.ops.Cluster.dupClusters(corpus, pairs)
         .write.mode("overwrite").parquet(tmp)
-      (s, tmp)
-    }
-    val e = clusterTables.getOrElseUpdate(dir, build())
-    val path =
-      if (e._1 eq s) e._2
-      else {
-        clusterTables.remove(dir, e)
-        scala.util.Try(graft.views.FsLists.walkDeepestFirst(
-          java.nio.file.Paths.get(e._2)).foreach(java.nio.file.Files.deleteIfExists))
-        clusterTables.getOrElseUpdate(dir, build())._2
-      }
-    s.read.parquet(path)
-  }
+    })
 
   /** documents ∪ composite docs (id+30000) built from the first 20
     * tokens of doc d and the first 20 of doc d+1 (every 7th d) — the
@@ -343,25 +229,11 @@ private[graft] object EntryHelpers {
 
   // Stored line-frequency table per (data dir, generation) — lineDedup's
   // stored artifact (the baseSignatures pattern).
-  private val lineFreqTables = scala.collection.concurrent.TrieMap.empty[String, (SparkSession, String)]
-  def storedLineFreq(s: SparkSession, dir: String): DataFrame = {
-    def build(): (SparkSession, String) = {
-      val tmp = java.nio.file.Files.createTempDirectory("graftlinefreq").toString
+  def storedLineFreq(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Fixtures.tmpDir("graftlinefreq", dir, s) { tmp =>
       graft.ops.TextAnalysis.lineFrequencyTable(docsWithLines(s, dir))
         .write.mode("overwrite").parquet(tmp)
-      (s, tmp)
-    }
-    val e = lineFreqTables.getOrElseUpdate(dir, build())
-    val path =
-      if (e._1 eq s) e._2
-      else {
-        lineFreqTables.remove(dir, e)
-        scala.util.Try(graft.views.FsLists.walkDeepestFirst(
-          java.nio.file.Paths.get(e._2)).foreach(java.nio.file.Files.deleteIfExists))
-        lineFreqTables.getOrElseUpdate(dir, build())._2
-      }
-    s.read.parquet(path)
-  }
+    })
 
   /** New-crawl batch for INCREMENTAL substring dedup: every 7th corpus
     * doc contributes a batch doc (id+40000) opening with its first 20
@@ -387,25 +259,11 @@ private[graft] object EntryHelpers {
 
   // Stored distinct-gram fingerprint table per (data dir, generation) —
   // the substring family's stored artifact (the baseSignatures pattern).
-  private val gramTables = scala.collection.concurrent.TrieMap.empty[String, (SparkSession, String)]
-  def storedGramTable(s: SparkSession, dir: String): DataFrame = {
-    def build(): (SparkSession, String) = {
-      val tmp = java.nio.file.Files.createTempDirectory("graftgrams").toString
+  def storedGramTable(s: SparkSession, dir: String): DataFrame =
+    s.read.parquet(Fixtures.tmpDir("graftgrams", dir, s) { tmp =>
       graft.ops.Dedup.gramTable(t(s, dir, "documents").select("doc_id", "text"))
         .write.mode("overwrite").parquet(tmp)
-      (s, tmp)
-    }
-    val e = gramTables.getOrElseUpdate(dir, build())
-    val path =
-      if (e._1 eq s) e._2
-      else {
-        gramTables.remove(dir, e)
-        scala.util.Try(graft.views.FsLists.walkDeepestFirst(
-          java.nio.file.Paths.get(e._2)).foreach(java.nio.file.Files.deleteIfExists))
-        gramTables.getOrElseUpdate(dir, build())._2
-      }
-    s.read.parquet(path)
-  }
+    })
 
   /** documents ∪ quote docs (id+40000): every 5th doc contributes its
     * first 25 tokens as a standalone "quote" document — the planted
@@ -455,24 +313,12 @@ private[graft] object EntryHelpers {
 
   // events rewritten once per data dir as an ORC table — the other
   // native columnar codec; q_orc_scan range-reads it through the same
-  // TableLog surface (same stale-session guard as the other caches)
-  val orcTables = scala.collection.concurrent.TrieMap.empty[String, (SparkSession, String)]
-  def eventsOrcPath(s: SparkSession, dir: String): String = {
-    def build(): (SparkSession, String) = {
-      val tmp = java.nio.file.Files.createTempDirectory("graftorc").toString
+  // TableLog surface
+  def eventsOrcPath(s: SparkSession, dir: String): String =
+    Fixtures.tmpDir("graftorc", dir, s) { tmp =>
       t(s, dir, "events").select("event_id", "user_id", "event_type", "value")
         .write.mode("overwrite").orc(tmp)
-      (s, tmp)
     }
-    val e = orcTables.getOrElseUpdate(dir, build())
-    if (e._1 eq s) e._2
-    else {
-      orcTables.remove(dir, e)
-      scala.util.Try(graft.views.FsLists.walkDeepestFirst(
-        java.nio.file.Paths.get(e._2)).foreach(java.nio.file.Files.deleteIfExists))
-      orcTables.getOrElseUpdate(dir, build())._2
-    }
-  }
 
   /** documents with deterministic planted URLs (the driver corpus has
     * none): one http URL whose host cycles over 37 subdomains plus one
@@ -510,16 +356,6 @@ private[graft] object EntryHelpers {
 
   val streamIds = new java.util.concurrent.atomic.AtomicLong()
 
-  /** Stored IVF index over the embeddings table (built once per scale
-    * factor through the view framework; probing is partition pruning).
-    * Cache entries remember the session that built them: a cached view
-    * pins frames of that session, so a different (e.g. restarted)
-    * session re-using the same data dir must not see the stale entry —
-    * it is evicted, its db closed, and the index rebuilt. */
-  final case class IvfEntry(session: SparkSession, db: FlumeDb, view: IVFIndexView)
-  val ivfViews = scala.collection.concurrent.TrieMap.empty[String, IvfEntry]
-  val ivfBuildLocks = scala.collection.concurrent.TrieMap.empty[String, Object]
-
   /** 64-bit hex fingerprint of the source table's identity AND content
     * generation (path + recursive mtime/length) — a regenerated table
     * gets a different stored-index location, so the parity check can
@@ -534,149 +370,69 @@ private[graft] object EntryHelpers {
     d.take(8).map(b => f"$b%02x").mkString
   }
 
-  // Stored phash table per (data dir, content generation) — the same
-  // durable-artifact discipline as the IVF index: built once, reopened
-  // at parity from the manifest by every later mount.
-  val phashViews = scala.collection.concurrent.TrieMap.empty[String, (SparkSession, graft.views.PhashTableView)]
-  val phashBuildLocks = scala.collection.concurrent.TrieMap.empty[String, Object]
-  val afpViews = scala.collection.concurrent.TrieMap.empty[String, (SparkSession, graft.views.AudioFingerprintTableView)]
-  val afpBuildLocks = scala.collection.concurrent.TrieMap.empty[String, Object]
-  def afpTable(s: SparkSession, dir: String): graft.views.AudioFingerprintTableView = {
-    def build(): (SparkSession, graft.views.AudioFingerprintTableView) = {
-      val vdir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft-afp-" + sourceFingerprint(s"$dir/documents.parquet")).toString
-      val v = new graft.views.AudioFingerprintTableView(s, vdir, 2)
-      if (v.since < 0)
-        v.absorbFingerprints(Multimodal.audioFingerprint(
-          Multimodal.syntheticWavMedia(t(s, dir, "documents"), textured = true)), 1L)
-      (s, v)
-    }
-    val lock = afpBuildLocks.getOrElseUpdate(dir, new Object)
-    lock.synchronized {
-      val e = afpViews.getOrElseUpdate(dir, build())
-      if (e._1 eq s) e._2
-      else {
-        afpViews.remove(dir, e)
-        val fresh = build()
-        afpViews.put(dir, fresh)
-        fresh._2
-      }
-    }
-  }
+  // Stored media fingerprint table per (data dir, content generation) —
+  // the same durable-artifact discipline as the IVF index: built once,
+  // reopened at parity from the manifest by every later mount.
+  private def durableTable[V <: FlumeView](tag: String, s: SparkSession, dir: String)(
+      open: String => V)(fill: V => Unit): V =
+    Fixtures.perSession(tag, dir, s) {
+      val v = open(java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+        s"graft-$tag-" + sourceFingerprint(s"$dir/documents.parquet")).toString)
+      if (v.since < 0) fill(v)
+      v
+    }(_.close())
 
-  val agramViews = scala.collection.concurrent.TrieMap.empty[String, (SparkSession, graft.views.AudioGramTableView)]
-  val agramBuildLocks = scala.collection.concurrent.TrieMap.empty[String, Object]
-  def agramTable(s: SparkSession, dir: String): graft.views.AudioGramTableView = {
-    def build(): (SparkSession, graft.views.AudioGramTableView) = {
-      val vdir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft-agram-" + sourceFingerprint(s"$dir/documents.parquet")).toString
-      val v = new graft.views.AudioGramTableView(s, vdir, 1)
-      if (v.since < 0)
-        v.absorbGrams(Multimodal.audioGrams(
-          Multimodal.syntheticWavMedia(t(s, dir, "documents"), textured = true)), 1L)
-      (s, v)
+  def afpTable(s: SparkSession, dir: String): AudioFingerprintTableView =
+    durableTable("afp", s, dir)(new AudioFingerprintTableView(s, _, 2)) { v =>
+      v.absorbFingerprints(Multimodal.audioFingerprint(
+        Multimodal.syntheticWavMedia(t(s, dir, "documents"), textured = true)), 1L)
     }
-    val lock = agramBuildLocks.getOrElseUpdate(dir, new Object)
-    lock.synchronized {
-      val e = agramViews.getOrElseUpdate(dir, build())
-      if (e._1 eq s) e._2
-      else {
-        agramViews.remove(dir, e)
-        val fresh = build()
-        agramViews.put(dir, fresh)
-        fresh._2
-      }
-    }
-  }
 
-  val fhashViews = scala.collection.concurrent.TrieMap.empty[String, (SparkSession, graft.views.FrameHashTableView)]
-  val fhashBuildLocks = scala.collection.concurrent.TrieMap.empty[String, Object]
-  def fhashTable(s: SparkSession, dir: String): graft.views.FrameHashTableView = {
-    def build(): (SparkSession, graft.views.FrameHashTableView) = {
-      val vdir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft-fhash-" + sourceFingerprint(s"$dir/documents.parquet")).toString
-      val v = new graft.views.FrameHashTableView(s, vdir, 1)
-      if (v.since < 0)
-        v.absorbHashes(Multimodal.videoFrameHashes(
-          Multimodal.syntheticTextureGifMedia(t(s, dir, "documents"))), 1L)
-      (s, v)
+  def agramTable(s: SparkSession, dir: String): AudioGramTableView =
+    durableTable("agram", s, dir)(new AudioGramTableView(s, _, 1)) { v =>
+      v.absorbGrams(Multimodal.audioGrams(
+        Multimodal.syntheticWavMedia(t(s, dir, "documents"), textured = true)), 1L)
     }
-    val lock = fhashBuildLocks.getOrElseUpdate(dir, new Object)
-    lock.synchronized {
-      val e = fhashViews.getOrElseUpdate(dir, build())
-      if (e._1 eq s) e._2
-      else {
-        fhashViews.remove(dir, e)
-        val fresh = build()
-        fhashViews.put(dir, fresh)
-        fresh._2
-      }
-    }
-  }
 
-  def phashTable(s: SparkSession, dir: String): graft.views.PhashTableView = {
-    def build(): (SparkSession, graft.views.PhashTableView) = {
-      val vdir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        "graft-phash-" + sourceFingerprint(s"$dir/documents.parquet")).toString
-      val v = new graft.views.PhashTableView(s, vdir, 1)
-      if (v.since < 0)
-        v.absorbHashes(Multimodal.perceptualHash(
-          Multimodal.syntheticTexturePngMedia(t(s, dir, "documents"))), 1L)
-      (s, v)
+  def fhashTable(s: SparkSession, dir: String): FrameHashTableView =
+    durableTable("fhash", s, dir)(new FrameHashTableView(s, _, 1)) { v =>
+      v.absorbHashes(Multimodal.videoFrameHashes(
+        Multimodal.syntheticTextureGifMedia(t(s, dir, "documents"))), 1L)
     }
-    val lock = phashBuildLocks.getOrElseUpdate(dir, new Object)
-    lock.synchronized {
-      val e = phashViews.getOrElseUpdate(dir, build())
-      if (e._1 eq s) e._2
-      else {
-        phashViews.remove(dir, e)
-        val fresh = build()
-        phashViews.put(dir, fresh)
-        fresh._2
-      }
-    }
-  }
 
-  def ivfIndex(s: SparkSession, dir: String): IVFIndexView = {
-    def build(): IvfEntry = {
+  def phashTable(s: SparkSession, dir: String): PhashTableView =
+    durableTable("phash", s, dir)(new PhashTableView(s, _, 1)) { v =>
+      v.absorbHashes(Multimodal.perceptualHash(
+        Multimodal.syntheticTexturePngMedia(t(s, dir, "documents"))), 1L)
+    }
+
+  /** Stored IVF index over the embeddings table (built once per scale
+    * factor through the view framework; probing is partition pruning).
+    * The view pins frames of the session that built it, so a different
+    * (e.g. restarted) session re-using the same data dir must not see
+    * it: the stale db is closed and the index remounted. */
+  def ivfIndex(s: SparkSession, dir: String): IVFIndexView =
+    Fixtures.perSession("ivf", dir, s) {
       val db = new FlumeDb(new TableLog(s, t(s, dir, "embeddings"), "vec_id"))
       // Deterministic on-disk location per (data dir, content
       // generation): the index is a DURABLE view — the first process to
       // touch a scale factor builds it, every later mount (same or new
       // JVM) reopens at parity from the manifest and goes straight to
       // probing. That is the 100 TB deployment shape: a long-lived
-      // stored index serving queries, not a per-process rebuild.
+      // stored index serving queries, not a per-process rebuild. The
+      // build must hold the key's lock: two concurrent IVFIndexView
+      // constructions on the same stored dir could prune each other's
+      // in-flight batch.
       val vdir = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
         "graft-ivf-" + sourceFingerprint(s"$dir/embeddings.parquet")).toString
       db.use("ivf", IVFIndexView(vdir))
-      IvfEntry(s, db, db.gated("ivf")(_.asInstanceOf[IVFIndexView]))
-    }
-    // One build at a time per data dir: TrieMap.getOrElseUpdate may race
-    // two thunks, and two concurrent IVFIndexView constructions on the
-    // same stored dir could prune each other's in-flight batch.
-    val lock = ivfBuildLocks.getOrElseUpdate(dir, new Object)
-    lock.synchronized {
-      val e = ivfViews.getOrElseUpdate(dir, build())
-      if (e.session eq s) e.view
-      else {
-        ivfViews.remove(dir, e)
-        scala.util.Try(e.db.close())
-        val fresh = build()
-        ivfViews.put(dir, fresh)
-        fresh.view
-      }
-    }
-  }
+      (db, db.gated("ivf")(_.asInstanceOf[IVFIndexView]))
+    }(_._1.close())._2
 
   def queryVec(s: SparkSession, dir: String, id: Long): Seq[Float] =
     t(s, dir, "embeddings").where(col("vec_id") === id)
       .head().getAs[scala.collection.Seq[Float]]("embedding").toSeq
 
-
-  // Per-template build locks (clonedFixture): one build at a time per
-  // (name, data dir) -- TrieMap.getOrElseUpdate may run two racing
-  // thunks and keep only one, and the loser would leak a template tree.
-  private val logFixtureLocks = scala.collection.concurrent.TrieMap.empty[(String, String), Object]
 
   // Immutable fixture TEMPLATES for the NON-idempotent lifecycle
   // queries (retract + RE-INGEST append new rows, so reps cannot share
@@ -689,16 +445,12 @@ private[graft] object EntryHelpers {
   // because both stores are path-relocatable by design: DeltaProtocol's
   // MANIFEST is "version seq" with batch=N dirs resolved under the
   // root, and ParquetLog recovers cursor/stats from names + footers.
-  // Templates (plain bytes, no session handle) are swept at exit.
-  val fixtureTemplates = scala.collection.concurrent.TrieMap.empty[(String, String), String]
+  // Templates (plain bytes, no session handle) are deleted at exit.
   def clonedFixture(name: String, dir: String)(build: String => Unit): String = {
-    val lock = logFixtureLocks.getOrElseUpdate(("tpl:" + name, dir), new Object)
-    val tpl = lock.synchronized {
-      fixtureTemplates.getOrElseUpdate((name, dir), {
-        val d = java.nio.file.Files.createTempDirectory(s"$name-tpl").toString
-        build(d); d
-      })
-    }
+    val tpl = Fixtures.shared("tpl:" + name, dir) {
+      val d = java.nio.file.Files.createTempDirectory(s"$name-tpl").toString
+      build(d); d
+    }(deleteTree)
     val dst = java.nio.file.Files.createTempDirectory(name).toString
     copyTree(tpl, dst)
     dst
@@ -712,15 +464,15 @@ private[graft] object EntryHelpers {
     * result is fully consumed (the bench/verify/test runners are all
     * sequential; the no-concurrency rule is documented on the bench) —
     * and the process-exit sweep reclaims the last one. */
-  val liveClones = scala.collection.concurrent.TrieMap.empty[(String, String), String]
+  val liveClones = Fixtures.shared("live-clones", "")(
+    scala.collection.concurrent.TrieMap.empty[(String, String), String])(
+    _.values.foreach(d => scala.util.Try(deleteTree(d))))
   def clonedFixtureLazy(name: String, dir: String)(build: String => Unit): String = {
     val dst = clonedFixture(name, dir)(build)
     liveClones.put((name, dir), dst).foreach(deleteTreeAsync)
     dst
   }
-  /** [[copyTree]] for the profiling tools. */
-  def copyTreePublic(src: String, dst: String): Unit = copyTree(src, dst)
-  private def copyTree(src: String, dst: String): Unit = {
+  private[graft] def copyTree(src: String, dst: String): Unit = {
     val sp = java.nio.file.Paths.get(src); val dp = java.nio.file.Paths.get(dst)
     val st = java.nio.file.Files.walk(sp)
     try {
@@ -740,14 +492,19 @@ private[graft] object EntryHelpers {
   /** Plan visibility for lifecycle queries that `localCheckpoint(true)`
     * their result to decouple the async fixture teardown (their dumped
     * plan is otherwise an opaque `Scan ExistingRDD` — the r18 audit's
-    * item 4): the lambda registers the PRE-checkpoint frame here and the
-    * plan dumpers ([[graft.tools.DumpPlans]]/[[graft.tools.DumpPlanFiles]])
-    * read-and-clear it. Outside the dumpers this stores one frame
-    * reference per query — no extra jobs, no behavior change. */
-  @volatile var lastPreCheckpointPlan: Option[DataFrame] = None
-  def notePlan(df: DataFrame): DataFrame = { lastPreCheckpointPlan = Some(df); df }
-  def takePreCheckpointPlan(): Option[DataFrame] = {
-    val p = lastPreCheckpointPlan; lastPreCheckpointPlan = None; p
+    * item 4): the lambda registers the PRE-checkpoint frame with
+    * [[notePlan]], and the plan dumpers
+    * ([[graft.tools.DumpPlans]]/[[graft.tools.DumpPlanFiles]]) build the
+    * query inside [[capturePlan]], which hands that frame back. Outside
+    * a capture notePlan stores nothing; a capture sees only the frames
+    * its own build notes, so concurrent builds cannot cross plans. */
+  private val planCapture =
+    new scala.util.DynamicVariable[Option[java.util.concurrent.atomic.AtomicReference[DataFrame]]](None)
+  def notePlan(df: DataFrame): DataFrame = { planCapture.value.foreach(_.set(df)); df }
+  def capturePlan[A](body: => A): (A, Option[DataFrame]) = {
+    val noted = new java.util.concurrent.atomic.AtomicReference[DataFrame]
+    val r = planCapture.withValue(Some(noted))(body)
+    (r, Option(noted.get))
   }
 
   // Stable per-(fixture, data dir) temp directories for DURABLE view
@@ -755,62 +512,28 @@ private[graft] object EntryHelpers {
   // first rep builds into the dir (callers guard their absorbs on the
   // view's cursor), later reps reopen at parity — no rebuild cost, no
   // one-tree-per-rep /tmp litter — and the process-exit sweep deletes
-  // them. (The cached-FlumeDb pattern above does the same for fixtures
-  // that need open handles; this one is for paths alone.)
-  val stableDirs = scala.collection.concurrent.TrieMap.empty[(String, String), String]
+  // them.
   def stableTmpDir(name: String, dir: String): String =
-    stableDirs.getOrElseUpdate((name, dir),
-      java.nio.file.Files.createTempDirectory(name).toString)
+    Fixtures.shared("stable:" + name, dir)(
+      java.nio.file.Files.createTempDirectory(name).toString)(deleteTree)
 
   // Off-thread fixture teardown: build-and-destroy queries (reingest,
   // stream-curate, expire) delete their per-rep temp trees through this
   // single daemon worker so the I/O runs CONCURRENTLY with the next
   // computation instead of inside the timed lambda — the bench prices
-  // the OPERATOR, /tmp still ends the run clean. The shutdown hook
-  // drains the queue so a process exit cannot strand scheduled deletes.
-  private lazy val sweepPool = {
-    val pool = java.util.concurrent.Executors.newSingleThreadExecutor(r => {
+  // the OPERATOR, /tmp still ends the run clean. The worker is a shared
+  // fixture whose release drains the queue, so a process exit cannot
+  // strand scheduled deletes.
+  private lazy val sweepPool = Fixtures.shared("async-sweep", "")(
+    java.util.concurrent.Executors.newSingleThreadExecutor(r => {
       val th = new Thread(r, "graft-fixture-async-sweep"); th.setDaemon(true); th
-    })
-    Runtime.getRuntime.addShutdownHook(new Thread("graft-sweep-drain") {
-      override def run(): Unit = {
-        pool.shutdown()
-        pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-        ()
-      }
-    })
-    pool
+    })) { pool =>
+    pool.shutdown()
+    pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
   }
   def deleteTreeAsync(dir: String): Unit = {
     val _ = sweepPool.submit(new Runnable {
       override def run(): Unit = scala.util.Try(deleteTree(dir))
-    })
-  }
-
-  // Process-exit sweep: the per-dir caches above intentionally live for
-  // the JVM (bench/verify reuse them across reps and SFs), so nothing
-  // closes them in-line — without this hook every run exits with open
-  // dbs/logs and leaves its temp trees in /tmp (the accumulating
-  // `graft*` litter). Durable fingerprint stores (graft-ivf-*,
-  // graft-phash-* ...) are NOT deleted: they are reopen-at-parity
-  // stores, deterministic per content — only their open handles close.
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread("graft-fixture-sweep") {
-      override def run(): Unit = {
-        fixtureTemplates.values.foreach(d => scala.util.Try(deleteTree(d)))
-        liveClones.values.foreach(d => scala.util.Try(deleteTree(d)))
-        appendedLogs.values.foreach { e =>
-          scala.util.Try(e._2.close()); scala.util.Try(deleteTree(e._2.dir))
-        }
-        ivfViews.values.foreach(e => scala.util.Try(e.db.close()))
-        (rangeLayouts.values ++ zLayouts.values ++ bucketedJoinTables.values ++
-          sigTables.values ++ annSigTables.values ++ clusterTables.values ++
-          lineFreqTables.values ++ gramTables.values ++ orcTables.values)
-          .foreach(e => scala.util.Try(deleteTree(e._2)))
-        pqModels.values.foreach(e => scala.util.Try(deleteTree(e._3)))
-        ivfpqModels.values.foreach(e => scala.util.Try(deleteTree(e._4)))
-        stableDirs.values.foreach(d => scala.util.Try(deleteTree(d)))
-      }
     })
   }
 

@@ -29,12 +29,11 @@ object DumpPlanFiles {
     names.foreach { name =>
       val plan =
         try {
-          graft.EntryHelpers.takePreCheckpointPlan() // drop any stale capture
-          val df = SparkEntry.queries(name)(spark, dir)
           // lifecycle queries checkpoint their result to decouple async
           // fixture teardown; they register the PRE-checkpoint frame so
           // the dump shows the real operators, not `Scan ExistingRDD`
-          graft.EntryHelpers.takePreCheckpointPlan().getOrElse(df)
+          val (df, noted) = graft.EntryHelpers.capturePlan(SparkEntry.queries(name)(spark, dir))
+          noted.getOrElse(df)
             .queryExecution
             .explainString(org.apache.spark.sql.execution.FormattedMode)
         } catch { case e: Throwable => s"ERROR dumping $name: ${e.getMessage}" }

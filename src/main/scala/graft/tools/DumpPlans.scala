@@ -226,11 +226,10 @@ object DumpPlans {
         |  | q_stream_tumbling | 1.65 | 1.76 | 1.77 | |
         |""".stripMargin)
     headline.foreach { name =>
-      graft.EntryHelpers.takePreCheckpointPlan() // drop any stale capture
-      val df = SparkEntry.queries(name)(spark, dir)
       // lifecycle queries that checkpoint their result register the
       // PRE-checkpoint frame (real operators, not `Scan ExistingRDD`)
-      val target = graft.EntryHelpers.takePreCheckpointPlan().getOrElse(df)
+      val (df, noted) = graft.EntryHelpers.capturePlan(SparkEntry.queries(name)(spark, dir))
+      val target = noted.getOrElse(df)
       sb.append(s"\n## $name\n\n```\n")
       sb.append(target.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode).take(4000))

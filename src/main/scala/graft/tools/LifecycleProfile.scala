@@ -37,7 +37,7 @@ object LifecycleProfile {
     (1 to reps).foreach { rep =>
       println(s"=== rep $rep (q_expire shape) ===")
       val root = time("clone copy")(graft.EntryHelpers.clonedFixtureLazy("lcprof", dir) { d =>
-        graft.EntryHelpers.copyTreePublic(tpl, d)
+        graft.EntryHelpers.copyTree(tpl, d)
       })
       val log = time("log mount (recovery)")(
         new ParquetLog(spark, s"$root/log", ev.schema, bucketSize = 512L))

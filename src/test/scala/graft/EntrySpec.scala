@@ -93,4 +93,32 @@ class EntrySpec extends SparkSpec {
     assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(c1)),
       "previous clone must be swept when the next rep clones")
   }
+
+  test("notePlan outside a capture keeps nothing for a later capture") {
+    EntryHelpers.notePlan(spark.range(1).toDF())
+    val (r, noted) = EntryHelpers.capturePlan(42)
+    assert(r == 42)
+    assert(noted.isEmpty, "a frame noted outside any capture must not be held")
+  }
+
+  test("concurrent plan captures each get the frame their own build noted") {
+    // both builds note a frame, then wait for each other inside their
+    // captures: a single process-wide slot would hand one of them the
+    // other's plan
+    val bothNoted = new java.util.concurrent.CountDownLatch(2)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    try {
+      val captures = Seq(5L, 7L).map { n =>
+        pool.submit(new java.util.concurrent.Callable[(org.apache.spark.sql.DataFrame, Option[org.apache.spark.sql.DataFrame])] {
+          override def call() = EntryHelpers.capturePlan {
+            val df = EntryHelpers.notePlan(spark.range(n).toDF())
+            bothNoted.countDown()
+            bothNoted.await()
+            df
+          }
+        })
+      }.map(_.get(60, java.util.concurrent.TimeUnit.SECONDS))
+      captures.foreach { case (df, noted) => assert(noted.exists(_ eq df)) }
+    } finally pool.shutdownNow()
+  }
 }
