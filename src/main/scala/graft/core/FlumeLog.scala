@@ -618,6 +618,19 @@ final class ParquetLog(
     // between touching one bucket and touching the corpus). Walk
     // buckets from the top: a rewrite can leave an upper bucket
     // physically empty, in which case the next one down holds the HWM.
+    //
+    // A retraction that removed the tail rows leaves the true HWM in
+    // the cursor marker — seqs of retracted rows must never be reused.
+    // Read it FIRST: the walk stops at the first bucket whose whole seq
+    // range lies at or below the marker (nothing in it can raise the
+    // HWM), so a tail takedown that emptied upper buckets reopens
+    // without a scan job per emptied bucket.
+    val marker = new java.io.File(dir, ParquetLog.cursorMarker)
+    val markerMax =
+      if (marker.exists())
+        try java.nio.file.Files.readString(marker.toPath).trim.toLong
+        catch { case _: NumberFormatException => -1L }
+      else -1L
     def scanMax(path: String): Long =
       spark.read.option("basePath", dir).schema(diskSchema).parquet(path)
         .agg(coalesce(max(col(seqCol)), lit(-1L))).head().getLong(0)
@@ -626,17 +639,10 @@ final class ParquetLog(
       else if (!bucketed) scanMax(dir)
       else {
         val ids = listBucketIds().sorted.reverse
-        ids.iterator.map(b => scanMax(s"$dir/$bucketCol=$b"))
+        ids.iterator.takeWhile(b => (b + 1) * bucketSize - 1 > markerMax)
+          .map(b => scanMax(s"$dir/$bucketCol=$b"))
           .find(_ >= 0L).getOrElse(-1L)
       }
-    // a retraction that removed the tail rows leaves the true HWM in
-    // the cursor marker — seqs of retracted rows must never be reused
-    val marker = new java.io.File(dir, ParquetLog.cursorMarker)
-    val markerMax =
-      if (marker.exists())
-        try java.nio.file.Files.readString(marker.toPath).trim.toLong
-        catch { case _: NumberFormatException => -1L }
-      else -1L
     math.max(dataMax, markerMax)
   }
 

@@ -247,13 +247,12 @@ object Dedup {
     * `(id_a = new id, id_b = base id, est_jaccard)`.
     *
     * Id spaces must be disjoint (a new batch vs a stored corpus always
-    * is). Scale shape: band keys explode on BOTH sides and meet in one
-    * equi-join on the 8-byte key — the base side would be a STORED
-    * signature/band table in a real pipeline, so the recurring cost is
-    * proportional to the new batch, not the corpus. Hot band buckets
-    * are capped on each side independently (fanout per key ≤
-    * maxBucket²), the same recall-for-bounded-cost trade as the
-    * self-join path. */
+    * is). The base side would be a STORED signature table in a real
+    * pipeline ([[minhashLshIncrementalStored]]), read once per batch, so
+    * the recurring cost is proportional to the new batch, not the
+    * corpus; see [[incrementalPairs]] for the plan. Hot band buckets are
+    * capped on each side independently (fanout per key ≤ maxBucket²),
+    * the same recall-for-bounded-cost trade as the self-join path. */
   def minhashLshIncremental(
       newDocs: DataFrame,
       baseDocs: DataFrame,
@@ -288,9 +287,8 @@ object Dedup {
 
   /** [[minhashLshIncremental]] against a precomputed base signature
     * table (`(id, hs, sig)` as produced by [[signatureTable]], typically
-    * read back from storage). `baseSigs` should be persisted or a stored
-    * table; it is read for band keys, the prefilter, and (with
-    * `verifyExact`) the shingle re-attach. */
+    * read back from storage). The new side's signature table is built
+    * once and persisted; `baseSigs` is read exactly once. */
   def minhashLshIncrementalStored(
       newDocs: DataFrame,
       baseSigs: DataFrame,
@@ -303,14 +301,10 @@ object Dedup {
       verifyExact: Boolean = false,
       ownsBase: Boolean = false,
       maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame = {
-    val hn = newDocs
-      .select(col(idCol).as("id"), hashedShinglesCol(col(textCol)).as("hs"))
-      .where(size(col("hs")) > 0)
-      .persist()
-    val sn = hn.select(col("id"), graft.functions.MinhashOph.minhash_oph(col("hs"), perms).as("sig")).persist()
-    val out = incrementalFromParts(hn, sn, baseSigs, perms, bands, threshold, maxBucket,
-      verifyExact, ownsBase, maxBroadcastKeys)
-    Seq(sn, hn).foreach(_.unpersist(blocking = false))
+    val newSigs = signatureTable(newDocs, idCol, textCol, perms).persist()
+    val out = minhashLshIncrementalFromSigs(newSigs, baseSigs, perms, bands, threshold,
+      maxBucket, verifyExact, ownsBase, maxBroadcastKeys)
+    newSigs.unpersist(blocking = false)
     out
   }
 
@@ -328,96 +322,114 @@ object Dedup {
       maxBucket: Int = 64,
       verifyExact: Boolean = false,
       ownsBase: Boolean = false,
-      maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame =
-    incrementalFromParts(newSigs.select("id", "hs"), newSigs.select("id", "sig"),
-      baseSigs, perms, bands, threshold, maxBucket, verifyExact, ownsBase, maxBroadcastKeys)
+      maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame = {
+    val persisted = scala.collection.mutable.Buffer.empty[DataFrame]
+    val out = incrementalPairs(newSigs, baseSigs, perms, bands, threshold, maxBucket,
+      verifyExact, persisted, maxBroadcastKeys).localCheckpoint(true)
+    persisted.foreach(_.unpersist(blocking = false))
+    if (ownsBase) baseSigs.unpersist(blocking = false)
+    out
+  }
 
-  private def incrementalFromParts(
-      hn: DataFrame,
-      sn: DataFrame,
+  /** The incremental stage: ONE pass over the stored table per batch,
+    * and each batch-side frame read from the caller's cache.
+    *
+    *  1. The batch's band keys aggregate to `(bandkey, ids_a)`, hot keys
+    *     (more than `maxBucket` batch ids) dropped. The frame is
+    *     persisted and counted: the count is the broadcast fence.
+    *  2. Under the fence the key table BROADCASTS, so the stored side is
+    *     one columnar scan with a map-side band explode and a
+    *     broadcast-hash probe that carries the matched rows' `sig_b`
+    *     (and, with `verifyExact`, `hs_b`). Only matched rows (∝ batch ×
+    *     bucket) enter an exchange. Past the fence the batch is
+    *     corpus-sized and the probe is a symmetric shuffle join.
+    *  3. The base-side hot-bucket cap counts the matched rows per key —
+    *     for every matched key exactly its full stored bucket, so the
+    *     drops equal a corpus-wide count without one.
+    *  4. `sig_a`/`hs_a` attach from `newSigs` by id — the batch's own
+    *     (cached) table; nothing counts or broadcasts batch ∪ stored. The
+    *     signature prefilter and the size bound run before the exact
+    *     merge-count (the gates of [[verifyCandidatesExact]]), and
+    *     band-duplicate pairs collapse once, after the verify, where
+    *     survivors are few.
+    *
+    * Frames persisted here are appended to `persisted` for the caller
+    * to release after materialization. */
+  private def incrementalPairs(
+      newSigs: DataFrame,
       baseSigs: DataFrame,
       perms: Int,
       bands: Int,
       threshold: Double,
       maxBucket: Int,
       verifyExact: Boolean,
-      ownsBase: Boolean,
-      maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame = {
-    val sb = baseSigs.select("id", "sig")
-    val hb = baseSigs.select("id", "hs")
-    val persisted = scala.collection.mutable.Buffer.empty[DataFrame]
-    val cand = incrementalCandidates(sn, sb, perms, bands, maxBucket, persisted, maxBroadcastKeys)
-
-    val pairs =
-      if (verifyExact) {
-        // ids are disjoint, so the two sides stack into the keyed
-        // tables the shared verify stage expects
-        verifyCandidatesExact(cand, sn.unionByName(sb), hn.unionByName(hb), "hs",
-          threshold, perms, "est_jaccard")
-      } else {
-        cand
-          .join(sn.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-          .join(sb.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-          .withColumn("est_jaccard",
-            round(sigMatches(col("sig_a"), col("sig_b")).cast("double") / lit(perms.toDouble), 4))
-          .where(col("est_jaccard") >= threshold)
-          .select("id_a", "id_b", "est_jaccard")
-      }
-    val out = pairs.localCheckpoint(true)
-    persisted.foreach(_.unpersist(blocking = false))
-    if (ownsBase) baseSigs.unpersist(blocking = false)
-    out
+      persisted: scala.collection.mutable.Buffer[DataFrame],
+      maxBroadcastKeys: Long): DataFrame = {
+    val carry = if (verifyExact) Seq("sig", "hs") else Seq("sig")
+    val withA = incrementalCandidates(newSigs, baseSigs, perms, bands, maxBucket, carry,
+        persisted, maxBroadcastKeys)
+      .join(newSigs.select(col("id").as("id_a") +: carry.map(c => col(c).as(s"${c}_a")): _*),
+        Seq("id_a"))
+    val scored =
+      if (verifyExact)
+        withA
+          .where(sigPrefilter(threshold, perms))
+          .where(sizeBound(threshold))
+          .withColumn("est_jaccard", round(jaccardSorted(col("hs_a"), col("hs_b")), 4))
+      else withA.withColumn("est_jaccard",
+        round(sigMatches(col("sig_a"), col("sig_b")).cast("double") / lit(perms.toDouble), 4))
+    scored.where(col("est_jaccard") >= threshold)
+      .select("id_a", "id_b", "est_jaccard")
+      .distinct()
   }
 
-  /** The incremental candidate stage — the recurring-cost contract:
-    * nothing corpus-sized may shuffle per batch. The batch's (small)
-    * capped band-key set BROADCASTS, so the base side is ONE columnar
-    * scan with a map-side band explode + broadcast-hash filter —
-    * survivors (∝ batch × bucket) are the only base rows that ever enter
-    * an exchange. The base-side hot-bucket cap counts those survivors,
-    * which for every matched key is exactly the key's full bucket count
-    * — identical drops to a corpus-wide count, without the corpus-wide
-    * aggregate the old shape paid. Frames persisted here are appended to
-    * `persisted` for the caller to release after materialization. */
+  /** Steps 1–3 of [[incrementalPairs]]: the band-duplicated candidate
+    * stream `(id_a, id_b, <carry>_b…)` — a pair arrives once per band
+    * key it shares — with the base side's `carry` columns riding from
+    * the single stored scan. */
   private def incrementalCandidates(
-      sn: DataFrame,
-      sb: DataFrame,
+      newSigs: DataFrame,
+      baseSigs: DataFrame,
       perms: Int,
       bands: Int,
       maxBucket: Int,
+      carry: Seq[String],
       persisted: scala.collection.mutable.Buffer[DataFrame],
-      maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame = {
-    def banded(s: DataFrame, as: String) = s.select(
-      col("id").as(as), explode(graft.functions.BandKeys.band_keys(col("sig"), perms, bands)).as("bandkey"))
-    def dropHot(b: DataFrame) = {
-      val hot = b.groupBy("bandkey").count().where(col("count") > maxBucket).select("bandkey")
-      b.join(hot, Seq("bandkey"), "left_anti")
-    }
-    val bn = dropHot(banded(sn, "id_a"))
-    val newKeys = bn.select("bandkey").distinct().persist()
+      maxBroadcastKeys: Long): DataFrame = {
+    def bandKey = explode(graft.functions.BandKeys.band_keys(col("sig"), perms, bands)).as("bandkey")
+    val newKeys = newSigs.select(col("id"), bandKey)
+      .groupBy("bandkey").agg(collect_list(col("id")).as("ids_a"))
+      .where(size(col("ids_a")) <= maxBucket)
+      .persist()
     persisted += newKeys
     // fence: a batch so large its key set won't broadcast (~32 MB of
     // 8-byte keys) is corpus-sized — fall back to the symmetric shuffle,
     // where incremental dedup was the wrong tool to begin with
     val broadcastKeys = newKeys.count() <= maxBroadcastKeys
-    val matched =
-      (if (broadcastKeys) banded(sb, "id_b").join(broadcast(newKeys), Seq("bandkey"))
-       else banded(sb, "id_b").join(newKeys, Seq("bandkey"))).persist()
-    persisted += matched
-    val hotBase = matched.groupBy("bandkey").count().where(col("count") > maxBucket).select("bandkey")
-    bn.join(matched.join(hotBase, Seq("bandkey"), "left_anti"), Seq("bandkey"))
-      .select("id_a", "id_b")
-      .distinct()
+    val base = baseSigs.select(
+      (col("id").as("id_b") +: carry.map(c => col(c).as(s"${c}_b"))) :+ bandKey: _*)
+    base.join(if (broadcastKeys) broadcast(newKeys) else newKeys, Seq("bandkey"))
+      .withColumn("n_b", count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("bandkey")))
+      .where(col("n_b") <= maxBucket)
+      .select((explode(col("ids_a")).as("id_a") +: col("id_b") +: carry.map(c => col(s"${c}_b"))): _*)
   }
 
-  /** Dev/test access to the incremental candidate stage (pre-checkpoint,
-    * so plan assertions can see the broadcast shape). */
+  /** Dev/test access to the incremental stage before its checkpoint, so
+    * plan assertions can see the broadcast shape and the stored scans:
+    * the distinct `(id_a, id_b)` candidates, and the verified pairs
+    * exactly as [[minhashLshIncrementalFromSigs]] builds them. */
   private[graft] def incrementalCandidatesPublic(
       newSigs: DataFrame, baseSigs: DataFrame,
       perms: Int = 64, bands: Int = 16, maxBucket: Int = 64,
       maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame =
-    incrementalCandidates(newSigs.select("id", "sig"), baseSigs.select("id", "sig"),
-      perms, bands, maxBucket, scala.collection.mutable.Buffer.empty, maxBroadcastKeys)
+    incrementalCandidates(newSigs, baseSigs, perms, bands, maxBucket, Nil,
+      scala.collection.mutable.Buffer.empty, maxBroadcastKeys).distinct()
+  private[graft] def incrementalPairsPublic(
+      newSigs: DataFrame, baseSigs: DataFrame,
+      perms: Int = 64, bands: Int = 16, threshold: Double = 0.5, maxBucket: Int = 64,
+      verifyExact: Boolean = false, maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame =
+    incrementalPairs(newSigs, baseSigs, perms, bands, threshold, maxBucket, verifyExact,
+      scala.collection.mutable.Buffer.empty, maxBroadcastKeys)
 
   /** [[minhashLshFromShingles]] over a full precomputed `(id, hs, sig)`
     * signature table (persisted or stored) — the self-join dedup with
@@ -485,18 +497,29 @@ object Dedup {
     val prefiltered = candIn
       .join(sigsB.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
       .join(sigsB.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-      .where(sigMatches(col("sig_a"), col("sig_b")).cast("double") >= lit((threshold - 0.25) * perms))
+      .where(sigPrefilter(threshold, perms))
       .select("id_a", "id_b")
       .distinct()
     prefiltered
       .join(shingleTable.select(col("id").as("id_a"), col(shingleCol).as("hs_a")), Seq("id_a"))
       .join(shingleTable.select(col("id").as("id_b"), col(shingleCol).as("hs_b")), Seq("id_b"))
-      .where(least(size(col("hs_a")), size(col("hs_b"))).cast("double") >=
-        lit(threshold - 0.001) * greatest(size(col("hs_a")), size(col("hs_b"))).cast("double"))
+      .where(sizeBound(threshold))
       .withColumn(outCol, round(jaccardSorted(col("hs_a"), col("hs_b")), 4))
       .where(col(outCol) >= threshold)
       .select(col("id_a"), col("id_b"), col(outCol))
   }
+
+  /** The exact verify's signature gate on `(sig_a, sig_b)`: agreement
+    * at least `threshold − 0.25` of the perms (the slack is ≈ 4σ at 64
+    * perms; see [[verifyCandidatesExact]]). */
+  private def sigPrefilter(threshold: Double, perms: Int): Column =
+    sigMatches(col("sig_a"), col("sig_b")).cast("double") >= lit((threshold - 0.25) * perms)
+
+  /** The exact verify's size gate on `(hs_a, hs_b)`: Jaccard ≤ min/max,
+    * so a pair whose set sizes differ past the threshold cannot pass. */
+  private def sizeBound(threshold: Double): Column =
+    least(size(col("hs_a")), size(col("hs_b"))).cast("double") >=
+      lit(threshold - 0.001) * greatest(size(col("hs_a")), size(col("hs_b"))).cast("double")
 
   /** Dev-tool access to the private stages (profilers live in
     * graft.tools). */

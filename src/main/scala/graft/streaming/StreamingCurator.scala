@@ -5,6 +5,7 @@ import graft.views.SignatureTableView
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.storage.StorageLevel
 
 import java.nio.file.{Files, Paths}
 
@@ -250,25 +251,27 @@ object MediaStreamingCurator {
       batch: DataFrame,
       idCol: String,
       seqCol: String): (DataFrame, DataFrame, Seq[DataFrame]) = {
-    val raw = batch.persist()
+    // the live stream hands in a batch it already persisted
+    val raw = if (batch.storageLevel == StorageLevel.NONE) batch.persist() else batch
     val floored = binding.floor(raw)
     // text's floor is an agg + semi-join over the batch: compute it
     // ONCE, persist, and feed featurize/eligibility/survivors from it
     val staged = if (floored eq raw) raw else floored.persist()
     val feats = binding.featurize(staged).persist() // decode ONCE per batch
     val selfDrop = binding.selfPairs(feats).select(col("id_b").as(idCol)).distinct()
+    // the cross check reads its input more than once (band keys, then
+    // the by-id attach): materialize the anti-join ONCE
+    val crossIn = feats.join(selfDrop, Seq(idCol), "left_anti").persist()
     val crossDrop = binding.storedOption match {
       case Some(stored) =>
-        binding.crossPairs(
-            feats.join(selfDrop, Seq(idCol), "left_anti"), stored)
-          .select(col("id_a").as(idCol)).distinct()
+        binding.crossPairs(crossIn, stored).select(col("id_a").as(idCol)).distinct()
       case None => selfDrop.limit(0)
     }
     val keptIds = binding.eligibleIds(staged, feats, idCol)
       .join(selfDrop.unionByName(crossDrop).distinct(), Seq(idCol), "left_anti")
     val survivors = staged.drop(seqCol).join(keptIds, Seq(idCol), "left_semi")
     (survivors, feats,
-      if (staged eq raw) Seq(feats, raw) else Seq(feats, staged, raw))
+      crossIn +: (if (staged eq raw) Seq(feats, raw) else Seq(feats, staged, raw)))
   }
 }
 
@@ -344,39 +347,43 @@ final class MediaStreamingCurator(
       .trigger(Trigger.ProcessingTime(0))
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        if (!batch.isEmpty) {
-          val upto = batch.agg(max(col(seqCol))).head().getLong(0)
-          if (upto > binding.since) { // replay after the absorb committed: skip whole
-            if (MediaStreamingCurator.batchTrace)
-              System.err.println(s"[graft-trace] batch seqs=" +
-                batch.select(col(seqCol)).collect().map(_.getLong(0)).sorted.mkString(",") +
-                s" bindingSince=${binding.since} upto=$upto")
-            val (sv, feats, release) = surviveBatch(batch)
-            if (MediaStreamingCurator.batchTrace)
-              System.err.println(s"[graft-trace] feats ids=" +
-                feats.select(col(idCol)).collect().map(_.getLong(0)).sorted.mkString(",") +
-                " survivors=" +
-                sv.select(col(idCol)).collect().map(_.getLong(0)).sorted.mkString(","))
-            val survivors = sv.localCheckpoint(true)
-            val curatedPre: Option[Long] =
-              if (upto > appendedUpto) { // normal path: append, then mark
-                val pre = curated.since
-                if (!survivors.isEmpty) curated.append(survivors)
-                Files.writeString(markPath, s"$upto $pre") // append durable before the mark
-                Some(pre)
-              } else markCuratedPre // replay after the append committed: skip append
-            // absorbed even when empty so the cursor tracks the log;
-            // the survivors' rows of the ALREADY-COMPUTED feature
-            // table land directly — no re-decode at absorb
-            binding.absorb(
-              binding.stampCuratedSeqs(
-                feats.join(survivors.select(col(idCol)), Seq(idCol), "left_semi"),
-                curatedPre, curated.since),
-              upto)
-            release.foreach(_.unpersist(blocking = false))
-            ()
-          }
+        // ONE job both materializes the batch and probes it: a null max
+        // is an empty batch
+        val raw = batch.persist()
+        val top = raw.agg(max(col(seqCol))).head()
+        val upto = if (top.isNullAt(0)) -1L else top.getLong(0)
+        // empty, or a replay after the absorb committed: skip whole
+        if (upto <= binding.since) raw.unpersist(blocking = false)
+        else {
+          if (MediaStreamingCurator.batchTrace)
+            System.err.println(s"[graft-trace] batch seqs=" +
+              raw.select(col(seqCol)).collect().map(_.getLong(0)).sorted.mkString(",") +
+              s" bindingSince=${binding.since} upto=$upto")
+          val (sv, feats, release) = surviveBatch(raw)
+          if (MediaStreamingCurator.batchTrace)
+            System.err.println(s"[graft-trace] feats ids=" +
+              feats.select(col(idCol)).collect().map(_.getLong(0)).sorted.mkString(",") +
+              " survivors=" +
+              sv.select(col(idCol)).collect().map(_.getLong(0)).sorted.mkString(","))
+          val survivors = sv.localCheckpoint(true)
+          val curatedPre: Option[Long] =
+            if (upto > appendedUpto) { // normal path: append, then mark
+              val pre = curated.since
+              curated.append(survivors) // 0 rows: writes nothing, cursor unchanged
+              Files.writeString(markPath, s"$upto $pre") // append durable before the mark
+              Some(pre)
+            } else markCuratedPre // replay after the append committed: skip append
+          // absorbed even when empty so the cursor tracks the log;
+          // the survivors' rows of the ALREADY-COMPUTED feature
+          // table land directly — no re-decode at absorb
+          binding.absorb(
+            binding.stampCuratedSeqs(
+              feats.join(survivors.select(col(idCol)), Seq(idCol), "left_semi"),
+              curatedPre, curated.since),
+            upto)
+          release.foreach(_.unpersist(blocking = false))
         }
+        ()
       }
     checkpointDir.foreach(d => w = w.option("checkpointLocation", d))
     w.start()

@@ -2,6 +2,8 @@ package graft.views
 
 import graft.core.{FlumeDb, FlumeView, ViewDef}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 /** Durable, streaming-maintained MinHash signature table — the
   * continuous-curation bridge between the flume view machinery and the
@@ -41,7 +43,7 @@ final class SignatureTableView(
     * streaming curator) that already paid the signature pass for their
     * dedup decision and must not pay it again. */
   def absorbSigs(sigTable: DataFrame, upto: Long): Unit = {
-    sigTable.select("id", "hs", "sig")
+    sigTable.select(col("id").cast("long").as("id"), col("hs"), col("sig"))
       .write.mode("overwrite").parquet(batchPath(upto).toString)
     sinceSeq = upto
     writeManifest()
@@ -53,7 +55,8 @@ final class SignatureTableView(
   def sigs: DataFrame = {
     val dirs = committedBatchDirs().map(_.toString)
     require(dirs.nonEmpty, "signature table empty — absorb a batch first")
-    spark.read.parquet(dirs: _*)
+    // the written schema, given: no footer-inference job per read
+    spark.read.schema(SignatureTableView.schema).parquet(dirs: _*)
   }
 
   override def frameOption: Option[DataFrame] =
@@ -61,6 +64,12 @@ final class SignatureTableView(
 }
 
 object SignatureTableView {
+  /** The stored `(id, hs, sig)` schema, as parquet reads it back. */
+  val schema: StructType = StructType(Seq(
+    StructField("id", LongType),
+    StructField("hs", ArrayType(LongType)),
+    StructField("sig", ArrayType(LongType))))
+
   def apply(dir: String, idCol: String = "doc_id", textCol: String = "text",
       perms: Int = 64, version: Int = 1, compactEvery: Int = 0): ViewDef = {
     val v = version

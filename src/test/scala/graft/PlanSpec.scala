@@ -306,6 +306,33 @@ class PlanSpec extends SparkSpec {
     } finally (Seq(base, fresh) ++ persisted).foreach(_.unpersist(blocking = false))
   }
 
+  test("incremental minhash dedup reads the stored signature table ONCE per batch") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val docs = (1L to 40L).map(i =>
+      (i, s"the quick brown fox number $i jumps over the lazy dog near gate $i"))
+    val storedDir = java.nio.file.Files.createTempDirectory("graft-plan-sigs").resolve("t").toString
+    graft.ops.Dedup.signatureTable(spark.createDataFrame(docs).toDF("doc_id", "text"))
+      .write.parquet(storedDir)
+    val stored = spark.read.parquet(storedDir)
+    val fresh = graft.ops.Dedup.signatureTable(
+      spark.createDataFrame(docs.take(5).map { case (i, t) => (i + 1000, t) })
+        .toDF("doc_id", "text")).persist()
+    try {
+      // the operator's stage before its checkpoint, verify included
+      val pairs = graft.ops.Dedup.incrementalPairsPublic(fresh, stored, bands = 32,
+        threshold = 0.9, maxBucket = 1000, verifyExact = true)
+      val plan = executed(pairs)
+      val storedScans = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) {
+        case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.contains(storedDir)) => s
+      }
+      assert(storedScans.size === 1,
+        s"the stored table must be scanned exactly once per batch, got ${storedScans.size}:\n${plan.toString.take(6000)}")
+      assert(pairs.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
+        (1L to 5L).map(i => (i + 1000, i)).toSet, "the planted copies are the pairs")
+    } finally fresh.unpersist(blocking = false)
+  }
+
   test("incremental phash dedup: stored side filtered by a BROADCAST of batch segment keys") {
     import spark.implicits._
     val rnd = new scala.util.Random(3)

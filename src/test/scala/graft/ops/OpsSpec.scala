@@ -52,6 +52,45 @@ class OpsSpec extends SparkSpec {
     assert(inc.count { case (a, b, _) => a === b + 10000 } >= 450)
   }
 
+  test("incremental minhash: both hot-bucket caps drop exactly their buckets (maxBucket = 2)") {
+    import spark.implicits._
+    // hand-built signatures, 64 perms in 16 bands of 4: every position
+    // unique per doc except the bands a doc shares on purpose, so each
+    // band key's bucket is known exactly
+    def sig(id: Long, shared: Map[Int, Long]): Seq[Long] = (0 until 64).map { p =>
+      shared.get(p / 4).fold(id * 1000003L + p)(g => g * 7919L + p % 4)
+    }
+    def table(docs: Seq[(Long, Map[Int, Long])]) =
+      docs.map { case (id, sh) => (id, Seq(id), sig(id, sh)) }.toDF("id", "hs", "sig").persist()
+    val batch = table(Seq(
+      101L -> Map(0 -> 1L, 1 -> 2L),  // band 0: 3 batch ids, over the cap
+      102L -> Map(0 -> 1L, 2 -> 3L),
+      103L -> Map(0 -> 1L, 3 -> 4L),
+      104L -> Map(3 -> 4L, 4 -> 5L))) // band 4: a second shared band with 8
+    val stored = table(Seq(
+      1L -> Map(0 -> 1L), 2L -> Map(0 -> 1L),
+      3L -> Map(1 -> 2L), 4L -> Map(1 -> 2L), 5L -> Map(1 -> 2L), // band 1: 3 base ids, over the cap
+      6L -> Map(2 -> 3L), 7L -> Map(2 -> 3L),
+      8L -> Map(3 -> 4L, 4 -> 5L)))
+    val want = Set((102L, 6L), (102L, 7L), (103L, 8L), (104L, 8L))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    try {
+      for (fence <- Seq(4L * 1000 * 1000, 0L)) {
+        assert(pairs(Dedup.incrementalCandidatesPublic(batch, stored, maxBucket = 2,
+          maxBroadcastKeys = fence)) === want, s"candidates, fence $fence")
+        for (exact <- Seq(false, true)) {
+          // threshold 0: every candidate passes the verify, so the pair
+          // set is the candidate set after both caps
+          val out = Dedup.minhashLshIncrementalFromSigs(batch, stored, threshold = 0.0,
+            maxBucket = 2, verifyExact = exact, maxBroadcastKeys = fence)
+          assert(out.count() === want.size, s"one row per pair, fence $fence exact $exact")
+          assert(pairs(out) === want, s"pairs, fence $fence exact $exact")
+        }
+      }
+    } finally Seq(batch, stored).foreach(_.unpersist(blocking = false))
+  }
+
   test("simhash finds planted near-duplicates") {
     val pairs = Dedup.simhashDedup(docsND, maxHamming = 3).collect()
     val planted = pairs.count(r => r.getLong(0) + 10000 === r.getLong(1))

@@ -1520,6 +1520,81 @@ class PersistenceSpec extends SparkSpec {
     assert(log.read.count() === 17L)
   }
 
+  test("SignatureTableView reads its deltas with the schema parquet infers from them") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-sig-schema").toString + "/v"
+    val sv = new SignatureTableView(spark, dir, 1, "doc_id", "text")
+    // an int id column is stored as bigint, the declared schema
+    sv.absorb(Seq((1, "alpha beta gamma delta"), (2, "beta gamma delta eps"))
+      .toDF("doc_id", "text"), 5L)
+    sv.absorb(Seq((3L, "gamma delta eps zeta")).toDF("doc_id", "text"), 9L)
+    val inferred = spark.read.parquet(s"$dir/batch=5", s"$dir/batch=9").schema
+    assert(sv.sigs.schema === inferred)
+    assert(inferred === SignatureTableView.schema)
+    assert(sv.sigs.select("id").as[Long].collect().sorted.toSeq === Seq(1L, 2L, 3L))
+  }
+
+  test("ParquetLog reopen after a tail takedown: the cursor marker bounds the bucket walk") {
+    val docSchema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType)))
+    import spark.implicits._
+    val logDir = Files.createTempDirectory("graft-lreopen").toString
+    val root = new java.io.File(logDir)
+    val log = new ParquetLog(spark, logDir, docSchema, bucketSize = 2L)
+    log.append((1L to 20L).map(i => (i, s"doc $i")).toDF("doc_id", "text")) // buckets 0..9
+    assert(log.retract(col("doc_id") >= 13L) === 8L) // seqs 12..19: buckets 6..9 emptied
+    assert(log.since === 19L)
+    // the upper buckets left physically empty (the takedown deletes an
+    // emptied bucket, a rewrite can leave one with no rows): each would
+    // cost the walk a scan job
+    val rowSchema = StructType(StructField("seq", LongType) +: docSchema.fields)
+    (6 to 9).foreach { b =>
+      val d = new java.io.File(root, s"seq_bucket=$b")
+      if (d.exists()) FsLists.walkDeepestFirst(d.toPath).foreach(Files.delete)
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], rowSchema)
+        .write.parquet(d.getPath)
+    }
+
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    /** Jobs the reopen launched under its own job group; a marker job
+      * after it drains the asynchronous listener bus. */
+    def reopenJobs(group: String): (ParquetLog, Int) = {
+      sc.setJobGroup(group, group)
+      val reopened = try new ParquetLog(spark, logDir, docSchema, bucketSize = 2L)
+        finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-drain", "drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains(s"$group-drain") && System.nanoTime() < deadline) Thread.sleep(20)
+      (reopened, jobs.toArray.count(_ == group))
+    }
+    sc.addSparkListener(listener)
+    try {
+      val (log2, n2) = reopenJobs("reopen-marked")
+      assert(n2 <= 1, s"the marker bounds the walk: at most one scan job, got $n2")
+      assert(log2.since === 19L, "cursor equals its value before close")
+      // no marker: the walk scans down through the empty buckets to the
+      // data HWM, as it always has
+      val marker = new java.io.File(root, "_graft_cursor").toPath
+      Files.delete(marker)
+      val (log3, n3) = reopenJobs("reopen-unmarked")
+      assert(log3.since === 11L && n3 >= 5, s"unmarked walk: since ${log3.since}, $n3 jobs")
+      // a marker below the data HWM (an append after the takedown): the
+      // bucket above it is still scanned
+      Files.writeString(marker, "19")
+      assert(new ParquetLog(spark, logDir, docSchema, bucketSize = 2L)
+        .append(Seq((99L, "fresh")).toDF("doc_id", "text")) === 20L)
+      val (log4, _) = reopenJobs("reopen-stale")
+      assert(log4.since === 20L)
+      assert(log4.read.count() === 13L)
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("ParquetLog.retract per-bucket crash windows recover to old or new state, never partial") {
     val docSchema = StructType(Seq(
       StructField("doc_id", LongType), StructField("text", StringType)))
