@@ -1,13 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // local[*] is a valid master spec but not a partition count — resolve
-    // "*" to the box's core count so shuffle.partitions always gets a number.
-    val shufflePartitions =
-      if (cpus == "*") Runtime.getRuntime.availableProcessors().toString else cpus
     // Post-shuffle partition sizing (guide §2.2, r18 verdict item 4):
     // MEASURED this round rather than assumed. `shuffle.partitions =
     // cpus` stays the initial value; AQE (default-on) with its default
@@ -18,14 +13,7 @@ object Bench {
     // REGRESSED the compute-dense small-byte stages (containment
     // posting self-joins) ~1.5-2x by collapsing them to one task —
     // reverted; evidence in OPTIMIZATION_r19.md.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     // Provenance for round-over-round comparison: identical bytecode has
     // benched 130-181 s across captures purely from box load and the
     // capture form (sbt-wrapped vs plain java), so the total line

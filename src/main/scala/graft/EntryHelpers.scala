@@ -24,6 +24,20 @@ private[graft] object EntryHelpers {
     s.read.parquet(s"$dir/$name.parquet")
   }
 
+  /** Run `body` with the session conf keys set, then restore each key
+    * — or unset it if it was unset before. The conf stays SESSION-GLOBAL
+    * while `body` runs: any other query on the same session sees these
+    * values, so this is not safe under concurrent queries. */
+  def withConf[A](s: SparkSession, kvs: (String, String)*)(body: => A): A = {
+    val prev = kvs.map { case (k, _) => k -> s.conf.getOption(k) }
+    kvs.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
+
   /** events.parquet as a read-only flume log: `event_id` is the seq. */
   def eventsLog(s: SparkSession, dir: String): TableLog =
     new TableLog(s, t(s, dir, "events"), "event_id")
@@ -384,26 +398,22 @@ private[graft] object EntryHelpers {
 
   def afpTable(s: SparkSession, dir: String): AudioFingerprintTableView =
     durableTable("afp", s, dir)(new AudioFingerprintTableView(s, _, 2)) { v =>
-      v.absorbFingerprints(Multimodal.audioFingerprint(
-        Multimodal.syntheticWavMedia(t(s, dir, "documents"), textured = true)), 1L)
+      v.absorb(Multimodal.syntheticWavMedia(t(s, dir, "documents"), textured = true), 1L)
     }
 
   def agramTable(s: SparkSession, dir: String): AudioGramTableView =
     durableTable("agram", s, dir)(new AudioGramTableView(s, _, 1)) { v =>
-      v.absorbGrams(Multimodal.audioGrams(
-        Multimodal.syntheticWavMedia(t(s, dir, "documents"), textured = true)), 1L)
+      v.absorb(Multimodal.syntheticWavMedia(t(s, dir, "documents"), textured = true), 1L)
     }
 
   def fhashTable(s: SparkSession, dir: String): FrameHashTableView =
     durableTable("fhash", s, dir)(new FrameHashTableView(s, _, 1)) { v =>
-      v.absorbHashes(Multimodal.videoFrameHashes(
-        Multimodal.syntheticTextureGifMedia(t(s, dir, "documents"))), 1L)
+      v.absorb(Multimodal.syntheticTextureGifMedia(t(s, dir, "documents")), 1L)
     }
 
   def phashTable(s: SparkSession, dir: String): PhashTableView =
     durableTable("phash", s, dir)(new PhashTableView(s, _, 1)) { v =>
-      v.absorbHashes(Multimodal.perceptualHash(
-        Multimodal.syntheticTexturePngMedia(t(s, dir, "documents"))), 1L)
+      v.absorb(Multimodal.syntheticTexturePngMedia(t(s, dir, "documents")), 1L)
     }
 
   /** Stored IVF index over the embeddings table (built once per scale

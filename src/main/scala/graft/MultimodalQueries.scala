@@ -113,10 +113,10 @@ private[graft] object MultimodalQueries {
       // the recurring form: the re-encoded batch checks against the
       // STORED corpus fingerprint table — batch segment keys broadcast,
       // the stored side never shuffles; id_a = batch, id_b = stored
-      val batch = Multimodal.audioFingerprint(Multimodal.syntheticWavMedia(
+      val batch = Multimodal.syntheticWavMedia(
         t(s, dir, "documents"), gain = 3, padSamples = 24, idOffset = 60000L,
-        textured = true))
-      afpTable(s, dir).dedupBatchFingerprints(batch)
+        textured = true)
+      afpTable(s, dir).dedupBatch(batch)
         .withColumn("hamming", col("hamming").cast("bigint"))
         .orderBy("id_a", "id_b")
     }),
@@ -227,9 +227,9 @@ private[graft] object MultimodalQueries {
       // against the STORED per-frame hash table — batch (frame,
       // segment) keys broadcast, the stored side never shuffles;
       // id_a = batch id, id_b = the stored original it matches
-      val batch = Multimodal.videoFrameHashes(Multimodal.syntheticTextureGifMedia(
-        t(s, dir, "documents"), shift = 5, idOffset = 120000L))
-      fhashTable(s, dir).dedupBatchHashes(batch)
+      val batch = Multimodal.syntheticTextureGifMedia(
+        t(s, dir, "documents"), shift = 5, idOffset = 120000L)
+      fhashTable(s, dir).dedupBatch(batch)
         .orderBy("id_a", "id_b")
     }),
     "q_video_clip_containment" -> ((s, dir) => {
@@ -282,9 +282,9 @@ private[graft] object MultimodalQueries {
       // against the STORED corpus phash table — batch segment keys
       // broadcast, the stored side never shuffles; id_a = batch id,
       // id_b = the stored original it collides with
-      val batch = Multimodal.perceptualHash(Multimodal.syntheticTexturePngMedia(
-        t(s, dir, "documents"), shift = 5, idOffset = 30000L))
-      phashTable(s, dir).dedupBatchHashes(batch)
+      val batch = Multimodal.syntheticTexturePngMedia(
+        t(s, dir, "documents"), shift = 5, idOffset = 30000L)
+      phashTable(s, dir).dedupBatch(batch)
         .withColumn("hamming", col("hamming").cast("bigint"))
         .orderBy("id_a", "id_b")
     }),

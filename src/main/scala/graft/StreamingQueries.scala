@@ -229,9 +229,7 @@ private[graft] object StreamingQueries {
       val name = s"stream_sjoin_${streamIds.incrementAndGet()}"
       val dim = t(s, dir, "events").select(col("user_id")).distinct()
         .withColumn("cohort", pmod(col("user_id"), lit(7L)))
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "2")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "2") {
         val stream = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .where(col("event_type") === "purchase")
@@ -240,7 +238,7 @@ private[graft] object StreamingQueries {
           .writeStream.format("memory").queryName(name)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       s.table(name).orderBy("seq")
     }),
     "q_stream_tumbling" -> ((s, dir) => {
@@ -254,9 +252,7 @@ private[graft] object StreamingQueries {
       // shuffle.partitions; a 720-window aggregation needs a handful of
       // state stores, not one per core (each store checkpoints to disk
       // per micro-batch).
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val q = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .groupBy(window(tsCol(s, dir), "1 hour").as("w"))
@@ -265,7 +261,7 @@ private[graft] object StreamingQueries {
           .writeStream.format("memory").queryName(name)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete()).start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       s.table(name).orderBy("hour_ms")
     }),
     "q_stream_sliding" -> ((s, dir) => {
@@ -274,9 +270,7 @@ private[graft] object StreamingQueries {
       // q_sliding_count batch oracle whatever the micro-batching.
       val schema = t(s, dir, "events").schema
       val name = s"stream_sliding_${streamIds.incrementAndGet()}"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val q = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .groupBy(window(tsCol(s, dir), "1 hour", "30 minutes").as("w"))
@@ -285,7 +279,7 @@ private[graft] object StreamingQueries {
           .writeStream.format("memory").queryName(name)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Complete()).start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       s.table(name).orderBy("start_ms")
     }),
     "q_stream_session" -> ((s, dir) => {
@@ -299,15 +293,13 @@ private[graft] object StreamingQueries {
       val name = s"stream_session_${streamIds.incrementAndGet()}"
       val cutoffMs = t(s, dir, "events")
         .agg(max(tsMs(s, dir))).head().getLong(0) - 90L * 60L * 1000L
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
       // 4 state stores as the other stateful streams (8 measured the
       // same: the cost is the session merge + watermark eviction itself,
       // not store parallelism).
       // Default HDFSBacked state store: RocksDB measured 2.5x slower here
       // (~100k sessions is in-memory-map territory; RocksDB pays JNI +
       // file churn and only wins when state outgrows the heap).
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val q = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .select(col("user_id"), timestamp_millis(tsMs(s, dir)).as("ts2"))
@@ -319,7 +311,7 @@ private[graft] object StreamingQueries {
           .writeStream.format("memory").queryName(name)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       s.table(name).where(col("end_ms") <= cutoffMs)
         .select("user_id", "start_ms", "cnt").orderBy("user_id", "start_ms")
     }),
@@ -333,13 +325,11 @@ private[graft] object StreamingQueries {
       // join is the oracle with no closure filtering needed.
       val schema = t(s, dir, "events").schema
       val name = s"stream_join_${streamIds.incrementAndGet()}"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
       // A stream-stream join keeps FOUR state stores per partition (two
       // sides × keyWithIndex/keyToNumValues), so partition count costs
       // more here than in the agg streams: 2 measured ~20% faster than 4
       // at this state size. On a cluster this scales with state volume.
-      s.conf.set("spark.sql.shuffle.partitions", "2")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "2") {
         def side(tpe: String, idAs: String, tsAs: String) =
           s.readStream.schema(schema)
             .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -357,7 +347,7 @@ private[graft] object StreamingQueries {
           .writeStream.format("memory").queryName(name)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       s.table(name).orderBy("user_id", "purchase_id", "click_id")
     }),
     "q_stream_state" -> ((s, dir) => {
@@ -370,9 +360,7 @@ private[graft] object StreamingQueries {
       // is the final state.
       val schema = t(s, dir, "events").schema
       val name = s"stream_state_${streamIds.incrementAndGet()}"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
         val q = graft.streaming.StreamingViews.runningStatsPerKey(src, "user_id", "value")
@@ -381,7 +369,7 @@ private[graft] object StreamingQueries {
           .writeStream.format("memory").queryName(name)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Update()).start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       // Emit (n, sum) rather than (n, mean): the fixture's values have
       // two decimals, so per-key SUMS sit safely off every 4-decimal
       // rounding boundary, while MEANS (sum/n) can land exactly on one
@@ -405,9 +393,7 @@ private[graft] object StreamingQueries {
       // emissions are identical, so distinct + top-1 is deterministic.
       val schema = t(s, dir, "events").schema
       val name = s"stream_funnel_${streamIds.incrementAndGet()}"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
         val q = graft.streaming.StreamingViews
@@ -417,7 +403,7 @@ private[graft] object StreamingQueries {
           .writeStream.format("memory").queryName(name)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Update()).start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       // latest emission per key = the max-stage row (equal-stage
       // emissions are identical): max_by aggregate, no Window node
       s.table(name)
@@ -454,9 +440,7 @@ private[graft] object StreamingQueries {
       val erLog = new MemoryLog(s, StructType(Seq(StructField("user_id", LongType))))
       val outRoot = java.nio.file.Files.createTempDirectory("graft-serase").toString
       val out = outRoot + "/emits"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val q = graft.streaming.StreamingViews.funnelPerKey(
             elog.readStream.select("user_id", "event_id", "event_type"),
             "user_id", "event_id", "event_type", Seq("view", "click", "purchase"),
@@ -474,7 +458,7 @@ private[graft] object StreamingQueries {
           elog.append(ev.where(col("event_id") > cut && col("user_id") % 10 =!= 3))
           q.processAllAvailable()
         } finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       val res = EntryHelpers.notePlan(s.read.parquet(out)
         .groupBy("user_id")
         .agg(max_by(struct(col("stage"), col("seqs")), col("__b")).as("fin"))
@@ -496,9 +480,7 @@ private[graft] object StreamingQueries {
       // batch windowed funnel (shared oracle with q_funnel_windowed)
       val schema = t(s, dir, "events").schema
       val name = s"stream_funnel_w_${streamIds.incrementAndGet()}"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
         val q = graft.streaming.StreamingViews
@@ -510,7 +492,7 @@ private[graft] object StreamingQueries {
           .writeStream.format("memory").queryName(name)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Update()).start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       // latest emission per key = the max-stage row: max_by, no Window
       s.table(name)
         .groupBy(col("user_id"))
@@ -531,9 +513,7 @@ private[graft] object StreamingQueries {
       // q_funnel_total_window)
       val schema = t(s, dir, "events").schema
       val name = s"stream_funnel_t_${streamIds.incrementAndGet()}"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
         val q = graft.streaming.StreamingViews
@@ -545,7 +525,7 @@ private[graft] object StreamingQueries {
           .writeStream.format("memory").queryName(name)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Update()).start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       // latest emission per key = the max-stage row: max_by, no Window
       s.table(name)
         .groupBy(col("user_id"))
@@ -566,9 +546,7 @@ private[graft] object StreamingQueries {
       // arithmetic (shared oracle with q_type_affinity)
       val schema = t(s, dir, "events").schema
       val name = s"stream_aff_${streamIds.incrementAndGet()}"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
         val q = graft.streaming.StreamingViews
@@ -577,7 +555,7 @@ private[graft] object StreamingQueries {
           .writeStream.format("memory").queryName(name)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Update()).start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       // latest snapshot per key = the largest (snapshots grow strictly):
       // a max_by aggregate, not a row_number window — the partial
       // aggregate collapses map-side and nothing sorts (r8 verdict note)
@@ -595,9 +573,7 @@ private[graft] object StreamingQueries {
       // (shared oracle with q_event_paths)
       val schema = t(s, dir, "events").schema
       val name = s"stream_paths_${streamIds.incrementAndGet()}"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
         val q = graft.streaming.StreamingViews
@@ -607,7 +583,7 @@ private[graft] object StreamingQueries {
           .writeStream.format("memory").queryName(name)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       s.table(name).groupBy("path").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("path")).limit(20)
     }),
@@ -619,9 +595,7 @@ private[graft] object StreamingQueries {
       // aggregate to the batch operator's answer (shared oracle).
       val schema = t(s, dir, "events").schema
       val name = s"stream_ret_${streamIds.incrementAndGet()}"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
         val q = graft.streaming.StreamingViews
@@ -632,7 +606,7 @@ private[graft] object StreamingQueries {
           .writeStream.format("memory").queryName(name)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Update()).start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       // latest snapshot per key = the most-offsets row (snapshots
       // strictly grow; equal-size snapshots are identical): max_by
       // carries (cohort, offsets) together so a self-revised cohort
@@ -653,9 +627,7 @@ private[graft] object StreamingQueries {
       // so q_rolling_zscore's oracle is this query's oracle too.
       val schema = t(s, dir, "events").schema
       val name = s"stream_anom_${streamIds.incrementAndGet()}"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
         val q = graft.streaming.StreamingViews
@@ -664,7 +636,7 @@ private[graft] object StreamingQueries {
           .writeStream.format("memory").queryName(name)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       s.table(name).orderBy("user_id", "seq")
     }),
     "q_stream_left_join" -> ((s, dir) => {
@@ -678,9 +650,7 @@ private[graft] object StreamingQueries {
       val maxMs = t(s, dir, "events").agg(max(tsMs(s, dir))).head().getLong(0)
       val capMs = maxMs - 2L * 3600 * 1000
       val name = s"stream_ljoin_${streamIds.incrementAndGet()}"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "2")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "2") {
         def side(tpe: String, idAs: String, tsAs: String) =
           s.readStream.schema(schema)
             .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -699,7 +669,7 @@ private[graft] object StreamingQueries {
           .writeStream.format("memory").queryName(name)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       s.table(name).orderBy("user_id", "purchase_id", "click_id")
     }),
     "q_stream_full_join" -> ((s, dir) => {
@@ -720,9 +690,7 @@ private[graft] object StreamingQueries {
         max(when(col("event_type") === "click", tsMs(s, dir))).as("mc")).head()
       val capMs = math.min(mm.getLong(0), mm.getLong(1)) - 2L * 3600 * 1000
       val name = s"stream_fjoin_${streamIds.incrementAndGet()}"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "2")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "2") {
         def side(tpe: String, idAs: String, tsAs: String) =
           s.readStream.schema(schema)
             .option("pathGlobFilter", "events.parquet").parquet(dir)
@@ -743,7 +711,7 @@ private[graft] object StreamingQueries {
           .writeStream.format("memory").queryName(name)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       // explicit NULLS FIRST on both engines — their defaults differ
       s.table(name).orderBy(col("user_id"),
         col("purchase_id").asc_nulls_first, col("click_id").asc_nulls_first)
@@ -755,12 +723,9 @@ private[graft] object StreamingQueries {
       // same batch oracle as q_stream_state.
       val schema = t(s, dir, "events").schema
       val name = s"stream_state_tws_${streamIds.incrementAndGet()}"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      val prevProvider = s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4",
+          "spark.sql.streaming.stateStore.providerClass" ->
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
         val src = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
         val q = graft.streaming.StreamingViews.runningStatsPerKeyTws(src, "user_id", "value")
@@ -769,12 +734,6 @@ private[graft] object StreamingQueries {
           .writeStream.format("memory").queryName(name)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Update()).start()
         try q.processAllAvailable() finally q.stop()
-      } finally {
-        s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        prevProvider match {
-          case Some(p) => s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-          case None => s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        }
       }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy("user_id").orderBy(col("n").desc)
@@ -788,16 +747,14 @@ private[graft] object StreamingQueries {
       // emitted key set is deterministic regardless of micro-batching.
       val schema = t(s, dir, "events").schema
       val name = s"stream_dedup_${streamIds.incrementAndGet()}"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      try {
+      withConf(s, "spark.sql.shuffle.partitions" -> "4") {
         val q = s.readStream.schema(schema)
           .option("pathGlobFilter", "events.parquet").parquet(dir)
           .select("user_id").dropDuplicates("user_id")
           .writeStream.format("memory").queryName(name)
           .outputMode(org.apache.spark.sql.streaming.OutputMode.Append()).start()
         try q.processAllAvailable() finally q.stop()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       s.table(name).orderBy("user_id")
     }),
   )

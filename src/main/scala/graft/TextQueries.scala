@@ -83,7 +83,7 @@ private[graft] object TextQueries {
         val log = new ParquetLog(s, s"$tpl/log", docSchema, bucketSize = 128L)
         log.append(d)
         new graft.views.SignatureTableView(s, s"$tpl/sig/sg", 1, "doc_id", "text")
-          .absorbSigs(graft.ops.Dedup.signatureTable(d), log.since)
+          .absorb(d, log.since)
       }
       val intentDir = s"$root/intent"
       val curLog = new ParquetLog(s, s"$root/log", docSchema, bucketSize = 128L)

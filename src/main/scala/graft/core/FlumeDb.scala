@@ -53,6 +53,16 @@ trait ViewDef {
   def create(db: FlumeDb, name: String): FlumeView
 }
 
+object ViewDef {
+  def apply(version: Int)(create: (FlumeDb, String) => FlumeView): ViewDef = {
+    val (v, c) = (version, create) // the members below shadow the parameters
+    new ViewDef {
+      def version: Int = v
+      def create(db: FlumeDb, name: String): FlumeView = c(db, name)
+    }
+  }
+}
+
 /** Opt-in for mounted views whose derived rows are KEYED BY LOG SEQ and
   * append-only — one derived row (or several) per log row, no fold
   * across rows: posting tables like the index and search views. The

@@ -1,7 +1,8 @@
 package graft.streaming
 
 import graft.core.{FlumeLog, LogRange, ParquetLog}
-import graft.views.SignatureTableView
+import graft.views.{AudioFingerprintTableView, EmbeddingSigTableView, FeatureTableView,
+  FrameHashTableView, PhashTableView, SignatureTableView}
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
@@ -62,6 +63,16 @@ trait MediaDedupBinding {
 }
 
 object MediaDedupBinding {
+  /** The shared half of every binding: featurize, absorb and read
+    * through the view, so the features a curated batch stores are the
+    * ones the view's own `absorb` computes. */
+  private abstract class ViewBinding(view: FeatureTableView) extends MediaDedupBinding {
+    def since: Long = view.since
+    def storedOption: Option[DataFrame] = view.frameOption
+    def featurize(media: DataFrame): DataFrame = view.features(media)
+    def absorb(features: DataFrame, upto: Long): Unit = view.absorbFeatures(features, upto)
+  }
+
   /** Text binding: quality floor + exact dedup + MinHash-LSH signatures
     * over the [[graft.views.SignatureTableView]] — the original
     * streaming curator expressed in the shared engine. The floor runs
@@ -70,49 +81,44 @@ object MediaDedupBinding {
     * but have no feature row, so they bypass both near-dup stages and
     * survive. */
   def text(view: SignatureTableView,
-      idCol: String = "doc_id", textCol: String = "text",
       minQuality: Double = 0.2, threshold: Double = 0.6,
       bands: Int = 32, maxBucket: Int = 1000): MediaDedupBinding =
-    new MediaDedupBinding {
-      def since: Long = view.since
-      def storedOption: Option[DataFrame] = view.frameOption
+    new ViewBinding(view) {
+      import view.{idCol, textCol}
       override def floor(staged: DataFrame): DataFrame = {
         val q = staged.where(graft.ops.TextAnalysis.qualityCol(col(textCol)) >= minQuality)
         val keep = q.groupBy(xxhash64(col(textCol)).as("__h"))
           .agg(min(col(idCol)).as(idCol)).select(idCol)
         q.join(keep, Seq(idCol), "left_semi")
       }
-      def featurize(media: DataFrame): DataFrame =
-        graft.ops.Dedup.signatureTable(media, idCol, textCol)
-          .withColumnRenamed("id", idCol)
+      override def featurize(media: DataFrame): DataFrame =
+        view.features(media).withColumnRenamed("id", idCol)
       override def eligibleIds(floored: DataFrame, features: DataFrame, idCol: String): DataFrame =
         floored.select(idCol)
       def selfPairs(features: DataFrame): DataFrame =
         graft.ops.Dedup.minhashLshFromSigs(features.withColumnRenamed(idCol, "id"),
-          threshold = threshold, verifyExact = true, bands = bands, maxBucket = maxBucket)
+          perms = view.perms, threshold = threshold, verifyExact = true, bands = bands,
+          maxBucket = maxBucket)
       def crossPairs(features: DataFrame, stored: DataFrame): DataFrame =
         graft.ops.Dedup.minhashLshIncrementalFromSigs(features.withColumnRenamed(idCol, "id"),
-          stored, threshold = threshold, verifyExact = true, bands = bands, maxBucket = maxBucket)
-      def absorb(features: DataFrame, upto: Long): Unit =
+          stored, perms = view.perms, threshold = threshold, verifyExact = true, bands = bands,
+          maxBucket = maxBucket)
+      // through the named delegate: a job it runs keeps a
+      // SignatureTableView frame for per-view attribution
+      override def absorb(features: DataFrame, upto: Long): Unit =
         view.absorbSigs(features.withColumnRenamed(idCol, "id"), upto)
     }
 
   /** Image binding: dHash ([[graft.ops.Multimodal.perceptualHash]])
     * over the [[graft.views.PhashTableView]]. */
-  def image(view: graft.views.PhashTableView,
+  def image(view: PhashTableView,
       maxHamming: Int = 7, maxBucket: Int = 256): MediaDedupBinding =
-    new MediaDedupBinding {
-      def since: Long = view.since
-      def storedOption: Option[DataFrame] = view.frameOption
-      def featurize(media: DataFrame): DataFrame =
-        graft.ops.Multimodal.perceptualHash(media)
+    new ViewBinding(view) {
       def selfPairs(features: DataFrame): DataFrame =
         graft.ops.Multimodal.perceptualNearDup(features, maxHamming, maxBucket)
       def crossPairs(features: DataFrame, stored: DataFrame): DataFrame =
         graft.ops.Multimodal.perceptualNearDupIncremental(
           features, stored, maxHamming, maxBucket)
-      def absorb(features: DataFrame, upto: Long): Unit =
-        view.absorbHashes(features, upto)
     }
 
   /** Embedding binding: banded hyperplane signatures over the
@@ -135,22 +141,20 @@ object MediaDedupBinding {
     * absorbs without seq) it falls back to the full corpus read —
     * correct, just the pre-round-14 cost. Survivor seqs are stamped
     * from the batch's curated-append interval (itself a bucket-pruned
-    * range read) via [[MediaDedupBinding.stampCuratedSeqs]]. */
-  def embedding(view: graft.views.EmbeddingSigTableView,
+    * range read) via [[MediaDedupBinding.stampCuratedSeqs]]. The id and
+    * vector columns and the LSH banding are the view's. */
+  def embedding(view: EmbeddingSigTableView,
       curated: FlumeLog,
-      idCol: String = "vec_id", vecCol: String = "embedding",
-      bands: Int = 4, bitsPerBand: Int = 8,
       threshold: Double = 0.95, maxBucket: Int = 1024): MediaDedupBinding =
-    new MediaDedupBinding {
-      def since: Long = view.since
-      def storedOption: Option[DataFrame] = view.frameOption
+    new ViewBinding(view) {
+      import view.{bands, bitsPerBand, idCol, vecCol}
       private def bucketSize: Option[Long] = curated match {
         case p: ParquetLog => p.bucketSizeOpt
         case _ => None
       }
-      def featurize(media: DataFrame): DataFrame =
-        media.select(col(idCol), col(vecCol),
-          graft.ops.Similarity.hyperplaneSignature(col(vecCol), bands * bitsPerBand).as("sig"))
+      // the SOURCE log's seq is not the curated log's: survivors are
+      // stamped with theirs after the append
+      override def featurize(media: DataFrame): DataFrame = view.features(media).drop("seq")
       def selfPairs(features: DataFrame): DataFrame =
         graft.ops.Dedup.embeddingNearDup(features.select(col(idCol), col(vecCol)),
           idCol, vecCol, bands, bitsPerBand, threshold, maxBucket)
@@ -182,8 +186,6 @@ object MediaDedupBinding {
         features.join(
           interval.select(col(curated.seqCol).as("seq"), col(idCol)), Seq(idCol))
       }
-      def absorb(features: DataFrame, upto: Long): Unit =
-        view.absorbSigs(features, upto)
     }
 
   /** Video binding: per-frame dHash sequences
@@ -192,40 +194,28 @@ object MediaDedupBinding {
     * unchanged) over the [[graft.views.FrameHashTableView]]; near-dup
     * requires every aligned frame within `maxHamming` and equal frame
     * counts on both sides. */
-  def video(view: graft.views.FrameHashTableView,
+  def video(view: FrameHashTableView,
       maxHamming: Int = 7, maxBucket: Int = 256): MediaDedupBinding =
-    new MediaDedupBinding {
-      def since: Long = view.since
-      def storedOption: Option[DataFrame] = view.frameOption
-      def featurize(media: DataFrame): DataFrame =
-        graft.ops.Multimodal.videoFrameHashes(media)
+    new ViewBinding(view) {
       def selfPairs(features: DataFrame): DataFrame =
         graft.ops.Multimodal.videoNearDup(features, maxHamming, maxBucket)
       def crossPairs(features: DataFrame, stored: DataFrame): DataFrame =
         graft.ops.Multimodal.videoNearDupIncremental(
           features, stored, maxHamming, maxBucket)
-      def absorb(features: DataFrame, upto: Long): Unit =
-        view.absorbHashes(features, upto)
     }
 
   /** Audio binding: trim + duration-proportional window fingerprint
     * ([[graft.ops.Multimodal.audioFingerprint]]) over the
     * [[graft.views.AudioFingerprintTableView]]; the `n_windows` length
     * gate rides the feature row into both near-dup stages. */
-  def audio(view: graft.views.AudioFingerprintTableView,
+  def audio(view: AudioFingerprintTableView,
       maxHamming: Int = 7, maxBucket: Int = 256): MediaDedupBinding =
-    new MediaDedupBinding {
-      def since: Long = view.since
-      def storedOption: Option[DataFrame] = view.frameOption
-      def featurize(media: DataFrame): DataFrame =
-        graft.ops.Multimodal.audioFingerprint(media)
+    new ViewBinding(view) {
       def selfPairs(features: DataFrame): DataFrame =
         graft.ops.Multimodal.audioNearDup(features, maxHamming, maxBucket)
       def crossPairs(features: DataFrame, stored: DataFrame): DataFrame =
         graft.ops.Multimodal.audioNearDupIncremental(
           features, stored, maxHamming, maxBucket)
-      def absorb(features: DataFrame, upto: Long): Unit =
-        view.absorbFingerprints(features, upto)
     }
 }
 
@@ -406,8 +396,6 @@ final class StreamingCurator(
     curated: FlumeLog,
     sigView: SignatureTableView,
     commitFile: String,
-    idCol: String = "doc_id",
-    textCol: String = "text",
     minQuality: Double = 0.2,
     threshold: Double = 0.6,
     bands: Int = 32,
@@ -415,8 +403,8 @@ final class StreamingCurator(
     checkpointDir: Option[String] = None) {
 
   private val inner = new MediaStreamingCurator(source, curated,
-    MediaDedupBinding.text(sigView, idCol, textCol, minQuality, threshold, bands, maxBucket),
-    commitFile, idCol, checkpointDir)
+    MediaDedupBinding.text(sigView, minQuality, threshold, bands, maxBucket),
+    commitFile, sigView.idCol, checkpointDir)
 
   /** The per-batch curation decision (pure; exposed for crash-window
     * tests): (survivors, the batch's persisted `(doc_id, hs, sig)`

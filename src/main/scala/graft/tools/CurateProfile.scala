@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stage-level timing of the q_pipeline_curate composition at a given SF
@@ -11,11 +10,7 @@ object CurateProfile {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("32")
 
     def docs = {
       val d = spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.core.ParquetLog
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stage-level timing of the template-cloned lifecycle queries (r19):
@@ -14,12 +13,7 @@ object LifecycleProfile {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus)
 
     def time[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f

@@ -30,13 +30,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val outDir = args.headOption.getOrElse("/tmp/graft-sf1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus)
     import spark.implicits._
 
     val sf01 = "/root/testdata/sf0.1"

@@ -1,15 +1,11 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 /** Scratch A/B: native HashedShingles expression vs its UDF twin over the
   * documents table (explode + count drains the arrays without collect). */
 object ShingleBench {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("8")
     val docs = spark.read.parquet(s"$dir/documents.parquet").select("doc_id", "text").cache()
     docs.count()
     def drain(c: org.apache.spark.sql.Column): Long =

@@ -1,17 +1,12 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Stage timing for q_stream_curate (args: sfDir). */
 object StreamCurateProfile {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("32")
     def time[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
       println(f"[scprof] $label: ${(System.nanoTime() - t0) / 1e9}%.2f s"); r

@@ -19,13 +19,7 @@ import org.apache.spark.sql.functions.col
 object StressCuratorTakedown {
   def main(args: Array[String]): Unit = {
     val iters = args.headOption.map(_.toInt).getOrElse(50)
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-stress-curator")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local("4")
     var failures = 0
     (1 to iters).foreach { i =>
       val t0 = System.nanoTime()

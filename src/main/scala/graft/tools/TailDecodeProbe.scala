@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Isolated decode cost of the seq-offset live tail (args: sfDir
@@ -14,10 +13,7 @@ object TailDecodeProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val reps = args.lift(1).map(_.toInt).getOrElse(3)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.GraftSession.local("32")
     spark.sparkContext.setLogLevel("ERROR")
     def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
 

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 /** Calm-envelope capture: time every SparkEntry query whose name starts
   * with a prefix, median-of-N with Bench's session hygiene, under the
@@ -15,12 +14,7 @@ object TimeMany {
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val reps = args.lift(2).map(_.toInt).getOrElse(3)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(cpus)
     def loadavg: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     def exec(df: org.apache.spark.sql.DataFrame): Unit =

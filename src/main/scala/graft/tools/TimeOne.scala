@@ -1,15 +1,9 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
 /** Scratch timing harness: time one named SparkEntry query at a given SF. */
 object TimeOne {
   def main(args: Array[String]): Unit = {
     val name = args(0); val dir = args(1)
-    val spark = SparkSession.builder().master(s"local[${sys.env.getOrElse("TCPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("TCPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.local(sys.env.getOrElse("TCPUS", "8"))
     def exec() = graft.SparkEntry.queries(name)(spark, dir).write.format("noop").mode("overwrite").save()
     // Bench's per-query session hygiene, applied between reps: lifecycle
     // queries (curators, takedowns) leave persisted micro-batch frames

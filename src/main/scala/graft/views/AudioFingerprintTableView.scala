@@ -1,6 +1,6 @@
 package graft.views
 
-import graft.core.{FlumeDb, FlumeView, ViewDef}
+import graft.core.ViewDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Durable, streaming-maintainable audio-fingerprint table — the audio
@@ -14,67 +14,45 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[graft.ops.Multimodal.audioNearDupIncremental]] — recurring cost ∝
   * batch, never corpus.
   *
-  * Storage is the shared [[DeltaProtocol]] (manifest after delta ⇒
-  * crash-safe; orphan pruning at open; version bump ⇒ wipe and rebuild)
-  * with [[CompactableDeltas]] bounding the small-files chain, so it
-  * slots under [[graft.streaming.StreamingViewRunner]] with
-  * exactly-once recovery like every other durable view. At cluster
-  * scale this 8-bytes-per-recording table is the hot artifact an
+  * Storage is the shared [[FeatureTableView]] body. At cluster scale
+  * this 8-bytes-per-recording table is the hot artifact an
   * ASR-ingest dedup keeps while the waveforms stay cold.
   */
 final class AudioFingerprintTableView(
-    protected val spark: SparkSession,
-    protected val dir: String,
-    protected val protocolVersion: Int,
+    spark: SparkSession,
+    dir: String,
+    protocolVersion: Int,
     minWindowSamples: Int = 16,
     nBits: Int = 64,
-    compactEvery: Int = 0) extends FlumeView with FeatureTableDeltas {
+    compactEvery: Int = 0)
+    extends FeatureTableView(spark, dir, protocolVersion, compactEvery, "fingerprint table") {
 
-  override protected def autoCompactEvery: Int = compactEvery
+  /** Decode + fingerprint (each recording hashed exactly once, at
+    * ingest): `(media_id, n_windows, afp)` — the window count is stored
+    * beside the fingerprint because
+    * [[graft.ops.Multimodal.audioNearDup]]'s length gate needs it at
+    * dedup time without re-touching the waveform. */
+  def features(entries: DataFrame): DataFrame =
+    graft.ops.Multimodal.audioFingerprint(entries, minWindowSamples, nBits)
 
-  openProtocol()
+  protected def project(features: DataFrame): DataFrame =
+    features.select("media_id", "n_windows", "afp")
 
-  /** Absorb a media batch: decode + fingerprint here (each recording
-    * hashed exactly once, at ingest), land the `(media_id, n_windows,
-    * afp)` delta — the window count is stored beside the fingerprint
-    * because [[graft.ops.Multimodal.audioNearDup]]'s length gate needs
-    * it at dedup time without re-touching the waveform. */
-  def absorb(entries: DataFrame, upto: Long): Unit =
-    absorbFingerprints(
-      graft.ops.Multimodal.audioFingerprint(entries, minWindowSamples, nBits), upto)
-
-  /** Absorb a PRECOMPUTED `(media_id, n_windows, afp)` delta — for
-    * callers that already paid the decode for their own dedup decision. */
-  def absorbFingerprints(fps: DataFrame, upto: Long): Unit = {
-    fps.select("media_id", "n_windows", "afp")
-      .write.mode("overwrite").parquet(batchPath(upto).toString)
-    sinceSeq = upto
-    writeManifest()
-    maybeCompact()
-  }
+  def absorbFingerprints(fps: DataFrame, upto: Long): Unit = absorbFeatures(fps, upto)
 
   /** The accumulated `(media_id, n_windows, afp)` table — feed to
     * [[graft.ops.Multimodal.audioNearDupIncremental]]. */
-  def fingerprints: DataFrame = {
-    val dirs = committedBatchDirs().map(_.toString)
-    require(dirs.nonEmpty, "fingerprint table empty — absorb a batch first")
-    spark.read.parquet(dirs: _*)
-  }
+  def fingerprints: DataFrame = table
 
   /** Near-dup check of a new media batch against the stored corpus;
     * `dedupBatchFingerprints` when the batch's prints are precomputed. */
   def dedupBatch(media: DataFrame, maxHamming: Int = 7, maxBucket: Int = 256): DataFrame =
-    dedupBatchFingerprints(
-      graft.ops.Multimodal.audioFingerprint(media, minWindowSamples, nBits),
-      maxHamming, maxBucket)
+    dedupBatchFingerprints(features(media), maxHamming, maxBucket)
 
   def dedupBatchFingerprints(newFps: DataFrame, maxHamming: Int = 7,
       maxBucket: Int = 256): DataFrame =
     graft.ops.Multimodal.audioNearDupIncremental(
       newFps, fingerprints, maxHamming, maxBucket)
-
-  override def frameOption: Option[DataFrame] =
-    if (committedBatchDirs().isEmpty) None else Some(fingerprints)
 }
 
 object AudioFingerprintTableView {
@@ -82,13 +60,7 @@ object AudioFingerprintTableView {
   // length gate) and duration-proportional fingerprint windows — a v1
   // table reopened under v2 wipes and rebuilds per the protocol rule
   def apply(dir: String, minWindowSamples: Int = 16, nBits: Int = 64,
-      version: Int = 2, compactEvery: Int = 0): ViewDef = {
-    val v = version
-    new ViewDef {
-      def version: Int = v
-      def create(db: FlumeDb, name: String) =
-        new AudioFingerprintTableView(
-          db.log.spark, s"$dir/$name", v, minWindowSamples, nBits, compactEvery)
-    }
-  }
+      version: Int = 2, compactEvery: Int = 0): ViewDef =
+    ViewDef(version)((db, name) => new AudioFingerprintTableView(
+      db.log.spark, s"$dir/$name", version, minWindowSamples, nBits, compactEvery))
 }

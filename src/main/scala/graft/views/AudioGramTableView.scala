@@ -1,8 +1,8 @@
 package graft.views
 
-import graft.core.{FlumeDb, FlumeView, ViewDef}
+import graft.core.ViewDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
 /** Durable, streaming-maintainable positional audio-gram table — the
   * audio twin of [[GramTableView]], completing the containment rung's
@@ -17,43 +17,29 @@ import org.apache.spark.sql.functions._
   * Unlike the text gram table (distinct fingerprints), positions are
   * load-bearing here — the full-alignment count needs them — so
   * deltas union raw and compaction just rewrites them into one base
-  * (no dedup fold). Storage is the shared [[DeltaProtocol]] with
-  * [[CompactableDeltas]], so it slots under
-  * [[graft.streaming.StreamingViewRunner]] with exactly-once recovery
-  * like every other durable view. */
+  * (no dedup fold). Storage is the shared [[FeatureTableView]] body. */
 final class AudioGramTableView(
-    protected val spark: SparkSession,
-    protected val dir: String,
-    protected val protocolVersion: Int,
+    spark: SparkSession,
+    dir: String,
+    protocolVersion: Int,
     windowSamples: Int = 16,
     gramWindows: Int = 24,
     compactEvery: Int = 0,
-    hopSamples: Int = -1) extends FlumeView with FeatureTableDeltas {
+    hopSamples: Int = -1)
+    extends FeatureTableView(spark, dir, protocolVersion, compactEvery, "gram table") {
 
-  override protected def autoCompactEvery: Int = compactEvery
+  /** Decode + gram (each recording grammed exactly once, at ingest):
+    * `(media_id, pos, gram)`. */
+  def features(entries: DataFrame): DataFrame =
+    graft.ops.Multimodal.audioGrams(entries, windowSamples, gramWindows, hopSamples)
 
-  openProtocol()
+  protected def project(features: DataFrame): DataFrame =
+    features.select("media_id", "pos", "gram")
 
-  /** Absorb a media batch: decode + gram here (each recording grammed
-    * exactly once, at ingest), land the `(media_id, pos, gram)` delta. */
-  def absorb(entries: DataFrame, upto: Long): Unit =
-    absorbGrams(
-      graft.ops.Multimodal.audioGrams(entries, windowSamples, gramWindows, hopSamples), upto)
-
-  def absorbGrams(grams: DataFrame, upto: Long): Unit = {
-    grams.select("media_id", "pos", "gram")
-      .write.mode("overwrite").parquet(batchPath(upto).toString)
-    sinceSeq = upto
-    writeManifest()
-    maybeCompact()
-  }
+  def absorbGrams(grams: DataFrame, upto: Long): Unit = absorbFeatures(grams, upto)
 
   /** The accumulated positional gram table. */
-  def grams: DataFrame = {
-    val dirs = committedBatchDirs().map(_.toString)
-    require(dirs.nonEmpty, "gram table empty — absorb a batch first")
-    spark.read.parquet(dirs: _*)
-  }
+  def grams: DataFrame = table
 
   /** Corpus-SELF containment sweep over the stored table: every
     * shorter stored recording that is a re-cut of any longer one
@@ -66,8 +52,7 @@ final class AudioGramTableView(
     * `containsBatchGrams` when the batch's grams are precomputed. */
   def containsBatch(clips: DataFrame, maxBucket: Int = 256): DataFrame =
     containsBatchGrams(
-      graft.ops.Multimodal.audioGrams(clips, windowSamples, gramWindows, hopSamples)
-        .select(col("media_id").as("clip_id"), col("pos").as("kpos"), col("gram")),
+      features(clips).select(col("media_id").as("clip_id"), col("pos").as("kpos"), col("gram")),
       maxBucket)
 
   def containsBatchGrams(clipGrams: DataFrame, maxBucket: Int = 256): DataFrame =
@@ -75,9 +60,6 @@ final class AudioGramTableView(
       clipGrams,
       grams.select(col("media_id").as("corpus_id"), col("pos").as("cpos"), col("gram")),
       maxBucket)
-
-  override def frameOption: Option[DataFrame] =
-    if (committedBatchDirs().isEmpty) None else Some(grams)
 }
 
 object AudioGramTableView {
@@ -87,13 +69,7 @@ object AudioGramTableView {
   // (ingest + clip probes) on the same hop. A changed hop is a changed
   // artifact: bump `version` so the protocol wipes and regrams.
   def apply(dir: String, windowSamples: Int = 16, gramWindows: Int = 24,
-      version: Int = 1, compactEvery: Int = 0, hopSamples: Int = -1): ViewDef = {
-    val v = version
-    new ViewDef {
-      def version: Int = v
-      def create(db: FlumeDb, name: String) =
-        new AudioGramTableView(
-          db.log.spark, s"$dir/$name", v, windowSamples, gramWindows, compactEvery, hopSamples)
-    }
-  }
+      version: Int = 1, compactEvery: Int = 0, hopSamples: Int = -1): ViewDef =
+    ViewDef(version)((db, name) => new AudioGramTableView(
+      db.log.spark, s"$dir/$name", version, windowSamples, gramWindows, compactEvery, hopSamples))
 }

@@ -1,6 +1,6 @@
 package graft.views
 
-import graft.core.{FlumeDb, FlumeView, ViewDef}
+import graft.core.ViewDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{array, bit_count, broadcast, coalesce, col, lit, round, typedLit}
 
@@ -19,55 +19,45 @@ import org.apache.spark.sql.functions.{array, bit_count, broadcast, coalesce, co
   * from the corpus the caller supplies, so the embeddings are never
   * duplicated into the artifact and move the wire only for candidates.
   *
-  * Storage is the shared [[DeltaProtocol]] + [[CompactableDeltas]], so
-  * it slots under [[graft.streaming.StreamingViewRunner]] with
-  * exactly-once recovery like every other durable view. */
+  * Storage is the shared [[FeatureTableView]] body. */
 final class EmbeddingSigTableView(
-    protected val spark: SparkSession,
-    protected val dir: String,
-    protected val protocolVersion: Int,
-    idCol: String = "vec_id",
-    vecCol: String = "embedding",
-    bands: Int = 4,
-    bitsPerBand: Int = 8,
-    compactEvery: Int = 0) extends FlumeView with FeatureTableDeltas {
+    spark: SparkSession,
+    dir: String,
+    protocolVersion: Int,
+    val idCol: String = "vec_id",
+    val vecCol: String = "embedding",
+    val bands: Int = 4,
+    val bitsPerBand: Int = 8,
+    compactEvery: Int = 0)
+    extends FeatureTableView(spark, dir, protocolVersion, compactEvery, "signature table") {
 
-  override protected def autoCompactEvery: Int = compactEvery
-
-  openProtocol()
-
-  /** Absorb an embedding batch: signature here (each vector hashed
-    * exactly once, at ingest), land the `(vec_id, sig, seq)` delta. */
-  def absorb(entries: DataFrame, upto: Long): Unit =
-    absorbSigs(entries.select(Seq(col(idCol),
+  /** Signature each vector (exactly once, at ingest): `(vec_id,
+    * embedding, sig[, seq])` — the vector rides along for callers that
+    * verify the batch, and is not stored. */
+  def features(entries: DataFrame): DataFrame =
+    entries.select(Seq(col(idCol), col(vecCol),
       graft.ops.Similarity.hyperplaneSignature(col(vecCol), bands * bitsPerBand).as("sig")) ++
-      (if (entries.columns.contains("seq")) Seq(col("seq")) else Nil): _*),
-      upto)
+      (if (entries.columns.contains("seq")) Seq(col("seq")) else Nil): _*)
 
-  /** Absorb a PRECOMPUTED `(vec_id, sig[, seq])` delta. `seq` — the
-    * vector's seq in the corpus LOG the verify side reads — is 8 more
-    * bytes/vector and is what lets the incremental verify prune the
-    * seq-bucketed corpus scan to candidate buckets
+  /** Stores `(vec_id, sig, seq)`. `seq` — the vector's seq in the
+    * corpus LOG the verify side reads — is 8 more bytes/vector and is
+    * what lets the incremental verify prune the seq-bucketed corpus
+    * scan to candidate buckets
     * ([[graft.ops.Dedup.embeddingNearDupIncrementalPruned]]); batches
     * absorbed without one store -1 (= unknown, verify falls back to the
     * full corpus read for candidates in them). */
-  def absorbSigs(sigs: DataFrame, upto: Long): Unit = {
+  protected def project(features: DataFrame): DataFrame = {
     val seqCol =
-      if (sigs.columns.contains("seq")) col("seq").cast("long")
+      if (features.columns.contains("seq")) col("seq").cast("long")
       else lit(-1L)
-    sigs.select(col(idCol), col("sig"), seqCol.as("seq"))
-      .write.mode("overwrite").parquet(batchPath(upto).toString)
-    sinceSeq = upto
-    writeManifest()
-    maybeCompact()
+    features.select(col(idCol), col("sig"), seqCol.as("seq"))
   }
 
+  /** Absorb a PRECOMPUTED `(vec_id, sig[, seq])` delta. */
+  def absorbSigs(sigs: DataFrame, upto: Long): Unit = absorbFeatures(sigs, upto)
+
   /** The accumulated `(vec_id, sig, seq)` table. */
-  def sigs: DataFrame = {
-    val dirs = committedBatchDirs()
-    require(dirs.nonEmpty, "signature table empty — absorb a batch first")
-    readDeltas(dirs)
-  }
+  def sigs: DataFrame = table
 
   /** Delta reads normalize the seq column across UPGRADE boundaries: a
     * chain mixing pre-seq `(vec_id, sig)` deltas with stamped ones is
@@ -135,21 +125,12 @@ final class EmbeddingSigTableView(
       .orderBy(col("cos").desc, col(idCol))
       .limit(k)
   }
-
-  override def frameOption: Option[DataFrame] =
-    if (committedBatchDirs().isEmpty) None else Some(sigs)
 }
 
 object EmbeddingSigTableView {
   def apply(dir: String, idCol: String = "vec_id", vecCol: String = "embedding",
       bands: Int = 4, bitsPerBand: Int = 8,
-      version: Int = 1, compactEvery: Int = 0): ViewDef = {
-    val v = version
-    new ViewDef {
-      def version: Int = v
-      def create(db: FlumeDb, name: String) =
-        new EmbeddingSigTableView(db.log.spark, s"$dir/$name", v,
-          idCol, vecCol, bands, bitsPerBand, compactEvery)
-    }
-  }
+      version: Int = 1, compactEvery: Int = 0): ViewDef =
+    ViewDef(version)((db, name) => new EmbeddingSigTableView(db.log.spark, s"$dir/$name",
+      version, idCol, vecCol, bands, bitsPerBand, compactEvery))
 }

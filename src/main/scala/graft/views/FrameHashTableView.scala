@@ -1,6 +1,6 @@
 package graft.views
 
-import graft.core.{FlumeDb, FlumeView, ViewDef}
+import graft.core.ViewDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Durable, streaming-maintainable per-frame video-hash table — the
@@ -16,41 +16,28 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Frame indexes are load-bearing (the frame-aligned match and the
   * full-frame-count gate need them), so deltas union raw and
   * compaction rewrites without a fold. Storage is the shared
-  * [[DeltaProtocol]] with [[CompactableDeltas]]; slots under
-  * [[graft.streaming.StreamingViewRunner]] with exactly-once recovery
-  * like every other durable view. ~8 bytes per frame stays hot while
+  * [[FeatureTableView]] body. ~8 bytes per frame stays hot while
   * the video bytes stay cold. */
 final class FrameHashTableView(
-    protected val spark: SparkSession,
-    protected val dir: String,
-    protected val protocolVersion: Int,
+    spark: SparkSession,
+    dir: String,
+    protocolVersion: Int,
     hashW: Int = 8,
     hashH: Int = 8,
-    compactEvery: Int = 0) extends FlumeView with FeatureTableDeltas {
+    compactEvery: Int = 0)
+    extends FeatureTableView(spark, dir, protocolVersion, compactEvery, "frame-hash table") {
 
-  override protected def autoCompactEvery: Int = compactEvery
+  /** Decode + per-frame dHash: `(media_id, frame_idx, phash)`. */
+  def features(entries: DataFrame): DataFrame =
+    graft.ops.Multimodal.videoFrameHashes(entries, hashW, hashH)
 
-  openProtocol()
+  protected def project(features: DataFrame): DataFrame =
+    features.select("media_id", "frame_idx", "phash")
 
-  /** Absorb a media batch: decode + per-frame dHash here, land the
-    * `(media_id, frame_idx, phash)` delta. */
-  def absorb(entries: DataFrame, upto: Long): Unit =
-    absorbHashes(graft.ops.Multimodal.videoFrameHashes(entries, hashW, hashH), upto)
-
-  def absorbHashes(hashes: DataFrame, upto: Long): Unit = {
-    hashes.select("media_id", "frame_idx", "phash")
-      .write.mode("overwrite").parquet(batchPath(upto).toString)
-    sinceSeq = upto
-    writeManifest()
-    maybeCompact()
-  }
+  def absorbHashes(hashes: DataFrame, upto: Long): Unit = absorbFeatures(hashes, upto)
 
   /** The accumulated per-frame hash table. */
-  def hashes: DataFrame = {
-    val dirs = committedBatchDirs().map(_.toString)
-    require(dirs.nonEmpty, "frame-hash table empty — absorb a batch first")
-    spark.read.parquet(dirs: _*)
-  }
+  def hashes: DataFrame = table
 
   /** Corpus-SELF containment sweep over the stored table: every
     * shorter stored video that is a frame-run re-cut of any longer one
@@ -62,26 +49,17 @@ final class FrameHashTableView(
   /** Near-dup check of a new video batch against the stored corpus;
     * `dedupBatchHashes` when the batch's frame hashes are precomputed. */
   def dedupBatch(media: DataFrame, maxHamming: Int = 7, maxBucket: Int = 256): DataFrame =
-    dedupBatchHashes(graft.ops.Multimodal.videoFrameHashes(media, hashW, hashH),
-      maxHamming, maxBucket)
+    dedupBatchHashes(features(media), maxHamming, maxBucket)
 
   def dedupBatchHashes(newHashes: DataFrame, maxHamming: Int = 7,
       maxBucket: Int = 256): DataFrame =
     graft.ops.Multimodal.videoNearDupIncremental(
       newHashes, hashes, maxHamming, maxBucket)
-
-  override def frameOption: Option[DataFrame] =
-    if (committedBatchDirs().isEmpty) None else Some(hashes)
 }
 
 object FrameHashTableView {
   def apply(dir: String, hashW: Int = 8, hashH: Int = 8,
-      version: Int = 1, compactEvery: Int = 0): ViewDef = {
-    val v = version
-    new ViewDef {
-      def version: Int = v
-      def create(db: FlumeDb, name: String) =
-        new FrameHashTableView(db.log.spark, s"$dir/$name", v, hashW, hashH, compactEvery)
-    }
-  }
+      version: Int = 1, compactEvery: Int = 0): ViewDef =
+    ViewDef(version)((db, name) =>
+      new FrameHashTableView(db.log.spark, s"$dir/$name", version, hashW, hashH, compactEvery))
 }

@@ -1,6 +1,6 @@
 package graft.views
 
-import graft.core.{FlumeDb, FlumeView, ViewDef}
+import graft.core.ViewDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Durable, streaming-maintainable k-gram fingerprint table — the
@@ -18,19 +18,62 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * distinct set); [[grams]] re-distincts at read, and compaction
   * collapses the chain into one deduplicated base — at 8 bytes per
   * distinct gram the artifact is a small fraction of the text.
-  * Storage is the shared [[DeltaProtocol]] + [[CompactableDeltas]]
-  * crash discipline, so it slots under
-  * [[graft.streaming.StreamingViewRunner]] with exactly-once recovery.
+  * Storage is the shared [[FeatureTableView]] body.
   */
 final class GramTableView(
-    protected val spark: SparkSession,
-    protected val dir: String,
+    spark: SparkSession,
+    dir: String,
     mountedVersion: Int,
     idCol: String,
     textCol: String,
     k: Int = 15,
-    compactEvery: Int = 0) extends FlumeView with FeatureTableDeltas {
+    compactEvery: Int = 0)
+    extends FeatureTableView(spark, dir, GramTableView.epoch + mountedVersion, compactEvery,
+      "gram table") {
 
+  /** Postings are stored DOC-ATTRIBUTED `(doc_id, g)` — per-doc
+    * distinct — so a takedown can remove ONE document's fingerprints
+    * (`retractWhere`/`retractIds`) without them surviving as anonymous
+    * grams a re-ingested copy would still match. Span consumers project
+    * `g` and stay duplicate-safe, so the attribution costs nothing at
+    * read. */
+  def features(entries: DataFrame): DataFrame =
+    graft.ops.Dedup.docGramTable(entries, k, idCol, textCol)
+
+  protected def project(features: DataFrame): DataFrame = features.select("doc_id", "g")
+
+  /** The stored doc-attributed postings `(doc_id, g)` — the retraction
+    * unit and the provenance read ("which docs share this gram"). The
+    * raw delta union: grams may repeat across deltas until compaction
+    * folds them, which every semi-join/membership consumer tolerates
+    * ([[graft.ops.Dedup.substringSpansIncremental]] is duplicate-safe
+    * by construction) without the corpus-wide distinct [[grams]] pays. */
+  def postings: DataFrame = table
+
+  /** The accumulated DISTINCT gram table. This dedups at read (one
+    * shuffle of the whole table) — use it for counts/inspection;
+    * membership consumers should take the duplicate-safe path
+    * ([[spansForBatch]] does, via the raw delta union). Compaction
+    * makes the two equivalent until the next absorb. */
+  def grams: DataFrame = distinctGrams(table)
+
+  private def distinctGrams(postings: DataFrame): DataFrame = postings.select("g").distinct()
+
+  /** Spans of a new batch already present in the stored corpus — reads
+    * the RAW delta union (no corpus-wide distinct: the span operator
+    * semi-joins and dedups its batch-sized matched set instead). */
+  def spansForBatch(newDocs: DataFrame, maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame =
+    graft.ops.Dedup.substringSpansIncremental(newDocs, table, k, maxBroadcastKeys, idCol, textCol)
+
+  /** Compaction dedups the union — the chain collapses to one
+    * distinct base delta. */
+  override protected def writeMerged(df: DataFrame, path: java.nio.file.Path): Unit =
+    df.distinct().write.parquet(path.toString)
+
+  override def frameOption: Option[DataFrame] = super.frameOption.map(distinctGrams)
+}
+
+object GramTableView {
   /** The stored version carries a SCHEMA EPOCH beside the caller's
     * version: epoch 1 = doc-attributed `(doc_id, g)` postings. A store
     * from the anonymous-`(g)` era mismatches and rebuilds at open —
@@ -38,72 +81,10 @@ final class GramTableView(
     * unattributable ghost grams (doc_id reads NULL → the null-safe
     * predicate KEEPS them) and a re-ingested copy of retracted text
     * would still match. */
-  override protected val protocolVersion: Int = 1000000 + mountedVersion
+  private val epoch = 1000000
 
-  override protected def autoCompactEvery: Int = compactEvery
-
-  openProtocol()
-
-  /** Absorb a doc batch: postings are stored DOC-ATTRIBUTED
-    * `(doc_id, g)` — per-doc distinct — so a takedown can remove ONE
-    * document's fingerprints (`retractWhere`/`retractIds`) without
-    * them surviving as anonymous grams a re-ingested copy would still
-    * match. Span consumers project `g` and stay duplicate-safe, so the
-    * attribution costs nothing at read. Pre-attribution stores carry a
-    * bare `(g)` schema: bump the mounted version to rebuild. */
-  def absorb(entries: DataFrame, upto: Long): Unit = {
-    graft.ops.Dedup.docGramTable(entries, k, idCol, textCol)
-      .write.mode("overwrite").parquet(batchPath(upto).toString)
-    sinceSeq = upto
-    writeManifest()
-    maybeCompact()
-  }
-
-  /** The raw delta union — grams may repeat across deltas until
-    * compaction folds them. Fine for every semi-join/membership
-    * consumer ([[graft.ops.Dedup.substringSpansIncremental]] is
-    * duplicate-safe by construction), and it avoids the corpus-wide
-    * distinct shuffle [[grams]] pays per read. */
-  private def rawGrams: DataFrame = {
-    val dirs = committedBatchDirs().map(_.toString)
-    require(dirs.nonEmpty, "gram table empty — absorb a batch first")
-    spark.read.parquet(dirs: _*)
-  }
-
-  /** The stored doc-attributed postings `(doc_id, g)` — the retraction
-    * unit and the provenance read ("which docs share this gram"). */
-  def postings: DataFrame = rawGrams
-
-  /** The accumulated DISTINCT gram table. This dedups at read (one
-    * shuffle of the whole table) — use it for counts/inspection;
-    * membership consumers should take the duplicate-safe path
-    * ([[spansForBatch]] does, via the raw delta union). Compaction
-    * makes the two equivalent until the next absorb. */
-  def grams: DataFrame = rawGrams.select("g").distinct()
-
-  /** Spans of a new batch already present in the stored corpus — reads
-    * the RAW delta union (no corpus-wide distinct: the span operator
-    * semi-joins and dedups its batch-sized matched set instead). */
-  def spansForBatch(newDocs: DataFrame, maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame =
-    graft.ops.Dedup.substringSpansIncremental(newDocs, rawGrams, k, maxBroadcastKeys, idCol, textCol)
-
-  /** Compaction dedups the union — the chain collapses to one
-    * distinct base delta. */
-  override protected def writeMerged(df: DataFrame, path: java.nio.file.Path): Unit =
-    df.distinct().write.parquet(path.toString)
-
-  override def frameOption: Option[DataFrame] =
-    if (committedBatchDirs().isEmpty) None else Some(grams)
-}
-
-object GramTableView {
   def apply(dir: String, idCol: String = "doc_id", textCol: String = "text",
-      k: Int = 15, version: Int = 1, compactEvery: Int = 0): ViewDef = {
-    val v = version
-    new ViewDef {
-      def version: Int = v
-      def create(db: FlumeDb, name: String) =
-        new GramTableView(db.log.spark, s"$dir/$name", v, idCol, textCol, k, compactEvery)
-    }
-  }
+      k: Int = 15, version: Int = 1, compactEvery: Int = 0): ViewDef =
+    ViewDef(version)((db, name) =>
+      new GramTableView(db.log.spark, s"$dir/$name", version, idCol, textCol, k, compactEvery))
 }

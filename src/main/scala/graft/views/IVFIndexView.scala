@@ -1,6 +1,6 @@
 package graft.views
 
-import graft.core.{FlumeDb, FlumeView, ViewDef}
+import graft.core.{FlumeView, ViewDef}
 import graft.ops.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -355,12 +355,7 @@ final class IVFIndexView(
 
 object IVFIndexView {
   def apply(dir: String, idCol: String = "vec_id", vecCol: String = "embedding",
-      nCentroids: Int = 16, version: Int = 1, compactEvery: Int = 0): ViewDef = {
-    val v = version
-    new ViewDef {
-      def version: Int = v
-      def create(db: FlumeDb, name: String) =
-        new IVFIndexView(db.log.spark, s"$dir/$name", v, idCol, vecCol, nCentroids, compactEvery)
-    }
-  }
+      nCentroids: Int = 16, version: Int = 1, compactEvery: Int = 0): ViewDef =
+    ViewDef(version)((db, name) => new IVFIndexView(
+      db.log.spark, s"$dir/$name", version, idCol, vecCol, nCentroids, compactEvery))
 }

@@ -1,6 +1,6 @@
 package graft.views
 
-import graft.core.{FlumeDb, FlumeView, ViewDef}
+import graft.core.{FlumeView, ViewDef}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -148,12 +148,7 @@ final class PersistentHashtableView(
 }
 
 object PersistentHashtableView {
-  def apply(dir: String, keyCol: String, seqCol: String = "seq", version: Int = 1, compactEvery: Int = 0): ViewDef = {
-    val v = version
-    new ViewDef {
-      def version: Int = v
-      def create(db: FlumeDb, name: String) =
-        new PersistentHashtableView(db.log.spark, s"$dir/$name", v, keyCol, seqCol, compactEvery)
-    }
-  }
+  def apply(dir: String, keyCol: String, seqCol: String = "seq", version: Int = 1, compactEvery: Int = 0): ViewDef =
+    ViewDef(version)((db, name) => new PersistentHashtableView(
+      db.log.spark, s"$dir/$name", version, keyCol, seqCol, compactEvery))
 }

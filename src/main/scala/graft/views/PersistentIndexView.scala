@@ -1,6 +1,6 @@
 package graft.views
 
-import graft.core.{FlumeDb, FlumeView, ViewDef}
+import graft.core.{FlumeView, ViewDef}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -73,38 +73,22 @@ final class PersistentIndexView(
 }
 
 object PersistentIndexView {
-  def apply(dir: String, keys: Column, seqCol: String = "seq", version: Int = 1, compactEvery: Int = 0): ViewDef = {
-    val v = version
-    new ViewDef {
-      def version: Int = v
-      def create(db: FlumeDb, name: String) =
-        new PersistentIndexView(db.log.spark, s"$dir/$name", v, keys, seqCol, compactEvery = compactEvery)
-    }
-  }
+  def apply(dir: String, keys: Column, seqCol: String = "seq", version: Int = 1, compactEvery: Int = 0): ViewDef =
+    ViewDef(version)((db, name) => new PersistentIndexView(
+      db.log.spark, s"$dir/$name", version, keys, seqCol, compactEvery = compactEvery))
 
   /** Durable single-column equality index, eligible for [[Query]] index
     * selection (see [[IndexView.onColumn]]). */
-  def onColumn(dir: String, column: String, seqCol: String = "seq", version: Int = 1, compactEvery: Int = 0): ViewDef = {
-    val v = version
-    new ViewDef {
-      def version: Int = v
-      def create(db: FlumeDb, name: String) =
-        new PersistentIndexView(db.log.spark, s"$dir/$name", v,
-          array(col(column).cast("string")), seqCol, Some(column), compactEvery = compactEvery)
-    }
-  }
+  def onColumn(dir: String, column: String, seqCol: String = "seq", version: Int = 1, compactEvery: Int = 0): ViewDef =
+    ViewDef(version)((db, name) => new PersistentIndexView(db.log.spark, s"$dir/$name", version,
+      array(col(column).cast("string")), seqCol, Some(column), compactEvery = compactEvery))
 
   /** Durable composite equality index (see [[IndexView.onColumns]]). */
   def onColumns(dir: String, columns: Seq[String], seqCol: String = "seq",
       version: Int = 1, compactEvery: Int = 0): ViewDef = {
     require(columns.size >= 2, "composite index needs >= 2 columns; use onColumn")
-    val v = version
-    new ViewDef {
-      def version: Int = v
-      def create(db: FlumeDb, name: String) =
-        new PersistentIndexView(db.log.spark, s"$dir/$name", v,
-          IndexView.compositeKeys(columns), seqCol,
-          None, Some(columns.toList), compactEvery = compactEvery)
-    }
+    ViewDef(version)((db, name) => new PersistentIndexView(db.log.spark, s"$dir/$name", version,
+      IndexView.compositeKeys(columns), seqCol,
+      None, Some(columns.toList), compactEvery = compactEvery))
   }
 }

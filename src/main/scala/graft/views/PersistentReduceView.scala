@@ -1,6 +1,6 @@
 package graft.views
 
-import graft.core.{FlumeDb, FlumeView, ViewDef}
+import graft.core.{FlumeView, ViewDef}
 import org.apache.spark.sql.DataFrame
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
@@ -172,14 +172,9 @@ final class PersistentBloomView(
 
 object PersistentBloomView {
   def apply(dir: String, keyCol: String, expectedItems: Long = 1000000L,
-      fpp: Double = 0.01, version: Int = 1): ViewDef = {
-    val v = version
-    new ViewDef {
-      def version: Int = v
-      def create(db: FlumeDb, name: String): FlumeView =
-        new PersistentBloomView(s"$dir/$name", v, keyCol, expectedItems, fpp)
-    }
-  }
+      fpp: Double = 0.01, version: Int = 1): ViewDef =
+    ViewDef(version)((_, name) =>
+      new PersistentBloomView(s"$dir/$name", version, keyCol, expectedItems, fpp))
 }
 
 object PersistentSumReduceView {
@@ -190,9 +185,8 @@ object PersistentSumReduceView {
     * [[PersistentStatsReduceView]] deliberately rebuilds instead —
     * un-merging Welford's m2 is catastrophic cancellation when the
     * removed mass approaches the total. */
-  def apply(dir: String, viewVersion: Int, valueCol: String): ViewDef = new ViewDef {
-    def version: Int = viewVersion
-    def create(db: FlumeDb, name: String): FlumeView = {
+  def apply(dir: String, viewVersion: Int, valueCol: String): ViewDef =
+    ViewDef(viewVersion) { (_, _) =>
       import org.apache.spark.sql.functions._
       new PersistentReduceView[(Double, Long)](
         dir, viewVersion,
@@ -209,15 +203,13 @@ object PersistentSumReduceView {
         },
         inverse = Some({ case ((s1, c1), (s2, c2)) => (s1 - s2, c1 - c2) }))
     }
-  }
 }
 
 object PersistentStatsReduceView {
   /** Durable running (count, mean, m2) — the persistent form of
     * [[StatsReduceView]], codec = one "n mean m2" text line. */
-  def apply(dir: String, viewVersion: Int, valueCol: String): ViewDef = new ViewDef {
-    def version: Int = viewVersion
-    def create(db: FlumeDb, name: String): FlumeView = {
+  def apply(dir: String, viewVersion: Int, valueCol: String): ViewDef =
+    ViewDef(viewVersion) { (_, _) =>
       import org.apache.spark.sql.functions._
       new PersistentReduceView[Stats](
         dir, viewVersion,
@@ -237,5 +229,4 @@ object PersistentStatsReduceView {
           Stats(n.toLong, mean.toDouble, m2.toDouble)
         })
     }
-  }
 }

@@ -1,6 +1,6 @@
 package graft.views
 
-import graft.core.{FlumeDb, FlumeView, ViewDef}
+import graft.core.ViewDef
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Durable, streaming-maintainable perceptual-hash table — the image
@@ -13,72 +13,46 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[graft.ops.Multimodal.perceptualNearDupIncremental]] — recurring
   * cost ∝ batch, never corpus.
   *
-  * Storage is the shared [[DeltaProtocol]] (manifest after delta ⇒
-  * crash-safe; orphan pruning at open; version bump ⇒ wipe and
-  * rebuild) with [[CompactableDeltas]] bounding the small-files chain,
-  * so it slots under [[graft.streaming.StreamingViewRunner]] with
-  * exactly-once recovery like every other durable view here. At
-  * cluster scale this 8-bytes-per-image table is the stored artifact
+  * Storage is the shared [[FeatureTableView]] body. At cluster scale
+  * this 8-bytes-per-image table is the stored artifact
   * image dedup pipelines keep hot while the image bytes stay cold.
   */
 final class PhashTableView(
-    protected val spark: SparkSession,
-    protected val dir: String,
-    protected val protocolVersion: Int,
+    spark: SparkSession,
+    dir: String,
+    protocolVersion: Int,
     hashW: Int = 8,
     hashH: Int = 8,
-    compactEvery: Int = 0) extends FlumeView with FeatureTableDeltas {
+    compactEvery: Int = 0)
+    extends FeatureTableView(spark, dir, protocolVersion, compactEvery, "phash table") {
 
-  override protected def autoCompactEvery: Int = compactEvery
+  /** Decode + dHash (each image hashed exactly once, at ingest). */
+  def features(entries: DataFrame): DataFrame =
+    graft.ops.Multimodal.perceptualHash(entries, hashW, hashH)
 
-  openProtocol()
+  protected def project(features: DataFrame): DataFrame =
+    features.select("media_id", "phash")
 
-  /** Absorb a media batch: decode + dHash here (each image hashed
-    * exactly once, at ingest), land the `(media_id, phash)` delta. */
-  def absorb(entries: DataFrame, upto: Long): Unit =
-    absorbHashes(graft.ops.Multimodal.perceptualHash(entries, hashW, hashH), upto)
-
-  /** Absorb a PRECOMPUTED `(media_id, phash)` delta — for callers that
-    * already paid the decode for their own dedup decision. */
-  def absorbHashes(hashes: DataFrame, upto: Long): Unit = {
-    hashes.select("media_id", "phash")
-      .write.mode("overwrite").parquet(batchPath(upto).toString)
-    sinceSeq = upto
-    writeManifest()
-    maybeCompact()
-  }
+  def absorbHashes(hashes: DataFrame, upto: Long): Unit = absorbFeatures(hashes, upto)
 
   /** The accumulated `(media_id, phash)` table — feed to
     * [[graft.ops.Multimodal.perceptualNearDupIncremental]]. */
-  def hashes: DataFrame = {
-    val dirs = committedBatchDirs().map(_.toString)
-    require(dirs.nonEmpty, "phash table empty — absorb a batch first")
-    spark.read.parquet(dirs: _*)
-  }
+  def hashes: DataFrame = table
 
   /** Near-dup check of a new media batch against the stored corpus;
     * `dedupBatchHashes` when the batch's hashes are precomputed. */
   def dedupBatch(media: DataFrame, maxHamming: Int = 7, maxBucket: Int = 256): DataFrame =
-    dedupBatchHashes(graft.ops.Multimodal.perceptualHash(media, hashW, hashH),
-      maxHamming, maxBucket)
+    dedupBatchHashes(features(media), maxHamming, maxBucket)
 
   def dedupBatchHashes(newHashes: DataFrame, maxHamming: Int = 7,
       maxBucket: Int = 256): DataFrame =
     graft.ops.Multimodal.perceptualNearDupIncremental(
       newHashes, hashes, maxHamming, maxBucket)
-
-  override def frameOption: Option[DataFrame] =
-    if (committedBatchDirs().isEmpty) None else Some(hashes)
 }
 
 object PhashTableView {
   def apply(dir: String, hashW: Int = 8, hashH: Int = 8,
-      version: Int = 1, compactEvery: Int = 0): ViewDef = {
-    val v = version
-    new ViewDef {
-      def version: Int = v
-      def create(db: FlumeDb, name: String) =
-        new PhashTableView(db.log.spark, s"$dir/$name", v, hashW, hashH, compactEvery)
-    }
-  }
+      version: Int = 1, compactEvery: Int = 0): ViewDef =
+    ViewDef(version)((db, name) =>
+      new PhashTableView(db.log.spark, s"$dir/$name", version, hashW, hashH, compactEvery))
 }

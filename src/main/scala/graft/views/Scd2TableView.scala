@@ -1,6 +1,6 @@
 package graft.views
 
-import graft.core.{FlumeDb, FlumeView, ViewDef}
+import graft.core.{FlumeView, ViewDef}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -106,13 +106,7 @@ final class Scd2TableView(
 
 object Scd2TableView {
   def apply(dir: String, keyCol: String, seqCol: String, valueCols: Seq[String],
-      version: Int = 1, compactEvery: Int = 0): ViewDef = {
-    val v = version
-    new ViewDef {
-      def version: Int = v
-      def create(db: FlumeDb, name: String) =
-        new Scd2TableView(db.log.spark, s"$dir/$name", v, keyCol, seqCol,
-          valueCols, compactEvery)
-    }
-  }
+      version: Int = 1, compactEvery: Int = 0): ViewDef =
+    ViewDef(version)((db, name) => new Scd2TableView(db.log.spark, s"$dir/$name", version,
+      keyCol, seqCol, valueCols, compactEvery))
 }

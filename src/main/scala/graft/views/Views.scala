@@ -1,6 +1,6 @@
 package graft.views
 
-import graft.core.{FlumeDb, FlumeView, ViewDef}
+import graft.core.{FlumeView, ViewDef}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
@@ -87,19 +87,14 @@ object ReduceValue {
 }
 
 object MergeableReduceView {
-  def apply[S](partialFn: DataFrame => S)(mergeFn: (S, S) => S): ViewDef = new ViewDef {
-    def version: Int = 1
-    def create(db: FlumeDb, name: String) = new MergeableReduceView[S](partialFn, mergeFn)
-  }
+  def apply[S](partialFn: DataFrame => S)(mergeFn: (S, S) => S): ViewDef =
+    ViewDef(1)((_, _) => new MergeableReduceView[S](partialFn, mergeFn))
 
   /** A fold with an exact inverse — mounts as an in-place takedown
     * target ([[graft.core.InvertibleReduceView]]). */
   def invertible[S](partialFn: DataFrame => S)(mergeFn: (S, S) => S)(
-      inverseFn: (S, S) => S): ViewDef = new ViewDef {
-    def version: Int = 1
-    def create(db: FlumeDb, name: String) =
-      new MergeableReduceView[S](partialFn, mergeFn, Some(inverseFn))
-  }
+      inverseFn: (S, S) => S): ViewDef =
+    ViewDef(1)((_, _) => new MergeableReduceView[S](partialFn, mergeFn, Some(inverseFn)))
 }
 
 /** Running (count, mean, sample-stddev) — the reference's canonical reduce
@@ -173,10 +168,8 @@ final class OrderedFoldView[S](zero: S, fold: (S, Row) => S, seqCol: String) ext
 }
 
 object OrderedFoldView {
-  def apply[S](zero: S, seqCol: String = "seq")(fold: (S, Row) => S): ViewDef = new ViewDef {
-    def version: Int = 1
-    def create(db: FlumeDb, name: String) = new OrderedFoldView[S](zero, fold, seqCol)
-  }
+  def apply[S](zero: S, seqCol: String = "seq")(fold: (S, Row) => S): ViewDef =
+    ViewDef(1)((_, _) => new OrderedFoldView[S](zero, fold, seqCol))
 }
 
 /** The 100 TB answer to SURVEY §7.4's ordered-fold problem: when the
@@ -233,11 +226,8 @@ final class SegmentedFoldView[S](
 
 object SegmentedFoldView {
   def apply[S](zero: S, seqCol: String = "seq", partitions: Int = 0)(
-      fold: (S, Row) => S)(merge: (S, S) => S): ViewDef = new ViewDef {
-    def version: Int = 1
-    def create(db: FlumeDb, name: String) =
-      new SegmentedFoldView[S](zero, fold, merge, seqCol, partitions)
-  }
+      fold: (S, Row) => S)(merge: (S, S) => S): ViewDef =
+    ViewDef(1)((_, _) => new SegmentedFoldView[S](zero, fold, merge, seqCol, partitions))
 }
 
 /** Base for views whose state is itself a DataFrame, maintained by
@@ -321,21 +311,16 @@ final class IndexView(keys: Column, seqCol: String,
 }
 
 object IndexView {
-  def apply(keys: Column, seqCol: String = "seq"): ViewDef = new ViewDef {
-    def version: Int = 1
-    def create(db: FlumeDb, name: String) = new IndexView(keys, seqCol)
-  }
+  def apply(keys: Column, seqCol: String = "seq"): ViewDef =
+    ViewDef(1)((_, _) => new IndexView(keys, seqCol))
 
   /** A single-column equality index: key = the column value cast to
     * string. Declaring the indexed COLUMN (not an opaque key expression)
     * is what lets [[Query.run(db*]] rewrite an equality/`isin` filter on
     * it into a posting-table lookup — the reference's "query language
     * with index selection" (`/root/reference/README.md:94`). */
-  def onColumn(column: String, seqCol: String = "seq"): ViewDef = new ViewDef {
-    def version: Int = 1
-    def create(db: FlumeDb, name: String) =
-      new IndexView(array(col(column).cast("string")), seqCol, Some(column))
-  }
+  def onColumn(column: String, seqCol: String = "seq"): ViewDef =
+    ViewDef(1)((_, _) => new IndexView(array(col(column).cast("string")), seqCol, Some(column)))
 
   /** A composite equality index: key = the columns' string forms joined
     * on NUL (the reference's level views take arbitrary composite keys,
@@ -347,12 +332,8 @@ object IndexView {
     * separator — such columns should use a single-column index. */
   def onColumns(columns: Seq[String], seqCol: String = "seq"): ViewDef = {
     require(columns.size >= 2, "composite index needs >= 2 columns; use onColumn")
-    new ViewDef {
-      def version: Int = 1
-      def create(db: FlumeDb, name: String) =
-        new IndexView(IndexView.compositeKeys(columns), seqCol,
-          None, Some(columns.toList))
-    }
+    ViewDef(1)((_, _) => new IndexView(IndexView.compositeKeys(columns), seqCol,
+      None, Some(columns.toList)))
   }
 
   /** `[concat_ws(NUL, cols)]` when every component is non-null, else
@@ -410,10 +391,8 @@ final class HashtableView(keyCol: String, seqCol: String) extends FlumeView {
 }
 
 object HashtableView {
-  def apply(keyCol: String, seqCol: String = "seq"): ViewDef = new ViewDef {
-    def version: Int = 1
-    def create(db: FlumeDb, name: String) = new HashtableView(keyCol, seqCol)
-  }
+  def apply(keyCol: String, seqCol: String = "seq"): ViewDef =
+    ViewDef(1)((_, _) => new HashtableView(keyCol, seqCol))
 }
 
 /** flumeview-search (`/root/reference/README.md:95`): inverted-index
@@ -469,10 +448,8 @@ final class SearchView(textCol: String, seqCol: String)
 }
 
 object SearchView {
-  def apply(textCol: String, seqCol: String = "seq"): ViewDef = new ViewDef {
-    def version: Int = 1
-    def create(db: FlumeDb, name: String) = new SearchView(textCol, seqCol)
-  }
+  def apply(textCol: String, seqCol: String = "seq"): ViewDef =
+    ViewDef(1)((_, _) => new SearchView(textCol, seqCol))
 }
 
 /** Positional full-text search: postings carry the token position, so
@@ -535,10 +512,8 @@ final class PositionalSearchView(textCol: String, seqCol: String)
 }
 
 object PositionalSearchView {
-  def apply(textCol: String, seqCol: String = "seq"): ViewDef = new ViewDef {
-    def version: Int = 1
-    def create(db: FlumeDb, name: String) = new PositionalSearchView(textCol, seqCol)
-  }
+  def apply(textCol: String, seqCol: String = "seq"): ViewDef =
+    ViewDef(1)((_, _) => new PositionalSearchView(textCol, seqCol))
 }
 
 /** flumeview-bloom (`/root/reference/README.md:97`): approximate
@@ -567,10 +542,8 @@ final class BloomView(keyCol: String, expectedItems: Long, fpp: Double) extends 
 }
 
 object BloomView {
-  def apply(keyCol: String, expectedItems: Long = 1000000L, fpp: Double = 0.01): ViewDef = new ViewDef {
-    def version: Int = 1
-    def create(db: FlumeDb, name: String) = new BloomView(keyCol, expectedItems, fpp)
-  }
+  def apply(keyCol: String, expectedItems: Long = 1000000L, fpp: Double = 0.01): ViewDef =
+    ViewDef(1)((_, _) => new BloomView(keyCol, expectedItems, fpp))
 }
 
 /** Count-min sketch view: approximate per-key frequencies (heavy
@@ -599,8 +572,5 @@ final class CountMinView(keyCol: String, eps: Double, confidence: Double, seed: 
 
 object CountMinView {
   def apply(keyCol: String, eps: Double = 0.001, confidence: Double = 0.99, seed: Int = 42): ViewDef =
-    new ViewDef {
-      def version: Int = 1
-      def create(db: FlumeDb, name: String) = new CountMinView(keyCol, eps, confidence, seed)
-    }
+    ViewDef(1)((_, _) => new CountMinView(keyCol, eps, confidence, seed))
 }

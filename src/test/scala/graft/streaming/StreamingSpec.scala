@@ -2388,4 +2388,46 @@ class StreamingSpec extends SparkSpec {
       case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
+
+  test("curator bindings featurize through their view: the stored features follow the view's settings") {
+    import graft.ops.Multimodal
+    import graft.views.{PhashTableView, SignatureTableView}
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def mark(p: String) = java.nio.file.Paths.get(tmp(p), "_mark").toString
+
+    // image: a 4x4 phash view's curator stores 4x4 hashes, not the 8x8 default
+    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    val media = Multimodal.syntheticTexturePngMedia(docs.where(col("doc_id") < 30))
+    val srcLog = new ParquetLog(spark, tmp("graft-agree-src"), Multimodal.mediaSchema)
+    val curLog = new ParquetLog(spark, tmp("graft-agree-dst"), Multimodal.mediaSchema)
+    val phView = new PhashTableView(spark, s"${tmp("graft-agree-ph")}/ph", 1, hashW = 4, hashH = 4)
+    srcLog.append(media)
+    val cur = new MediaStreamingCurator(srcLog, curLog, MediaDedupBinding.image(phView),
+      mark("graft-agree-c"))
+    try cur.awaitParity() finally cur.stop()
+    def byId(df: org.apache.spark.sql.DataFrame): Map[Long, Long] =
+      df.select("media_id", "phash").collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val survivors = curLog.read.select("media_id")
+    val expected = byId(Multimodal.perceptualHash(
+      media.join(survivors, Seq("media_id"), "left_semi"), 4, 4))
+    assert(expected.nonEmpty)
+    assert(byId(phView.hashes) === expected,
+      "the curator must store the hashes its view computes (4x4)")
+
+    // text: a 32-permutation signature view's curator stores 32-wide signatures
+    val docSchema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType)))
+    val textSrc = new ParquetLog(spark, tmp("graft-agree-tsrc"), docSchema)
+    val textCur = new ParquetLog(spark, tmp("graft-agree-tdst"), docSchema)
+    val sigView = new SignatureTableView(spark, s"${tmp("graft-agree-sig")}/s", 1,
+      "doc_id", "text", perms = 32)
+    textSrc.appendRows(Seq(
+      Row(1L, "the quick brown fox jumps over the lazy dog and it is a fine day for running"),
+      Row(2L, "a completely different story about ships and the sea where the wind was cold")))
+    val tcur = new StreamingCurator(textSrc, textCur, sigView, mark("graft-agree-tc"))
+    try tcur.awaitParity() finally tcur.stop()
+    assert(textCur.read.count() === 2L)
+    assert(sigView.sigs.select(size(col("sig"))).collect().map(_.getInt(0)).toSet === Set(32),
+      "the curator must store the view's 32-permutation signatures")
+  }
 }
