@@ -1207,9 +1207,7 @@ object ParquetLog {
   private[graft] def hitMarker(ids: org.apache.spark.sql.DataFrame, idCol: String,
       maxBroadcastKeys: Long): org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = {
     val keys = ids.select(col(idCol)).distinct()
-    val fenceLimit = math.min(maxBroadcastKeys + 1, Int.MaxValue.toLong).toInt
-    val small = keys.limit(fenceLimit).count() <= maxBroadcastKeys
-    val marked = (if (small) org.apache.spark.sql.functions.broadcast(keys) else keys)
+    val marked = (if (Fence.broadcastable(keys, maxBroadcastKeys)) broadcast(keys) else keys)
       .withColumn(hitCol, lit(true))
     df => df.join(marked, Seq(idCol), "left")
       .withColumn(hitCol, coalesce(col(hitCol), lit(false)))

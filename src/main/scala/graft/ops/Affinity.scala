@@ -21,23 +21,21 @@ object Affinity {
   def typeAffinity(
       events: DataFrame,
       key: String,
-      typeCol: Column): DataFrame = {
+      typeCol: Column): DataFrame = Stage.checkpointed { persisted =>
     val base = events.select(col(key).as("k"), typeCol.as("t")).distinct().persist()
+    persisted += base
     val u = base.select("k").distinct().count().toDouble
     val per = base.groupBy("t").agg(count(lit(1)).as("n"))
     val pairs = base.select(col("k"), col("t").as("type_a"))
       .join(base.select(col("k"), col("t").as("type_b")), Seq("k"))
       .where(col("type_a") < col("type_b"))
       .groupBy("type_a", "type_b").agg(count(lit(1)).as("n_xy"))
-    val out = pairs
+    pairs
       .join(per.select(col("t").as("type_a"), col("n").as("n_a")), Seq("type_a"))
       .join(per.select(col("t").as("type_b"), col("n").as("n_b")), Seq("type_b"))
       .select(col("type_a"), col("type_b"), col("n_xy"),
         floor(col("n_xy") * 1000000.0 / u + 1e-9).cast("long").as("support_ppm"),
         floor(col("n_xy") * u * 1000000.0 / (col("n_a") * col("n_b")) + 1e-9)
           .cast("long").as("lift_ppm"))
-    val ck = out.localCheckpoint(true)
-    base.unpersist(blocking = false)
-    ck
   }
 }

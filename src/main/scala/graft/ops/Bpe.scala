@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Fence
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -91,7 +92,7 @@ object Bpe {
       maxDriverVocab: Long = 1L << 20): Seq[Merge] = {
     val wc = wordCounts(docs, textCol).persist()
     try {
-      if (wc.count() <= maxDriverVocab)
+      if (Fence.broadcastable(wc, maxDriverVocab))
         trainDriver(wc.collect().map(r => (r.getString(0), r.getLong(1))), nMerges)
       else trainDistributed(wc, nMerges)
     } finally wc.unpersist(blocking = false)

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Fence
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -208,36 +209,28 @@ object Dedup {
       bands: Int = 16,
       threshold: Double = 0.5,
       maxBucket: Int = 64,
-      verifyExact: Boolean = false): DataFrame = {
+      verifyExact: Boolean = false): DataFrame = Stage.checkpointed { persisted =>
+    // `hashed` is caller-owned and stays cached until the caller releases it
     val sigs = hashed
       .select(col("id"), graft.functions.MinhashOph.minhash_oph(col("hs"), perms).as("sig"))
       .persist()
-
-    val pairs =
-      if (verifyExact) {
-        // dup-tolerant candidate stream: the verify's broadcast
-        // prefilter dedups survivors, so the full stream skips its
-        // distinct shuffle
-        val cand = lshCandidates(sigs, perms, bands, maxBucket, dedup = false)
-        verifyCandidatesExact(cand, sigs, hashed, "hs", threshold, perms, "est_jaccard")
-      } else {
-        val cand = lshCandidates(sigs, perms, bands, maxBucket)
-        cand
-          .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
-          .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
-          .withColumn("est_jaccard",
-            round(sigMatches(col("sig_a"), col("sig_b")).cast("double") / lit(perms.toDouble), 4))
-          .where(col("est_jaccard") >= threshold)
-          .select("id_a", "id_b", "est_jaccard")
-      }
-    // Materialize the (small) pair table eagerly, then release the big
-    // cached frames — its blocks are cleaned by the context cleaner once
-    // the caller drops the result, unlike persist()'d plans which the
-    // shared cache manager pins forever. `hashed` is caller-owned and
-    // stays cached until the caller releases it.
-    val out = pairs.localCheckpoint(true)
-    sigs.unpersist(blocking = false)
-    out
+    persisted += sigs
+    if (verifyExact) {
+      // dup-tolerant candidate stream: the verify's broadcast
+      // prefilter dedups survivors, so the full stream skips its
+      // distinct shuffle
+      val cand = lshCandidates(sigs, perms, bands, maxBucket, dedup = false)
+      verifyCandidatesExact(cand, sigs, hashed, "hs", threshold, perms, "est_jaccard")
+    } else {
+      val cand = lshCandidates(sigs, perms, bands, maxBucket)
+      cand
+        .join(sigs.select(col("id").as("id_a"), col("sig").as("sig_a")), Seq("id_a"))
+        .join(sigs.select(col("id").as("id_b"), col("sig").as("sig_b")), Seq("id_b"))
+        .withColumn("est_jaccard",
+          round(sigMatches(col("sig_a"), col("sig_b")).cast("double") / lit(perms.toDouble), 4))
+        .where(col("est_jaccard") >= threshold)
+        .select("id_a", "id_b", "est_jaccard")
+    }
   }
 
   /** Incremental near-dedup: candidate pairs between a NEW batch and an
@@ -322,30 +315,22 @@ object Dedup {
       maxBucket: Int = 64,
       verifyExact: Boolean = false,
       ownsBase: Boolean = false,
-      maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame = {
-    val persisted = scala.collection.mutable.Buffer.empty[DataFrame]
-    val out = incrementalPairs(newSigs, baseSigs, perms, bands, threshold, maxBucket,
-      verifyExact, persisted, maxBroadcastKeys).localCheckpoint(true)
-    persisted.foreach(_.unpersist(blocking = false))
-    if (ownsBase) baseSigs.unpersist(blocking = false)
-    out
-  }
+      maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame =
+    Stage.checkpointed { persisted =>
+      if (ownsBase) persisted += baseSigs
+      incrementalPairs(newSigs, baseSigs, perms, bands, threshold, maxBucket,
+        verifyExact, persisted, maxBroadcastKeys)
+    }
 
   /** The incremental stage: ONE pass over the stored table per batch,
     * and each batch-side frame read from the caller's cache.
     *
-    *  1. The batch's band keys aggregate to `(bandkey, ids_a)`, hot keys
-    *     (more than `maxBucket` batch ids) dropped. The frame is
-    *     persisted and counted: the count is the broadcast fence.
-    *  2. Under the fence the key table BROADCASTS, so the stored side is
-    *     one columnar scan with a map-side band explode and a
-    *     broadcast-hash probe that carries the matched rows' `sig_b`
-    *     (and, with `verifyExact`, `hs_b`). Only matched rows (∝ batch ×
-    *     bucket) enter an exchange. Past the fence the batch is
-    *     corpus-sized and the probe is a symmetric shuffle join.
-    *  3. The base-side hot-bucket cap counts the matched rows per key —
-    *     for every matched key exactly its full stored bucket, so the
-    *     drops equal a corpus-wide count without one.
+    *  1–3. [[BandJoin.candidates]] over the band keys: the batch's capped
+    *     key table broadcasts under the fence, and the stored side is one
+    *     columnar scan with a map-side band explode and a broadcast-hash
+    *     probe that carries the matched rows' `sig_b` (and, with
+    *     `verifyExact`, `hs_b`), capped per key. Only matched rows (∝
+    *     batch × bucket) enter an exchange.
     *  4. `sig_a`/`hs_a` attach from `newSigs` by id — the batch's own
     *     (cached) table; nothing counts or broadcasts batch ∪ stored. The
     *     signature prefilter and the size bound run before the exact
@@ -397,21 +382,10 @@ object Dedup {
       persisted: scala.collection.mutable.Buffer[DataFrame],
       maxBroadcastKeys: Long): DataFrame = {
     def bandKey = explode(graft.functions.BandKeys.band_keys(col("sig"), perms, bands)).as("bandkey")
-    val newKeys = newSigs.select(col("id"), bandKey)
-      .groupBy("bandkey").agg(collect_list(col("id")).as("ids_a"))
-      .where(size(col("ids_a")) <= maxBucket)
-      .persist()
-    persisted += newKeys
-    // fence: a batch so large its key set won't broadcast (~32 MB of
-    // 8-byte keys) is corpus-sized — fall back to the symmetric shuffle,
-    // where incremental dedup was the wrong tool to begin with
-    val broadcastKeys = newKeys.count() <= maxBroadcastKeys
-    val base = baseSigs.select(
-      (col("id").as("id_b") +: carry.map(c => col(c).as(s"${c}_b"))) :+ bandKey: _*)
-    base.join(if (broadcastKeys) broadcast(newKeys) else newKeys, Seq("bandkey"))
-      .withColumn("n_b", count(lit(1)).over(org.apache.spark.sql.expressions.Window.partitionBy("bandkey")))
-      .where(col("n_b") <= maxBucket)
-      .select((explode(col("ids_a")).as("id_a") +: col("id_b") +: carry.map(c => col(s"${c}_b"))): _*)
+    BandJoin.candidates(
+      newSigs.select(col("id").as("id_a"), bandKey),
+      baseSigs.select((col("id").as("id_b") +: carry.map(c => col(c).as(s"${c}_b"))) :+ bandKey: _*),
+      Seq("bandkey"), Nil, carry.map(c => s"${c}_b"), maxBucket, maxBroadcastKeys, persisted)
   }
 
   /** Dev/test access to the incremental stage before its checkpoint, so
@@ -704,52 +678,45 @@ object Dedup {
       maxDocFreq: Int = 100,
       exhaustive: Boolean = false,
       perms: Int = 64,
-      bands: Int = 32): DataFrame = {
+      bands: Int = 32): DataFrame = Stage.checkpointed { persisted =>
     // Posting keys are 8-byte shingle hashes, not the shingle strings —
     // all shuffles move longs, not text. Collisions only perturb counts
     // at ~2^-64, irrelevant for a 0-1 Jaccard.
     val sh = docs.select(col(idCol).as("id"), hashedShinglesCol(col(textCol), w).as("sh"))
       .where(size(col("sh")) > 0)
       .persist()
-    var sigsToRelease: Option[DataFrame] = None
+    persisted += sh
+    if (exhaustive) {
+      val counts = sh.select(col("id"), size(col("sh")).as("n"))
+      val inv = sh.select(col("id"), explode(col("sh")).as("shingle"))
+      // document-frequency filter as a count-over-partition window: ONE
+      // shuffle of the posting list (an aggregate + semi-join
+      // formulation shuffles it twice and measured ~30% slower)
+      val rare = inv.withColumn("df", count(lit(1)).over(
+          org.apache.spark.sql.expressions.Window.partitionBy("shingle")))
+        .where(col("df") <= maxDocFreq).drop("df")
 
-    val pairs =
-      if (exhaustive) {
-        val counts = sh.select(col("id"), size(col("sh")).as("n"))
-        val inv = sh.select(col("id"), explode(col("sh")).as("shingle"))
-        // document-frequency filter as a count-over-partition window: ONE
-        // shuffle of the posting list (an aggregate + semi-join
-        // formulation shuffles it twice and measured ~30% slower)
-        val rare = inv.withColumn("df", count(lit(1)).over(
-            org.apache.spark.sql.expressions.Window.partitionBy("shingle")))
-          .where(col("df") <= maxDocFreq).drop("df")
+      val shared = rare.select(col("shingle"), col("id").as("id_a"))
+        .join(rare.select(col("shingle"), col("id").as("id_b")), Seq("shingle"))
+        .where(col("id_a") < col("id_b"))
+        .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
 
-        val shared = rare.select(col("shingle"), col("id").as("id_a"))
-          .join(rare.select(col("shingle"), col("id").as("id_b")), Seq("shingle"))
-          .where(col("id_a") < col("id_b"))
-          .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-
-        shared
-          .join(counts.select(col("id").as("id_a"), col("n").as("n_a")), Seq("id_a"))
-          .join(counts.select(col("id").as("id_b"), col("n").as("n_b")), Seq("id_b"))
-          .select(col("id_a"), col("id_b"),
-            round(col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")), 4).as("jaccard"))
-          .where(col("jaccard") >= threshold)
-      } else {
-        // maxDocFreq plays the same role the bucket cap plays in
-        // minhashLsh: it bounds the quadratic inside any degenerate
-        // band bucket (boilerplate-heavy corpora). Verify staging shared
-        // with minhashLshFromShingles (verifyCandidatesExact).
-        val sigs = sh.select(col("id"), graft.functions.MinhashOph.minhash_oph(col("sh"), perms).as("sig")).persist()
-        val cand = lshCandidates(sigs, perms, bands, maxBucket = maxDocFreq, dedup = false)
-        sigsToRelease = Some(sigs)
-        verifyCandidatesExact(cand, sigs, sh, "sh", threshold, perms, "jaccard")
-      }
-    // eager pair table, then release the cached postings (see minhashLsh)
-    val out = pairs.localCheckpoint(true)
-    sigsToRelease.foreach(_.unpersist(blocking = false))
-    sh.unpersist(blocking = false)
-    out
+      shared
+        .join(counts.select(col("id").as("id_a"), col("n").as("n_a")), Seq("id_a"))
+        .join(counts.select(col("id").as("id_b"), col("n").as("n_b")), Seq("id_b"))
+        .select(col("id_a"), col("id_b"),
+          round(col("inter").cast("double") / (col("n_a") + col("n_b") - col("inter")), 4).as("jaccard"))
+        .where(col("jaccard") >= threshold)
+    } else {
+      // maxDocFreq plays the same role the bucket cap plays in
+      // minhashLsh: it bounds the quadratic inside any degenerate
+      // band bucket (boilerplate-heavy corpora). Verify staging shared
+      // with minhashLshFromShingles (verifyCandidatesExact).
+      val sigs = sh.select(col("id"), graft.functions.MinhashOph.minhash_oph(col("sh"), perms).as("sig")).persist()
+      persisted += sigs
+      val cand = lshCandidates(sigs, perms, bands, maxBucket = maxDocFreq, dedup = false)
+      verifyCandidatesExact(cand, sigs, sh, "sh", threshold, perms, "jaccard")
+    }
   }
 
   /** Asymmetric containment near-dup pairs: C = |A∩B| / min(|A|,|B|) on
@@ -785,10 +752,11 @@ object Dedup {
       shingled: DataFrame,
       threshold: Double = 0.8,
       maxDocFreq: Int = 100,
-      maxDocFreqPercentile: Option[Double] = None): DataFrame = {
+      maxDocFreqPercentile: Option[Double] = None): DataFrame = Stage.checkpointed { persisted =>
     val sh = shingled.select(col("id"), col("sh"))
       .where(size(col("sh")) > 0)
       .persist()
+    persisted += sh
     val counts = sh.select(col("id"), size(col("sh")).as("n"))
     val inv = sh.select(col("id"), explode(col("sh")).as("shingle"))
     // Two cap forms. The ABSOLUTE `maxDocFreq` is right when the
@@ -802,12 +770,11 @@ object Dedup {
     // over the distinct-shingle df table — far smaller than the
     // corpus; one scalar to the driver), so the oracle replays it with
     // `quantile_cont`.
-    val release = scala.collection.mutable.Buffer.empty[DataFrame]
     val rare = maxDocFreqPercentile match {
       case Some(p) =>
         require(p > 0 && p <= 1, s"maxDocFreqPercentile in (0,1], got $p")
         val dfTable = inv.groupBy("shingle").agg(count(lit(1)).as("df")).persist()
-        release += dfTable
+        persisted += dfTable
         // percentile over an EMPTY df table is null (every doc was
         // empty/whitespace after shingling) — degrade to the empty
         // postings frame like the absolute-cap arm does, instead of NPE.
@@ -832,16 +799,13 @@ object Dedup {
       .join(rare.select(col("shingle"), col("id").as("id_b")), Seq("shingle"))
       .where(col("id_a") < col("id_b"))
       .groupBy("id_a", "id_b").agg(count(lit(1)).as("inter"))
-    val out = shared
+    shared
       .join(counts.select(col("id").as("id_a"), col("n").as("n_a")), Seq("id_a"))
       .join(counts.select(col("id").as("id_b"), col("n").as("n_b")), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         round(col("inter").cast("double") / least(col("n_a"), col("n_b")).cast("double"), 4)
           .as("containment"))
       .where(col("containment") >= threshold)
-      .localCheckpoint(true)
-    (release :+ sh).foreach(_.unpersist(blocking = false))
-    out
   }
 
   /** Containment verdicts for a NEW batch against a STORED corpus —
@@ -866,18 +830,18 @@ object Dedup {
       w: Int = 3,
       threshold: Double = 0.8,
       maxDocFreq: Int = 100,
-      maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame = {
+      maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame = Stage.checkpointed { persisted =>
     val hn = newDocs
       .select(col(idCol).as("id_a"), hashedShinglesCol(col(textCol), w).as("sh"))
       .where(size(col("sh")) > 0).persist()
     val na = hn.select(col("id_a"), size(col("sh")).as("n_a"))
     val invA = hn.select(col("id_a"), explode(col("sh")).as("shingle"))
     val keys = invA.select("shingle").distinct().persist()
-    val bcast = keys.count() <= maxBroadcastKeys
+    persisted ++= Seq(hn, keys)
     val storedInv = baseSigs.select(col("id").as("id_b"), explode(col("hs")).as("shingle"))
-    val matched =
-      (if (bcast) storedInv.join(broadcast(keys), Seq("shingle"))
-       else storedInv.join(keys, Seq("shingle"))).persist()
+    val matched = storedInv.join(
+      if (Fence.broadcastable(keys, maxBroadcastKeys)) broadcast(keys) else keys, Seq("shingle")).persist()
+    persisted += matched
     val hot = matched.groupBy("shingle").count()
       .where(col("count") > maxDocFreq).select("shingle")
     val cold = matched.join(hot, Seq("shingle"), "left_anti")
@@ -886,14 +850,11 @@ object Dedup {
     val nb = baseSigs.select(col("id").as("id_b"), size(col("hs")).as("n_b"))
     // the pair table is batch-scoped — broadcast it into the corpus-side
     // size lookup rather than shuffling the (id, n) table
-    val out = nb.join(broadcast(shared.join(broadcast(na), Seq("id_a"))), Seq("id_b"))
+    nb.join(broadcast(shared.join(broadcast(na), Seq("id_a"))), Seq("id_b"))
       .select(col("id_a"), col("id_b"),
         round(col("inter").cast("double") / least(col("n_a"), col("n_b")).cast("double"), 4)
           .as("containment"))
       .where(col("containment") >= threshold)
-      .localCheckpoint(true)
-    Seq(hn, keys, matched).foreach(_.unpersist(blocking = false))
-    out
   }
 
   /** EXACT all-pairs Jaccard similarity join by prefix filtering — the
@@ -925,7 +886,7 @@ object Dedup {
       idCol: String = "doc_id",
       textCol: String = "text",
       w: Int = 3,
-      threshold: Double = 0.8): DataFrame = {
+      threshold: Double = 0.8): DataFrame = Stage.checkpointed { persisted =>
     require(threshold > 0 && threshold <= 1, s"threshold in (0,1], got $threshold")
     // The final accept is on ROUNDED jaccard (round(J,4) >= t — the
     // oracle's and ngramJaccard's contract), so a pair with true
@@ -937,6 +898,7 @@ object Dedup {
     val sh = docs.select(col(idCol).as("id"), hashedShinglesCol(col(textCol), w).as("sh"))
       .where(size(col("sh")) > 0)
       .persist()
+    persisted += sh
     val inv = sh.select(col("id"), size(col("sh")).as("n"), explode(col("sh")).as("g"))
     // global rarity order: df as a map-side-combined AGGREGATE (vocab-
     // sized result) joined back — AQE turns the join broadcast when the
@@ -967,15 +929,12 @@ object Dedup {
           lit(tEff / (1 + tEff)) * (col("n_a") + col("n_b")).cast("double") - lit(1e-9))
       .select("id_a", "id_b")
       .distinct()
-    val out = cand
+    cand
       .join(sh.select(col("id").as("id_a"), col("sh").as("hs_a")), Seq("id_a"))
       .join(sh.select(col("id").as("id_b"), col("sh").as("hs_b")), Seq("id_b"))
       .withColumn("jaccard", round(jaccardSorted(col("hs_a"), col("hs_b")), 4))
       .where(col("jaccard") >= threshold)
       .select("id_a", "id_b", "jaccard")
-      .localCheckpoint(true)
-    sh.unpersist(blocking = false)
-    out
   }
 
   /** Similar-document retrieval: for each document, its `k` nearest
@@ -1073,8 +1032,7 @@ object Dedup {
       k: Int = 15,
       minDocs: Int = 2,
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+      textCol: String = "text"): DataFrame = Stage.checkpointed { persisted =>
     // Both derivations (doc-frequency and position hits) consume the
     // positional gram table; persist it so the corpus text is tokenized
     // and gram-hashed ONCE (the minhashLsh persist-and-release pattern —
@@ -1084,6 +1042,7 @@ object Dedup {
         explode(graft.functions.PositionalGrams.positional_grams(col(textCol), k)).as("pg"))
       .select(col("doc_id"), col("pg._1").as("pos"), col("pg._2").as("g"))
       .persist()
+    persisted += grams
     // fingerprints recurring across ≥ minDocs docs. For the default
     // minDocs = 2, "appears in ≥2 distinct docs" is exactly
     // min(doc) != max(doc): ONE map-side-combined aggregate instead of
@@ -1097,11 +1056,7 @@ object Dedup {
         grams.select("g", "doc_id").distinct()
           .groupBy("g").agg(count(lit(1)).as("nd"))
           .where(col("nd") >= minDocs).select("g")
-    val hits = grams.join(dupGrams, "g").select("doc_id", "pos")
-    // eager span table, then release the cached gram postings
-    val out = spansFromHits(hits, k).localCheckpoint(true)
-    grams.unpersist(blocking = false)
-    out
+    spansFromHits(grams.join(dupGrams, "g").select("doc_id", "pos"), k)
   }
 
   /** Gaps-and-islands over matched gram positions: positions p, p'
@@ -1168,13 +1123,9 @@ object Dedup {
       k: Int = 15,
       maxBroadcastKeys: Long = 4L * 1000 * 1000,
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val persisted = scala.collection.mutable.Buffer.empty[DataFrame]
-    val out = substringSpansIncrementalStage(newDocs, storedGrams, k,
-      maxBroadcastKeys, idCol, textCol, persisted).localCheckpoint(true)
-    persisted.foreach(_.unpersist(blocking = false))
-    out
-  }
+      textCol: String = "text"): DataFrame =
+    Stage.checkpointed(substringSpansIncrementalStage(newDocs, storedGrams, k,
+      maxBroadcastKeys, idCol, textCol, _))
 
   /** The pre-checkpoint span stage — split out so PlanSpec can assert
     * the broadcast shape (`localCheckpoint` truncates the plan). */
@@ -1194,7 +1145,7 @@ object Dedup {
     persisted += grams
     val batchKeys = grams.select("g").distinct().persist()
     persisted += batchKeys
-    val bcast = batchKeys.count() <= maxBroadcastKeys
+    val bcast = Fence.broadcastable(batchKeys, maxBroadcastKeys)
     val stored = storedGrams.select("g")
     // distinct AFTER the semi-join: matched is batch-sized, so the
     // dedup is cheap here — and it makes the operator duplicate-safe
@@ -1323,14 +1274,9 @@ object Dedup {
       bitsPerBand: Int = 8,
       threshold: Double = 0.95,
       maxBucket: Int = 1024,
-      maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame = {
-    val persisted = scala.collection.mutable.Buffer.empty[DataFrame]
-    val out = embeddingNearDupIncrementalStage(newEmbeddings, storedSigs, storedVectors,
-      idCol, vecCol, bands, bitsPerBand, threshold, maxBucket, maxBroadcastKeys, persisted)
-    val ck = out.localCheckpoint(true)
-    persisted.foreach(_.unpersist(blocking = false))
-    ck
-  }
+      maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame =
+    Stage.checkpointed(embeddingNearDupIncrementalStage(newEmbeddings, storedSigs, storedVectors,
+      idCol, vecCol, bands, bitsPerBand, threshold, maxBucket, maxBroadcastKeys, _))
 
   /** The pre-checkpoint pair stage — split out so PlanSpec can assert
     * the broadcast shape (`localCheckpoint` truncates the visible
@@ -1355,11 +1301,11 @@ object Dedup {
 
   /** Candidate stage of the incremental embedding dedup: `(id_a, id_b)`
     * band collisions between the batch and the stored signature table —
-    * the batch's capped band keys broadcast (count-fenced), hot caps on
-    * both sides, no vectors touched. When `storedSigs` carries a `seq`
-    * column (the [[graft.views.EmbeddingSigTableView]] curated-log
-    * layout) it rides through as the stored row's log seq, so the caller
-    * can prune the verify-side vector scan to candidate seq buckets. */
+    * [[BandJoin.candidates]] over the hyperplane band keys, no vectors
+    * touched. When `storedSigs` carries a `seq` column (the
+    * [[graft.views.EmbeddingSigTableView]] curated-log layout) it rides
+    * through as the stored row's log seq, so the caller can prune the
+    * verify-side vector scan to candidate seq buckets. */
   private[graft] def embeddingIncrementalCandidates(
       newEmbeddings: DataFrame,
       storedSigs: DataFrame,
@@ -1372,39 +1318,15 @@ object Dedup {
       persisted: scala.collection.mutable.Buffer[DataFrame]): DataFrame = {
     require(bands >= 1 && bitsPerBand >= 1 && bands * bitsPerBand <= 64,
       s"bands*bitsPerBand must fit one 64-bit signature, got $bands*$bitsPerBand")
-    val keys = hyperplaneBandKeys(bands, bitsPerBand)
+    val bandKey = explode(array(hyperplaneBandKeys(bands, bitsPerBand): _*)).as("bandkey")
     val sig = Similarity.hyperplaneSignature(col(vecCol), bands * bitsPerBand)
-    val hasSeq = storedSigs.columns.contains("seq")
-    val bn0 = newEmbeddings.select(col(idCol).as("id_a"), sig.as("sig"))
-      .select(col("id_a"), explode(array(keys: _*)).as("bandkey"))
-      .persist()
-    persisted += bn0
-    val hotNew = bn0.groupBy("bandkey").count()
-      .where(col("count") > maxBucket).select("bandkey")
-    val bn = bn0.join(hotNew, Seq("bandkey"), "left_anti")
-    val newKeys = bn.select("bandkey").distinct().persist()
-    persisted += newKeys
-    // fence: a batch whose key set won't broadcast is corpus-sized —
-    // fall back to the symmetric shuffle (the one-shot's shape)
-    val bcast = newKeys.count() <= maxBroadcastKeys
-    val storedCols =
-      if (hasSeq) Seq(col(idCol).as("id_b"), col("sig"), col("seq"))
-      else Seq(col(idCol).as("id_b"), col("sig"))
-    val bandedCols =
-      if (hasSeq) Seq(col("id_b"), explode(array(keys: _*)).as("bandkey"), col("seq"))
-      else Seq(col("id_b"), explode(array(keys: _*)).as("bandkey"))
-    val stored = storedSigs.select(storedCols: _*).select(bandedCols: _*)
-    val matched =
-      (if (bcast) stored.join(broadcast(newKeys), Seq("bandkey"))
-       else stored.join(newKeys, Seq("bandkey"))).persist()
-    persisted += matched
-    val hotStored = matched.groupBy("bandkey").count()
-      .where(col("count") > maxBucket).select("bandkey")
-    val joined = bn.join(matched.join(hotStored, Seq("bandkey"), "left_anti"), Seq("bandkey"))
-    // seq is functional on id_b, so the 3-column distinct yields the
-    // same pair set as the 2-column one
-    if (hasSeq) joined.select("id_a", "id_b", "seq").distinct()
-    else joined.select("id_a", "id_b").distinct()
+    val seq = storedSigs.columns.filter(_ == "seq").toSeq
+    // seq is functional on id_b, so the distinct with it yields the same
+    // pair set as the one without
+    BandJoin.candidates(
+      newEmbeddings.select(col(idCol).as("id_a"), sig.as("sig")).select(col("id_a"), bandKey),
+      storedSigs.select(col(idCol).as("id_b") +: bandKey +: seq.map(col): _*),
+      Seq("bandkey"), Nil, seq, maxBucket, maxBroadcastKeys, persisted).distinct()
   }
 
   /** Exact-cosine verify of an `(id_a, id_b)` candidate frame: vectors
@@ -1455,12 +1377,10 @@ object Dedup {
     require(bucketSize > 0, s"bucketSize must be positive, got $bucketSize")
     require(storedSigs.columns.contains("seq"),
       "pruned incremental dedup needs a stored (id, sig, seq) table")
-    val persisted = scala.collection.mutable.Buffer.empty[DataFrame]
     // eager candidate table: reused by the bucket collect AND the verify
     // join without re-running the band stage
-    val cand = embeddingIncrementalCandidates(newEmbeddings, storedSigs, idCol, vecCol,
-      bands, bitsPerBand, maxBucket, maxBroadcastKeys, persisted).localCheckpoint(true)
-    persisted.foreach(_.unpersist(blocking = false))
+    val cand = Stage.checkpointed(embeddingIncrementalCandidates(newEmbeddings, storedSigs,
+      idCol, vecCol, bands, bitsPerBand, maxBucket, maxBroadcastKeys, _))
     // `div` truncates toward zero, so an unknown seq (-1) would land in
     // bucket 0 and silently prune AWAY its vector — map unknowns to -1
     // explicitly so the >= 0 fence actually fires and falls back
@@ -1487,10 +1407,8 @@ object Dedup {
       bitsPerBand: Int = 8,
       threshold: Double = 0.95,
       maxBucket: Int = 1024): (Seq[Long], DataFrame) = {
-    val persisted = scala.collection.mutable.Buffer.empty[DataFrame]
-    val cand = embeddingIncrementalCandidates(newEmbeddings, storedSigs, idCol, vecCol,
-      bands, bitsPerBand, maxBucket, 4L * 1000 * 1000, persisted).localCheckpoint(true)
-    persisted.foreach(_.unpersist(blocking = false))
+    val cand = Stage.checkpointed(embeddingIncrementalCandidates(newEmbeddings, storedSigs,
+      idCol, vecCol, bands, bitsPerBand, maxBucket, 4L * 1000 * 1000, _))
     val buckets = cand.select(
         expr(s"CASE WHEN `seq` < 0 THEN -1 ELSE `seq` div $bucketSize END").as("b")).distinct()
       .collect().map(_.getLong(0)).toSeq
@@ -1523,12 +1441,13 @@ object Dedup {
       tau: Double = 0.95,
       maxCell: Int = 4096,
       idCol: String = "vec_id",
-      vecCol: String = "embedding"): DataFrame = {
+      vecCol: String = "embedding"): DataFrame = Stage.checkpointed { persisted =>
     val cents = Similarity.seedCentroids(embeddings, nCells, idCol, vecCol)
     val assigned = Similarity.assignCells(
         embeddings.select(col(idCol).as("id"), col(vecCol).as("v")),
         cents, "id", "v", "cell")
       .persist()
+    persisted += assigned
     val hot = assigned.groupBy("cell").count()
       .where(col("count") > maxCell).select("cell")
     val small = assigned.join(hot, Seq("cell"), "left_anti")
@@ -1537,11 +1456,8 @@ object Dedup {
       .where(col("id_a") < col("id_b") &&
         Similarity.cosine(col("v_a"), col("v_b")) >= tau)
       .select(col("id_b").as("id")).distinct()
-    val kept = assigned
+    assigned
       .join(dropped.withColumn("__drop", lit(true)), Seq("id"), "left")
       .select(col("id").as(idCol), col("cell"), col("__drop").isNull.as("kept"))
-    val ck = kept.localCheckpoint(true)
-    assigned.unpersist(blocking = false)
-    ck
   }
 }

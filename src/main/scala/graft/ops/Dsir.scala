@@ -52,31 +52,29 @@ object Dsir {
       target: DataFrame,
       nBuckets: Int = 4096,
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = Stage.checkpointed { persisted =>
     val feats = corpus
       .select(col(idCol).as("id"),
         explode(hashedBigramBuckets(col(textCol), nBuckets)).as("b"))
       .persist()
+    persisted += feats
     val tfeats = target
       .select(explode(hashedBigramBuckets(col(textCol), nBuckets)).as("b"))
     val srcTot = feats.count().toDouble
     val tgt = tfeats.groupBy("b").agg(count(lit(1)).as("ct")).persist()
+    persisted += tgt
     val tgtTot = tgt.agg(sum("ct")).head().getLong(0).toDouble
     val ratio = feats.groupBy("b").agg(count(lit(1)).as("cs"))
       .join(tgt, Seq("b"), "left")
       .select(col("b"),
         (log((coalesce(col("ct"), lit(0L)) + 1.0) / (tgtTot + nBuckets)) -
           log((col("cs") + 1.0) / (srcTot + nBuckets))).as("r"))
-    val w = feats.groupBy("id", "b").agg(count(lit(1)).as("n"))
+    feats.groupBy("id", "b").agg(count(lit(1)).as("n"))
       .join(broadcast(ratio), Seq("b"))
       .groupBy("id")
       .agg(round(sum(col("n") * col("r")), 4).as("weight"),
         sum("n").as("n_feats"))
       .select(col("id").as(idCol), col("weight"), col("n_feats"))
-    val ck = w.localCheckpoint(true)
-    feats.unpersist(blocking = false)
-    tgt.unpersist(blocking = false)
-    ck
   }
 
   /** [[importanceWeights]] when the target IS a slice of the corpus
@@ -89,32 +87,30 @@ object Dsir {
       targetFilter: Column,
       nBuckets: Int = 4096,
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = Stage.checkpointed { persisted =>
     val feats = corpus
       .select(col(idCol).as("id"), targetFilter.as("t"),
         explode(hashedBigramBuckets(col(textCol), nBuckets)).as("b"))
       .persist()
+    persisted += feats
     // one grouped pass yields BOTH models: source = all rows, target =
     // the flagged subset (conditional count), totals fold driver-side
     // from the <= nBuckets stat rows
     val stats = feats.groupBy("b")
       .agg(count(lit(1)).as("cs"), count(when(col("t"), 1)).as("ct"))
       .persist()
+    persisted += stats
     val tot = stats.agg(sum("cs"), sum("ct")).head()
     val (srcTot, tgtTot) = (tot.getLong(0).toDouble, tot.getLong(1).toDouble)
     val ratio = stats.select(col("b"),
       (log((col("ct") + 1.0) / (tgtTot + nBuckets)) -
         log((col("cs") + 1.0) / (srcTot + nBuckets))).as("r"))
-    val w = feats.groupBy("id", "b").agg(count(lit(1)).as("n"))
+    feats.groupBy("id", "b").agg(count(lit(1)).as("n"))
       .join(broadcast(ratio), Seq("b"))
       .groupBy("id")
       .agg(round(sum(col("n") * col("r")), 4).as("weight"),
         sum("n").as("n_feats"))
       .select(col("id").as(idCol), col("weight"), col("n_feats"))
-    val ck = w.localCheckpoint(true)
-    feats.unpersist(blocking = false)
-    stats.unpersist(blocking = false)
-    ck
   }
 
   /** The selection step: top `k` documents by (weight DESC, id) — the

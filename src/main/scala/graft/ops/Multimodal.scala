@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Fence
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -848,30 +849,11 @@ object Multimodal {
     * segment, value) buckets above `maxBucket` drop whole — the
     * standard degenerate-content trade. Emits `(id_a, id_b, n_frames,
     * max_frame_hamming)`; only frame HASHES shuffle, never frames. */
-  /** Persist-fence shared by the ONE-SHOT near-dup/containment
-    * operators: their plans reference the decode input from several
-    * subtrees (per-media totals, hot-bucket counts, BOTH self-join
-    * branches), and Spark rebuilds each subtree — so the
-    * partition-batched media DECODE re-executed once per reference (up
-    * to 8 `Scan ExistingRDD` nodes in the sweep plan; at 100 TB that
-    * is decoding the corpus eight times). Persisting the shared frames
-    * runs the decode ONCE; the eager `localCheckpoint` materializes
-    * the (pair-sized) result so every cache drops immediately — the
-    * same discipline the incremental stages already use. */
-  private def withPersistFence(
-      stage: scala.collection.mutable.Buffer[DataFrame] => DataFrame): DataFrame = {
-    val persisted = scala.collection.mutable.Buffer.empty[DataFrame]
-    val out = stage(persisted)
-    val ck = out.localCheckpoint(true)
-    persisted.foreach(_.unpersist(blocking = false))
-    ck
-  }
-
   def videoNearDup(
       frameHashes: DataFrame,
       maxHamming: Int = 7,
       maxBucket: Int = 256): DataFrame =
-    withPersistFence(videoNearDupStage(frameHashes, maxHamming, maxBucket, _))
+    Stage.checkpointed(videoNearDupStage(frameHashes, maxHamming, maxBucket, _))
 
   private[graft] def videoNearDupStage(
       frameHashes0: DataFrame,
@@ -975,7 +957,7 @@ object Multimodal {
       corpusHashes: DataFrame,
       maxHamming: Int = 7,
       maxBucket: Int = 256): DataFrame =
-    withPersistFence(videoClipContainmentStage(clipHashes, corpusHashes,
+    Stage.checkpointed(videoClipContainmentStage(clipHashes, corpusHashes,
       maxHamming, maxBucket, _))
 
   private[graft] def videoClipContainmentStage(
@@ -1035,7 +1017,7 @@ object Multimodal {
       frameHashes: DataFrame,
       maxHamming: Int = 7,
       maxBucket: Int = 256): DataFrame =
-    withPersistFence(videoContainmentSweepStage(frameHashes, maxHamming, maxBucket, _))
+    Stage.checkpointed(videoContainmentSweepStage(frameHashes, maxHamming, maxBucket, _))
 
   private[graft] def videoContainmentSweepStage(
       frameHashes0: DataFrame,
@@ -1093,14 +1075,9 @@ object Multimodal {
       storedHashes: DataFrame,
       maxHamming: Int = 7,
       maxBucket: Int = 256,
-      maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame = {
-    val persisted = scala.collection.mutable.Buffer.empty[DataFrame]
-    val out = videoNearDupIncrementalStage(newHashes, storedHashes,
-      maxHamming, maxBucket, maxBroadcastKeys, persisted)
-    val ck = out.localCheckpoint(true)
-    persisted.foreach(_.unpersist(blocking = false))
-    ck
-  }
+      maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame =
+    Stage.checkpointed(videoNearDupIncrementalStage(newHashes, storedHashes,
+      maxHamming, maxBucket, maxBroadcastKeys, _))
 
   private[graft] def videoNearDupIncrementalStage(
       newHashes: DataFrame,
@@ -1260,14 +1237,9 @@ object Multimodal {
       clipGrams: DataFrame,
       corpusGrams: DataFrame,
       maxBucket: Int = 256,
-      maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame = {
-    val persisted = scala.collection.mutable.Buffer.empty[DataFrame]
-    val out = audioClipContainmentStage(clipGrams, corpusGrams,
-      maxBucket, maxBroadcastKeys, persisted)
-    val ck = out.localCheckpoint(true)
-    persisted.foreach(_.unpersist(blocking = false))
-    ck
-  }
+      maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame =
+    Stage.checkpointed(audioClipContainmentStage(clipGrams, corpusGrams,
+      maxBucket, maxBroadcastKeys, _))
 
   /** The pre-checkpoint containment stage — split out so PlanSpec can
     * assert the broadcast shape (`localCheckpoint` truncates the
@@ -1288,11 +1260,7 @@ object Multimodal {
     val totals = clipGrams.groupBy("clip_id").agg(count(lit(1)).as("__total"))
     val cg = clipGrams.persist()
     persisted += cg
-    val bcast = cg.limit((maxBroadcastKeys + 1).toInt).count() <= maxBroadcastKeys
-    val joined =
-      if (bcast) kept.join(broadcast(cg), Seq("gram"))
-      else kept.join(cg, Seq("gram"))
-    joined
+    kept.join(if (Fence.broadcastable(cg, maxBroadcastKeys)) broadcast(cg) else cg, Seq("gram"))
       .groupBy(col("clip_id"), col("corpus_id"), (col("cpos") - col("kpos")).as("offset_windows"))
       .agg(count(lit(1)).as("n_grams"))
       .join(broadcast(totals), Seq("clip_id"))
@@ -1333,7 +1301,7 @@ object Multimodal {
   def audioContainmentSweepFromGrams(
       grams: DataFrame,
       maxBucket: Int = 256): DataFrame =
-    withPersistFence(audioContainmentSweepStage(grams, maxBucket, _))
+    Stage.checkpointed(audioContainmentSweepStage(grams, maxBucket, _))
 
   private[graft] def audioContainmentSweepStage(
       grams0: DataFrame,
@@ -1423,7 +1391,7 @@ object Multimodal {
       fingerprints: DataFrame,
       maxHamming: Int = 7,
       maxBucket: Int = 256): DataFrame =
-    withPersistFence(audioNearDupStage(fingerprints, maxHamming, maxBucket, _))
+    Stage.checkpointed(audioNearDupStage(fingerprints, maxHamming, maxBucket, _))
 
   private[graft] def audioNearDupStage(
       fingerprints0: DataFrame,
@@ -1467,14 +1435,9 @@ object Multimodal {
       storedFingerprints: DataFrame,
       maxHamming: Int = 7,
       maxBucket: Int = 256,
-      maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame = {
-    val persisted = scala.collection.mutable.Buffer.empty[DataFrame]
-    val out = audioNearDupIncrementalStage(newFingerprints, storedFingerprints,
-      maxHamming, maxBucket, maxBroadcastKeys, persisted)
-    val ck = out.localCheckpoint(true)
-    persisted.foreach(_.unpersist(blocking = false))
-    ck
-  }
+      maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame =
+    Stage.checkpointed(audioNearDupIncrementalStage(newFingerprints, storedFingerprints,
+      maxHamming, maxBucket, maxBroadcastKeys, _))
 
   /** The pre-checkpoint pair stage — [[hammingNearDupIncrementalStage]]
     * with the window-count gate column riding the bucket key; split out
@@ -1493,13 +1456,12 @@ object Multimodal {
   /** The shared incremental hamming-near-dup pair stage: a NEW batch's
     * 64-bit hashes against a STORED corpus, pigeonhole segments tiling
     * the hash, with optional GATE columns riding the bucket key (the
-    * audio window count; image has none) so candidates only pair rows
-    * agreeing on every gate. 100 TB shape, identical for every caller:
-    * the batch's count-fenced `(gates…, segment, value)` key set
-    * broadcasts (falling back to a symmetric shuffle past
-    * `maxBroadcastKeys` — a corpus-sized "batch" IS the one-shot), the
-    * stored corpus semi-joins against it and never shuffles, hot caps
-    * apply per side. Emits `(id_a, id_b, gates…, hamming)`. */
+    * audio window count, the video frame index; image has none) so
+    * candidates only pair rows agreeing on every gate. The candidates
+    * are [[BandJoin.candidates]] over the `(gates…, segment, value)`
+    * keys, the batch's hash riding in its key list (a video id has one
+    * row per frame); the verify is `bit_count(xor) ≤ maxHamming`.
+    * Emits `(id_a, id_b, gates…, hamming)`. */
   private[graft] def hammingNearDupIncrementalStage(
       newHashes: DataFrame,
       storedHashes: DataFrame,
@@ -1512,30 +1474,15 @@ object Multimodal {
     val nSeg = maxHamming + 1
     require(64 % nSeg == 0, s"maxHamming + 1 = $nSeg must divide 64 to tile the hash")
     val segBits = 64 / nSeg
-    val keyCols = gateCols ++ Seq("seg", "segval")
     def segmented(df: DataFrame, idAs: String, hAs: String) = df.select(
       col("media_id").as(idAs) +: gateCols.map(col) ++: Seq(
         col(hashCol).as(hAs),
         posexplode(array((0 until nSeg).map(s =>
           shiftright(col(hashCol), s * segBits).bitwiseAND(lit((1L << segBits) - 1))): _*))): _*)
       .withColumnRenamed("pos", "seg").withColumnRenamed("col", "segval")
-    val bn0 = segmented(newHashes, "id_a", "h_a")
-    val hotNew = bn0.groupBy(keyCols.map(col): _*).count()
-      .where(col("count") > maxBucket).select(keyCols.map(col): _*)
-    val bn = bn0.join(hotNew, keyCols, "left_anti")
-    val newKeys = bn.select(keyCols.map(col): _*).distinct().persist()
-    persisted += newKeys
-    // fence: a batch whose key set won't broadcast is corpus-sized —
-    // fall back to the symmetric shuffle (the one-shot's shape)
-    val bcast = newKeys.count() <= maxBroadcastKeys
-    val stored = segmented(storedHashes, "id_b", "h_b")
-    val matched =
-      (if (bcast) stored.join(broadcast(newKeys), keyCols)
-       else stored.join(newKeys, keyCols)).persist()
-    persisted += matched
-    val hotBase = matched.groupBy(keyCols.map(col): _*).count()
-      .where(col("count") > maxBucket).select(keyCols.map(col): _*)
-    bn.join(matched.join(hotBase, keyCols, "left_anti"), keyCols)
+    BandJoin.candidates(segmented(newHashes, "id_a", "h_a"), segmented(storedHashes, "id_b", "h_b"),
+        gateCols ++ Seq("seg", "segval"), Seq("h_a"), "h_b" +: gateCols,
+        maxBucket, maxBroadcastKeys, persisted)
       .select(Seq(col("id_a"), col("id_b")) ++ gateCols.map(col) :+
         bit_count(col("h_a").bitwiseXOR(col("h_b"))).as("hamming"): _*)
       .where(col("hamming") <= maxHamming)
@@ -1769,7 +1716,7 @@ object Multimodal {
       hashes: DataFrame,
       maxHamming: Int = 7,
       maxBucket: Int = 256): DataFrame =
-    withPersistFence(perceptualNearDupStage(hashes, maxHamming, maxBucket, _))
+    Stage.checkpointed(perceptualNearDupStage(hashes, maxHamming, maxBucket, _))
 
   private[graft] def perceptualNearDupStage(
       hashes0: DataFrame,
@@ -1820,14 +1767,9 @@ object Multimodal {
       storedHashes: DataFrame,
       maxHamming: Int = 7,
       maxBucket: Int = 256,
-      maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame = {
-    val persisted = scala.collection.mutable.Buffer.empty[DataFrame]
-    val out = perceptualNearDupIncrementalStage(newHashes, storedHashes,
-      maxHamming, maxBucket, maxBroadcastKeys, persisted)
-    val ck = out.localCheckpoint(true)
-    persisted.foreach(_.unpersist(blocking = false))
-    ck
-  }
+      maxBroadcastKeys: Long = 4L * 1000 * 1000): DataFrame =
+    Stage.checkpointed(perceptualNearDupIncrementalStage(newHashes, storedHashes,
+      maxHamming, maxBucket, maxBroadcastKeys, _))
 
   /** The pre-checkpoint pair stage — [[hammingNearDupIncrementalStage]]
     * with no gate columns; split out so PlanSpec can assert the

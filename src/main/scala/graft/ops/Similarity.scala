@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Fence
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -268,10 +269,7 @@ object Similarity {
     // nProbe rows WITH the query vector per query — a corpus-sized
     // query frame must fall back to the cell equi-join shuffle, not
     // force-broadcast gigabytes of vectors
-    val fenced =
-      if (queries.limit((maxBroadcastQueries + 1).toInt).count() <= maxBroadcastQueries)
-        broadcast(probe)
-      else probe
+    val fenced = if (Fence.broadcastable(queries, maxBroadcastQueries)) broadcast(probe) else probe
     val w = Window.partitionBy("query_id").orderBy(col("cos").desc, col("nbr_id"))
     assigned.join(fenced, Seq("__cell"))
       .where(col("query_id") =!= col("nbr_id"))

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Fence
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -224,7 +225,7 @@ object TextAnalysis {
       k1: Double = 1.2,
       b: Double = 0.75,
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = Stage.checkpointed { persisted =>
     val terms = queryTerms.map(_.toLowerCase).distinct
     val base = docs.select(
       col(idCol).as("doc_id"),
@@ -239,11 +240,12 @@ object TextAnalysis {
       .groupBy("doc_id", "dl", "term")
       .agg(count(lit(1)).cast("double").as("tf"))
       .persist()
+    persisted += tfs
     val globals = base.agg(
       count(lit(1)).cast("double").as("n_docs"),
       avg("dl").as("avgdl"))
     val dfs = tfs.groupBy("term").agg(count(lit(1)).cast("double").as("df"))
-    val out = tfs.join(broadcast(dfs), "term")
+    tfs.join(broadcast(dfs), "term")
       .crossJoin(broadcast(globals))
       .withColumn("idf",
         log(lit(1.0) + (col("n_docs") - col("df") + lit(0.5)) / (col("df") + lit(0.5))))
@@ -253,9 +255,6 @@ object TextAnalysis {
       .agg(round(sum(col("s")), 4).as("score"))
       .orderBy(col("score").desc, col("doc_id"))
       .limit(k)
-      .localCheckpoint(true)
-    tfs.unpersist(blocking = false)
-    out
   }
 
   /** Vocabulary construction: corpus-wide term frequency (total
@@ -445,7 +444,7 @@ object TextAnalysis {
       minDocs: Int = 3,
       maxBroadcastKeys: Long = 4L * 1000 * 1000,
       idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
+      textCol: String = "text"): DataFrame = Stage.checkpointed { persisted =>
     val lines = newDocs
       .select(col(idCol).as("doc_id"),
         posexplode(split(col(textCol), "\n")).as(Seq("pos", "line")))
@@ -453,16 +452,13 @@ object TextAnalysis {
       .withColumn("lh", xxhash64(col("line")))
       .persist()
     val keys = lines.select("lh").distinct().persist()
-    val bcast = keys.count() <= maxBroadcastKeys
-    val storedDup = lineFreq.where(col("nd") >= minDocs).select("lh")
-    val dup =
-      (if (bcast) storedDup.join(broadcast(keys), Seq("lh"), "left_semi")
-       else storedDup.join(keys, Seq("lh"), "left_semi"))
-        .distinct().select(col("lh"), lit(true).as("__dup"))
-    val joined =
-      if (bcast) lines.join(broadcast(dup), Seq("lh"), "left")
-      else lines.join(dup, Seq("lh"), "left")
-    val out = joined
+    persisted ++= Seq(lines, keys)
+    val bcast = Fence.broadcastable(keys, maxBroadcastKeys)
+    def fenced(df: DataFrame) = if (bcast) broadcast(df) else df
+    val dup = lineFreq.where(col("nd") >= minDocs).select("lh")
+      .join(fenced(keys), Seq("lh"), "left_semi")
+      .distinct().select(col("lh"), lit(true).as("__dup"))
+    lines.join(fenced(dup), Seq("lh"), "left")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_lines"),
         count(when(col("__dup").isNull, 1)).as("n_kept"),
@@ -470,9 +466,6 @@ object TextAnalysis {
           array_sort(collect_list(when(col("__dup").isNull, struct(col("pos"), col("line")))))
             .getField("line")).as("clean_text"))
       .select("doc_id", "n_lines", "n_kept", "clean_text")
-      .localCheckpoint(true)
-    Seq(lines, keys).foreach(_.unpersist(blocking = false))
-    out
   }
 
   /** Deflate compression ratio per document — the Gopher-style

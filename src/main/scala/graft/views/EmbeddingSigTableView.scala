@@ -1,6 +1,6 @@
 package graft.views
 
-import graft.core.ViewDef
+import graft.core.{Fence, ViewDef}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{array, bit_count, broadcast, coalesce, col, lit, round, typedLit}
 
@@ -109,16 +109,8 @@ final class EmbeddingSigTableView(
     val cand = base
       .where(bit_count(col("sig").bitwiseXOR(lit(qSig))) <= maxHamming)
       .select(idCol)
-    // clamp: maxBroadcastKeys near Long range would overflow the Int
-    // limit() argument to a negative; the fence only needs "more than
-    // maxBroadcastKeys exist", so cap the pre-pass at Int.MaxValue.
-    val fenceLimit = math.min(maxBroadcastKeys + 1, Int.MaxValue.toLong).toInt
-    val bcast = cand.limit(fenceLimit).count() <= maxBroadcastKeys
-    val vecs = storedVectors.select(col(idCol), col(vecCol))
-    val joined =
-      if (bcast) vecs.join(broadcast(cand), Seq(idCol))
-      else vecs.join(cand, Seq(idCol))
-    joined
+    storedVectors.select(col(idCol), col(vecCol))
+      .join(if (Fence.broadcastable(cand, maxBroadcastKeys)) broadcast(cand) else cand, Seq(idCol))
       .select(col(idCol),
         round(graft.ops.Similarity.cosine(col(vecCol),
           array(queryVec.map(v => lit(v)): _*)), 4).as("cos"))

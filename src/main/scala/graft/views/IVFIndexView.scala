@@ -1,6 +1,6 @@
 package graft.views
 
-import graft.core.{FlumeView, ViewDef}
+import graft.core.{Fence, FlumeView, ViewDef}
 import graft.ops.Similarity
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -155,10 +155,7 @@ final class IVFIndexView(
       .select(col("cell"), col(idCol).as("nbr_id"), col(vecCol).as("nbr_vec"))
     // broadcast fence (the lookupJoin discipline): a corpus-sized query
     // frame falls back to the cell equi-join shuffle
-    val fenced =
-      if (queries.limit((maxBroadcastQueries + 1).toInt).count() <= maxBroadcastQueries)
-        broadcast(probe)
-      else probe
+    val fenced = if (Fence.broadcastable(queries, maxBroadcastQueries)) broadcast(probe) else probe
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("query_id").orderBy(col("cos").desc, col("nbr_id"))
     val out = pruned.join(fenced, Seq("cell"))

@@ -1,6 +1,6 @@
 package graft.views
 
-import graft.core.FlumeDb
+import graft.core.{Fence, FlumeDb}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.Cast
 import org.apache.spark.sql.functions._
@@ -202,16 +202,12 @@ object Query {
           case None => plain()
           case Some(posting) =>
             val keys = probe.select(col(onCol).cast("string").as("key")).distinct()
-            // broadcast fence (r7 ADVICE): the probe relation is
-            // caller-supplied and may be huge — force-broadcasting its
-            // distinct keys unconditionally could OOM executors. Count
-            // up to the cap only (a limit-bounded job, no collect);
-            // over it, the posting-vs-keys join shuffles string keys —
-            // still never the full log scan the plain join pays.
-            val fenced =
-              if (keys.limit((maxBroadcastKeys + 1).toInt).count() <= maxBroadcastKeys)
-                broadcast(keys)
-              else keys
+            // broadcast fence: the probe relation is caller-supplied and
+            // may be huge — force-broadcasting its distinct keys
+            // unconditionally could OOM executors. Over the fence the
+            // posting-vs-keys join shuffles string keys — still never
+            // the full log scan the plain join pays.
+            val fenced = if (Fence.broadcastable(keys, maxBroadcastKeys)) broadcast(keys) else keys
             val seqDf = posting.join(fenced, Seq("key")).select("seq")
             probe.join(readBySeqs(db, seqDf, maxInline), Seq(onCol))
         }

@@ -1,5 +1,6 @@
 package graft.views
 
+import graft.core.Fence
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -73,9 +74,7 @@ object Scd2 {
     val newDim = Scd2.dimension(delta, keyCol, seqCol, valueCols)
     val firstNew0 = delta.groupBy(col(keyCol)).agg(min(col(seqCol)).as("__first_new"))
     val firstNew =
-      if (firstNew0.limit((AdvanceBroadcastMax + 1).toInt).count() <= AdvanceBroadcastMax)
-        broadcast(firstNew0)
-      else firstNew0
+      if (Fence.broadcastable(firstNew0, AdvanceBroadcastMax)) broadcast(firstNew0) else firstNew0
     dimension.join(firstNew, Seq(keyCol), "left")
       .withColumn("to_seq",
         when(col("is_current") && col("__first_new").isNotNull, col("__first_new"))

@@ -333,6 +333,50 @@ class PlanSpec extends SparkSpec {
     } finally fresh.unpersist(blocking = false)
   }
 
+  test("incremental image, audio and embedding dedup read the stored table ONCE per batch") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    def storedTable(df: DataFrame, name: String): (String, DataFrame) = {
+      val d = java.nio.file.Files.createTempDirectory(s"graft-plan-$name").resolve("t").toString
+      df.write.parquet(d)
+      (d, spark.read.parquet(d))
+    }
+    val rnd = new scala.util.Random(7)
+    val hashes = (0L until 200L).map(i => (i, 50L + i % 4, rnd.nextLong()))
+    val batchRows = hashes.take(10).map { case (i, nw, h) => (1000L + i, nw, h) }
+    val (imageDir, image) = storedTable(hashes.map(r => (r._1, r._3)).toDF("media_id", "phash"), "image")
+    val (audioDir, audio) = storedTable(hashes.toDF("media_id", "n_windows", "afp"), "audio")
+    val emb = spark.read.parquet(s"$dir/embeddings.parquet").select("vec_id", "embedding")
+    val (sigDir, sigs) = storedTable(emb.select(col("vec_id"),
+      graft.ops.Similarity.hyperplaneSignature(col("embedding"), 32).as("sig")), "emb")
+    val embBatch = emb.where(col("vec_id") < 20)
+      .select((col("vec_id") + 10000).as("vec_id"), col("embedding"))
+    val persisted = scala.collection.mutable.Buffer.empty[DataFrame]
+    try {
+      val stages = Seq(
+        ("image", imageDir, graft.ops.Multimodal.perceptualNearDupIncrementalStage(
+          batchRows.map(r => (r._1, r._3)).toDF("media_id", "phash"), image,
+          7, 256, 4L * 1000 * 1000, persisted), 10L),
+        ("audio", audioDir, graft.ops.Multimodal.audioNearDupIncrementalStage(
+          batchRows.toDF("media_id", "n_windows", "afp"), audio,
+          7, 256, 4L * 1000 * 1000, persisted), 10L),
+        ("embedding", sigDir, graft.ops.Dedup.embeddingNearDupIncrementalStage(
+          embBatch, sigs, emb, "vec_id", "embedding", 4, 8, 0.95, 1024, 4L * 1000 * 1000,
+          persisted), 20L))
+      for ((what, storedDir, pairs, planted) <- stages) {
+        val plan = executed(pairs)
+        val storedScans = new AdaptiveSparkPlanHelper {}.collectWithSubqueries(plan) {
+          case s: FileSourceScanExec if s.relation.location.rootPaths.exists(_.toString.contains(storedDir)) => s
+        }
+        assert(storedScans.size === 1,
+          s"$what: the stored table must be scanned exactly once per batch, got ${storedScans.size}:\n${plan.toString.take(6000)}")
+        assert(pairs.count() >= planted, s"$what: the planted copies must pair")
+      }
+    } finally persisted.foreach(_.unpersist(blocking = false))
+  }
+
   test("incremental phash dedup: stored side filtered by a BROADCAST of batch segment keys") {
     import spark.implicits._
     val rnd = new scala.util.Random(3)

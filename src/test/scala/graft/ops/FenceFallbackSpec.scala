@@ -163,4 +163,34 @@ class FenceFallbackSpec extends SparkSpec {
       Multimodal.audioClipContainmentFromGrams(clips, corpus, maxBroadcastKeys = 0L),
       "audioClipContainment")
   }
+
+  test("a fence at Int.MaxValue keys takes the broadcast arm: lookup join and clip containment") {
+    import spark.implicits._
+    import graft.core.{FlumeDb, MemoryLog}
+    import graft.views.{IndexView, Query}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // the fence counts at most max + 1 keys; at max = Int.MaxValue that
+    // bound must not wrap to a negative limit
+    val fence = Int.MaxValue.toLong
+    val schema = StructType(Seq(StructField("foo", LongType), StructField("tag", StringType)))
+    val db = new FlumeDb(new MemoryLog(spark, schema))
+    db.use("tagIdx", IndexView.onColumn("tag", "seq"))
+    db.append(spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+      Row(1L, "a"), Row(2L, "b"), Row(3L, "a"), Row(4L, "c"))), schema))
+    val probe = Seq(("a", 10L), ("c", 30L), ("zz", 99L)).toDF("tag", "w")
+    def lookup(max: Long) =
+      Query.lookupJoin(db, probe, "tag", maxBroadcastKeys = max).select("seq", "tag", "w", "foo")
+    assertParity(lookup(1L << 20), lookup(fence), "lookupJoin")
+    val rnd = new scala.util.Random(23)
+    val corpusRows = for (m <- 0L until 10L; p <- 0L until 20L) yield (m, p, rnd.nextLong())
+    val corpus = corpusRows.toDF("corpus_id", "cpos", "gram")
+    val clips = corpusRows.filter { case (m, p, _) => m < 3L && p >= 4L && p < 12L }
+      .map { case (m, p, g) => (9000L + m, p - 4L, g) }
+      .toDF("clip_id", "kpos", "gram")
+    assertParity(
+      Multimodal.audioClipContainmentFromGrams(clips, corpus),
+      Multimodal.audioClipContainmentFromGrams(clips, corpus, maxBroadcastKeys = fence),
+      "audioClipContainment")
+  }
 }

@@ -1605,4 +1605,105 @@ class OpsSpec extends SparkSpec {
     assert(Multimodal.perceptualNearDupIncremental(
       Seq((1000L, 0L)).toDF("media_id", "phash"), flat, maxBucket = 64).count() === 0L)
   }
+
+  /** The two broadcast-fence arms every incremental stage runs. */
+  private val fenceArms = Seq(4L * 1000 * 1000, 0L)
+
+  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  /** A 64-bit hash whose eight 8-bit pigeonhole segments (maxHamming 7)
+    * hold values no other group `g < 32` uses in that segment, so every
+    * segment bucket below holds exactly the rows placed in it. */
+  private def segHash(g: Int): Long =
+    (0 until 8).map(s => ((g * 8 + s).toLong & 0xffL) << (8 * s)).sum
+
+  test("incremental image phash: both hot-bucket caps drop exactly their buckets (maxBucket = 2)") {
+    import spark.implicits._
+    val batch = Seq(
+      101L -> segHash(1), 102L -> segHash(1), 103L -> segHash(1), // 3 batch ids in every bucket of hash 1
+      104L -> segHash(2), 105L -> segHash(3), 106L -> segHash(4),
+      107L -> segHash(5), 108L -> segHash(5)).toDF("media_id", "phash")
+    val stored = Seq(
+      1L -> segHash(1),
+      2L -> segHash(2), 3L -> segHash(2), 4L -> segHash(2), // 3 stored ids in every bucket of hash 2
+      5L -> segHash(3), 6L -> segHash(3),
+      7L -> (segHash(4) ^ 1L), // one bit off: 7 shared segments, hamming 1
+      8L -> segHash(5)).toDF("media_id", "phash")
+    val want = Set((105L, 5L), (105L, 6L), (106L, 7L), (107L, 8L), (108L, 8L))
+    for (fence <- fenceArms)
+      assert(pairSet(Multimodal.perceptualNearDupIncremental(batch, stored, maxBucket = 2,
+        maxBroadcastKeys = fence)) === want, s"fence $fence")
+  }
+
+  test("incremental audio: both hot-bucket caps drop exactly their (n_windows, segment) buckets (maxBucket = 2)") {
+    import spark.implicits._
+    val batch = Seq(
+      (101L, 50L, segHash(1)), (102L, 50L, segHash(1)), (103L, 50L, segHash(1)),
+      (104L, 50L, segHash(2)), (105L, 50L, segHash(3)), (106L, 50L, segHash(4)),
+      (107L, 50L, segHash(5)), (108L, 50L, segHash(5)),
+      (109L, 50L, segHash(6)), (110L, 50L, segHash(7))).toDF("media_id", "n_windows", "afp")
+    val stored = Seq(
+      (1L, 50L, segHash(1)),
+      (2L, 50L, segHash(2)), (3L, 50L, segHash(2)), (4L, 50L, segHash(2)),
+      (5L, 50L, segHash(3)), (6L, 50L, segHash(3)),
+      (7L, 50L, segHash(4) ^ 1L), (8L, 50L, segHash(5)),
+      (9L, 51L, segHash(6)), // same hash, other window count: the gate keeps them apart
+      // hash 7 has 3 stored ids, but only 2 at the batch's window count:
+      // the gate is part of the bucket, so that bucket is under the cap
+      (10L, 50L, segHash(7)), (11L, 50L, segHash(7)), (12L, 51L, segHash(7)))
+      .toDF("media_id", "n_windows", "afp")
+    val want = Set((105L, 5L), (105L, 6L), (106L, 7L), (107L, 8L), (108L, 8L),
+      (110L, 10L), (110L, 11L))
+    for (fence <- fenceArms)
+      assert(pairSet(Multimodal.audioNearDupIncremental(batch, stored, maxBucket = 2,
+        maxBroadcastKeys = fence)) === want, s"fence $fence")
+  }
+
+  test("incremental video: both hot-bucket caps drop exactly their (frame, segment) buckets (maxBucket = 2)") {
+    import spark.implicits._
+    // two frames per video; frame f of group g hashes to segHash(2g + f)
+    def video(id: Long, g: Int, flip0: Long = 0L) =
+      Seq((id, 0L, segHash(2 * g) ^ flip0), (id, 1L, segHash(2 * g + 1)))
+    val batch = (video(101L, 1) ++ video(102L, 1) ++ video(103L, 1) ++ video(104L, 2) ++
+      video(105L, 3) ++ video(106L, 4) ++ video(107L, 5) ++ video(108L, 5) ++ video(109L, 6))
+      .toDF("media_id", "frame_idx", "phash")
+    val stored = (video(1L, 1) ++ video(2L, 2) ++ video(3L, 2) ++ video(4L, 2) ++
+      video(5L, 3) ++ video(6L, 3) ++ video(7L, 4, flip0 = 1L) ++ video(8L, 5) ++
+      // the frames of video 109 in the other order: the frame index is
+      // part of the bucket, so no aligned frame pair shares one
+      Seq((9L, 0L, segHash(13)), (9L, 1L, segHash(12))))
+      .toDF("media_id", "frame_idx", "phash")
+    val want = Set((105L, 5L), (105L, 6L), (106L, 7L), (107L, 8L), (108L, 8L))
+    for (fence <- fenceArms)
+      assert(pairSet(Multimodal.videoNearDupIncremental(batch, stored, maxBucket = 2,
+        maxBroadcastKeys = fence)) === want, s"fence $fence")
+  }
+
+  test("incremental embedding: both hot-bucket caps drop exactly their band buckets, with and without seq (maxBucket = 2)") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(29)
+    val vecs = (0 until 8).map(_ => Seq.fill(16)(rnd.nextGaussian().toFloat))
+    val batch = Seq(101L -> 1, 102L -> 1, 103L -> 1, 104L -> 2, 105L -> 3, 106L -> 4,
+      107L -> 5, 108L -> 5).map { case (id, g) => (id, vecs(g)) }.toDF("vec_id", "embedding")
+    val stored = Seq(1L -> 1, 2L -> 2, 3L -> 2, 4L -> 2, 5L -> 3, 6L -> 3, 7L -> 6, 8L -> 5)
+      .map { case (id, g) => (id, vecs(g)) }.toDF("vec_id", "embedding")
+    val want = Set((105L, 5L), (105L, 6L), (107L, 8L), (108L, 8L))
+    // 4 bands of 16 bits: unrelated random vectors share no band
+    val sigs = stored.select(col("vec_id"),
+      Similarity.hyperplaneSignature(col("embedding"), 64).as("sig"))
+    val seqSigs = sigs.withColumn("seq", col("vec_id"))
+    def byBucket(bs: Option[Seq[Long]]) =
+      bs.fold(stored)(b => stored.where((col("vec_id") / 4).cast("long").isin(b: _*)))
+    for (fence <- fenceArms) {
+      assert(pairSet(Dedup.embeddingNearDupIncremental(batch, stored, bands = 4,
+        bitsPerBand = 16, maxBucket = 2, maxBroadcastKeys = fence)) === want, s"no seq, fence $fence")
+      assert(pairSet(Dedup.embeddingNearDupIncrementalFromSigs(batch, seqSigs, stored,
+        bands = 4, bitsPerBand = 16, maxBucket = 2, maxBroadcastKeys = fence)) === want,
+        s"seq, fence $fence")
+      assert(pairSet(Dedup.embeddingNearDupIncrementalPruned(batch, seqSigs, 4L, byBucket,
+        bands = 4, bitsPerBand = 16, maxBucket = 2, maxBroadcastKeys = fence)) === want,
+        s"pruned, fence $fence")
+    }
+  }
 }

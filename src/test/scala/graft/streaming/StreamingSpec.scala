@@ -2430,4 +2430,64 @@ class StreamingSpec extends SparkSpec {
     assert(sigView.sigs.select(size(col("sig"))).collect().map(_.getInt(0)).toSet === Set(32),
       "the curator must store the view's 32-permutation signatures")
   }
+
+  test("jobs per incremental media dedup call against a stored table (reported, not gated)") {
+    import spark.implicits._
+    import graft.ops.{Dedup, Multimodal, Similarity}
+    import org.apache.spark.sql.DataFrame
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    /** The call's result and the jobs it launched under its own job
+      * group; a marker job after it drains the asynchronous listener bus. */
+    def jobsOf(group: String)(call: => DataFrame): (DataFrame, Int) = {
+      sc.setJobGroup(group, group)
+      val out = try call finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-drain", "drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains(s"$group-drain") && System.nanoTime() < deadline) Thread.sleep(20)
+      (out, jobs.toArray.count(_ == group))
+    }
+    def storedTable(df: DataFrame, name: String): DataFrame = {
+      val d = java.nio.file.Files.createTempDirectory(s"graft-jobs-$name").resolve("t").toString
+      df.write.parquet(d)
+      spark.read.parquet(d)
+    }
+    val rnd = new scala.util.Random(31)
+    // each stored table holds 200 ids; each batch re-uploads 10 of them and adds 10 novel ones
+    val hashes = (0L until 200L).map(i => (i, 50L + i % 4, rnd.nextLong()))
+    def batchOf(rows: Seq[(Long, Long, Long)]) =
+      rows.take(10).map { case (i, nw, h) => (1000L + i, nw, h) } ++
+        (0L until 10L).map(i => (2000L + i, 50L + i % 4, rnd.nextLong()))
+    val image = storedTable(hashes.map(r => (r._1, r._3)).toDF("media_id", "phash"), "image")
+    val imageBatch = batchOf(hashes).map(r => (r._1, r._3)).toDF("media_id", "phash")
+    val audio = storedTable(hashes.toDF("media_id", "n_windows", "afp"), "audio")
+    val audioBatch = batchOf(hashes).toDF("media_id", "n_windows", "afp")
+    val frames = for (v <- 0L until 50L; f <- 0L until 4L) yield (v, f, rnd.nextLong())
+    val video = storedTable(frames.toDF("media_id", "frame_idx", "phash"), "video")
+    val videoBatch = frames.filter(_._1 < 5L).map { case (v, f, h) => (1000L + v, f, h) }
+      .toDF("media_id", "frame_idx", "phash")
+    val vecs = (0L until 200L).map(i => (i, Seq.fill(16)(rnd.nextGaussian().toFloat)))
+    val emb = storedTable(vecs.toDF("vec_id", "embedding"), "vec")
+    val sigs = storedTable(emb.select(col("vec_id"), col("vec_id").as("seq"),
+      Similarity.hyperplaneSignature(col("embedding"), 32).as("sig")), "emb")
+    val embBatch = vecs.take(20).map { case (i, v) => (10000L + i, v) }.toDF("vec_id", "embedding")
+    sc.addSparkListener(listener)
+    try {
+      val counts = Seq(
+        "image" -> jobsOf("jobs-image")(Multimodal.perceptualNearDupIncremental(imageBatch, image)),
+        "audio" -> jobsOf("jobs-audio")(Multimodal.audioNearDupIncremental(audioBatch, audio)),
+        "video" -> jobsOf("jobs-video")(Multimodal.videoNearDupIncremental(videoBatch, video)),
+        "embedding" -> jobsOf("jobs-embedding")(Dedup.embeddingNearDupIncrementalPruned(
+          embBatch, sigs, 16L, _ => emb)))
+      println(counts.map { case (m, (_, n)) => s"$m=$n" }
+        .mkString("[jobs] per incremental media dedup call: ", " ", ""))
+      for ((m, (out, _)) <- counts)
+        assert(out.count() >= 5L, s"$m: the re-uploads must pair with their stored copies")
+    } finally sc.removeSparkListener(listener)
+  }
 }
