@@ -159,11 +159,14 @@ final class ClosedException(msg: String) extends IllegalStateException(msg)
   * views, with flume's consistency contract — async view maintenance,
   * read-your-writes gating, destroy-and-rebuild lifecycle.
   *
-  * The pipeline from the log to the views is one read fanned out: on an
-  * append, each sync reads the new log range once, materializes it once,
-  * and every view absorbs it at the same time on its own driver thread
-  * (see `syncViews`); a view behind the others, or a replay of the whole
-  * log, streams its own range. A
+  * The pipeline from the log to the views is the append itself, fanned
+  * out, as flume's views read the log's live stream: an append on a
+  * [[ParquetLog]] hands its just-written batch, still cached, to the
+  * sync, and every view at the pre-append cursor absorbs that batch at
+  * the same time on its own driver thread, with nothing read back from
+  * storage (see `syncViews`). A view behind the others, or a replay of
+  * the whole log, streams its own range; on a log that keeps no batch
+  * the views at the head cursor share one read of the new range. A
   * view's failure stays that view's: it destroys and replays on its own
   * while the others reach parity.
   *
@@ -308,12 +311,13 @@ final class FlumeDb(
 
   def append(payload: DataFrame): Long = {
     throwIfClosed(); count("append")
-    val before = log.since
-    val s = log.append(payload)
-    meta.getOrElseUpdate("append.records", new AtomicLong()).addAndGet(s - before)
-    lock.lock()
-    try syncViews() finally lock.unlock()
-    s
+    val w = log.appendBatch(payload)
+    try {
+      meta.getOrElseUpdate("append.records", new AtomicLong()).addAndGet(w.since - w.after)
+      lock.lock()
+      try syncViews(written = Some(w)) finally lock.unlock()
+    } finally w.release()
+    w.since
   }
 
   /** Mount a view under `name` (`/root/reference/index.js:163-193`).
@@ -346,27 +350,31 @@ final class FlumeDb(
     * parity, in seq order, incrementally — the reference build loop's
     * `gt: since` stream (reference `index.js:36-39`), fanned out. The
     * views at the most advanced lagging cursor — on an append, every
-    * view — share one read of `(cursor, log.since]` in seq order,
-    * materialized by one eager job when two or more of them read it and
-    * the cursor is past the start of the log. Any other view (just
-    * mounted, rebuilt or reset by a failed replay, or alone at its
-    * cursor) streams its own `(since, log.since]`, so it costs what it
-    * would cost synced on its own. Every lagging view absorbs at the
-    * same time on its own driver thread.
-    * After every absorb has returned, each view in mount order is marked
-    * loaded, parity is signalled and its `since` is emitted; the shared
-    * delta is then released.
+    * view — share one batch of `(cursor, log.since]` in seq order. On an
+    * append that `written` covers exactly that range, the batch is the
+    * append's own cached rows through the mapper, with no read of the
+    * log; the appender releases them after the sync. Otherwise (a direct
+    * `log.append` in between, a log that keeps no batch) it is one read
+    * of the range, materialized by one eager job when two or more views
+    * read it and the cursor is past the start of the log, and released
+    * here. Any other view (just mounted, rebuilt or reset by a failed
+    * replay, or alone at its cursor) streams its own
+    * `(since, log.since]`, so it costs what it would cost synced on its
+    * own. Every lagging view absorbs at the same time on its own driver
+    * thread. After every absorb has returned, each view in mount order
+    * is marked loaded, parity is signalled and its `since` is emitted.
     *
     * A view *ahead* of the log (e.g. log file truncated) is destroyed and
     * rebuilt (reference `index.js:36-37`). A failure — of the
-    * shared read or of the view's own absorb — is the view's alone: it
+    * shared batch or of the view's own absorb — is the view's alone: it
     * records `lastError`, destroys and replays the whole log on its own
     * (reference `index.js:66-71`) while its siblings reach parity.
     * If the replay fails too, the view stays unloaded at its cursor and
     * the first such failure, in mount order, is rethrown once the others
     * are done. `use`, `append`, `rebuild`, `setReady` and the takedown
     * fallbacks all sync through here. Caller holds the db lock. */
-  private def syncViews(ms: Seq[Mounted] = mountedViews): Unit = {
+  private def syncViews(ms: Seq[Mounted] = mountedViews,
+      written: Option[FlumeLog.Appended] = None): Unit = {
     val target = log.since
     ms.foreach(m => if (m.view.since > target) m.view.destroy()) // ahead of log => rebuild
     val lagging = ms.map(m => m -> m.view.since).filter(_._2 < target)
@@ -374,11 +382,14 @@ final class FlumeDb(
       if (lagging.isEmpty) Map.empty
       else {
         val head = lagging.map(_._2).max
+        val writeThrough = written.filter(w => w.after == head && w.since == target)
+          .flatMap(_.batch).map(b => Try { val d = b(); mapper.fold(d)(f => f(d)) })
         // a copy is made only of a tail that two or more views read; a
         // replay from the start of the log would copy the whole log
-        val shared =
-          if (head < 0 || lagging.count(_._2 == head) < 2) None
+        val readBack =
+          if (writeThrough.nonEmpty || head < 0 || lagging.count(_._2 == head) < 2) None
           else Some(Try(mappedStream(LogRange(gt = Some(head), lte = Some(target))).localCheckpoint(true)))
+        val shared = writeThrough.orElse(readBack)
         try {
           val outcomes = FlumeDb.fanOut(lagging.map { case (m, since) =>
             val batch: () => DataFrame = shared match {
@@ -388,7 +399,7 @@ final class FlumeDb(
             s"flumedb-absorb-${m.name}" -> (() => absorbOrReplay(m, batch, target))
           })
           lagging.zip(outcomes).collect { case ((m, _), Some(e)) => m -> e }.toMap
-        } finally shared.foreach(_.foreach(FlumeDb.releaseCheckpoint))
+        } finally readBack.foreach(_.foreach(FlumeDb.releaseCheckpoint))
       }
     val synced = ms.filterNot(failed.contains)
     lock.lock(); try { synced.foreach(_.loaded = true); parity.signalAll() } finally lock.unlock()
@@ -1253,7 +1264,8 @@ object FlumeDb {
     * later GC of its RDD. Frames derived from it stop working. */
   private[core] def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.logical match {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        org.apache.spark.sql.graftbridge.StorageBridge.release(r.rdd)
       case _ => ()
     }
 }

@@ -58,6 +58,13 @@ trait FlumeLog {
     * callback fires (`/root/reference/README.md:203-206`). */
   def append(payload: DataFrame): Long
 
+  /** [[append]], reporting the batch it wrote (see [[FlumeLog.Appended]]).
+    * This default keeps nothing: the db reads the batch back. */
+  private[core] def appendBatch(payload: DataFrame): FlumeLog.Appended = {
+    val after = since
+    FlumeLog.Appended(after, append(payload), None, () => ())
+  }
+
   /** Point lookup by seq. Pushed down to storage (parquet row-group
     * min/max skipping) rather than scanned. */
   def get(seq: Long): DataFrame =
@@ -269,6 +276,16 @@ trait FlumeLog {
     * (callers layer a filter); seq-offset sources override to skip the
     * prefix at the source. */
   def readStreamFrom(gt: Long): DataFrame = readStream
+}
+
+object FlumeLog {
+  /** One append: the log's `since` before (`after`) and after it, and,
+    * when the log keeps it, `batch`, which gives the rows `(after, since]`
+    * in seq order with the schema of the log's read, as the db's views
+    * would read them back. They stay readable until `release()`, which
+    * the appender calls once every reader is done. */
+  private[core] final case class Appended(after: Long, since: Long,
+      batch: Option[() => DataFrame], release: () => Unit)
 }
 
 /** Read-only log view over an existing ordered table (e.g. the driver's
@@ -731,23 +748,35 @@ final class ParquetLog(
       .option("logId", id).option("startSeq", gt.toString).load()
   }
 
-  override def append(payload: DataFrame): Long = synchronized {
+  override def append(payload: DataFrame): Long = {
+    val a = appendBatch(payload)
+    a.release()
+    a.since
+  }
+
+  /** The append itself, handing back the stamped batch as the shared
+    * delta of a db sync (see [[FlumeLog.Appended]]).
+    *
+    * Contiguous seq assignment with no shuffle and no join: locally
+    * checkpoint the payload rows (partition order pins the batch's row
+    * order), pull ONE tiny count per partition to the driver, and stamp
+    * each partition's seqs from a driver-held offset map via
+    * mapPartitionsWithIndex. The count pass, the stats pass, the write
+    * and every view that takes the delta read the same checkpointed
+    * blocks, so the payload is evaluated once. A lost block fails its
+    * reader rather than re-evaluating the payload, so a non-deterministic
+    * payload can never disagree with the seqs already counted; a view
+    * that fails that way replays from the log. The cost is staging the
+    * batch in cache: for an ingest batch too big to stage, append in
+    * bounded slices. */
+  override private[core] def appendBatch(payload: DataFrame): FlumeLog.Appended = synchronized {
     val base = cursor
     require(payload.schema.fieldNames.toSet == payloadSchema.fieldNames.toSet,
       s"append payload columns ${payload.schema.fieldNames.mkString(",")} " +
         s"must match the log schema ${payloadSchema.fieldNames.mkString(",")}")
-    // Contiguous seq assignment with no shuffle and no join: cache the
-    // payload rows once (partition order pins the batch's row order), pull
-    // ONE tiny count per partition to the driver, and stamp each
-    // partition's seqs from a driver-held offset map via
-    // mapPartitionsWithIndex. Caching greatly narrows (but cannot close —
-    // lost-block recompute) the window where a non-deterministic payload
-    // could disagree between the count pass and the write, and it means
-    // the payload is evaluated once, not twice. The cost is staging the
-    // batch in cache: for an ingest batch too big to stage, accept the
-    // two-scan recompute path by appending in bounded slices instead.
     val aligned = payload.select(payloadSchema.fieldNames.toSeq.map(n => col(s"`$n`")): _*)
-    val rows = aligned.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rows = aligned.rdd.localCheckpoint()
+    val release = () => org.apache.spark.sql.graftbridge.StorageBridge.release(rows)
     try {
       val counts = rows
         .mapPartitionsWithIndex((pid, it) => {
@@ -755,7 +784,7 @@ final class ParquetLog(
         }, preservesPartitioning = true)
         .collect().sortBy(_._1)
       val n = counts.map(_._2).sum
-      if (n > 0) {
+      val batch = if (n == 0) None else {
         var acc = 0L
         val offsets = counts.map { case (pid, cnt) => val o = (pid, acc); acc += cnt; o }.toMap
         val stamped = rows.mapPartitionsWithIndex { (pid, it) =>
@@ -763,6 +792,7 @@ final class ParquetLog(
           it.map { r => val out = Row.fromSeq(s +: r.toSeq); s += 1; out }
         }
         val withSeq = spark.createDataFrame(stamped, fullSchema)
+        lazy val delta = readOrdered(stamped, rows)
         // widen the bucket-stats manifest BEFORE the rows land: a crash
         // between the two leaves ranges too wide (safe), never too
         // narrow (which would prune a bucket holding matching rows)
@@ -781,7 +811,10 @@ final class ParquetLog(
             Seq(min(col(s"`$c`")).cast(cast).as(s"min_$c"),
               max(col(s"`$c`")).cast(cast).as(s"max_$c"))
           }
-          withSeq.withColumn(bucketCol, expr(s"`$seqCol` div $bucketSize"))
+          // over the delta: a batch under the advisory partition size is
+          // one declared partition, so this aggregates in one job with no
+          // exchange
+          delta.withColumn(bucketCol, expr(s"`$seqCol` div $bucketSize"))
             .groupBy(col(bucketCol)).agg(aggCols.head, aggCols.tail: _*)
             .collect().foreach { r =>
               val b = r.getLong(0)
@@ -821,9 +854,28 @@ final class ParquetLog(
         else withSeq.write.mode("append").parquet(dir)
         cursor = base + n
         emitSince()
+        Some(() => delta)
       }
-      cursor
-    } finally rows.unpersist(blocking = false)
+      FlumeLog.Appended(base, cursor, batch, release)
+    } catch { case e: Throwable => release(); throw e }
+  }
+
+  /** The stamped batch as [[read]] returns it: the read's schema (every
+    * field nullable), rows in seq order, one partition per
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` of cached `rows`
+    * (the count AQE gives a sorted read of the same rows). One partition
+    * is declared as such, so an aggregate over it plans no exchange. */
+  private def readOrdered(stamped: org.apache.spark.rdd.RDD[Row],
+      rows: org.apache.spark.rdd.RDD[_]): DataFrame = {
+    val advisory = spark.sessionState.conf.getConf(
+      org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+    val bytes = org.apache.spark.sql.graftbridge.StorageBridge.cachedBytes(rows)
+    val parts = math.max(1L, math.min(stamped.getNumPartitions.toLong,
+      (bytes + advisory - 1) / advisory)).toInt
+    val runs = spark.createDataFrame(
+      stamped.coalesce(parts, shuffle = false, Some(ParquetLog.InOrder)),
+      org.apache.spark.sql.graftbridge.StorageBridge.asRead(fullSchema))
+    if (parts == 1) runs.coalesce(1) else runs
   }
 
   /** Convenience: append payload rows built on the driver. */
@@ -1176,6 +1228,20 @@ object ParquetLog {
   /** Per-bucket [min,max] manifest for declared takedown-key columns
     * (`_`-prefixed: invisible to parquet file listing). */
   private[core] val statsMarker = "_graft_stats"
+
+  /** Coalesces into `n` runs of adjacent partitions, in partition order,
+    * so a batch in seq order stays in seq order (the default coalescer
+    * groups by locality and may reorder). */
+  private[core] object InOrder extends org.apache.spark.rdd.PartitionCoalescer with Serializable {
+    def coalesce(n: Int, parent: org.apache.spark.rdd.RDD[_]): Array[org.apache.spark.rdd.PartitionGroup] = {
+      val ps = parent.partitions
+      Array.tabulate(n) { i =>
+        val g = new org.apache.spark.rdd.PartitionGroup()
+        g.partitions ++= ps.slice((i.toLong * ps.length / n).toInt, ((i + 1L) * ps.length / n).toInt)
+        g
+      }
+    }
+  }
 
   /** Internal match-marker column added by the retraction paths. */
   private[graft] val hitCol = "__graft_hit"

@@ -1289,4 +1289,239 @@ class FlumeDbSpec extends SparkSpec {
     assert(db.view("c").lastError.isEmpty)
     db.close()
   }
+
+  // ---- write-through: a ParquetLog append hands its cached batch to the sync ----
+
+  val eventSchema: StructType = StructType(Seq(StructField("user_id", LongType), StructField("text", StringType)))
+  def eventDf(from: Int, n: Int): DataFrame = spark.createDataFrame(spark.sparkContext.parallelize(
+    (from until from + n).map(i => Row((i % 13).toLong, s"w${i % 5} v${i % 3}")), 4), eventSchema)
+  def bucketedLog(): ParquetLog = new ParquetLog(spark,
+    java.nio.file.Files.createTempDirectory("graft-write-through").toString, eventSchema,
+    bucketSize = 64L, statsColumns = Seq("user_id"))
+
+  /** Keeps each batch it absorbs: its `upto`, its schema and its rows in the order the frame yields them. */
+  class KeepingView extends CountingView {
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[(Long, StructType, Seq[Row])]()
+    override def absorb(entries: DataFrame, upto: Long): Unit = {
+      batches.add((upto, entries.schema, entries.collect().toSeq)); super.absorb(entries, upto)
+    }
+    def last: (Long, StructType, Seq[Row]) = batches.toArray(Array.empty[(Long, StructType, Seq[Row])]).last
+  }
+
+  /** An identity-or-`f` mapper that records, per call, whether its input reads the log's files. */
+  def recordingMapper(fromFiles: java.util.concurrent.ConcurrentLinkedQueue[Boolean],
+      f: DataFrame => DataFrame = identity): DataFrame => DataFrame =
+    df => { fromFiles.add(df.inputFiles.nonEmpty); f(df) }
+  def recorded(fromFiles: java.util.concurrent.ConcurrentLinkedQueue[Boolean]): Seq[Boolean] =
+    fromFiles.toArray.toSeq.map(_.asInstanceOf[Boolean])
+
+  test("write-through: each view absorbs exactly log.stream((before, s]) of every append, with and without a mapper") {
+    for (withMapper <- Seq(false, true)) {
+      val log = bucketedLog()
+      val fromFiles = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+      val mapper = Option.when(withMapper)(recordingMapper(fromFiles, _.withColumn("text", upper(col("text")))))
+      val db = new FlumeDb(log, mapper = mapper)
+      val (a, b) = (new KeepingView, new KeepingView)
+      db.use("a", countingDef(a)).use("b", countingDef(b)).use("idx", IndexView(array(col("user_id").cast("string"))))
+      var from = 0
+      for (n <- Seq(50, 70, 1, 90)) { // the second and fourth appends cross bucket boundaries
+        val before = log.since
+        fromFiles.clear()
+        val s = db.append(eventDf(from, n))
+        from += n
+        val mapped = recorded(fromFiles)
+        val want = db.stream(LogRange(gt = Some(before), lte = Some(s)))
+        assert(s === before + n)
+        for (v <- Seq(a, b)) {
+          val (upto, schema, rows) = v.last
+          assert(upto === s)
+          assert(schema === want.schema, "the batch has the schema of the log's read")
+          assert(rows === want.collect().toSeq, s"the view absorbs exactly (${before}, $s], in seq order")
+        }
+        if (withMapper) assert(mapped === Seq(false), "the mapper maps the append's cached batch; nothing is read back")
+      }
+      val idx = db.view("idx").view.asInstanceOf[IndexView]
+      assert(idx.get("3").select("seq").collect().map(_.getLong(0)).sorted.toSeq ===
+        log.read.where(col("user_id") === 3L).select("seq").collect().map(_.getLong(0)).sorted.toSeq,
+        "an in-memory view still answers after the batch is released")
+      db.close()
+    }
+  }
+
+  test("write-through: a destroyed view streams its own range while its siblings take the delta") {
+    val log = bucketedLog()
+    val fromFiles = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+    val db = new FlumeDb(log, mapper = Some(recordingMapper(fromFiles)))
+    val (a, b, c) = (new KeepingView, new KeepingView, new KeepingView)
+    db.use("a", countingDef(a)).use("b", countingDef(b)).use("c", countingDef(c))
+    db.append(eventDf(0, 40))
+    c.destroy()
+    val before = log.since
+    fromFiles.clear()
+    val s = db.append(eventDf(40, 30))
+    assert(recorded(fromFiles).sorted === Seq(false, true), "one mapped delta for a and b, one log read for c")
+    val tail = db.stream(LogRange(gt = Some(before), lte = Some(s))).collect().toSeq
+    assert(a.last._3 === tail && b.last._3 === tail)
+    assert(c.last._3 === db.stream(LogRange(lte = Some(s))).collect().toSeq, "c replays the whole log")
+    assert(Seq(a, b, c).forall(_.since == s) && db.view("c").lastError.isEmpty)
+    db.close()
+  }
+
+  test("write-through: after a direct log.append the next db.append reads back, with unchanged answers") {
+    val log = bucketedLog()
+    val fromFiles = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+    val db = new FlumeDb(log, mapper = Some(recordingMapper(fromFiles)))
+    val (a, b) = (new KeepingView, new KeepingView)
+    db.use("a", countingDef(a)).use("b", countingDef(b))
+      .use("idx", IndexView(array(col("user_id").cast("string")))).use("stats", StatsReduceView("user_id"))
+    db.append(eventDf(0, 40))
+    val mid = log.since
+    db.log.append(eventDf(40, 20)) // the views now lag the log
+    fromFiles.clear()
+    val s = db.append(eventDf(60, 30))
+    assert(recorded(fromFiles) === Seq(true), "the views' range is read back from the log, once")
+    val tail = db.stream(LogRange(gt = Some(mid), lte = Some(s))).collect().toSeq
+    assert(tail.size === 50 && a.last._3 === tail && b.last._3 === tail)
+    val idx = db.view("idx").view.asInstanceOf[IndexView]
+    assert(idx.get("3").select("seq").collect().map(_.getLong(0)).sorted.toSeq ===
+      log.read.where(col("user_id") === 3L).select("seq").collect().map(_.getLong(0)).sorted.toSeq)
+    val st = db.gated("stats")(_.asInstanceOf[MergeableReduceView[Stats]].value.get)
+    val all = (0 until 90).map(i => (i % 13).toDouble)
+    assert(st.n === 90L && math.abs(st.mean - all.sum / all.size) < 1e-9)
+    db.close()
+  }
+
+  test("write-through: the delta's blocks are released after the sync, also when an absorb throws") {
+    val sc = spark.sparkContext
+    def persisted: Set[Int] = sc.getPersistentRDDs.keySet.toSet
+    @volatile var base = persisted
+    class Recording extends CountingView {
+      val newPersisted = new java.util.concurrent.ConcurrentLinkedQueue[Set[Int]]()
+      override def absorb(entries: DataFrame, upto: Long): Unit = {
+        newPersisted.add(persisted -- base); super.absorb(entries, upto)
+      }
+      def last: Set[Int] = newPersisted.toArray(Array.empty[Set[Int]]).last
+    }
+    val throwNext = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val failing = new CountingView {
+      override def absorb(entries: DataFrame, upto: Long): Unit = {
+        if (throwNext.getAndSet(false)) throw new IllegalStateException("absorb fails")
+        super.absorb(entries, upto)
+      }
+    }
+    def released(ids: Set[Int]): Boolean =
+      (persisted & ids).isEmpty && !sc.getRDDStorageInfo.exists(i => ids.contains(i.id))
+
+    val db = new FlumeDb(bucketedLog())
+    val (a, b) = (new Recording, new Recording)
+    db.use("a", countingDef(a)).use("b", countingDef(b)).use("failing", countingDef(failing))
+    for ((n, fail) <- Seq((40, false), (30, false), (20, true))) {
+      throwNext.set(fail)
+      base = persisted
+      val s = db.append(eventDf(0, n))
+      assert(a.last.nonEmpty && a.last === b.last, "a and b absorb the append's cached batch")
+      assert(released(a.last), "the batch's blocks are released after the sync")
+      assert(failing.since === s && db.view("failing").lastError.isDefined === fail)
+    }
+    db.close()
+  }
+
+  test("write-through: a batch over the advisory partition size reaches the views in several partitions, in seq order") {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "1k")
+    try {
+      val log = bucketedLog()
+      val db = new FlumeDb(log)
+      val parts = new java.util.concurrent.ConcurrentLinkedQueue[Int]()
+      val a = new KeepingView {
+        override def absorb(entries: DataFrame, upto: Long): Unit = {
+          parts.add(entries.rdd.getNumPartitions); super.absorb(entries, upto)
+        }
+      }
+      db.use("a", countingDef(a)).use("b", countingDef(new KeepingView))
+      val s = db.append(eventDf(0, 200))
+      assert(parts.toArray.toSeq === Seq(4), "one partition per advisory size, at most one per payload partition")
+      assert(a.last._3 === log.stream(LogRange(lte = Some(s))).collect().toSeq)
+      db.close()
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // fewer partitions than the parent: runs of adjacent partitions, in partition order
+    val runs = spark.sparkContext.parallelize(1 to 100, 8).coalesce(3, shuffle = false, Some(ParquetLog.InOrder))
+    assert(runs.getNumPartitions === 3 && runs.collect().toSeq === (1 to 100))
+  }
+
+  val serveSchema: StructType = StructType(Seq(StructField("user_id", LongType),
+    StructField("event_type", StringType), StructField("value", DoubleType), StructField("text", StringType)))
+  def serveDf(from: Int, n: Int,
+      tick: org.apache.spark.sql.Column => org.apache.spark.sql.Column = c => c): DataFrame =
+    spark.createDataFrame(spark.sparkContext.parallelize((from until from + n).map(i =>
+      Row((i * 7919 % 2000).toLong, Seq("view", "click", "buy")(i % 3), (i % 10).toDouble,
+        s"w${i % 11} v${i % 7} x${i % 5}")), 4), serveSchema)
+      .withColumn("user_id", tick(col("user_id")))
+  /** The serve workload's shape: a bucketed log with stats on `user_id`, and its five views. */
+  def serveDb(): (ParquetLog, FlumeDb, String) = {
+    val root = java.nio.file.Files.createTempDirectory("graft-serve-shaped").toString
+    val log = new ParquetLog(spark, s"$root/log", serveSchema, bucketSize = 4096L, statsColumns = Seq("user_id"))
+    val db = new FlumeDb(log)
+    val vdir = s"$root/views"
+    db.use("idx", PersistentIndexView.onColumn(vdir, "event_type"))
+      .use("ht", PersistentHashtableView(vdir, "user_id"))
+      .use("sum", PersistentSumReduceView(s"$vdir/sum", 1, "value"))
+      .use("bloom", PersistentBloomView(vdir, "user_id", expectedItems = 200000L))
+      .use("search", SearchView("text"))
+    (log, db, vdir)
+  }
+  def parquetFiles(dir: String): Int = {
+    val p = java.nio.file.Paths.get(dir)
+    if (!java.nio.file.Files.exists(p)) 0
+    else {
+      val s = java.nio.file.Files.walk(p)
+      try s.filter(_.toString.endsWith(".parquet")).count().toInt finally s.close()
+    }
+  }
+
+  test("write-through: a payload UDF runs once per row per append, across count, stats, write and every view") {
+    val acc = spark.sparkContext.longAccumulator("payload-evaluations")
+    val tick = udf((u: Long) => { acc.add(1L); u }).asNondeterministic()
+    val (log, db, _) = serveDb()
+    db.append(serveDf(0, 300, c => tick(c)))
+    assert(acc.value === 300L)
+    db.append(serveDf(300, 500, c => tick(c)))
+    assert(acc.value === 800L, "every reader of the batch reads its checkpointed rows")
+    assert(log.read.count() === 800L && db.view("search").since === 799L)
+    db.close()
+  }
+
+  test("serve-shaped append: one file per view batch, the log's file count per batch, and its Spark jobs") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    /** Jobs of `group` the listener has seen, once it has seen a later marker job on this thread. */
+    def jobsOf(group: String): Int = {
+      sc.setJobGroup("serve-marker", "listener marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains("serve-marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      jobs.remove("serve-marker")
+      jobs.toArray.count(_ == group)
+    }
+    val (log, db, vdir) = serveDb()
+    db.append(serveDf(0, 1000))
+    val logFiles = parquetFiles(log.dir)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup("serve-append", "a 500-row append")
+      val s = try db.append(serveDf(1000, 500)) finally sc.clearJobGroup()
+      val n = jobsOf("serve-append")
+      println(s"[jobs] serve-shaped 500-row append: $n Spark jobs")
+      assert(n === 8, "count, stats, write and one job per view")
+      assert(parquetFiles(log.dir) - logFiles === 4, "one log file per payload partition in the one bucket")
+      for (v <- Seq("idx", "ht")) assert(parquetFiles(s"$vdir/$v/batch=$s") === 1, s"$v writes one file per batch")
+    } finally sc.removeSparkListener(listener)
+    db.close()
+  }
 }

@@ -1700,4 +1700,43 @@ class PersistenceSpec extends SparkSpec {
     intercept[IllegalArgumentException] { db.use("echo", StatsReduceView("x")) }
     assert(db.meta("blockSize").get() === 1L)
   }
+
+  test("bucket stats of a 4-partition batch across a bucket boundary equal a groupBy over the read") {
+    val statsSchema = StructType(Seq(StructField("i", IntegerType), StructField("l", LongType),
+      StructField("s", StringType), StructField("z", LongType), StructField("tag", StringType)))
+    val cols = Seq("i", "l", "s", "z")
+    val dir = Files.createTempDirectory("graft-bstats-batch").toString
+    // bucket 0 holds rows from before stats were declared: it has no entry and must get none
+    new ParquetLog(spark, dir, statsSchema, bucketSize = 100L)
+      .appendRows((0 until 10).map(k => Row(k, k.toLong, s"old$k", null, "old")))
+    val log = new ParquetLog(spark, dir, statsSchema, bucketSize = 100L, statsColumns = cols)
+    // U+FF5A sorts above the surrogate pair of U+1F600 in UTF-16 and below it in UTF-8
+    val strings = Seq("m", "\uFF5A", "\uD83D\uDE00", "", "a b=c%", "\u00e9")
+    def batch(from: Int, n: Int) = spark.createDataFrame(spark.sparkContext.parallelize(
+      (from until from + n).map(k => Row((k * 7919) % 1000 - 500, k.toLong * -3L,
+        strings(k % strings.size), null, "new")), 4), statsSchema)
+    log.append(batch(0, 200)) // seqs 10..209: buckets 0, 1 and 2
+    log.append(batch(200, 150)) // seqs 210..359: widens bucket 2, opens bucket 3
+
+    def dec(t: String) = java.net.URLDecoder.decode(t.stripPrefix("="), java.nio.charset.StandardCharsets.UTF_8)
+    val manifest = Files.readAllLines(java.nio.file.Paths.get(dir, "_graft_stats")).toArray.toSeq
+      .map(_.toString.trim.split(" ").toSeq).filter(_.nonEmpty).map {
+        case Seq(b, c, "L", lo, hi) => (b.toLong, c) -> (lo, hi)
+        case Seq(b, c, "S", lo, hi) => (b.toLong, c) -> (dec(lo), dec(hi))
+        case other => fail(s"unparseable manifest line: $other")
+      }.toMap
+    val aggs = cols.flatMap { c =>
+      val t = if (c == "s") "string" else "long"
+      Seq(min(col(c)).cast(t).cast("string"), max(col(c)).cast(t).cast("string"))
+    }
+    val want = log.read.groupBy(expr("seq div 100").as("b")).agg(aggs.head, aggs.tail: _*)
+      .collect().toSeq.filter(_.getLong(0) != 0L).flatMap { r =>
+        cols.zipWithIndex.collect { case (c, k) if !r.isNullAt(1 + 2 * k) =>
+          (r.getLong(0), c) -> (r.getString(1 + 2 * k), r.getString(2 + 2 * k))
+        }
+      }.toMap
+    assert(want.keySet.map(_._1) === Set(1L, 2L, 3L) && !want.keySet.exists(_._2 == "z"))
+    assert(want((1L, "s"))._2 === "\uD83D\uDE00", "Spark's string max is the binary UTF-8 one")
+    assert(manifest === want)
+  }
 }
