@@ -165,8 +165,9 @@ final class ClosedException(msg: String) extends IllegalStateException(msg)
   * sync, and every view at the pre-append cursor absorbs that batch at
   * the same time on its own driver thread, with nothing read back from
   * storage (see `syncViews`). A view behind the others, or a replay of
-  * the whole log, streams its own range; on a log that keeps no batch
-  * the views at the head cursor share one read of the new range. A
+  * the whole log, streams its own range; on a log that keeps no batch,
+  * or after a takedown that ran between the write and the sync, the
+  * views at the head cursor share one read of the new range. A
   * view's failure stays that view's: it destroys and replays on its own
   * while the others reach parity.
   *
@@ -351,18 +352,22 @@ final class FlumeDb(
     * `gt: since` stream (reference `index.js:36-39`), fanned out. The
     * views at the most advanced lagging cursor — on an append, every
     * view — share one batch of `(cursor, log.since]` in seq order. On an
-    * append that `written` covers exactly that range, the batch is the
-    * append's own cached rows through the mapper, with no read of the
-    * log; the appender releases them after the sync. Otherwise (a direct
-    * `log.append` in between, a log that keeps no batch) it is one read
-    * of the range, materialized by one eager job when two or more views
-    * read it and the cursor is past the start of the log, and released
-    * here. Any other view (just mounted, rebuilt or reset by a failed
-    * replay, or alone at its cursor) streams its own
-    * `(since, log.since]`, so it costs what it would cost synced on its
-    * own. Every lagging view absorbs at the same time on its own driver
-    * thread. After every absorb has returned, each view in mount order
-    * is marked loaded, parity is signalled and its `since` is emitted.
+    * append whose `written` batch covers exactly that range, with no
+    * retract or expire of the log begun since it was written, the batch
+    * is the append's own cached rows, with no read of the log; the
+    * appender releases them after the sync. Under a mapper the views get
+    * those rows mapped and sorted by seq, materialized by one eager job
+    * when two or more views read them, so the mapper runs once per row.
+    * Otherwise (a direct `log.append` or a takedown in between, a log
+    * that keeps no batch) it is one read of the range, materialized by
+    * one eager job when two or more views read it and the cursor is past
+    * the start of the log. Such a copy is released here. Any other view
+    * (just mounted, rebuilt or reset by a failed replay, or alone at its
+    * cursor) streams its own `(since, log.since]`, so it costs what it
+    * would cost synced on its own. Every lagging view absorbs at the
+    * same time on its own driver thread. After every absorb has
+    * returned, each view in mount order is marked loaded, parity is
+    * signalled and its `since` is emitted.
     *
     * A view *ahead* of the log (e.g. log file truncated) is destroyed and
     * rebuilt (reference `index.js:36-37`). A failure — of the
@@ -382,14 +387,27 @@ final class FlumeDb(
       if (lagging.isEmpty) Map.empty
       else {
         val head = lagging.map(_._2).max
-        val writeThrough = written.filter(w => w.after == head && w.since == target)
-          .flatMap(_.batch).map(b => Try { val d = b(); mapper.fold(d)(f => f(d)) })
-        // a copy is made only of a tail that two or more views read; a
-        // replay from the start of the log would copy the whole log
-        val readBack =
-          if (writeThrough.nonEmpty || head < 0 || lagging.count(_._2 == head) < 2) None
-          else Some(Try(mappedStream(LogRange(gt = Some(head), lte = Some(target))).localCheckpoint(true)))
-        val shared = writeThrough.orElse(readBack)
+        // the append's batch, unless the log moved past it or a rewrite
+        // (a takedown run from a listener or another thread) may have
+        // removed some of its rows since it was written
+        val fresh = written
+          .filter(w => w.after == head && w.since == target && w.rewrites == log.rewrites)
+          .flatMap(_.batch)
+        // a copy is made only of rows that two or more views read and
+        // that cost work to give again: the mapper over the batch, or a
+        // read of the log's tail (a replay from the start of the log
+        // would copy the whole log)
+        val copy = lagging.count(_._2 == head) >= 2 &&
+          (if (fresh.nonEmpty) mapper.nonEmpty else head >= 0)
+        val shared: Option[Try[DataFrame]] = fresh match {
+          case Some(b) => Some(Try {
+            val d = mapper.fold(b)(f => f(b).orderBy(org.apache.spark.sql.functions.col(log.seqCol)))
+            if (copy) d.localCheckpoint(true) else d
+          })
+          case None if copy =>
+            Some(Try(mappedStream(LogRange(gt = Some(head), lte = Some(target))).localCheckpoint(true)))
+          case None => None
+        }
         try {
           val outcomes = FlumeDb.fanOut(lagging.map { case (m, since) =>
             val batch: () => DataFrame = shared match {
@@ -399,7 +417,7 @@ final class FlumeDb(
             s"flumedb-absorb-${m.name}" -> (() => absorbOrReplay(m, batch, target))
           })
           lagging.zip(outcomes).collect { case ((m, _), Some(e)) => m -> e }.toMap
-        } finally readBack.foreach(_.foreach(FlumeDb.releaseCheckpoint))
+        } finally if (copy) shared.foreach(_.foreach(FlumeDb.releaseCheckpoint))
       }
     val synced = ms.filterNot(failed.contains)
     lock.lock(); try { synced.foreach(_.loaded = true); parity.signalAll() } finally lock.unlock()

@@ -62,8 +62,14 @@ trait FlumeLog {
     * This default keeps nothing: the db reads the batch back. */
   private[core] def appendBatch(payload: DataFrame): FlumeLog.Appended = {
     val after = since
-    FlumeLog.Appended(after, append(payload), None, () => ())
+    FlumeLog.Appended(after, append(payload), rewrites, None, () => ())
   }
+
+  /** How many rewrites that remove rows (retract, expire) have started
+    * on this log. A batch kept by [[appendBatch]] is stale once this has
+    * moved past its `rewrites`: the rewrite may have removed some of its
+    * rows. A log that keeps no batch need not count them. */
+  private[core] def rewrites: Long = 0L
 
   /** Point lookup by seq. Pushed down to storage (parquet row-group
     * min/max skipping) rather than scanned. */
@@ -279,13 +285,14 @@ trait FlumeLog {
 }
 
 object FlumeLog {
-  /** One append: the log's `since` before (`after`) and after it, and,
-    * when the log keeps it, `batch`, which gives the rows `(after, since]`
-    * in seq order with the schema of the log's read, as the db's views
-    * would read them back. They stay readable until `release()`, which
-    * the appender calls once every reader is done. */
-  private[core] final case class Appended(after: Long, since: Long,
-      batch: Option[() => DataFrame], release: () => Unit)
+  /** One append: the log's `since` before (`after`) and after it, the
+    * log's [[FlumeLog.rewrites]] when the append began, and, when the log
+    * keeps it, `batch`: the rows `(after, since]` in seq order with the
+    * schema of the log's read, as the db's views would read them back
+    * had no rewrite run since. They stay readable until `release()`,
+    * which the appender calls once every reader is done. */
+  private[core] final case class Appended(after: Long, since: Long, rewrites: Long,
+      batch: Option[DataFrame], release: () => Unit)
 }
 
 /** Read-only log view over an existing ordered table (e.g. the driver's
@@ -771,6 +778,7 @@ final class ParquetLog(
     * bounded slices. */
   override private[core] def appendBatch(payload: DataFrame): FlumeLog.Appended = synchronized {
     val base = cursor
+    val rewritesAt = rewrites
     require(payload.schema.fieldNames.toSet == payloadSchema.fieldNames.toSet,
       s"append payload columns ${payload.schema.fieldNames.mkString(",")} " +
         s"must match the log schema ${payloadSchema.fieldNames.mkString(",")}")
@@ -792,7 +800,7 @@ final class ParquetLog(
           it.map { r => val out = Row.fromSeq(s +: r.toSeq); s += 1; out }
         }
         val withSeq = spark.createDataFrame(stamped, fullSchema)
-        lazy val delta = readOrdered(stamped, rows)
+        val delta = readOrdered(stamped, rows)
         // widen the bucket-stats manifest BEFORE the rows land: a crash
         // between the two leaves ranges too wide (safe), never too
         // narrow (which would prune a bucket holding matching rows)
@@ -813,7 +821,7 @@ final class ParquetLog(
           }
           // over the delta: a batch under the advisory partition size is
           // one declared partition, so this aggregates in one job with no
-          // exchange
+          // exchange (a bigger one keeps the exchange, as over withSeq)
           delta.withColumn(bucketCol, expr(s"`$seqCol` div $bucketSize"))
             .groupBy(col(bucketCol)).agg(aggCols.head, aggCols.tail: _*)
             .collect().foreach { r =>
@@ -854,28 +862,27 @@ final class ParquetLog(
         else withSeq.write.mode("append").parquet(dir)
         cursor = base + n
         emitSince()
-        Some(() => delta)
+        Some(delta)
       }
-      FlumeLog.Appended(base, cursor, batch, release)
+      FlumeLog.Appended(base, cursor, rewritesAt, batch, release)
     } catch { case e: Throwable => release(); throw e }
   }
 
   /** The stamped batch as [[read]] returns it: the read's schema (every
-    * field nullable), rows in seq order, one partition per
-    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` of cached `rows`
-    * (the count AQE gives a sorted read of the same rows). One partition
-    * is declared as such, so an aggregate over it plans no exchange. */
+    * field nullable), rows in seq order. A batch whose cached `rows` are
+    * under `spark.sql.adaptive.advisoryPartitionSizeInBytes` is one
+    * declared partition, so an aggregate over it plans no exchange and a
+    * view writes it as one file, as it writes the sorted read-back of
+    * such a batch. A bigger batch keeps the payload's partitions, which
+    * are already in seq order. */
   private def readOrdered(stamped: org.apache.spark.rdd.RDD[Row],
       rows: org.apache.spark.rdd.RDD[_]): DataFrame = {
     val advisory = spark.sessionState.conf.getConf(
       org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
-    val bytes = org.apache.spark.sql.graftbridge.StorageBridge.cachedBytes(rows)
-    val parts = math.max(1L, math.min(stamped.getNumPartitions.toLong,
-      (bytes + advisory - 1) / advisory)).toInt
-    val runs = spark.createDataFrame(
-      stamped.coalesce(parts, shuffle = false, Some(ParquetLog.InOrder)),
+    val df = spark.createDataFrame(stamped,
       org.apache.spark.sql.graftbridge.StorageBridge.asRead(fullSchema))
-    if (parts == 1) runs.coalesce(1) else runs
+    if (org.apache.spark.sql.graftbridge.StorageBridge.cachedBytes(rows) < advisory) df.coalesce(1)
+    else df
   }
 
   /** Convenience: append payload rows built on the driver. */
@@ -974,9 +981,13 @@ final class ParquetLog(
 
   override def probeRewriteFence(op: String): Unit = fenceRewrite(op)
 
+  @volatile private var rewriteCount = 0L
+  override private[core] def rewrites: Long = rewriteCount
+
   override protected def retractMarked(mark: DataFrame => DataFrame): Long = synchronized {
     val hitC = col(ParquetLog.hitCol)
     fenceRewrite("retract")
+    rewriteCount += 1
     if (cursor < 0) return 0L
     recoverCompactLeftovers(cleanStale = true)
     recoverRetractLeftovers()
@@ -1109,6 +1120,7 @@ final class ParquetLog(
   override def expire(throughSeq: Long): Long = synchronized {
     if (!bucketed) return super.expire(throughSeq)
     fenceRewrite("expire")
+    rewriteCount += 1
     if (cursor < 0 || throughSeq < 0) return 0L
     recoverCompactLeftovers(cleanStale = true)
     recoverRetractLeftovers()
@@ -1228,20 +1240,6 @@ object ParquetLog {
   /** Per-bucket [min,max] manifest for declared takedown-key columns
     * (`_`-prefixed: invisible to parquet file listing). */
   private[core] val statsMarker = "_graft_stats"
-
-  /** Coalesces into `n` runs of adjacent partitions, in partition order,
-    * so a batch in seq order stays in seq order (the default coalescer
-    * groups by locality and may reorder). */
-  private[core] object InOrder extends org.apache.spark.rdd.PartitionCoalescer with Serializable {
-    def coalesce(n: Int, parent: org.apache.spark.rdd.RDD[_]): Array[org.apache.spark.rdd.PartitionGroup] = {
-      val ps = parent.partitions
-      Array.tabulate(n) { i =>
-        val g = new org.apache.spark.rdd.PartitionGroup()
-        g.partitions ++= ps.slice((i.toLong * ps.length / n).toInt, ((i + 1L) * ps.length / n).toInt)
-        g
-      }
-    }
-  }
 
   /** Internal match-marker column added by the retraction paths. */
   private[graft] val hitCol = "__graft_hit"

@@ -1316,10 +1316,14 @@ class FlumeDbSpec extends SparkSpec {
     fromFiles.toArray.toSeq.map(_.asInstanceOf[Boolean])
 
   test("write-through: each view absorbs exactly log.stream((before, s]) of every append, with and without a mapper") {
-    for (withMapper <- Seq(false, true)) {
+    // no mapper, a row-wise mapper, and one that shuffles the rows out of seq order
+    val mappers: Seq[Option[DataFrame => DataFrame]] =
+      Seq(None, Some(_.withColumn("text", upper(col("text")))), Some(_.repartition(3, col("text"))))
+    for (f <- mappers) {
+      val withMapper = f.nonEmpty
       val log = bucketedLog()
       val fromFiles = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
-      val mapper = Option.when(withMapper)(recordingMapper(fromFiles, _.withColumn("text", upper(col("text")))))
+      val mapper = f.map(recordingMapper(fromFiles, _))
       val db = new FlumeDb(log, mapper = mapper)
       val (a, b) = (new KeepingView, new KeepingView)
       db.use("a", countingDef(a)).use("b", countingDef(b)).use("idx", IndexView(array(col("user_id").cast("string"))))
@@ -1412,21 +1416,65 @@ class FlumeDbSpec extends SparkSpec {
     def released(ids: Set[Int]): Boolean =
       (persisted & ids).isEmpty && !sc.getRDDStorageInfo.exists(i => ids.contains(i.id))
 
-    val db = new FlumeDb(bucketedLog())
-    val (a, b) = (new Recording, new Recording)
-    db.use("a", countingDef(a)).use("b", countingDef(b)).use("failing", countingDef(failing))
-    for ((n, fail) <- Seq((40, false), (30, false), (20, true))) {
-      throwNext.set(fail)
-      base = persisted
-      val s = db.append(eventDf(0, n))
-      assert(a.last.nonEmpty && a.last === b.last, "a and b absorb the append's cached batch")
-      assert(released(a.last), "the batch's blocks are released after the sync")
-      assert(failing.since === s && db.view("failing").lastError.isDefined === fail)
+    // under a mapper a and b absorb the sync's mapped copy of the batch, released with it
+    for (mapper <- Seq(None, Some((df: DataFrame) => df.withColumn("text", upper(col("text")))))) {
+      val db = new FlumeDb(bucketedLog(), mapper = mapper)
+      val (a, b) = (new Recording, new Recording)
+      db.use("a", countingDef(a)).use("b", countingDef(b)).use("failing", countingDef(failing))
+      for ((n, fail) <- Seq((40, false), (30, false), (20, true))) {
+        throwNext.set(fail)
+        base = persisted
+        val s = db.append(eventDf(0, n))
+        assert(a.last.nonEmpty && a.last === b.last, "a and b absorb the append's cached batch")
+        assert(a.last.size === (if (mapper.isEmpty) 1 else 2), "the batch, and the mapped copy under a mapper")
+        assert(released(a.last), "the batch's blocks are released after the sync")
+        assert(failing.since === s && db.view("failing").lastError.isDefined === fail)
+      }
+      db.close()
     }
-    db.close()
   }
 
-  test("write-through: a batch over the advisory partition size reaches the views in several partitions, in seq order") {
+  /** A [[KeepingView]] that a db-level takedown leaves in place: it keeps no rows of an append it has not absorbed. */
+  class RetractableKeepingView extends KeepingView with SeqRetractableView {
+    def retractLogSeqs(seqs: DataFrame, seqCol: String): Unit = ()
+    def expireLogSeqs(throughSeq: Long): Unit = ()
+  }
+
+  test("write-through: a takedown between the log's write and the sync leaves no removed row in any view") {
+    for (op <- Seq("retract", "expire")) {
+      val log = bucketedLog()
+      val db = new FlumeDb(log)
+      val (a, b) = (new RetractableKeepingView, new RetractableKeepingView)
+      db.use("a", countingDef(a)).use("b", countingDef(b))
+        .use("idx", IndexView(array(col("user_id").cast("string"))))
+      db.append(eventDf(0, 40))
+      val before = log.since
+      // a log listener fires inside the log's append, after the write and
+      // before the db's sync, on the appending thread
+      val armed = new java.util.concurrent.atomic.AtomicBoolean(false)
+      db.onSince(_ => if (armed.getAndSet(false)) op match {
+        case "retract" => assert(db.retract(col("user_id") === 3L) > 0L)
+        case "expire" => assert(db.expire(before + 20) > 0L)
+      })
+      armed.set(true)
+      val s = db.append(eventDf(40, 60))
+      assert(!armed.get, "the takedown ran inside the append")
+      val want = db.stream(LogRange(gt = Some(before), lte = Some(s))).collect().toSeq
+      assert(want.size < 60, s"the $op removed rows of the new batch")
+      for (v <- Seq(a, b)) {
+        assert(v.last._1 === s)
+        assert(v.last._3 === want, s"after the $op the view absorbs the log's rows, not the written batch")
+      }
+      val idx = db.view("idx").view.asInstanceOf[IndexView]
+      for (u <- 0 until 13) assert(
+        idx.get(u.toString).select("seq").collect().map(_.getLong(0)).sorted.toSeq ===
+          log.read.where(col("user_id") === u.toLong).select("seq").collect().map(_.getLong(0)).sorted.toSeq,
+        s"idx holds no row the $op removed (user $u)")
+      db.close()
+    }
+  }
+
+  test("write-through: a batch over the advisory partition size reaches the views in the payload's partitions, in seq order") {
     val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
     val prev = spark.conf.getOption(key)
     spark.conf.set(key, "1k")
@@ -1441,13 +1489,10 @@ class FlumeDbSpec extends SparkSpec {
       }
       db.use("a", countingDef(a)).use("b", countingDef(new KeepingView))
       val s = db.append(eventDf(0, 200))
-      assert(parts.toArray.toSeq === Seq(4), "one partition per advisory size, at most one per payload partition")
+      assert(parts.toArray.toSeq === Seq(4), "the payload's 4 partitions, not coalesced")
       assert(a.last._3 === log.stream(LogRange(lte = Some(s))).collect().toSeq)
       db.close()
     } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
-    // fewer partitions than the parent: runs of adjacent partitions, in partition order
-    val runs = spark.sparkContext.parallelize(1 to 100, 8).coalesce(3, shuffle = false, Some(ParquetLog.InOrder))
-    assert(runs.getNumPartitions === 3 && runs.collect().toSeq === (1 to 100))
   }
 
   val serveSchema: StructType = StructType(Seq(StructField("user_id", LongType),
@@ -1459,10 +1504,10 @@ class FlumeDbSpec extends SparkSpec {
         s"w${i % 11} v${i % 7} x${i % 5}")), 4), serveSchema)
       .withColumn("user_id", tick(col("user_id")))
   /** The serve workload's shape: a bucketed log with stats on `user_id`, and its five views. */
-  def serveDb(): (ParquetLog, FlumeDb, String) = {
+  def serveDb(mapper: Option[DataFrame => DataFrame] = None): (ParquetLog, FlumeDb, String) = {
     val root = java.nio.file.Files.createTempDirectory("graft-serve-shaped").toString
     val log = new ParquetLog(spark, s"$root/log", serveSchema, bucketSize = 4096L, statsColumns = Seq("user_id"))
-    val db = new FlumeDb(log)
+    val db = new FlumeDb(log, mapper = mapper)
     val vdir = s"$root/views"
     db.use("idx", PersistentIndexView.onColumn(vdir, "event_type"))
       .use("ht", PersistentHashtableView(vdir, "user_id"))
@@ -1490,6 +1535,16 @@ class FlumeDbSpec extends SparkSpec {
     assert(acc.value === 800L, "every reader of the batch reads its checkpointed rows")
     assert(log.read.count() === 800L && db.view("search").since === 799L)
     db.close()
+    // a mapper UDF, too, runs once per row per append for all five views
+    val mapped = spark.sparkContext.longAccumulator("mapper-evaluations")
+    val mtick = udf((v: Double) => { mapped.add(1L); v }).asNondeterministic()
+    val (mlog, mdb, _) = serveDb(Some(_.withColumn("value", mtick(col("value")))))
+    mdb.append(serveDf(0, 300))
+    assert(mapped.value === 300L)
+    mdb.append(serveDf(300, 500))
+    assert(mapped.value === 800L, "the views share one mapped copy of the batch")
+    assert(mlog.read.count() === 800L && mdb.view("search").since === 799L)
+    mdb.close()
   }
 
   test("serve-shaped append: one file per view batch, the log's file count per batch, and its Spark jobs") {
