@@ -936,7 +936,8 @@ final class FlumeDb(
       // domain's bucket stats), one pruned scan per predicate — all
       // yielding the universal currency, seqs
       val domainSeqs = idIntents.groupBy(_._1).toSeq.sortBy(_._1).map { case (idCol, ps) =>
-        val ids = ps.map(p => log.spark.read.parquet(p._2.toString + ".ids"))
+        val ids = ps.map(p => graft.views.ParquetFooters.read(
+            log.spark, java.nio.file.Paths.get(p._2.toString + ".ids")))
           .reduce(_ unionByName _)
         matchedSeqsPruned(ids, idCol)
       }

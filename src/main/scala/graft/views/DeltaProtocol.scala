@@ -1,6 +1,8 @@
 package graft.views
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.StorageBridge
+import org.apache.spark.sql.types.StructType
 
 import java.nio.file.{Files, Path, Paths}
 
@@ -22,6 +24,7 @@ import java.nio.file.{Files, Path, Paths}
   * once, for all views.
   */
 private[views] trait DeltaProtocol {
+  protected def spark: SparkSession
   /** Store directory (constructor parameter of the concrete view). */
   protected def dir: String
   /** Mounted view version (bump ⇒ destroy + rebuild at open). */
@@ -30,6 +33,7 @@ private[views] trait DeltaProtocol {
   protected lazy val root: Path = Paths.get(dir)
   private lazy val manifest: Path = root.resolve("MANIFEST")
   @volatile protected var sinceSeq: Long = -1L
+  @volatile private var written: Option[StructType] = None
 
   def since: Long = sinceSeq
 
@@ -182,6 +186,25 @@ private[views] trait DeltaProtocol {
 
   protected def batchPath(upto: Long): Path = root.resolve(s"batch=$upto")
 
+  /** Land `df` as the delta `batch=<upto>/`. */
+  protected def writeDelta(df: DataFrame, upto: Long): Unit = {
+    df.write.mode("overwrite").parquet(batchPath(upto).toString)
+    wrote(df)
+  }
+
+  /** `df`, just written as a delta, gives the stored schema. */
+  protected def wrote(df: DataFrame): Unit = written = Some(StorageBridge.asRead(df.schema))
+
+  /** The deltas' schema as Spark reads it back (every field nullable):
+    * what this view last wrote, or after a reopen one footer of the
+    * newest committed delta, read on the driver. None for an empty
+    * store. A delta read given it runs no schema-inference job. */
+  protected def storedSchema: Option[StructType] = written.orElse {
+    written = committedBatchDirs().reverseIterator
+      .flatMap(ParquetFooters.schema(spark, _)).nextOption()
+    written
+  }
+
   protected def batchUpto(p: Path): Long =
     p.getFileName.toString.stripPrefix("batch=").toLong
 
@@ -200,6 +223,7 @@ private[views] trait DeltaProtocol {
 
   def destroy(): Unit = {
     sinceSeq = -1L
+    written = None
     if (Files.isDirectory(root)) {
       FsLists.walkDeepestFirst(root).filterNot(_ == root).foreach(Files.delete)
     }
@@ -233,39 +257,20 @@ private[views] trait FeatureTableDeltas extends CompactableDeltas
   * so the travel window is the uncompacted delta chain: the same trade
   * a compacted changelog topic makes. */
 private[views] trait CompactableDeltas extends DeltaProtocol {
-  protected def spark: SparkSession
-
   /** Reader-visible fold of the unioned delta rows: identity for
     * append-only views (index postings, signature rows); overridden
     * where reads fold (hashtable's latest-per-key). */
   protected def mergeDeltas(union: DataFrame): DataFrame = union
 
-  /** Read a set of delta dirs as one frame (IVF overrides to keep its
-    * partition-column discovery). */
+  /** Read a set of delta dirs as one frame, with the stored schema (IVF
+    * overrides to keep its partition-column discovery). */
   protected def readDeltas(dirs: Seq[Path]): DataFrame =
-    spark.read.parquet(dirs.map(_.toString): _*)
+    storedSchema.fold(spark.read)(s => spark.read.schema(s)).parquet(dirs.map(_.toString): _*)
 
   /** Write the merged base delta (IVF overrides to keep its cell
     * partitioning). */
   protected def writeMerged(df: DataFrame, path: Path): Unit =
     df.write.parquet(path.toString)
-
-  /** Exact row count of one FLAT delta dir from its parquet footers — a
-    * driver-side metadata read, NO Spark job, milliseconds per file:
-    * the tombstone-vs-rewrite decision of a fused multi-delta takedown
-    * needs each hit delta's true total, and scheduling a count job per
-    * delta is exactly the fixed-latency tax the fusion removes. */
-  protected def footerRowCount(delta: Path): Long = {
-    val conf = spark.sessionState.newHadoopConf()
-    FsLists.children(delta)
-      .filter(_.getFileName.toString.endsWith(".parquet"))
-      .map { f =>
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(f.toUri), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getRecordCount finally r.close()
-      }.sum
-  }
 
   /** When > 0, absorb paths call [[maybeCompact]] after committing each
     * delta, collapsing the chain whenever the committed delta count
@@ -487,9 +492,9 @@ private[views] trait CompactableDeltas extends DeltaProtocol {
         import org.apache.spark.sql.functions.col
         if (Files.exists(retractTmp)) FsLists.walkDeepestFirst(retractTmp).foreach(Files.delete)
         // unit files hold the stored data columns (partition values are
-        // directory-encoded): read the one directory, keep the misses,
-        // preserving the stored column order
-        val raw = spark.read.parquet(unit.toString)
+        // directory-encoded): read the one directory with its own footer
+        // schema, keep the misses, preserving the stored column order
+        val raw = ParquetFooters.read(spark, unit)
         m(raw).where(!col(graft.core.ParquetLog.hitCol))
           .select(raw.columns.toSeq.map(n => col(s"`$n`")): _*)
           .write.parquet(retractTmp.toString)
@@ -506,6 +511,7 @@ private[views] trait CompactableDeltas extends DeltaProtocol {
     if (Files.exists(compactMarker)) Files.delete(compactMarker)
     if (Files.exists(compactTmp)) FsLists.walkDeepestFirst(compactTmp).foreach(Files.delete)
     writeMerged(merged, compactTmp)
+    wrote(merged)
     Files.writeString(compactMarker, sinceSeq.toString) // tmp is now the commit point
     dirs.foreach(p => FsLists.walkDeepestFirst(p).foreach(Files.delete))
     Files.move(compactTmp, batchPath(sinceSeq))

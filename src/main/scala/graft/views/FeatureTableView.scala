@@ -3,8 +3,6 @@ package graft.views
 import graft.core.FlumeView
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import java.nio.file.Path
-
 /** The ONE stored feature table: the shared body of every dedup
   * artifact view (MinHash signatures, image/video dHashes, text and
   * audio grams, audio fingerprints, embedding sketches). Each absorbed
@@ -43,10 +41,6 @@ abstract class FeatureTableView(
   /** The stored columns of a feature frame. */
   protected def project(features: DataFrame): DataFrame
 
-  /** Read committed deltas as the table (default: the shared
-    * [[readDeltas]]). */
-  protected def readTable(dirs: Seq[Path]): DataFrame = readDeltas(dirs)
-
   def absorb(entries: DataFrame, upto: Long): Unit =
     absorbFeatures(features(entries), upto)
 
@@ -54,17 +48,17 @@ abstract class FeatureTableView(
     * curator) that already paid the extractor for their own dedup
     * decision and must not pay it again. */
   def absorbFeatures(features: DataFrame, upto: Long): Unit = {
-    project(features).write.mode("overwrite").parquet(batchPath(upto).toString)
+    writeDelta(project(features), upto)
     sinceSeq = upto
     writeManifest()
     maybeCompact()
   }
 
-  /** The accumulated stored table. */
+  /** The accumulated stored table, read with the stored schema. */
   def table: DataFrame = {
     val dirs = committedBatchDirs()
     require(dirs.nonEmpty, s"$tableName empty — absorb a batch first")
-    readTable(dirs)
+    readDeltas(dirs)
   }
 
   override def frameOption: Option[DataFrame] =

@@ -50,7 +50,7 @@ final class IVFIndexView(
     cents.getOrElse {
       val loaded =
         if (Files.isDirectory(centroidsDir))
-          spark.read.parquet(centroidsDir.toString)
+          ParquetFooters.read(spark, centroidsDir)
             .select(col("cid"), col("vec")).collect()
             .map(r => (r.getLong(0), r.getAs[scala.collection.Seq[Float]](1).toSeq))
             .sortBy(_._1)
@@ -80,7 +80,7 @@ final class IVFIndexView(
   private def seededCids(): Set[Long] =
     if (!Files.isDirectory(centroidsDir)) Set.empty
     else {
-      val df = spark.read.parquet(centroidsDir.toString)
+      val df = ParquetFooters.read(spark, centroidsDir)
       val flagged =
         if (df.columns.contains("seeded")) df.where(col("seeded")) else df
       flagged.select("cid").collect().map(_.getLong(0)).toSet
@@ -295,7 +295,7 @@ final class IVFIndexView(
       cents = None
       return
     }
-    val raw = spark.read.parquet(centroidsDir.toString)
+    val raw = ParquetFooters.read(spark, centroidsDir)
     val flagged = if (raw.columns.contains("seeded")) raw
       else raw.withColumn("seeded", lit(true))
     val rows = flagged.select("cid", "vec", "seeded").collect()

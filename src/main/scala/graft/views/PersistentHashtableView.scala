@@ -40,24 +40,31 @@ final class PersistentHashtableView(
   override protected def mergeDeltas(union: DataFrame): DataFrame = latest(union)
 
   def absorb(entries: DataFrame, upto: Long): Unit = {
-    latest(entries)
-      .write.mode("overwrite").parquet(batchPath(upto).toString)
+    writeDelta(latest(entries), upto)
     sinceSeq = upto
     writeManifest() // delta durable before the cursor moves
     maybeCompact()
   }
 
-  /** Merged view of all committed deltas (the LSM read path). */
-  def frame: DataFrame = {
-    val dirs = committedBatchDirs().map(_.toString)
+  private def deltas: DataFrame = {
+    val dirs = committedBatchDirs()
     if (dirs.isEmpty) throw new IllegalStateException("hashtable empty")
-    latest(spark.read.parquet(dirs: _*))
+    readDeltas(dirs)
   }
+
+  /** Merged view of all committed deltas (the LSM read path). */
+  def frame: DataFrame = latest(deltas)
 
   override def frameOption: Option[DataFrame] =
     if (committedBatchDirs().isEmpty) None else Some(frame)
 
-  def get(key: Any): DataFrame = frame.where(col(keyCol) === lit(key))
+  /** One key's latest row, the rows of `frame.where(key === k)`: each
+    * delta holds at most one row per key, stored `(key, payload…)` as
+    * `frame` returns it, so the key's newest seq is its latest. A top-1
+    * sort over the key's rows runs as one job, where `frame`'s
+    * all-keys aggregate needs an exchange. */
+  def get(key: Any): DataFrame =
+    deltas.where(col(keyCol) === lit(key)).orderBy(col(seqCol).desc).limit(1)
 
   /** Db-level takedown IN PLACE (∝ affected keys, not ∝ log): the store
     * keeps per-batch latests only, so a pure row delete could surface a
@@ -115,7 +122,7 @@ final class PersistentHashtableView(
     val olderHit = dirs.init.filter(d => perBatch.contains(batchUpto(d)))
     if (olderHit.nonEmpty) {
       val (emptied, partial) = olderHit.partition(d =>
-        perBatch(batchUpto(d)) >= footerRowCount(d))
+        perBatch(batchUpto(d)) >= ParquetFooters.rowCount(spark, d))
       val emptyNames = emptied.map(d => s"batch=${batchUpto(d)}")
       val rwNames = partial.map(d => s"batch=${batchUpto(d)}")
       if (java.nio.file.Files.exists(retractTmp))

@@ -3,6 +3,7 @@ package graft.views
 import graft.core.ParquetLog
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.StorageBridge
 
 import java.nio.file.{Files, Paths}
 
@@ -82,10 +83,11 @@ object Retraction {
           "(deleting its durable id list here would abandon an acknowledged erasure)")
     val dir = idsDir(intentFile)
     deleteDirIfExists(dir) // a stale UNCOMMITTED list from a prior crash
-    ids.select(col(idCol)).distinct().write.parquet(dir)
+    val list = ids.select(col(idCol)).distinct()
+    list.write.parquet(dir)
     // the parquet list is complete (_SUCCESS) — NOW commit the intent
     writeIntent(intentFile, BatchSentinel)
-    val durable = log.spark.read.parquet(dir)
+    val durable = log.spark.read.schema(StorageBridge.asRead(list.schema)).parquet(dir)
     val removed = log.retractIds(durable, idCol)
     retractFeatures(durable)
     Files.delete(Paths.get(intentFile))
@@ -127,7 +129,7 @@ object Retraction {
     val content = Files.readString(p).trim
     val replayed: Seq[Long] =
       if (content == BatchSentinel) {
-        val durable = log.spark.read.parquet(idsDir(intentFile))
+        val durable = ParquetFooters.read(log.spark, Paths.get(idsDir(intentFile)))
         log.retractIds(durable, idCol)
         onBatch(durable)
         Seq(-1L) // batch form: ids are not driver-enumerated

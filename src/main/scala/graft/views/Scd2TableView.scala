@@ -55,8 +55,7 @@ final class Scd2TableView(
     * land it as the delta. O(batch) — the stored chain is never
     * touched. */
   def absorb(entries: DataFrame, upto: Long): Unit = {
-    Scd2.dimension(entries, keyCol, seqCol, valueCols)
-      .write.mode("overwrite").parquet(batchPath(upto).toString)
+    writeDelta(Scd2.dimension(entries, keyCol, seqCol, valueCols), upto)
     sinceSeq = upto
     writeManifest()
     maybeCompact()

@@ -36,10 +36,6 @@ final class SignatureTableView(
   protected def project(features: DataFrame): DataFrame =
     features.select(col("id").cast("long").as("id"), col("hs"), col("sig"))
 
-  // the written schema, given: no footer-inference job per read
-  override protected def readTable(dirs: Seq[java.nio.file.Path]): DataFrame =
-    spark.read.schema(SignatureTableView.schema).parquet(dirs.map(_.toString): _*)
-
   /** Absorb a PRECOMPUTED `(id, hs, sig)` delta. */
   def absorbSigs(sigTable: DataFrame, upto: Long): Unit = absorbFeatures(sigTable, upto)
 

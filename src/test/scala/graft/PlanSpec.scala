@@ -938,4 +938,21 @@ class PlanSpec extends SparkSpec {
     assert(s.contains("partial_count") || s.contains("partial_sum"),
       "tf aggregation must have map-side partials")
   }
+
+  test("a durable hashtable get is a top-1 over the key's rows, with no exchange") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    val schema = StructType(Seq(StructField("user_id", LongType), StructField("tag", StringType)))
+    val tmp = java.nio.file.Files.createTempDirectory("graft-plan-ht").toString
+    val db = new graft.core.FlumeDb(new graft.core.ParquetLog(spark, s"$tmp/log", schema))
+    db.use("ht", graft.views.PersistentHashtableView(s"$tmp/views", "user_id"))
+    Seq(Seq(Row(1L, "a"), Row(2L, "b")), Seq(Row(1L, "c"))).foreach(rs =>
+      db.append(spark.createDataFrame(spark.sparkContext.parallelize(rs), schema)))
+    val get = db.view("ht").view.asInstanceOf[graft.views.PersistentHashtableView].get(1L)
+    val s = planString(get)
+    assert(s.contains("TakeOrderedAndProject") && !s.contains("Exchange"),
+      s"a get must be a top-1, not the all-keys aggregate:\n${s.take(3000)}")
+    assert(get.collect().map(_.getAs[String]("tag")).toSeq === Seq("c"))
+    db.close()
+  }
 }
