@@ -3,8 +3,9 @@ package graft.streaming
 import graft.core.{FlumeLog, LogRange, ParquetLog}
 import graft.views.{AudioFingerprintTableView, EmbeddingSigTableView, FeatureTableView,
   FrameHashTableView, PhashTableView, SignatureTableView}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.SessionBridge
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.storage.StorageLevel
 
@@ -228,6 +229,31 @@ object MediaStreamingCurator {
   private[streaming] val batchTrace: Boolean =
     java.lang.Boolean.getBoolean("graft.debug.batchTrace")
 
+  /** Run every later plan of `session` interpreted: no whole-stage
+    * code, and each projection, predicate and ordering built by its
+    * interpreted factory. For the per-query session clone that
+    * Structured Streaming hands a `foreachBatch`, which no other query
+    * sees. Spark caches generated classes by (class loader, code), 100
+    * by default (`spark.sql.codegen.cache.maxEntries`, static), and a
+    * curate cycle needs about 150–200, so with codegen each batch
+    * compiled most of them again: 0.7–1.2 s per batch, more than its
+    * data cost. The per-row work stays in the native kernels, whose
+    * `nullSafeEval` calls the kernel their generated code calls.
+    * `factoryMode` is an internal Spark conf
+    * (`SQLConf.CODEGEN_FACTORY_MODE`); InterpretedKernelSpec and
+    * StreamingSpec pin what it changes. */
+  private[graft] def interpreted(session: SparkSession): Unit = {
+    session.conf.set("spark.sql.codegen.wholeStage", "false")
+    session.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+  }
+
+  /** The batch's highest seq, -1 for an empty batch, in ONE job with no
+    * exchange that also fills a persisted batch's cache: a max folded
+    * over the partitions on the driver. `agg(max)` took 3 jobs. */
+  private[streaming] def maxSeq(raw: DataFrame, seqCol: String): Long =
+    raw.select(col(seqCol)).queryExecution.toRdd.map(_.getLong(0))
+      .fold(-1L)((a, b) => math.max(a, b))
+
   /** The curation decision for one batch — a PURE function of
     * (batch, stored feature state), shared by the live stream and any
     * crash-window replay: floor once, featurize once, drop the higher
@@ -254,7 +280,10 @@ object MediaStreamingCurator {
     val crossIn = feats.join(selfDrop, Seq(idCol), "left_anti").persist()
     val crossDrop = binding.storedOption match {
       case Some(stored) =>
-        binding.crossPairs(crossIn, stored).select(col("id_a").as(idCol)).distinct()
+        // moved onto the batch's session: a join rooted at the stored
+        // table would otherwise plan under the user's session
+        binding.crossPairs(crossIn, SessionBridge.on(raw.sparkSession, stored))
+          .select(col("id_a").as(idCol)).distinct()
       case None => selfDrop.limit(0)
     }
     val keptIds = binding.eligibleIds(staged, feats, idCol)
@@ -337,11 +366,9 @@ final class MediaStreamingCurator(
       .trigger(Trigger.ProcessingTime(0))
       .outputMode(OutputMode.Append())
       .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        // ONE job both materializes the batch and probes it: a null max
-        // is an empty batch
+        MediaStreamingCurator.interpreted(batch.sparkSession)
         val raw = batch.persist()
-        val top = raw.agg(max(col(seqCol))).head()
-        val upto = if (top.isNullAt(0)) -1L else top.getLong(0)
+        val upto = MediaStreamingCurator.maxSeq(raw, seqCol)
         // empty, or a replay after the absorb committed: skip whole
         if (upto <= binding.since) raw.unpersist(blocking = false)
         else {

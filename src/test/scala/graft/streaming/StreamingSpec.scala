@@ -2490,4 +2490,92 @@ class StreamingSpec extends SparkSpec {
         assert(out.count() >= 5L, s"$m: the re-uploads must pair with their stored copies")
     } finally sc.removeSparkListener(listener)
   }
+
+  test("streaming curator: batches run interpreted on the stream's own session; from the third on no class compiles") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    import scala.jdk.CollectionConverters._
+    val docSchema = StructType(Seq(
+      StructField("doc_id", LongType), StructField("text", StringType)))
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    val srcLog = new ParquetLog(spark, tmp("graft-cg-src"), docSchema, bucketSize = 8192L)
+    val curLog = new ParquetLog(spark, tmp("graft-cg-dst"), docSchema, bucketSize = 8192L)
+    val sigView = new graft.views.SignatureTableView(spark, s"${tmp("graft-cg-sig")}/s", 1, "doc_id", "text")
+    val rnd = new scala.util.Random(11)
+    val words = Vector.tabulate(300)(i => s"w$i") ++
+      Vector("the", "and", "of", "to", "a", "in", "is", "it", "that", "for")
+    var nextId = 0L
+    // fresh docs; every fifth also lands as an exact copy and a one-word edit
+    def docs(n: Int) = {
+      val texts = Seq.fill(n)(Seq.fill(40)(words(rnd.nextInt(words.size))).mkString(" "))
+      val rows = texts.zipWithIndex.flatMap { case (t, i) =>
+        t +: (if (i % 5 == 0) Seq(t, t.replaceFirst("w\\d+", "edited")) else Nil)
+      }.map { t => nextId += 1; Row(nextId, t) }
+      spark.createDataFrame(rows.asJava, docSchema)
+    }
+    val confs = Seq("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    val before = confs.map(spark.conf.get)
+    val cur = new StreamingCurator(srcLog, curLog, sigView,
+      java.nio.file.Paths.get(tmp("graft-cg-c"), "_curate_commit").toString,
+      checkpointDir = Some(tmp("graft-cg-ck")))
+    val (compiled, compileMs) = try {
+      (0 until 6).map { i =>
+        srcLog.append(docs(if (i % 2 == 0) 40 else 120)) // the raw append is outside the window
+        val (n0, t0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+        cur.awaitParity()
+        (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0, (CodeGenerator.compileTime - t0) / 1000000)
+      }.unzip
+    } finally cur.stop()
+    println(s"[compile] classes compiled per curator batch: ${compiled.mkString(" ")}" +
+      s" (${compileMs.mkString(" ")} ms)")
+    assert(sigView.since === srcLog.since)
+    assert(curLog.read.count() > 0L)
+    assert(compiled.drop(2).forall(_ == 0L),
+      s"the third and later batches must compile no class, compiled ${compiled.mkString(" ")}")
+    // the user's session keeps its confs and still generates code
+    assert(confs.map(spark.conf.get) === before)
+    assert(before === Seq("true", "FALLBACK"))
+    val plan = spark.range(1000).where(col("id") % 7 === 3).select((col("id") * 2).as("x"))
+      .queryExecution.executedPlan
+    assert(plan.exists(_.isInstanceOf[WholeStageCodegenExec]), s"main-session plan lost codegen:\n$plan")
+  }
+
+  test("curator batch probe: the max seq and a filled cache in one job, no exchange") {
+    import org.apache.spark.sql.{DataFrame, Dataset}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    val sc = spark.sparkContext
+    val log = new ParquetLog(spark, java.nio.file.Files.createTempDirectory("graft-probe").toString, schema)
+    log.appendRows((1L to 40L).map(Row(_)))
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    def cached(df: DataFrame): Boolean = df.queryExecution.withCachedData.collectFirst {
+      case r: InMemoryRelation => r.cacheBuilder.isCachedColumnBuffersLoaded
+    }.getOrElse(false)
+    val probed = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Boolean, Boolean)]()
+    sc.addSparkListener(listener)
+    try {
+      val q = log.readStream.writeStream.foreachBatch { (batch: Dataset[Row], _: Long) =>
+        val raw = batch.persist()
+        val wasCached = cached(raw)
+        sc.setJobGroup("curator-probe", "probe")
+        val upto = try MediaStreamingCurator.maxSeq(raw, "seq") finally sc.clearJobGroup()
+        probed.add((upto, wasCached, cached(raw)))
+        raw.unpersist(blocking = true)
+        ()
+      }.start()
+      try q.processAllAvailable() finally q.stop()
+      sc.setJobGroup("curator-probe-drain", "drain")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains("curator-probe-drain") && System.nanoTime() < deadline) Thread.sleep(20)
+    } finally sc.removeSparkListener(listener)
+    assert(probed.toArray.toSeq === Seq((39L, false, true)), "one batch: its max seq, the cache filled")
+    assert(jobs.toArray.count(_ == "curator-probe") === 1, "the probe is one job")
+    assert(MediaStreamingCurator.maxSeq(log.read.where(col("seq") < 0L), "seq") === -1L,
+      "an empty batch probes -1")
+  }
 }
