@@ -19,7 +19,7 @@ object Bench {
     // capture form (sbt-wrapped vs plain java), so the total line
     // carries the 1-minute loadavg at start and end plus the launcher —
     // a judge reading two BENCH files can see whether movement is code
-    // or environment before reaching for TimeOne.
+    // or environment before reaching for TimeMany.
     def loadavg: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val loadStart = loadavg

@@ -90,7 +90,7 @@ private[graft] object EntryHelpers {
       scala.util.Try(log.close())
       // the log's temp dir holds a full events copy — delete it, or a
       // JVM cycling sessions accumulates one copy per restart
-      deleteTree(log.dir)
+      FsLists.deleteTree(log.dir)
     }
 
   // events re-laid-out as a range-bucketed directory table keyed on
@@ -176,7 +176,7 @@ private[graft] object EntryHelpers {
       val tmp = java.nio.file.Files.createTempDirectory("graftpqcodes").toString
       graft.ops.Pq.encode(emb, model).write.mode("overwrite").parquet(tmp)
       (model, tmp)
-    }(e => deleteTree(e._2))
+    }(e => FsLists.deleteTree(e._2))
     (model, s.read.parquet(path))
   }
 
@@ -192,7 +192,7 @@ private[graft] object EntryHelpers {
       graft.ops.Pq.encodeWithCells(emb, model, cents)
         .write.mode("overwrite").partitionBy("cell").parquet(tmp)
       (model, cents, tmp)
-    }(e => deleteTree(e._3))
+    }(e => FsLists.deleteTree(e._3))
     (model, cents, s.read.parquet(path))
   }
 
@@ -460,7 +460,7 @@ private[graft] object EntryHelpers {
     val tpl = Fixtures.shared("tpl:" + name, dir) {
       val d = java.nio.file.Files.createTempDirectory(s"$name-tpl").toString
       build(d); d
-    }(deleteTree)
+    }(d => FsLists.deleteTree(d))
     val dst = java.nio.file.Files.createTempDirectory(name).toString
     copyTree(tpl, dst)
     dst
@@ -476,7 +476,7 @@ private[graft] object EntryHelpers {
     * and the process-exit sweep reclaims the last one. */
   val liveClones = Fixtures.shared("live-clones", "")(
     scala.collection.concurrent.TrieMap.empty[(String, String), String])(
-    _.values.foreach(d => scala.util.Try(deleteTree(d))))
+    _.values.foreach(d => scala.util.Try(FsLists.deleteTree(d))))
   def clonedFixtureLazy(name: String, dir: String)(build: String => Unit): String = {
     val dst = clonedFixture(name, dir)(build)
     liveClones.put((name, dir), dst).foreach(deleteTreeAsync)
@@ -525,7 +525,7 @@ private[graft] object EntryHelpers {
   // them.
   def stableTmpDir(name: String, dir: String): String =
     Fixtures.shared("stable:" + name, dir)(
-      java.nio.file.Files.createTempDirectory(name).toString)(deleteTree)
+      java.nio.file.Files.createTempDirectory(name).toString)(d => FsLists.deleteTree(d))
 
   // Off-thread fixture teardown: build-and-destroy queries (reingest,
   // stream-curate, expire) delete their per-rep temp trees through this
@@ -543,22 +543,13 @@ private[graft] object EntryHelpers {
   }
   def deleteTreeAsync(dir: String): Unit = {
     val _ = sweepPool.submit(new Runnable {
-      override def run(): Unit = scala.util.Try(deleteTree(dir))
+      override def run(): Unit = scala.util.Try(FsLists.deleteTree(dir))
     })
   }
 
   def round4(x: Double): Double =
     BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble
 
-  /** Reclaim a per-execution fixture temp tree (no-op if absent) —
-    * bench runs each query lambda repeatedly across three SFs, so
-    * fixtures that build throwaway logs/views must delete them once the
-    * result frame is materialized. */
-  def deleteTree(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p))
-      graft.views.FsLists.walkDeepestFirst(p).foreach(java.nio.file.Files.delete)
-  }
 
 
   /** DuckDB oracles. Keys absent here (approximate / hash-seeded /

@@ -72,5 +72,5 @@ private[graft] object Fixtures {
       val tmp = java.nio.file.Files.createTempDirectory(name).toString
       write(tmp)
       tmp
-    }(EntryHelpers.deleteTree)
+    }(d => graft.views.FsLists.deleteTree(d))
 }

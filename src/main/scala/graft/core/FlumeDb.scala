@@ -1,7 +1,10 @@
 package graft.core
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, expr, lit}
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 import java.util.concurrent.{ConcurrentHashMap, TimeUnit}
 import java.util.concurrent.locks.ReentrantLock
@@ -285,23 +288,11 @@ final class FlumeDb(
       val base = log.stream(r.copy(seqs = true))
       val m = mapper.fold(base)(f => f(base))
       if (!r.seqs) m.drop(log.seqCol) else m
-    } else {
-      var df = mapped
-      val sc = log.seqCol
-      import org.apache.spark.sql.functions.col
-      r.gt.foreach(v => df = df.where(col(sc) > v))
-      r.gte.foreach(v => df = df.where(col(sc) >= v))
-      r.lt.foreach(v => df = df.where(col(sc) < v))
-      r.lte.foreach(v => df = df.where(col(sc) <= v))
-      df = if (r.reverse) df.orderBy(col(sc).desc) else df.orderBy(col(sc))
-      r.limit.foreach(n => df = df.limit(n))
-      if (!r.seqs) df.drop(sc) else df
-    }
+    } else r.applyTo(mapped, log.seqCol)
   }
 
   def get(seq: Long): DataFrame = {
     throwIfClosed(); count("get")
-    import org.apache.spark.sql.functions.{col, lit}
     observed(mapped.where(col(log.seqCol) === lit(seq)), "get")
   }
 
@@ -401,7 +392,7 @@ final class FlumeDb(
           (if (fresh.nonEmpty) mapper.nonEmpty else head >= 0)
         val shared: Option[Try[DataFrame]] = fresh match {
           case Some(b) => Some(Try {
-            val d = mapper.fold(b)(f => f(b).orderBy(org.apache.spark.sql.functions.col(log.seqCol)))
+            val d = mapper.fold(b)(f => f(b).orderBy(col(log.seqCol)))
             if (copy) d.localCheckpoint(true) else d
           })
           case None if copy =>
@@ -458,21 +449,18 @@ final class FlumeDb(
     * Welford mean or a bloom filter cannot un-absorb a row any other
     * way. Runs under the db lock (no concurrent append/sync). Returns
     * the number of log rows removed. */
-  def retract(cond: org.apache.spark.sql.Column): Long = {
+  def retract(cond: Column): Long = retractWhere(cond, None)
+
+  /** Crash-durable [[retract]]: the removed seq set is made durable as
+    * a parquet list plus an atomic intent marker BEFORE the log is
+    * touched, and a death in any later window is closed by
+    * [[recoverRetract]] at the next open (see `takedown`). */
+  def retract(cond: Column, intentFile: String): Long = retractWhere(cond, Some(intentFile))
+
+  private def retractWhere(cond: Column, intent: Option[String]): Long = {
     throwIfClosed(); count("retract")
-    lock.lock()
-    try {
-      log.probeRewriteFence("retract")
-      // the removed seq set must outlive the rewrite it prunes:
-      // materialize BEFORE the log swap (the repo's persist-fence rule);
-      // the auxiliary scans ride the log's bucket-stats pruning
-      val matched = log.readWherePruned(cond)
-      val seqs = matched.select(log.seqCol).localCheckpoint(true)
-      val prepared = prepareInversions(matched)
-      val removed = log.retract(cond)
-      if (removed > 0) { prepared.foreach(_._2()); retractViews(seqs, prepared.map(_._1).toSet); fireRetractHooks(seqs) }
-      removed
-    } finally lock.unlock()
+    takedown(log.readWherePruned(cond).select(log.seqCol), _ => log.readWherePruned(cond),
+      _ => log.retract(cond), intent)
   }
 
   /** Takedown by id list — the batch form: `ids` stays a DataFrame end
@@ -482,20 +470,100 @@ final class FlumeDb(
     * [[retract]]. */
   def retractIds(ids: DataFrame, idCol: String): Long = {
     throwIfClosed(); count("retract")
+    lazy val matched = rowsMatching(ids, idCol)
+    takedown(matched.select(log.seqCol), _ => matched, _ => log.retractIds(ids, idCol), None)
+  }
+
+  /** Crash-durable [[retractIds]]. The matched SEQ set (not the id list)
+    * is what goes durable — it is the currency every replay arm speaks:
+    * the log rewrite replays as `retractIds(seqs, seqCol)` and the view
+    * pass as the same anti-join, both idempotent. */
+  def retractIds(ids: DataFrame, idCol: String, intentFile: String): Long = {
+    throwIfClosed(); count("retract")
+    takedown(rowsMatching(ids, idCol).select(log.seqCol), rowsMatching(_, log.seqCol),
+      s => log.retractIds(s, log.seqCol), Some(intentFile))
+  }
+
+  /** Log rows whose `idCol` appears in `ids`, with the match scan pruned
+    * to the buckets the log's stats manifest cannot prove id-free. */
+  private def rowsMatching(ids: DataFrame, idCol: String): DataFrame =
+    ParquetLog.hitMarker(ids, idCol, 4L * 1000 * 1000)(log.readForTakedownIds(ids, idCol))
+      .where(col(ParquetLog.hitCol)).drop(ParquetLog.hitCol)
+
+  // ---- durable (intent-logged) takedown -----------------------------------
+  // Without an intent a takedown is atomic under the db lock but NOT
+  // crash-durable across the log/view boundary: a JVM death between the
+  // log rewrite and the view pass leaves mounted views holding GHOST
+  // rows for seqs the log no longer serves — and the incremental build
+  // loop can never remove them (view cursors already passed those
+  // seqs). The durable currency is the REMOVED SEQ SET: a predicate
+  // cannot replay across JVMs (closures don't serialize into an intent
+  // file) but its matched seqs can — and every replay arm is idempotent
+  // (log retract of absent seqs rewrites nothing; a seq anti-join on a
+  // clean view is a no-op; destroy + rebuild is idempotent by
+  // construction). The on-disk protocol is [[TakedownIntent]]'s.
+
+  /** The one takedown pass every retract arm and the queue drain run:
+    * fence probe → removed seq set → inversion prepare → log rewrite →
+    * view pass → hooks. `seqs` is the matched seq set, `matched` the
+    * removed rows as the invertible folds read them and `rewrite` the
+    * log rewrite; both are given the removed seq set as it was
+    * checkpointed. Without an intent the seq set is checkpointed and
+    * nothing else is written. With one, the seq set goes durable first:
+    * the parquet list and the marker (which records the mounted view
+    * names, so [[recoverRetract]] can refuse to replay while one is
+    * missing) are committed after the fence probe — a fence refusal
+    * mutates nothing, so it must not latch an open intent — and the
+    * list is read back and checkpointed, because the retract hooks may
+    * evaluate the frame after the list is deleted. The marker and the
+    * list clear before the hooks fire: the erasure is complete by then,
+    * so a throwing hook surfaces to the caller without latching an
+    * intent that would block all future takedowns. A zero-match pass
+    * has no ghost rows to purge and skips the view pass and the hooks. */
+  private def takedown(seqs: => DataFrame, matched: DataFrame => DataFrame,
+      rewrite: DataFrame => Long, intent: Option[String]): Long = {
     lock.lock()
     try {
-      import org.apache.spark.sql.functions.col
+      intent.foreach(TakedownIntent.refuseOpen(_, "recoverRetract()"))
       log.probeRewriteFence("retract")
-      val marked = ParquetLog.hitMarker(ids, idCol, 4L * 1000 * 1000)(
-          log.readForTakedownIds(ids, idCol))
-        .where(col(ParquetLog.hitCol)).drop(ParquetLog.hitCol)
-      val seqs = marked.select(log.seqCol).localCheckpoint(true)
-      val prepared = prepareInversions(marked)
-      val removed = log.retractIds(ids, idCol)
-      if (removed > 0) { prepared.foreach(_._2()); retractViews(seqs, prepared.map(_._1).toSet); fireRetractHooks(seqs) }
+      // materialized BEFORE the rewrite: the seq set must outlive the
+      // log rows it is read from
+      val removedSeqs = intent match {
+        case None => seqs.localCheckpoint(true)
+        case Some(f) =>
+          TakedownIntent.commit(f, s"@seqs$viewsToken", Some(seqList(f) -> seqs))
+          readSeqList(seqList(f)).localCheckpoint(true)
+      }
+      // inversions prepare on the FRESH pass only (a crash replay finds
+      // the log already rewritten — those views rebuild on replay)
+      val prepared = prepareInversions(matched(removedSeqs))
+      val removed = mutateLogOrUnlatch(intent)(rewrite(removedSeqs))
+      if (removed > 0) { prepared.foreach(_._2()); retractViews(removedSeqs, prepared.map(_._1).toSet) }
+      intent.foreach(f => TakedownIntent.clear(f, seqList(f)))
+      if (removed > 0) fireRetractHooks(removedSeqs)
       removed
     } finally lock.unlock()
   }
+
+  /** Run the log mutation of a pass; if a durable pass is refused by the
+    * live-tail quiescence fence (a tail started in the window between
+    * the entry probe and the rewrite — nothing was mutated), unlatch
+    * the just-committed intent before rethrowing, so a pure refusal
+    * never leaves an open window that blocks all future takedowns.
+    * Unlatching requires BOTH discriminators — the exception is the
+    * fence's own (every backend's fence message names the "live tail")
+    * AND a re-probe still refuses — because an UNRELATED mid-rewrite
+    * failure with a tail that happened to open concurrently must keep
+    * the intent: the rewrite may have partially run and only the
+    * replay completes the erasure. */
+  private def mutateLogOrUnlatch(intent: Option[String])(op: => Long): Long =
+    try op catch {
+      case e: IllegalStateException
+          if intent.nonEmpty && e.getMessage != null && e.getMessage.contains("live tail") &&
+            Try(log.probeRewriteFence("probe")).isFailure =>
+        intent.foreach(f => TakedownIntent.clear(f, seqList(f)))
+        throw e
+    }
 
   /** DB-LEVEL retention: age out the seq prefix from the log
     * ([[FlumeLog.expire]] — pure directory truncation on a bucketed
@@ -507,27 +575,43 @@ final class FlumeDb(
     * chains when `expireFeatures = true` (the opt-in for pure-retention
     * workloads where the signature tables would otherwise grow without
     * bound). */
-  def expire(throughSeq: Long, expireFeatures: Boolean = false): Long = {
+  def expire(throughSeq: Long, expireFeatures: Boolean = false): Long =
+    retention(throughSeq, expireFeatures, None)
+
+  /** Crash-durable retention: like [[expire]], but the horizon itself is
+    * the (scalar, trivially durable) intent — marker committed before
+    * the log is touched, every replay arm idempotent. */
+  def expire(throughSeq: Long, intentFile: String): Long =
+    retention(throughSeq, expireFeatures = false, Some(intentFile))
+
+  def expire(throughSeq: Long, intentFile: String, expireFeatures: Boolean): Long =
+    retention(throughSeq, expireFeatures, Some(intentFile))
+
+  /** The one retention pass, with the same intent discipline as
+    * `takedown`. The expiring prefix is never materialized: each
+    * invertible fold computes its (tiny) partial over the lazy,
+    * bucket-pruned frame NOW — an expiring year of log must not be
+    * checkpointed to subtract two numbers — and applies it only after
+    * the truncation. */
+  private def retention(through: Long, expireFeatures: Boolean, intent: Option[String]): Long = {
     throwIfClosed(); count("expire")
     lock.lock()
     try {
-      import org.apache.spark.sql.functions.{col, lit}
+      intent.foreach(TakedownIntent.refuseOpen(_, "recoverRetract()"))
       log.probeRewriteFence("expire")
-      // the expiring prefix is never materialized: each invertible fold
-      // computes its (tiny) partial over the lazy, bucket-pruned frame
-      // NOW — an expiring year of log must not be checkpointed to
-      // subtract two numbers — and applies it only after the truncation
-      val prepared = prepareInversions(
-        log.readWherePruned(col(log.seqCol) <= lit(throughSeq)))
-      val removed = log.expire(throughSeq)
+      val features = if (expireFeatures) " FEATURES" else ""
+      intent.foreach(f => TakedownIntent.commit(f, s"EXPIRE $through$features$viewsToken"))
+      val prepared = prepareInversions(log.readWherePruned(col(log.seqCol) <= lit(through)))
+      val removed = mutateLogOrUnlatch(intent)(log.expire(through))
       if (removed > 0) {
         prepared.foreach(_._2())
-        expireViews(throughSeq, prepared.map(_._1).toSet, expireFeatures)
+        expireViews(through, prepared.map(_._1).toSet, expireFeatures)
       }
       // the log prefix may have left in an EARLIER keep-features pass:
       // an explicit opt-in still reclaims the feature deltas (cheap —
       // directory arithmetic, no data read)
-      else if (expireFeatures) expireFeatureTables(throughSeq)
+      else if (expireFeatures) expireFeatureTables(through)
+      intent.foreach(f => TakedownIntent.clear(f, seqList(f)))
       removed
     } finally lock.unlock()
   }
@@ -538,6 +622,31 @@ final class FlumeDb(
       case f: FeatureExpirableView => f.expireFeatureDeltas(throughSeq)
       case _ => ()
     }
+  }
+
+  /** EVENT-TIME retention: users speak time ("older than 90 days"),
+    * [[expire]] speaks seq. The log translates
+    * ([[FlumeLog.horizonOlderThan]] — manifest arithmetic plus at most
+    * a boundary-bucket scan on a stats-declared ts column), then the
+    * standard retention orchestration runs at that horizon: log
+    * truncation, per-family view handling, feature-table opt-in. The
+    * horizon derivation is a pure read — a concurrent append between
+    * it and the truncation only makes the horizon conservative. */
+  def expireOlderThan(tsCol: String, through: Any, expireFeatures: Boolean = false): Long = {
+    throwIfClosed()
+    lock.lock()
+    try expire(log.horizonOlderThan(tsCol, through), expireFeatures)
+    finally lock.unlock()
+  }
+
+  /** Crash-durable event-time retention: the derived seq horizon is the
+    * (scalar) durable intent, exactly [[expire(throughSeq:Long,intentFile:String,expireFeatures:Boolean)*]]. */
+  def expireOlderThan(tsCol: String, through: Any, intentFile: String,
+      expireFeatures: Boolean): Long = {
+    throwIfClosed()
+    lock.lock()
+    try expire(log.horizonOlderThan(tsCol, through), intentFile, expireFeatures)
+    finally lock.unlock()
   }
 
   /** Phase 1 of reduce inversion: every invertible fold computes its
@@ -624,210 +733,23 @@ final class FlumeDb(
     syncViews(ms)
   }
 
-  // ---- durable (intent-logged) takedown -----------------------------------
-  // The undurable forms above are atomic under the db lock but NOT
-  // crash-durable across the log/view boundary: a JVM death between the
-  // log rewrite and the view pass leaves mounted views holding GHOST
-  // rows for seqs the log no longer serves — and the incremental build
-  // loop can never remove them (view cursors already passed those
-  // seqs). Same half-state the family-level [[graft.views.Retraction]]
-  // intent protocol closes for feature tables; closed here with the
-  // same shape. The durable currency is the REMOVED SEQ SET: a
-  // predicate cannot replay across JVMs (closures don't serialize into
-  // an intent file) but its matched seqs can — and every replay arm is
-  // idempotent (log retract of absent seqs rewrites nothing; a seq
-  // anti-join on a clean view is a no-op; destroy + rebuild is
-  // idempotent by construction).
-
-  /** Crash-durable takedown: like [[retract]], but the removed seq set
-    * is made durable as a parquet list plus an atomic intent marker
-    * BEFORE the log is touched; a death in any later window is closed
-    * by [[recoverRetract]] at the next open. Order: fence probe → seq
-    * list durable → intent marker → log rewrite → view pass → intent
-    * cleared. The log's live-tail quiescence fence is probed BEFORE the
-    * marker commits: a fence refusal mutates nothing, so it must not
-    * latch an open intent. The marker records the mounted view names —
-    * [[recoverRetract]] refuses to replay (and clear the intent) while
-    * any of them is missing, since a view mounted after recovery would
-    * keep its ghost rows forever. */
-  def retract(cond: org.apache.spark.sql.Column, intentFile: String): Long = {
-    throwIfClosed(); count("retract")
-    lock.lock()
-    try {
-      val p = intentPathForNew(intentFile)
-      log.probeRewriteFence("retract") // refuse BEFORE the intent exists
-      val seqsDir = intentFile + ".seqs"
-      deleteDirIfExists(seqsDir) // uncommitted leftover from a pre-marker crash
-      log.readWherePruned(cond).select(log.seqCol).write.parquet(seqsDir)
-      // the parquet list is complete (_SUCCESS) — NOW commit the intent
-      commitIntent(p, intentFile, s"@seqs$viewsToken")
-      // checkpoint the durable list NOW: the seqsDir parquet is deleted
-      // at the end of this pass, but the retract hooks' contract is a
-      // frame usable AFTER this call returns (a pipeline intersecting
-      // removed seqs with training lineage evaluates it deferred) — the
-      // same contract the undurable arms already give
-      val seqs = readSeqList(seqsDir).localCheckpoint(true)
-      // inversions prepare on the FRESH pass only (a crash replay finds
-      // the log already rewritten — those views rebuild on replay)
-      val prepared = prepareInversions(log.readWherePruned(cond))
-      val removed = mutateLogOrUnlatch(p, seqsDir)(log.retract(cond))
-      // mirror the undurable form: a zero-match takedown has no ghost
-      // rows to purge — do not destroy/rebuild every folding view
-      if (removed > 0) { prepared.foreach(_._2()); retractViews(seqs, prepared.map(_._1).toSet) }
-      java.nio.file.Files.delete(p)
-      deleteDirIfExists(seqsDir)
-      // hooks fire AFTER the intent is cleared: the erasure is complete
-      // at this point, so a throwing hook must surface to the caller
-      // without latching an intent that would block all future takedowns
-      if (removed > 0) fireRetractHooks(seqs)
-      removed
-    } finally lock.unlock()
-  }
-
-  /** Run the log mutation of a durable pass; if it is refused by the
-    * live-tail quiescence fence (a tail started in the window between
-    * the entry probe and the rewrite — nothing was mutated), unlatch
-    * the just-committed intent before rethrowing, so a pure refusal
-    * never leaves an open window that blocks all future takedowns.
-    * Unlatching requires BOTH discriminators — the exception is the
-    * fence's own (every backend's fence message names the "live tail")
-    * AND a re-probe still refuses — because an UNRELATED mid-rewrite
-    * failure with a tail that happened to open concurrently must keep
-    * the intent: the rewrite may have partially run and only the
-    * replay completes the erasure. */
-  private def mutateLogOrUnlatch(p: java.nio.file.Path, seqsDir: String)(op: => Long): Long =
-    try op catch {
-      case e: IllegalStateException
-          if e.getMessage != null && e.getMessage.contains("live tail") &&
-            scala.util.Try(log.probeRewriteFence("probe")).isFailure =>
-        java.nio.file.Files.deleteIfExists(p)
-        if (seqsDir != null) deleteDirIfExists(seqsDir)
-        throw e
-    }
-
-  /** Crash-durable takedown by ID LIST: the batch form of
-    * `retract(cond, intentFile)`. The matched SEQ set (not the id list)
-    * is what goes durable — it is the currency every replay arm speaks:
-    * the log rewrite replays as `retractIds(seqs, seqCol)` and the view
-    * pass as the same anti-join, both idempotent. */
-  def retractIds(ids: DataFrame, idCol: String, intentFile: String): Long = {
-    throwIfClosed(); count("retract")
-    lock.lock()
-    try durableRetractBySeqs(matchedSeqsPruned(ids, idCol), intentFile)
-    finally lock.unlock()
-  }
-
-  /** Seqs of log rows whose `idCol` appears in `ids`, with the match
-    * scan pruned to the buckets the log's stats manifest cannot prove
-    * id-free — the per-domain half of the drain's merged pass. */
-  private def matchedSeqsPruned(ids: DataFrame, idCol: String): DataFrame = {
-    import org.apache.spark.sql.functions.col
-    ParquetLog.hitMarker(ids, idCol, 4L * 1000 * 1000)(
-        log.readForTakedownIds(ids, idCol))
-      .where(col(ParquetLog.hitCol)).select(log.seqCol)
-  }
-
-  /** The durable takedown KERNEL every batch arm shares: make the
-    * matched seq set durable (parquet list + atomic intent marker),
-    * rewrite the log by seq (bucket pruning on the seq list is exact
-    * directory arithmetic), run ONE view pass, clear the intent. Must
-    * be called under the db lock. `seqSet` may union several domains'
-    * matches (the drain) — it is distinct-ed before going durable. */
-  private def durableRetractBySeqs(seqSet: DataFrame, intentFile: String): Long = {
-    import org.apache.spark.sql.functions.col
-    val p = intentPathForNew(intentFile)
-    log.probeRewriteFence("retract")
-    val seqsDir = intentFile + ".seqs"
-    deleteDirIfExists(seqsDir)
-    seqSet.select(col(log.seqCol)).distinct().write.parquet(seqsDir)
-    commitIntent(p, intentFile, s"@seqs$viewsToken")
-    // checkpointed for the same reason as the cond arm: the retract
-    // hooks may evaluate this frame after seqsDir is deleted
-    val seqs = readSeqList(seqsDir).localCheckpoint(true)
-    val prepared = prepareInversions(
-      ParquetLog.hitMarker(seqs, log.seqCol, 4L * 1000 * 1000)(
-          log.readForTakedownIds(seqs, log.seqCol))
-        .where(col(ParquetLog.hitCol))
-        .drop(ParquetLog.hitCol))
-    val removed = mutateLogOrUnlatch(p, seqsDir)(log.retractIds(seqs, log.seqCol))
-    if (removed > 0) { prepared.foreach(_._2()); retractViews(seqs, prepared.map(_._1).toSet) }
-    java.nio.file.Files.delete(p)
-    deleteDirIfExists(seqsDir)
-    // after intent cleanup — a throwing hook surfaces without latching
-    if (removed > 0) fireRetractHooks(seqs)
-    removed
-  }
-
-  /** Crash-durable retention: like [[expire]], but the horizon itself is
-    * the (scalar, trivially durable) intent — marker committed before
-    * the log is touched, every replay arm idempotent. */
-  def expire(throughSeq: Long, intentFile: String): Long =
-    expire(throughSeq, intentFile, expireFeatures = false)
-
-  def expire(throughSeq: Long, intentFile: String, expireFeatures: Boolean): Long = {
-    throwIfClosed(); count("expire")
-    lock.lock()
-    try {
-      val p = intentPathForNew(intentFile)
-      log.probeRewriteFence("expire")
-      val featTok = if (expireFeatures) " FEATURES" else ""
-      commitIntent(p, intentFile, s"EXPIRE $throughSeq$featTok$viewsToken")
-      val prepared = prepareInversions(log.readWherePruned(
-        org.apache.spark.sql.functions.col(log.seqCol) <=
-          org.apache.spark.sql.functions.lit(throughSeq)))
-      val removed = mutateLogOrUnlatch(p, null)(log.expire(throughSeq))
-      if (removed > 0) {
-        prepared.foreach(_._2())
-        expireViews(throughSeq, prepared.map(_._1).toSet, expireFeatures)
+  private def expireViews(throughSeq: Long, handled: Set[FlumeView] = Set.empty,
+      expireFeatures: Boolean = false): Unit = {
+    val fallback = Seq.newBuilder[Mounted]
+    mountedViews.foreach { m =>
+      m.view match {
+        case v if handled.contains(v) => ()
+        // feature tables first: KEEP by default (re-crawls of aged-out
+        // content still dedup), truncate the delta chain on opt-in —
+        // never the ∝-corpus rebuild the fallback arm would pay
+        case f: FeatureExpirableView =>
+          if (expireFeatures) f.expireFeatureDeltas(throughSeq)
+        case s: SeqRetractableView => s.expireLogSeqs(throughSeq)
+        case k: KeyRetractableView => k.expireLogSeqs(throughSeq)
+        case _ => fallback += m
       }
-      else if (expireFeatures) expireFeatureTables(throughSeq)
-      java.nio.file.Files.delete(p)
-      removed
-    } finally lock.unlock()
-  }
-
-  /** EVENT-TIME retention: users speak time ("older than 90 days"),
-    * [[expire]] speaks seq. The log translates
-    * ([[FlumeLog.horizonOlderThan]] — manifest arithmetic plus at most
-    * a boundary-bucket scan on a stats-declared ts column), then the
-    * standard retention orchestration runs at that horizon: log
-    * truncation, per-family view handling, feature-table opt-in. The
-    * horizon derivation is a pure read — a concurrent append between
-    * it and the truncation only makes the horizon conservative. */
-  def expireOlderThan(tsCol: String, through: Any, expireFeatures: Boolean = false): Long = {
-    throwIfClosed()
-    lock.lock()
-    try expire(log.horizonOlderThan(tsCol, through), expireFeatures)
-    finally lock.unlock()
-  }
-
-  /** Crash-durable event-time retention: the derived seq horizon is the
-    * (scalar) durable intent, exactly [[expire(throughSeq:Long,intentFile:String,expireFeatures:Boolean)*]]. */
-  def expireOlderThan(tsCol: String, through: Any, intentFile: String,
-      expireFeatures: Boolean): Long = {
-    throwIfClosed()
-    lock.lock()
-    try expire(log.horizonOlderThan(tsCol, through), intentFile, expireFeatures)
-    finally lock.unlock()
-  }
-
-  /** Refuse a new durable pass while an unrecovered intent exists;
-    * returns the intent path (parent dirs not yet created). */
-  private def intentPathForNew(intentFile: String): java.nio.file.Path = {
-    val p = java.nio.file.Paths.get(intentFile)
-    if (java.nio.file.Files.exists(p))
-      throw new IllegalStateException(
-        s"an unrecovered db takedown intent exists at $intentFile — run recoverRetract() " +
-          "first (starting a new pass would abandon the crashed one's erasure)")
-    p
-  }
-
-  /** Atomically commit the intent marker (write-then-rename). */
-  private def commitIntent(p: java.nio.file.Path, intentFile: String, content: String): Unit = {
-    if (p.getParent != null) java.nio.file.Files.createDirectories(p.getParent)
-    val tmp = java.nio.file.Paths.get(intentFile + ".tmp")
-    java.nio.file.Files.writeString(tmp, content)
-    java.nio.file.Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
+    rebuildViews(fallback.result())
   }
 
   // ---- takedown coalescing (the intent QUEUE) -----------------------------
@@ -856,18 +778,7 @@ final class FlumeDb(
     throwIfClosed(); count("retract")
     require(!idCol.startsWith(FlumeDb.PredicateIntent),
       s"id column may not start with '${FlumeDb.PredicateIntent}'")
-    lock.lock()
-    try {
-      val q = java.nio.file.Paths.get(queueDir)
-      java.nio.file.Files.createDirectories(q)
-      val name = nextIntentName(q)
-      val idsDir = q.resolve(name + ".ids")
-      deleteDirIfExists(idsDir.toString) // uncommitted leftover
-      ids.select(ids.col(idCol)).distinct().write.parquet(idsDir.toString)
-      // list durable (_SUCCESS) — NOW commit the marker naming the column
-      commitIntent(q.resolve(name), q.resolve(name).toString, idCol)
-      pendingIntents(q).size
-    } finally lock.unlock()
+    enqueue(queueDir, idCol, Some(ids.select(ids.col(idCol)).distinct()))
   }
 
   /** Durably ACCEPT a PREDICATE takedown request: a `Column` closure
@@ -887,25 +798,25 @@ final class FlumeDb(
     // whole queue, valid erasure requests included, until the marker is
     // deleted by hand. Resolving against the log schema here makes a
     // semantic error refuse at accept exactly like a syntax error.
-    log.read.where(org.apache.spark.sql.functions.expr(condSql))
-      .queryExecution.assertAnalyzed()
+    log.read.where(expr(condSql)).queryExecution.assertAnalyzed()
     require(!condSql.contains("\n") && !condSql.contains("\r"),
       "predicate SQL must be single-line (the intent marker is line-oriented)")
-    lock.lock()
-    try {
-      val q = java.nio.file.Paths.get(queueDir)
-      java.nio.file.Files.createDirectories(q)
-      val name = nextIntentName(q)
-      commitIntent(q.resolve(name), q.resolve(name).toString,
-        s"${FlumeDb.PredicateIntent}$condSql")
-      pendingIntents(q).size
-    } finally lock.unlock()
+    enqueue(queueDir, s"${FlumeDb.PredicateIntent}$condSql", None)
   }
 
-  private def nextIntentName(q: java.nio.file.Path): String = {
-    val next = pendingIntents(q).map(_.getFileName.toString.stripPrefix("intent-").toLong)
-      .foldLeft(-1L)(_ max _) + 1L
-    f"intent-$next%06d"
+  /** Commit the next queue marker with `content`, and an id list as
+    * its `.ids` sidecar; returns the number of pending intents. */
+  private def enqueue(queueDir: String, content: String, ids: Option[DataFrame]): Int = {
+    lock.lock()
+    try {
+      val q = Paths.get(queueDir)
+      Files.createDirectories(q)
+      val next = pendingIntents(q).map(_.getFileName.toString.stripPrefix("intent-").toLong)
+        .foldLeft(-1L)(_ max _) + 1L
+      val marker = q.resolve(f"intent-$next%06d").toString
+      TakedownIntent.commit(marker, content, ids.map((marker + ".ids") -> _))
+      pendingIntents(q).size
+    } finally lock.unlock()
   }
 
   /** Execute EVERY pending queued intent — id lists across ANY number
@@ -925,33 +836,31 @@ final class FlumeDb(
     throwIfClosed(); count("retract")
     lock.lock()
     try {
-      val q = java.nio.file.Paths.get(queueDir)
-      if (!java.nio.file.Files.exists(q)) return 0L
-      recoverRetract(q.resolve("_drain").toString) // finish a crashed drain first
+      val q = Paths.get(queueDir)
+      if (!Files.exists(q)) return 0L
+      val drain = q.resolve("_drain").toString
+      recoverRetract(drain) // finish a crashed drain first
       val pend = pendingIntents(q)
       if (pend.isEmpty) return 0L
-      val byContent = pend.map(p => (java.nio.file.Files.readString(p).trim, p))
+      val byContent = pend.map(p => (Files.readString(p).trim, p))
       val (preds, idIntents) = byContent.partition(_._1.startsWith(FlumeDb.PredicateIntent))
       // one merged match scan per id DOMAIN (each pruned by that
       // domain's bucket stats), one pruned scan per predicate — all
       // yielding the universal currency, seqs
       val domainSeqs = idIntents.groupBy(_._1).toSeq.sortBy(_._1).map { case (idCol, ps) =>
         val ids = ps.map(p => graft.views.ParquetFooters.read(
-            log.spark, java.nio.file.Paths.get(p._2.toString + ".ids")))
+            log.spark, Paths.get(p._2.toString + ".ids")))
           .reduce(_ unionByName _)
-        matchedSeqsPruned(ids, idCol)
+        rowsMatching(ids, idCol).select(log.seqCol)
       }
       val predSeqs = preds.map { case (content, _) =>
-        val cond = org.apache.spark.sql.functions.expr(
-          content.stripPrefix(FlumeDb.PredicateIntent))
-        log.readWherePruned(cond).select(log.seqCol)
+        log.readWherePruned(expr(content.stripPrefix(FlumeDb.PredicateIntent))).select(log.seqCol)
       }
-      val allSeqs = (domainSeqs ++ predSeqs).reduce(_ unionByName _)
-      val removed = durableRetractBySeqs(allSeqs, q.resolve("_drain").toString)
-      pend.foreach { p =>
-        java.nio.file.Files.delete(p)
-        deleteDirIfExists(p.toString + ".ids")
-      }
+      // domains overlap (two ids of one row): one seq each
+      val allSeqs = (domainSeqs ++ predSeqs).reduce(_ unionByName _).distinct()
+      val removed = takedown(allSeqs, rowsMatching(_, log.seqCol),
+        s => log.retractIds(s, log.seqCol), Some(drain))
+      pend.foreach(p => TakedownIntent.clear(p.toString, p.toString + ".ids"))
       removed
     } finally lock.unlock()
   }
@@ -1000,16 +909,12 @@ final class FlumeDb(
     throwIfClosed()
     lock.lock()
     try {
-      val p = java.nio.file.Paths.get(intentFile)
-      val tmp = java.nio.file.Paths.get(intentFile + ".tmp")
-      if (java.nio.file.Files.exists(tmp)) java.nio.file.Files.delete(tmp)
-      val seqsDir = intentFile + ".seqs"
-      if (!java.nio.file.Files.exists(p)) {
-        deleteDirIfExists(seqsDir) // a list never committed by a marker
-        return false
+      val seqsDir = seqList(intentFile)
+      val content = TakedownIntent.open(intentFile, seqsDir) match {
+        case Some(c) => c
+        case None => return false
       }
       var replayedSeqs: Option[DataFrame] = None
-      val content = java.nio.file.Files.readString(p).trim
       val toks = content.split("\\s+")
       val recorded = toks.find(_.startsWith("views="))
         .map(_.stripPrefix("views=").split(",").toSeq.filter(_.nonEmpty))
@@ -1029,7 +934,7 @@ final class FlumeDb(
           log.expire(t) // the prefix that survived the crash leaves now
           expireViews(t, Set.empty, expireFeatures = rest.nonEmpty)
         case Array("@seqs") =>
-          if (!java.nio.file.Files.exists(java.nio.file.Paths.get(seqsDir)))
+          if (!Files.exists(Paths.get(seqsDir)))
             throw new IllegalStateException(
               s"recoverRetract: takedown intent at $intentFile names a durable seq " +
                 s"list at $seqsDir that does not exist — the marker is committed only " +
@@ -1054,44 +959,20 @@ final class FlumeDb(
               "expected '@seqs' or 'EXPIRE <seq>'; the durable window is left open " +
               "(a corrupt marker must be audited, not silently cleared)")
       }
-      java.nio.file.Files.delete(p)
-      deleteDirIfExists(seqsDir)
+      TakedownIntent.clear(intentFile, seqsDir)
       replayedSeqs.foreach(fireRetractHooks)
       true
     } finally lock.unlock()
   }
 
-  private def expireViews(throughSeq: Long, handled: Set[FlumeView] = Set.empty,
-      expireFeatures: Boolean = false): Unit = {
-    val fallback = Seq.newBuilder[Mounted]
-    mountedViews.foreach { m =>
-      m.view match {
-        case v if handled.contains(v) => ()
-        // feature tables first: KEEP by default (re-crawls of aged-out
-        // content still dedup), truncate the delta chain on opt-in —
-        // never the ∝-corpus rebuild the fallback arm would pay
-        case f: FeatureExpirableView =>
-          if (expireFeatures) f.expireFeatureDeltas(throughSeq)
-        case s: SeqRetractableView => s.expireLogSeqs(throughSeq)
-        case k: KeyRetractableView => k.expireLogSeqs(throughSeq)
-        case _ => fallback += m
-      }
-    }
-    rebuildViews(fallback.result())
-  }
+  /** Where a takedown intent's durable seq list lives. */
+  private def seqList(intentFile: String): String = intentFile + ".seqs"
 
   /** The durable seq list, schema pinned: a zero-match takedown writes a
     * zero-row list whose parquet dir may carry no footer to infer from. */
   private def readSeqList(dir: String): DataFrame =
-    log.spark.read.schema(org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(log.seqCol,
-        org.apache.spark.sql.types.LongType, nullable = false)))).parquet(dir)
-
-  private def deleteDirIfExists(dir: String): Unit = {
-    val p = java.nio.file.Paths.get(dir)
-    if (java.nio.file.Files.exists(p))
-      graft.views.FsLists.walkDeepestFirst(p).foreach(java.nio.file.Files.delete)
-  }
+    log.spark.read.schema(StructType(Seq(StructField(log.seqCol, LongType, nullable = false))))
+      .parquet(dir)
 
   /** Global pause switch (`/root/reference/README.md:115-118`): while not
     * ready, gated reads stall. */

@@ -20,7 +20,24 @@ final case class LogRange(
     limit: Option[Int] = None,
     seqs: Boolean = true,
     values: Boolean = true,
-    live: Boolean = false)
+    live: Boolean = false) {
+
+  /** This range over `df`, a frame of log rows keyed by `seqCol`: the
+    * seq bounds, then (on a batch range) the seq order, then the limit
+    * and the seqs/values projection. */
+  private[graft] def applyTo(df: DataFrame, seqCol: String): DataFrame = {
+    var out = df
+    gt.foreach(v => out = out.where(col(seqCol) > lit(v)))
+    gte.foreach(v => out = out.where(col(seqCol) >= lit(v)))
+    lt.foreach(v => out = out.where(col(seqCol) < lit(v)))
+    lte.foreach(v => out = out.where(col(seqCol) <= lit(v)))
+    if (!live) out = if (reverse) out.orderBy(col(seqCol).desc) else out.orderBy(col(seqCol))
+    limit.foreach(n => out = out.limit(n))
+    if (!values) out.select(col(seqCol))
+    else if (!seqs) out.drop(seqCol)
+    else out
+  }
+}
 
 object LogRange {
   val all: LogRange = LogRange()
@@ -93,26 +110,9 @@ trait FlumeLog {
       // reference's `stream({gt, live: true})`) — the filters below stay
       // as defense in depth and for upper bounds
       val startGt: Long = (r.gt ++ r.gte.map(_ - 1)).reduceOption(_ max _).getOrElse(-1L)
-      var df = if (startGt > -1L) readStreamFrom(startGt) else readStream
-      r.gt.foreach(v => df = df.where(col(seqCol) > lit(v)))
-      r.gte.foreach(v => df = df.where(col(seqCol) >= lit(v)))
-      r.lt.foreach(v => df = df.where(col(seqCol) < lit(v)))
-      r.lte.foreach(v => df = df.where(col(seqCol) <= lit(v)))
-      r.limit.foreach(n => df = df.limit(n))
-      return if (!r.values) df.select(col(seqCol))
-      else if (!r.seqs) df.drop(seqCol)
-      else df
+      r.applyTo(if (startGt > -1L) readStreamFrom(startGt) else readStream, seqCol)
     }
-    var df = read
-    r.gt.foreach(v => df = df.where(col(seqCol) > lit(v)))
-    r.gte.foreach(v => df = df.where(col(seqCol) >= lit(v)))
-    r.lt.foreach(v => df = df.where(col(seqCol) < lit(v)))
-    r.lte.foreach(v => df = df.where(col(seqCol) <= lit(v)))
-    df = if (r.reverse) df.orderBy(col(seqCol).desc) else df.orderBy(col(seqCol))
-    r.limit.foreach(n => df = df.limit(n))
-    if (!r.values) df.select(col(seqCol))
-    else if (!r.seqs) df.drop(seqCol)
-    else df
+    else r.applyTo(read, seqCol)
   }
 
   def close(): Unit = ()
@@ -681,26 +681,18 @@ final class ParquetLog(
   override def read: DataFrame =
     if (bucketed) readRaw.drop(bucketCol) else readRaw
 
-  /** Range scans on a bucketed log add directory-pruning predicates on
-    * the partition column derived from the seq bounds. */
+  /** Batch range scans on a bucketed log add directory-pruning
+    * predicates on the partition column derived from the seq bounds (a
+    * live range seeks through the streaming source instead). */
   override def stream(r: LogRange): DataFrame = {
-    if (!bucketed) super.stream(r)
+    if (!bucketed || r.live) super.stream(r)
     else {
       var df = readRaw
       val lower: Option[Long] = (r.gt.map(_ + 1) ++ r.gte).reduceOption(_ max _)
       val upper: Option[Long] = (r.lt.map(_ - 1) ++ r.lte).reduceOption(_ min _)
       lower.foreach(v => df = df.where(col(bucketCol) >= v / bucketSize))
       upper.foreach(v => df = df.where(col(bucketCol) <= v / bucketSize))
-      r.gt.foreach(v => df = df.where(col(seqCol) > lit(v)))
-      r.gte.foreach(v => df = df.where(col(seqCol) >= lit(v)))
-      r.lt.foreach(v => df = df.where(col(seqCol) < lit(v)))
-      r.lte.foreach(v => df = df.where(col(seqCol) <= lit(v)))
-      df = df.drop(bucketCol)
-      df = if (r.reverse) df.orderBy(col(seqCol).desc) else df.orderBy(col(seqCol))
-      r.limit.foreach(n => df = df.limit(n))
-      if (!r.values) df.select(col(seqCol))
-      else if (!r.seqs) df.drop(seqCol)
-      else df
+      r.applyTo(df.drop(bucketCol), seqCol)
     }
   }
 

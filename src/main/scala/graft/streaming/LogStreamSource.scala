@@ -292,10 +292,6 @@ class ParquetLogMicroBatchStream(
           } else None
         }
         .sortBy(_.gt)
-      if (java.lang.Boolean.getBoolean("graft.debug.batchTrace"))
-        System.err.println(s"[graft-trace] plan ($gt,$lte] -> " +
-          parts.map(p => s"${new java.io.File(p.file).getName}:(${p.gt},${p.lte}]")
-            .mkString(" ") + s" (cursor=${log.since})")
       parts.map(p => p: InputPartition).toArray
     }
   }

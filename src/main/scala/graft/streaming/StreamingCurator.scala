@@ -221,14 +221,6 @@ object MediaDedupBinding {
 }
 
 object MediaStreamingCurator {
-  /** Diagnostic batch tracing (`-Dgraft.debug.batchTrace=true`): prints
-    * each micro-batch's source seqs, feature ids, and kept ids to
-    * stderr — the discriminator that located the r17 silent-row-loss
-    * recurrence (which stage a vanished row actually vanished at).
-    * Costs extra evaluations of the batch; for stress/debug runs only. */
-  private[streaming] val batchTrace: Boolean =
-    java.lang.Boolean.getBoolean("graft.debug.batchTrace")
-
   /** Run every later plan of `session` interpreted: no whole-stage
     * code, and each projection, predicate and ordering built by its
     * interpreted factory. For the per-query session clone that
@@ -372,16 +364,7 @@ final class MediaStreamingCurator(
         // empty, or a replay after the absorb committed: skip whole
         if (upto <= binding.since) raw.unpersist(blocking = false)
         else {
-          if (MediaStreamingCurator.batchTrace)
-            System.err.println(s"[graft-trace] batch seqs=" +
-              raw.select(col(seqCol)).collect().map(_.getLong(0)).sorted.mkString(",") +
-              s" bindingSince=${binding.since} upto=$upto")
           val (sv, feats, release) = surviveBatch(raw)
-          if (MediaStreamingCurator.batchTrace)
-            System.err.println(s"[graft-trace] feats ids=" +
-              feats.select(col(idCol)).collect().map(_.getLong(0)).sorted.mkString(",") +
-              " survivors=" +
-              sv.select(col(idCol)).collect().map(_.getLong(0)).sorted.mkString(","))
           val survivors = sv.localCheckpoint(true)
           val curatedPre: Option[Long] =
             if (upto > appendedUpto) { // normal path: append, then mark

@@ -46,7 +46,7 @@ object LifecycleProfile {
           .write.format("noop").mode("overwrite").save()
       }
     }
-    graft.EntryHelpers.deleteTree(tpl)
+    graft.views.FsLists.deleteTree(tpl)
     spark.stop()
   }
 }

@@ -84,11 +84,7 @@ object StressCuratorTakedown {
         throw new AssertionError(s"iter $iter: kept content not deduped, got $kept ($diag)")
     } finally {
       cur.stop()
-      roots.foreach { d =>
-        val p = java.nio.file.Paths.get(d)
-        if (java.nio.file.Files.exists(p))
-          graft.views.FsLists.walkDeepestFirst(p).foreach(java.nio.file.Files.delete)
-      }
+      roots.foreach(d => graft.views.FsLists.deleteTree(d))
     }
   }
 }

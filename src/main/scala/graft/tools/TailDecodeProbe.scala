@@ -44,8 +44,8 @@ object TailDecodeProbe {
       tail(mediaLog, _.select("seq"), s"media seq-only $mode")
       tail(embLog, df => df, s"embed full $mode")
     }
-    graft.EntryHelpers.deleteTree(mediaDir)
-    graft.EntryHelpers.deleteTree(embDir)
+    graft.views.FsLists.deleteTree(mediaDir)
+    graft.views.FsLists.deleteTree(embDir)
     spark.stop()
   }
 }

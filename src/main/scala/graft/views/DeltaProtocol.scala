@@ -55,9 +55,6 @@ private[views] trait DeltaProtocol {
   protected def retractTmp: Path = root.resolve("retract.tmp")
   protected def retractMarker: Path = root.resolve("retract.cursor")
 
-  private def deleteTreeIfExists(p: Path): Unit =
-    if (Files.exists(p)) FsLists.walkDeepestFirst(p).foreach(Files.delete)
-
   /** All-or-nothing marker write: a torn marker must never read as a
     * valid commit (it names a directory to DELETE). */
   protected def writeAtomic(p: Path, content: String): Unit = {
@@ -74,13 +71,13 @@ private[views] trait DeltaProtocol {
     val batchDir = root.resolve(batchRel)
     emptyNames.foreach { n =>
       val unit = batchDir.resolve(n)
-      if (Files.exists(unit)) FsLists.walkDeepestFirst(unit).foreach(Files.delete)
+      FsLists.deleteTree(unit)
     }
     rwNames.foreach { n =>
       val src = retractTmp.resolve(n)
       if (Files.exists(src)) {
         val unit = batchDir.resolve(n)
-        if (Files.exists(unit)) FsLists.walkDeepestFirst(unit).foreach(Files.delete)
+        FsLists.deleteTree(unit)
         Files.move(src, unit)
       }
     }
@@ -95,13 +92,13 @@ private[views] trait DeltaProtocol {
   protected def applyDeltaPlan(rwNames: Seq[String], emptyNames: Seq[String]): Unit = {
     emptyNames.foreach { n =>
       val unit = root.resolve(n)
-      if (Files.exists(unit)) FsLists.walkDeepestFirst(unit).foreach(Files.delete)
+      FsLists.deleteTree(unit)
     }
     rwNames.foreach { n =>
       val src = retractTmp.resolve(n)
       if (Files.exists(src)) {
         val unit = root.resolve(n)
-        if (Files.exists(unit)) FsLists.walkDeepestFirst(unit).foreach(Files.delete)
+        FsLists.deleteTree(unit)
         Files.move(src, unit)
       }
     }
@@ -136,18 +133,18 @@ private[views] trait DeltaProtocol {
             .map(_.split(",").filter(_.nonEmpty).toSeq).getOrElse(Nil)
           applyDeltaPlan(dnames("rw="), dnames("empty="))
         case Array(unit, "EMPTY") if unit.startsWith("batch=") =>
-          deleteTreeIfExists(root.resolve(unit))
+          FsLists.deleteTree(root.resolve(unit))
         case Array(unit) if unit.startsWith("batch=") &&
             Files.exists(retractTmp.resolve("_SUCCESS")) =>
-          deleteTreeIfExists(root.resolve(unit))
+          FsLists.deleteTree(root.resolve(unit))
           Files.move(retractTmp, root.resolve(unit))
         case _ => () // torn/uncommitted: the unit's old state is intact
       }
       Files.deleteIfExists(retractMarker)
     }
-    deleteTreeIfExists(retractTmp)
-    deleteTreeIfExists(retractTmp.resolveSibling(retractTmp.getFileName.toString + ".w"))
-    deleteTreeIfExists(retractMarker.resolveSibling(retractMarker.getFileName.toString + ".w"))
+    FsLists.deleteTree(retractTmp)
+    FsLists.deleteTree(retractTmp.resolveSibling(retractTmp.getFileName.toString + ".w"))
+    FsLists.deleteTree(retractMarker.resolveSibling(retractMarker.getFileName.toString + ".w"))
   }
 
   /** Compaction crash recovery (no-op for views that never compact):
@@ -167,7 +164,7 @@ private[views] trait DeltaProtocol {
       else None
     if (sinceSeq >= 0 && markerCursor.contains(sinceSeq) &&
         Files.exists(compactTmp.resolve("_SUCCESS"))) {
-      committedBatchDirs().foreach(p => FsLists.walkDeepestFirst(p).foreach(Files.delete))
+      committedBatchDirs().foreach(p => FsLists.deleteTree(p))
       Files.move(compactTmp, batchPath(sinceSeq))
       Files.delete(compactMarker)
     } else if (markerCursor.isDefined) Files.delete(compactMarker)
@@ -219,7 +216,7 @@ private[views] trait DeltaProtocol {
 
   private def pruneOrphans(): Unit =
     allBatchDirs().filter(batchUpto(_) > sinceSeq)
-      .foreach(p => FsLists.walkDeepestFirst(p).foreach(Files.delete))
+      .foreach(p => FsLists.deleteTree(p))
 
   def destroy(): Unit = {
     sinceSeq = -1L
@@ -325,7 +322,7 @@ private[views] trait CompactableDeltas extends DeltaProtocol {
     val victims = committedBatchDirs().filter(batchUpto(_) <= throughSeq)
     victims.foreach { d =>
       writeAtomic(retractMarker, s"batch=${batchUpto(d)} EMPTY")
-      FsLists.walkDeepestFirst(d).foreach(Files.delete)
+      FsLists.deleteTree(d)
       Files.delete(retractMarker)
     }
     victims.size
@@ -432,7 +429,7 @@ private[views] trait CompactableDeltas extends DeltaProtocol {
     val rwNames = rewrites.map(v => s"$pc=$v")
     val emptyNames = empties.map(v => s"$pc=$v")
     if (rewrites.nonEmpty) {
-      if (Files.exists(retractTmp)) FsLists.walkDeepestFirst(retractTmp).foreach(Files.delete)
+      FsLists.deleteTree(retractTmp)
       val batchDir = root.resolve(batchRel)
       // one-batch discovery (lists only this delta's cell dirs); the
       // isin prunes the scan to the matched cells
@@ -446,7 +443,7 @@ private[views] trait CompactableDeltas extends DeltaProtocol {
       s"MULTIB $batchRel rw=${rwNames.mkString(",")} empty=${emptyNames.mkString(",")}")
     applyCellPlan(batchRel, rwNames, emptyNames)
     Files.delete(retractMarker)
-    if (Files.exists(retractTmp)) FsLists.walkDeepestFirst(retractTmp).foreach(Files.delete)
+    FsLists.deleteTree(retractTmp)
   }
 
 
@@ -466,15 +463,15 @@ private[views] trait CompactableDeltas extends DeltaProtocol {
       // (recovered at open by the same marker arm).
       writeAtomic(retractMarker, s"$rel EMPTY")
       val unit = root.resolve(rel)
-      if (Files.exists(unit)) FsLists.walkDeepestFirst(unit).foreach(Files.delete)
+      FsLists.deleteTree(unit)
       Files.delete(retractMarker)
       return
     }
-    if (Files.exists(retractTmp)) FsLists.walkDeepestFirst(retractTmp).foreach(Files.delete)
+    FsLists.deleteTree(retractTmp)
     content.write.parquet(retractTmp.toString)
     writeAtomic(retractMarker, rel) // commit point (valid with tmp/_SUCCESS)
     val unit = root.resolve(rel)
-    if (Files.exists(unit)) FsLists.walkDeepestFirst(unit).foreach(Files.delete)
+    FsLists.deleteTree(unit)
     Files.move(retractTmp, unit)
     Files.delete(retractMarker)
   }
@@ -486,11 +483,11 @@ private[views] trait CompactableDeltas extends DeltaProtocol {
     mark match {
       case None =>
         writeAtomic(retractMarker, s"$rel EMPTY")
-        if (Files.exists(unit)) FsLists.walkDeepestFirst(unit).foreach(Files.delete)
+        FsLists.deleteTree(unit)
         Files.delete(retractMarker)
       case Some(m) =>
         import org.apache.spark.sql.functions.col
-        if (Files.exists(retractTmp)) FsLists.walkDeepestFirst(retractTmp).foreach(Files.delete)
+        FsLists.deleteTree(retractTmp)
         // unit files hold the stored data columns (partition values are
         // directory-encoded): read the one directory with its own footer
         // schema, keep the misses, preserving the stored column order
@@ -499,7 +496,7 @@ private[views] trait CompactableDeltas extends DeltaProtocol {
           .select(raw.columns.toSeq.map(n => col(s"`$n`")): _*)
           .write.parquet(retractTmp.toString)
         writeAtomic(retractMarker, rel) // commit point (valid with tmp/_SUCCESS)
-        FsLists.walkDeepestFirst(unit).foreach(Files.delete)
+        FsLists.deleteTree(unit)
         Files.move(retractTmp, unit)
         Files.delete(retractMarker)
     }
@@ -509,11 +506,11 @@ private[views] trait CompactableDeltas extends DeltaProtocol {
     * protocol: collapse `dirs` into one base delta holding `merged`. */
   private def rewriteChain(merged: DataFrame, dirs: Seq[Path]): Unit = {
     if (Files.exists(compactMarker)) Files.delete(compactMarker)
-    if (Files.exists(compactTmp)) FsLists.walkDeepestFirst(compactTmp).foreach(Files.delete)
+    FsLists.deleteTree(compactTmp)
     writeMerged(merged, compactTmp)
     wrote(merged)
     Files.writeString(compactMarker, sinceSeq.toString) // tmp is now the commit point
-    dirs.foreach(p => FsLists.walkDeepestFirst(p).foreach(Files.delete))
+    dirs.foreach(p => FsLists.deleteTree(p))
     Files.move(compactTmp, batchPath(sinceSeq))
     Files.delete(compactMarker)
   }

@@ -1,6 +1,6 @@
 package graft.views
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** `Files.list`/`Files.walk` return open directory streams that must be
@@ -24,4 +24,10 @@ private[graft] object FsLists {
     try s.sorted(java.util.Comparator.reverseOrder()).iterator().asScala.toList
     finally s.close()
   }
+
+  /** Delete `p` and everything under it; a no-op when `p` is absent. */
+  def deleteTree(p: Path): Unit =
+    if (Files.exists(p)) walkDeepestFirst(p).foreach(Files.delete)
+
+  def deleteTree(dir: String): Unit = deleteTree(Paths.get(dir))
 }

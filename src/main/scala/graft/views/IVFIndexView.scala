@@ -290,8 +290,7 @@ final class IVFIndexView(
     if (committedBatchDirs().isEmpty) {
       // total takedown: nothing to aggregate over — the quantizer was
       // entirely retracted bytes; drop it and re-seed at next absorb
-      if (Files.isDirectory(centroidsDir))
-        FsLists.walkDeepestFirst(centroidsDir).foreach(Files.delete)
+      FsLists.deleteTree(centroidsDir)
       cents = None
       return
     }

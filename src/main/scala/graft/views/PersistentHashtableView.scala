@@ -125,8 +125,7 @@ final class PersistentHashtableView(
         perBatch(batchUpto(d)) >= ParquetFooters.rowCount(spark, d))
       val emptyNames = emptied.map(d => s"batch=${batchUpto(d)}")
       val rwNames = partial.map(d => s"batch=${batchUpto(d)}")
-      if (java.nio.file.Files.exists(retractTmp))
-        FsLists.walkDeepestFirst(retractTmp).foreach(java.nio.file.Files.delete)
+      FsLists.deleteTree(retractTmp)
       if (partial.nonEmpty) {
         val src = spark.read.option("basePath", root.toString)
           .option("mergeSchema", "true").parquet(partial.map(_.toString): _*)
@@ -140,8 +139,7 @@ final class PersistentHashtableView(
         s"MULTID rw=${rwNames.mkString(",")} empty=${emptyNames.mkString(",")}")
       applyDeltaPlan(rwNames, emptyNames)
       java.nio.file.Files.delete(retractMarker)
-      if (java.nio.file.Files.exists(retractTmp))
-        FsLists.walkDeepestFirst(retractTmp).foreach(java.nio.file.Files.delete)
+      FsLists.deleteTree(retractTmp)
     }
   }
 

@@ -1,11 +1,11 @@
 package graft.views
 
-import graft.core.ParquetLog
+import graft.core.{ParquetLog, TakedownIntent}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftbridge.StorageBridge
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 /** Cross-artifact corpus retraction (takedown): remove documents from
   * the curated LOG ([[graft.core.ParquetLog.retract]] — the pruned
@@ -58,11 +58,12 @@ object Retraction {
       ids: Seq[Long],
       retractFeatures: DataFrame => Unit,
       intentFile: String): Long = {
-    writeIntent(intentFile, ids.mkString(","))
+    TakedownIntent.refuseOpen(intentFile, "recover()")
+    TakedownIntent.commit(intentFile, ids.mkString(","))
     val idsDf = seqToDf(log.spark, idCol, ids)
     val removed = log.retractIds(idsDf, idCol)
     retractFeatures(idsDf)
-    Files.delete(Paths.get(intentFile))
+    TakedownIntent.clear(intentFile, idsDir(intentFile))
     removed
   }
 
@@ -77,21 +78,14 @@ object Retraction {
       ids: DataFrame,
       retractFeatures: DataFrame => Unit,
       intentFile: String): Long = {
-    if (Files.exists(Paths.get(intentFile)))
-      throw new IllegalStateException(
-        s"an unrecovered takedown intent exists at $intentFile — run recover() first " +
-          "(deleting its durable id list here would abandon an acknowledged erasure)")
+    TakedownIntent.refuseOpen(intentFile, "recover()")
     val dir = idsDir(intentFile)
-    deleteDirIfExists(dir) // a stale UNCOMMITTED list from a prior crash
     val list = ids.select(col(idCol)).distinct()
-    list.write.parquet(dir)
-    // the parquet list is complete (_SUCCESS) — NOW commit the intent
-    writeIntent(intentFile, BatchSentinel)
+    TakedownIntent.commit(intentFile, BatchSentinel, Some(dir -> list))
     val durable = log.spark.read.schema(StorageBridge.asRead(list.schema)).parquet(dir)
     val removed = log.retractIds(durable, idCol)
     retractFeatures(durable)
-    Files.delete(Paths.get(intentFile))
-    deleteDirIfExists(dir)
+    TakedownIntent.clear(intentFile, dir)
     removed
   }
 
@@ -117,16 +111,10 @@ object Retraction {
       intentFile: String,
       onSeq: Seq[Long] => Unit,
       onBatch: DataFrame => Unit): Seq[Long] = {
-    val p = Paths.get(intentFile)
-    // a leftover .tmp is a takedown that was never made durable (the
-    // caller never got an acknowledgment) — discard it
-    val tmp = Paths.get(intentFile + ".tmp")
-    if (Files.exists(tmp)) Files.delete(tmp)
-    if (!Files.exists(p)) {
-      deleteDirIfExists(idsDir(intentFile)) // uncommitted parquet list
-      return Seq.empty
+    val content = TakedownIntent.open(intentFile, idsDir(intentFile)) match {
+      case Some(c) => c
+      case None => return Seq.empty
     }
-    val content = Files.readString(p).trim
     val replayed: Seq[Long] =
       if (content == BatchSentinel) {
         val durable = ParquetFooters.read(log.spark, Paths.get(idsDir(intentFile)))
@@ -141,8 +129,7 @@ object Retraction {
         }
         ids
       }
-    Files.delete(p)
-    deleteDirIfExists(idsDir(intentFile))
+    TakedownIntent.clear(intentFile, idsDir(intentFile))
     replayed
   }
 
@@ -152,29 +139,4 @@ object Retraction {
       org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField(idCol,
           org.apache.spark.sql.types.LongType, nullable = false))))
-
-  /** The intent must be ALL-OR-NOTHING durable: a torn plain write would
-    * make recover() execute a truncated id list (retracting a wrong
-    * document, dropping the tail of the takedown) — write-then-atomic-
-    * rename, the same commit protocol as every marker here. A SURVIVING
-    * intent is a crashed takedown whose erasure was already acknowledged:
-    * starting a new one would silently abandon it (and the batch form
-    * would destroy its durable id list) — refuse until [[recover]] has
-    * replayed it. */
-  private def writeIntent(intentFile: String, content: String): Unit = {
-    val p = Paths.get(intentFile)
-    if (Files.exists(p))
-      throw new IllegalStateException(
-        s"an unrecovered takedown intent exists at $intentFile — run recover() " +
-          "before starting a new takedown, or the crashed one's erasure is abandoned")
-    if (p.getParent != null) Files.createDirectories(p.getParent)
-    val tmp = Paths.get(intentFile + ".tmp")
-    Files.writeString(tmp, content)
-    Files.move(tmp, p, java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def deleteDirIfExists(dir: String): Unit = {
-    val p = Paths.get(dir)
-    if (Files.exists(p)) FsLists.walkDeepestFirst(p).foreach(Files.delete)
-  }
 }

@@ -1579,4 +1579,112 @@ class FlumeDbSpec extends SparkSpec {
     } finally sc.removeSparkListener(listener)
     db.close()
   }
+
+  // ---- one takedown kernel: every arm undurable and durable ----
+
+  val tdSchema: StructType = StructType(Seq(
+    StructField("user_id", LongType), StructField("k", StringType), StructField("v", LongType)))
+  def tdDf(from: Int, n: Int): DataFrame = spark.createDataFrame(spark.sparkContext.parallelize(
+    (from until from + n).map(i => Row((i % 17).toLong, s"k${i % 7}", (i % 11).toLong)), 2), tdSchema)
+  def tdIds(colName: String, vs: Long*): DataFrame = spark.createDataFrame(
+    spark.sparkContext.parallelize(vs.map(Row(_)), 1), StructType(Seq(StructField(colName, LongType))))
+
+  /** A db over a bucketed log with a seq-keyed index, a keyed hashtable,
+    * an invertible sum and a view that only rebuilds; its root, and the
+    * seq sets its `onRetract` hook saw. */
+  def takedownDb(): (FlumeDb, String, java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]) = {
+    val root = java.nio.file.Files.createTempDirectory("graft-takedown-kernel").toString
+    val log = new ParquetLog(spark, s"$root/log", tdSchema, bucketSize = 16L,
+      statsColumns = Seq("user_id", "v"))
+    val db = new FlumeDb(log)
+      .use("idx", PersistentIndexView.onColumn(s"$root/views", "k"))
+      .use("ht", PersistentHashtableView(s"$root/views", "k"))
+      .use("sum", PersistentSumReduceView(s"$root/views/sum", 1, "v"))
+      .use("stats", StatsReduceView("v"))
+    val hooks = new java.util.concurrent.ConcurrentLinkedQueue[Seq[Long]]()
+    db.onRetract(s => hooks.add(s.collect().map(_.getLong(0)).sorted.toSeq))
+    db.append(tdDf(0, 40))
+    db.append(tdDf(40, 30))
+    (db, root, hooks)
+  }
+
+  /** Each takedown arm, as its undurable and its durable call (the
+    * durable one given an intent path). The drain's undurable twin is
+    * the predicate that matches the same rows. */
+  val takedownArms: Seq[(String, FlumeDb => Long, (FlumeDb, String) => Long)] = Seq(
+    ("predicate", _.retract(col("k") === "k3"), (db, i) => db.retract(col("k") === "k3", i)),
+    ("ids", _.retractIds(tdIds("user_id", 5L, 11L, 99L), "user_id"),
+      (db, i) => db.retractIds(tdIds("user_id", 5L, 11L, 99L), "user_id", i)),
+    ("expire", _.expire(20L), (db, i) => db.expire(20L, i)),
+    ("expire-features", _.expire(30L, expireFeatures = true),
+      (db, i) => db.expire(30L, i, expireFeatures = true)),
+    ("drain", _.retract(col("user_id").isin(2L, 13L) || col("v").isin(4L, 9L)), { (db, i) =>
+      db.enqueueRetractIds(tdIds("user_id", 2L, 13L), "user_id", i)
+      db.enqueueRetractIds(tdIds("v", 4L, 9L), "v", i)
+      db.drainRetractQueue(i)
+    }))
+
+  def takedownState(db: FlumeDb): (Set[Row], Set[Row], Set[Row], (Double, Long), (Long, Double), Seq[Long]) = {
+    val st = db.gated("stats")(_.asInstanceOf[MergeableReduceView[Stats]].value.get)
+    (db.log.read.collect().toSet,
+      db.view("idx").view.frameOption.get.collect().toSet,
+      db.view("ht").view.frameOption.get.collect().toSet,
+      db.gated("sum")(_.asInstanceOf[PersistentReduceView[(Double, Long)]].value.get),
+      (st.n, math.rint(st.mean * 1e9) / 1e9),
+      db.viewNames.map(db.view(_).since))
+  }
+
+  test("takedown kernel: every arm leaves the same log, views and hook payloads undurable and durable") {
+    val (plain, _, plainHooks) = takedownDb()
+    val (durable, root, durableHooks) = takedownDb()
+    takedownArms.zipWithIndex.foreach { case ((arm, once, withIntent), i) =>
+      val intent = s"$root/intents/$arm"
+      val removed = once(plain)
+      assert(removed > 0L, s"$arm removes rows")
+      assert(withIntent(durable, intent) === removed, s"$arm removes as many rows durably")
+      assert(takedownState(durable) === takedownState(plain), s"$arm: log and views agree")
+      assert(durableHooks.toArray.toSeq === plainHooks.toArray.toSeq, s"$arm: hook payloads agree")
+      val left = if (arm == "drain") graft.views.FsLists.children(java.nio.file.Paths.get(intent))
+        else Seq(intent, intent + ".seqs").map(java.nio.file.Paths.get(_)).filter(java.nio.file.Files.exists(_))
+      assert(left.isEmpty, s"$arm: the intent cleared, left $left")
+      val more = tdDf(70 + 10 * i, 10)
+      plain.append(more); durable.append(more)
+    }
+    assert(plainHooks.size === 3, "one hook call per takedown, none for retention")
+    plain.close(); durable.close()
+  }
+
+  test("a live range on a bucketed ParquetLog is a stream") {
+    assert(bucketedLog().stream(LogRange(live = true)).isStreaming)
+  }
+
+  test("takedown kernel: Spark jobs per arm, undurable and durable") {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    def jobsOf(group: String)(body: => Long): Int = {
+      sc.setJobGroup(group, group)
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup("takedown-marker", "listener marker")
+      sc.parallelize(Seq(1), 1).count()
+      sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.contains("takedown-marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      jobs.remove("takedown-marker")
+      jobs.toArray.count(_ == group)
+    }
+    val (plain, _, _) = takedownDb()
+    val (durable, root, _) = takedownDb()
+    sc.addSparkListener(listener)
+    val counts = try takedownArms.map { case (arm, once, withIntent) =>
+      arm -> (jobsOf(s"$arm-plain")(once(plain)), jobsOf(s"$arm-durable")(withIntent(durable, s"$root/intents/$arm")))
+    } finally sc.removeSparkListener(listener)
+    println(s"[jobs] takedown arms (undurable, durable): ${counts.map { case (a, (p, d)) => s"$a=$p/$d" }.mkString(" ")}")
+    assert(counts.toMap === Map("predicate" -> (49, 50), "ids" -> (73, 73), "expire" -> (18, 18),
+      "expire-features" -> (15, 15), "drain" -> (49, 85)), "Spark jobs per arm")
+    plain.close(); durable.close()
+  }
 }
